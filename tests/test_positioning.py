@@ -68,11 +68,10 @@ def run(spark, ap_df, requests):
     return {r["request_id"]: r for r in out.collect()}
 
 
-@pytest.fixture(scope="module")
-def results(spark, ap_df):
+def golden_requests():
     macs = [a[0] for a in APS[:5]]
     freqs = [a[6] for a in APS[:5]]
-    requests = [
+    return [
         req("single_ap", [scan("00:aa:00:00:00:01", -55.0)]),
         req("two_aps", [scan(macs[0], -60.0, freqs[0]), scan(macs[1], -65.0, freqs[1])]),
         req("three_aps", [scan(macs[0], -65.0, freqs[0]), scan(macs[1], -68.0, freqs[1]),
@@ -91,7 +90,11 @@ def results(spark, ap_df):
         req("unknown_macs", [scan("ff:00:00:00:00:01", -60.0)]),
         req("bad_status", [scan("00:cc:00:00:00:01", -60.0)]),
     ]
-    return run(spark, ap_df, requests)
+
+
+@pytest.fixture(scope="module")
+def results(spark, ap_df):
+    return run(spark, ap_df, golden_requests())
 
 
 def dist_m(r, target):
@@ -154,14 +157,13 @@ def test_bad_status_ap_unusable(results):
     assert "bad_status" not in results
 
 
-@pytest.fixture(scope="module")
-def extended_results(spark, ap_df):
+def extended_requests():
     """Further scenarios from the reference acceptance corpus
     (run-comprehensive-tests.sh:553-1079): high-density cluster, mixed
     quality, repeated time-series scans, duplicate-mac handling."""
     macs = [a[0] for a in APS[:5]]
     freqs = [a[6] for a in APS[:5]]
-    requests = [
+    return [
         # high-density: all 5 spread APs strong → MLE-eligible, tight answer
         req("high_density", [scan(m, -52.0 - i, f) for i, (m, f) in enumerate(zip(macs, freqs))]),
         # mixed quality: two strong + three very weak
@@ -175,7 +177,11 @@ def extended_results(spark, ap_df):
         # 3D: altitude present on every AP → combined altitude is plausible
         req("three_d", [scan(m, -58.0 - 2 * i, f) for i, (m, f) in enumerate(zip(macs[:4], freqs[:4]))]),
     ]
-    return run(spark, ap_df, requests)
+
+
+@pytest.fixture(scope="module")
+def extended_results(spark, ap_df):
+    return run(spark, ap_df, extended_requests())
 
 
 def test_high_density_cluster(extended_results):
@@ -585,10 +591,10 @@ def test_onepass_numeric_tier_off_matches_auto_and_enforces(spark, ap_df):
 
 
 def test_onepass_plan_is_one_job_one_exchange(spark, ap_df):
-    """Pin the kernel-era plan shape: the whole ensemble is ONE job whose
-    only data exchange is the explicit request_id hash partition feeding the
-    pack aggregate (the groupBy must REUSE it, not add a second one), and the
-    packed middle runs as a single MapInPandas — no interior cache, no
+    """Pin the kernel-side-pack plan shape: the whole ensemble is ONE job
+    with NO request_id exchange (gate, explode, broadcast AP join and the
+    derived projection are narrow; the kernel packs each request itself),
+    and the middle runs as a single MapInPandas — no interior cache, no
     staged split, no numeric-count job (the round-2-5 staged-SQL design
     needed all three)."""
     import re
@@ -607,11 +613,11 @@ def test_onepass_plan_is_one_job_one_exchange(spark, ap_df):
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
     out = position_requests_onepass(rdf, ap_df)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # exactly one exchange clustered on request_id (the AP-dim keep-first
-    # window exchanges on mac_addr inside the broadcast subtree — that one
-    # is allowed); exactly one Python stage
+    # no exchange clustered on request_id (the AP-dim keep-first window
+    # exchanges on mac_addr inside the broadcast subtree — that one is
+    # allowed); exactly one Python stage
     req_exchanges = re.findall(r"Exchange hashpartitioning\(request_id", plan)
-    assert len(req_exchanges) == 1, plan
+    assert len(req_exchanges) == 0, plan
     assert plan.count("MapInPandas") == 1, plan
     assert {r["request_id"] for r in out.collect()} == {"c1", "c2"}
 
@@ -798,6 +804,120 @@ def test_onepass_matches_multipass_randomized(spark, seed, signals):
                 assert av == bv, (rid, c)
             else:
                 assert abs(av - bv) < 1e-6 * max(1.0, abs(bv)), (rid, c, av, bv)
+
+
+def _randomized_corpus(spark, seed, signals):
+    """The seeded corpus of test_onepass_matches_multipass_randomized, as
+    (requests, access points) DataFrames."""
+    import random
+
+    rng = random.Random(seed)
+    vendors = ["cisco", "aruba", "meraki", "ubiquiti", "ruckus", "hpe-aruba",
+               "  Cisco  ", "unknown-vendor", None]
+    ap_rows = [{
+        "mac_addr": f"02:00:00:00:{k // 256:02x}:{k % 256:02x}",
+        "version": "1",
+        "latitude": 40.75 + rng.uniform(-0.01, 0.01),
+        "longitude": -73.98 + rng.uniform(-0.01, 0.01),
+        "altitude": None if rng.random() < 0.3 else rng.uniform(0, 50),
+        "horizontal_accuracy": None if rng.random() < 0.3 else rng.uniform(3, 40),
+        "vertical_accuracy": 4.0,
+        "confidence": None if rng.random() < 0.3 else rng.uniform(0.3, 1.0),
+        "ssid": "t",
+        "frequency": rng.choice([2412, 2437, 5180, 5500, 6100, None]),
+        "vendor": rng.choice(vendors),
+        "status": rng.choice(["active", "active", "warning", "verified", "expired"]),
+        "geohash": None,
+    } for k in range(40)]
+    macs = [r["mac_addr"] for r in ap_rows]
+    requests = []
+    for i in range(60):
+        chosen = [rng.choice(macs) for _ in range(rng.randint(1, 20))]
+        scans = [
+            {"macAddress": m, "signalStrength": rng.choice(signals),
+             "frequency": rng.choice([2437, 5180, None]), "ssid": "t",
+             "linkSpeed": None, "channelWidth": None}
+            for m in chosen
+        ]
+        requests.append({"requestId": f"x{i}", "client": "t", "application": "t",
+                         "calculationDetail": False, "wifiScanResults": scans})
+    return (spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA),
+            spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA))
+
+
+@pytest.mark.parametrize(
+    "corpus",
+    [
+        "golden",
+        # the two seeded corpora of test_onepass_matches_multipass_randomized
+        (20240815, [-97.5, -95.0, -94.9, -90.0, -85.0, -84.9, -80.0, -70.1,
+                    -70.0, -69.9, -60.0, -50.0, -45.0, -35.0, -30.0]),
+        (977, [-97.0, -97.0, -96.0, -95.0, -95.0, -94.9, -90.0, -90.0,
+               -88.0, -70.0, -70.0]),
+    ],
+    ids=["golden", "randomized_broad", "randomized_weak"],
+)
+def test_kernel_pack_across_arrow_batches(spark, ap_df, corpus):
+    """The kernel packs requests itself and carries a request that straddles
+    two Arrow batches into the next one. With 3-row batches nearly every
+    request straddles a boundary; the answers must be identical to a run at
+    the default batch size."""
+    from wifi_location_data_pipeline_spark.positioning.onepass import (
+        position_requests_onepass,
+    )
+
+    if corpus == "golden":
+        rdf = spark.createDataFrame(golden_requests() + extended_requests(),
+                                    POSITIONING_REQUEST_SCHEMA)
+        aps = ap_df
+    else:
+        rdf, aps = _randomized_corpus(spark, *corpus)
+
+    def answers():
+        out = position_requests_onepass(rdf, aps, with_reasons=True)
+        return {r["request_id"]: r.asDict(recursive=True) for r in out.collect()}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = answers()
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        small = answers()
+    finally:
+        spark.conf.set(key, prev)
+    assert len(default) >= 9
+    assert small == default
+
+
+def test_onepass_duplicate_mac_keeps_min_scan(spark, ap_df):
+    """A MAC scanned twice in one request keeps its minimum scan struct:
+    lowest RSSI first, and on equal RSSI the null frequency first. Both
+    duplicates feed the full-array statistics; the kept one feeds the
+    dedup'd set, whose frequency the MLE tier reads."""
+    from wifi_location_data_pipeline_spark.positioning.pipeline import (
+        position_requests_multipass,
+    )
+
+    macs = [a[0] for a in APS[:5]]
+    requests = [
+        req("dup_rssi", [scan(macs[0], -60.0, 2437), scan(macs[1], -64.0, 5180),
+                         scan(macs[0], -66.0, 5180), scan(macs[2], -70.0, 2412),
+                         scan(macs[3], -72.0, 5240)]),
+        req("dup_null_freq", [scan(macs[1], -62.0, 5180), scan(macs[0], -61.0, 2437),
+                              scan(macs[1], -62.0, None), scan(macs[2], -68.0, None),
+                              scan(macs[3], -70.0, 5240), scan(macs[4], -74.0, 2462)]),
+    ]
+    rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
+    one = {r["request_id"]: r for r in position_requests(rdf, ap_df).collect()}
+    multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
+    assert set(one) == set(multi) == {"dup_rssi", "dup_null_freq"}
+    for rid, a in one.items():
+        b = multi[rid]
+        assert sorted(a["methods_used"]) == sorted(b["methods_used"]), rid
+        assert a["is_collinear"] == b["is_collinear"], rid
+        for c in ("latitude", "longitude", "altitude", "accuracy", "confidence"):
+            assert abs(a[c] - b[c]) < 1e-6 * max(1.0, abs(b[c])), (rid, c, a[c], b[c])
+    assert {"maximum_likelihood", "trilateration"} & set(one["dup_null_freq"]["methods_used"])
 
 
 def test_gdop_unit_vectors_from_reference():

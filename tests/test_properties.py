@@ -159,8 +159,8 @@ def test_combiner_is_permutation_invariant(spark):
     float summation order (last-ulp): the reference's parallel execution
     returns algorithms in arbitrary completion order
     (WifiPositioningCalculator.java:179-294). Bit-exact determinism in the
-    production path comes from the one-pass pipeline sorting the packed
-    array (array_sort in position_requests_onepass) BEFORE combining —
+    production path comes from the one-pass kernel sorting each request's
+    rows by its pack key (onepass_kernel.pack_requests) BEFORE combining —
     this property pins the semantic invariance of the combiner itself."""
     rng = random.Random(777)
     base = {}

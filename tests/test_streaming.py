@@ -215,6 +215,85 @@ def test_streaming_positioning_answers_requests(spark, tmpzone):
     assert spark.read.parquet(out).count() == 3
 
 
+def _positioning_fixture(spark, tmpzone):
+    """(zone, out, ckpt, aps, write_requests) for the serving-shape tests;
+    ``write_requests(name, rids)`` lands one request file atomically."""
+    import json
+
+    from tests.wifi_fixtures import make_access_points
+    from wifi_location_data_pipeline_spark.schemas import WIFI_ACCESS_POINTS_SCHEMA
+
+    zone, staging = os.path.join(tmpzone, "reqs"), os.path.join(tmpzone, "staging")
+    os.makedirs(zone)
+    os.makedirs(staging)
+    aps = spark.createDataFrame(make_access_points(), WIFI_ACCESS_POINTS_SCHEMA)
+    macs = [r["mac_addr"] for r in aps.filter(F.col("status") == "active").limit(3).collect()]
+
+    def write_requests(name, rids):
+        path = os.path.join(staging, name)
+        with open(path, "w") as f:
+            for rid in rids:
+                f.write(json.dumps({
+                    "requestId": rid, "client": "stream", "application": "test",
+                    "calculationDetail": False,
+                    "wifiScanResults": [
+                        {"macAddress": m, "signalStrength": -60.0 - 3 * i,
+                         "frequency": 2437, "ssid": "t", "linkSpeed": None,
+                         "channelWidth": None}
+                        for i, m in enumerate(macs)
+                    ],
+                }) + "\n")
+        os.replace(path, os.path.join(zone, name))
+
+    out, ckpt = os.path.join(tmpzone, "positions"), os.path.join(tmpzone, "pos_ckpt")
+    return zone, out, ckpt, aps, write_requests
+
+
+def test_streaming_positioning_two_jobs_per_batch(spark, tmpzone):
+    """The stream applies the shuffle-free one-pass plan once, so a
+    non-empty micro-batch runs exactly two Spark jobs: the AP broadcast and
+    one scan → kernel → write stage (no isEmpty probe, no AP window
+    shuffle). Counted under the stream's runId job group."""
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+    try:
+        for k in range(3):
+            write_requests(f"req{k}.json", [f"r{k}a", f"r{k}b"])
+            q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    finally:
+        q.stop()
+    assert len(batches) == 3
+    assert len(jobs) == 2 * len(batches), sorted(jobs)
+    rows = spark.read.parquet(out).collect()
+    assert sorted(r["request_id"] for r in rows) == sorted(
+        f"r{k}{c}" for k in range(3) for c in "ab")
+
+
+def test_streaming_positioning_empty_file_commits_empty_batch(spark, tmpzone):
+    """An empty request file is a micro-batch with no answers: it commits
+    without error and the next file is answered as usual."""
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    write_requests("a_empty.json", [])
+    os.utime(os.path.join(zone, "a_empty.json"), (1, 1))  # oldest: batch 0
+    write_requests("b_reqs.json", ["e1", "e2"])
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress] == [0, 2]
+    assert spark.read.parquet(os.path.join(out, "batch_id=0")).count() == 0
+    assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == ["e1", "e2"]
+
+
 def test_streaming_ap_state_survives_restart(spark, tmpzone):
     """applyInPandasWithState recovery: the per-AP Kalman state (x-hat, P,
     n_updates) must be RESTORED from the state store when the query

@@ -10,7 +10,8 @@ amortized latency at a given arrival batch size.
 
 Method: N_FILES request files × BATCH_REQUESTS requests each land in a zone;
 `start_positioning_stream(available_now=True)` drains them through the REAL
-one-pass ensemble (broadcast AP dimension, with_reasons diagnostics on).
+one-pass ensemble, planned once for the stream (cached AP lookup broadcast
+per micro-batch, with_reasons diagnostics on).
 `maxFilesPerTrigger=1` makes each file one micro-batch, so recentProgress
 yields one batchDuration sample per file. Prints ONE JSON line:
 
@@ -49,12 +50,12 @@ def main() -> None:
     )
 
     # serving-tuned session: a dedicated request-serving deployment sizes
-    # its session for SMALL bounded batches — AQE's per-exchange re-plan
-    # and a 32-wide shuffle both add pure latency when every stage holds a
-    # few hundred rows. Batch/ETL sessions keep the engine defaults.
+    # its session for SMALL bounded batches — AQE's per-stage re-plan adds
+    # pure latency when every stage holds a few hundred rows (the stream's
+    # plan has no shuffle to size). Batch/ETL sessions keep the engine
+    # defaults.
     spark = build_session(
         app_name="bench-streaming",
-        shuffle_partitions=8,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.adaptive.enabled": "false",

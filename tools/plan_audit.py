@@ -84,7 +84,9 @@ CLAIMS: dict[str, str] = {
     "dedup_embedding_cosine": "multi-table LSH equi-join; no driver collect, no all-pairs",
     "ann_lsh_bucketed": "bucket equi-join replaces the all-pairs cross product",
     "multimodal_frame_sample": "payload column pruned before the frame explode",
-    "positioning_ensemble": "ONE shuffle packs requests; Python only after split",
+    "positioning_ensemble": (
+        "ONE request_id shuffle nests resolved scans; the kernel packs each request"
+    ),
     "spatial_blocked_pairs": "3×3 cell-neighborhood equi-join candidates; no n² theta join",
     "range_bucket_join": "bucket equi-join candidates; BNLJ only the 2-row offsets fan-out",
     "asof_state_join": "one shuffle+sort ordered window; no per-row probe join",

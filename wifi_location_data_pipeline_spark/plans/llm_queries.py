@@ -5276,8 +5276,8 @@ SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM (
         # corpus pass is identical) while the vocabulary is trivially
         # driver-sized, so the r11 one-job collect stays. The bounded
         # branch is value-pinned to the one-job branch by
-        # tests/test_jobs.py::test_collocations_bounded_matches_small and
-        # oracle-gated on the at-scale corpus (where it is the live path).
+        # tests/test_oracle_parity.py::test_collocations_bounded_matches_small
+        # and oracle-gated on the at-scale corpus (where it is the live path).
         bounded = doc_sz is None or doc_sz >= _COLL_BOUNDED_MIN_BYTES
         if bounded:
             t20 = pairs.orderBy(F2.desc("c"), "w1", "w2").limit(20)

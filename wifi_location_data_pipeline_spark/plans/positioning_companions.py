@@ -349,7 +349,7 @@ def ecf_aps_sql(d: str) -> str:
 
 def ensemble_closed_fn(spark, sf_dir):
     """REAL one-pass ensemble (positioning.onepass.position_requests_onepass):
-    physics gate → broadcast AP join → one-shuffle pack → context classes →
+    physics gate → broadcast AP join → kernel-side pack → context classes →
     selection matrix → proximity/WCL/log-distance/RSSI-ratio → robust
     combiner (PositioningServiceImpl.java:168-190; SELECTION.md; SURVEY
     §2.7/§3.2), on requests restricted to ≤2 APs so the path is fully
@@ -364,11 +364,10 @@ def ensemble_closed_fn(spark, sf_dir):
     apdim = spark.sql(_fold(sf_dir, f"SELECT * FROM ({ecf_aps_sql(SPARK)}) a"))
 
     # flat-observation entry: the fixture is already one row per scan, and
-    # every mac resolves (ap_ids 0..49 cover the dimension), so nesting into
-    # request structs just to explode them again would pay a collect_list
-    # shuffle + explode stage for nothing — position_observations_onepass
-    # packs once and gates on the packed array (value-identical here;
-    # equivalence pinned by test_flat_onepass_matches_nested)
+    # every mac resolves (ap_ids 0..49 cover the dimension), so
+    # position_observations_onepass nests the resolved scans and runs the
+    # nested plan (value-identical here; equivalence pinned by
+    # test_flat_onepass_matches_nested)
     flat_obs = obs.join(
         F.broadcast(apdim.select("ap_id", "mac", "frequency")), "ap_id"
     ).select(
@@ -614,7 +613,7 @@ from wifi_location_data_pipeline_spark.plans.queries import register  # noqa: E4
 register(
     "ensemble_closed_form",
     "Flagship one-pass positioning ensemble on ≤2-AP requests (closed-form "
-    "selection only): physics gate, broadcast AP join, single-shuffle pack, "
+    "selection only): physics gate, broadcast AP join, kernel-side pack, "
     "context classification, selection matrix, "
     "proximity/WCL/log-distance/RSSI-ratio, robust combiner — the REAL "
     "position_requests_onepass path under a value-level DuckDB oracle "

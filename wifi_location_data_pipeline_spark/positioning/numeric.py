@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from wifi_location_data_pipeline_spark import config as C
+
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("request_id", T.StringType()),
@@ -275,7 +277,9 @@ def _mle_batch(groups: list[dict]) -> list[list | None]:
         return out
     R = len(idx)
     lens = np.array([len(groups[i]["rssi"]) for i in idx])
-    K = int(lens.max())
+    # pad to at least the request cap: a row's reductions then run over the
+    # same width, and give the same bits, whatever else shares the batch
+    K = max(int(lens.max()), C.POSITIONING_MAX_SCANS_PER_REQUEST)
     mask = np.arange(K) < lens[:, None]
 
     # padded-tensor build, fully vectorized (the per-request init loop cost

@@ -1,4 +1,4 @@
-"""One-shuffle positioning ensemble: pack per request, one Arrow kernel.
+"""Shuffle-free positioning ensemble: narrow plan, one Arrow kernel.
 
 The multi-pass pipeline (pipeline.position_observations) expresses each phase
 — context, selection, four closed-form algorithms, numeric tier, combiner —
@@ -8,26 +8,30 @@ scheduling, codegen, and Python-worker spin-up; at 100 TB it is a dozen
 passes over the fact table.
 
 Every phase keys on request_id and every request holds ≤20 observations, so
-the Spark-first shape is: explode → broadcast AP join → per-element derived
-values as CODEGEN column expressions (path-loss distance, inverse-distance
-weight, confidence weight, WCL weight — computed on the exploded rows where
-whole-stage codegen applies) → ONE hash aggregate packs each request into
-mac-sorted arrays → one vectorized Arrow kernel (positioning/onepass_kernel)
-computes context, selection, the closed-form algorithms, the
+the Spark-first shape is: physics gate on the nested scan array → explode →
+broadcast AP join → per-element derived values as CODEGEN column expressions
+(path-loss distance, inverse-distance weight, confidence weight, WCL weight —
+computed on the exploded rows where whole-stage codegen applies) → one
+vectorized Arrow kernel (positioning/onepass_kernel) that packs each request
+itself and computes context, selection, the closed-form algorithms, the
 trilateration/MLE numeric tier, and the robust combiner in a single
-mapInPandas pass.
+mapInPandas pass. Every operator before the kernel is narrow, so the rows of
+a request stay contiguous in the partition of their input row and the plan
+has no shuffle: the kernel groups rows by request_id, sorts each request by
+its pack key, and carries a request that straddles two Arrow batches into
+the next one. The same plan runs on a streaming DataFrame
+(streaming/positioning.py), where every operator in it is stateless.
 
 History: rounds 2–5 expressed the packed middle as generated SQL over lambda
 higher-order array functions. Lambda HOFs run in Spark's INTERPRETED
 projection path (they disqualify whole-stage codegen), which the round-5
 judge measured at 13.5× of the single-node oracle at sf1; the generated SQL
-also cost multi-second Catalyst analysis per invocation (per micro-batch on
-the serving path) and needed an interior .cache() plus a numeric-count job
-to split the Python tier. The kernel removes all of it: one job, no interior
-cache, no per-batch giant-SQL analysis. Reference semantics per phase remain
-documented in the row-wise twins (context.py, selection.py, algorithms.py,
-numeric.py, combiner.py), which are the auditable implementation and the
-parity-test baseline (test_onepass_matches_multipass).
+also cost multi-second Catalyst analysis per invocation and needed an
+interior .cache() plus a numeric-count job to split the Python tier.
+Reference semantics per phase remain documented in the row-wise twins
+(context.py, selection.py, algorithms.py, numeric.py, combiner.py), which
+are the auditable implementation and the parity-test baseline
+(test_onepass_matches_multipass).
 """
 
 from __future__ import annotations
@@ -37,9 +41,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wifi_location_data_pipeline_spark import config as C
+from wifi_location_data_pipeline_spark.functions.identifiers import normalize_bssid
+from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
+    PACK_FIELDS,
+    make_onepass_kernel,
+)
 from wifi_location_data_pipeline_spark.positioning.prepare import (
     explode_requests,
-    join_known_aps,
+    known_ap_lookup,
 )
 
 
@@ -48,26 +57,22 @@ from wifi_location_data_pipeline_spark.positioning.prepare import (
 # ---------------------------------------------------------------------------
 
 
-def physics_valid_expr(
-    scans: Column, rssi_field: str = "signalStrength", freq_field: str = "frequency"
-) -> Column:
+def physics_valid_expr(scans: Column) -> Column:
     """TRUE iff the request's scan set passes the physics checks.
 
     Same semantics as prepare.physics_gate, evaluated on the nested array so
     no pre-join shuffle is needed: any RSSI outside [-100,-30] fails; within a
     frequency group, max > -50 dBm with spread > 45 dB fails (the exact
-    [-30,-100] boundary pair passes). Field names are parameterized so the
-    same gate runs on raw request structs (signalStrength) and on the packed
-    per-request arrays of the flat-observation path (signal_strength).
+    [-30,-100] boundary pair passes).
     """
-    s = lambda x: x.getField(rssi_field)  # noqa: E731
+    s = lambda x: x.getField("signalStrength")  # noqa: E731
     rssi_ok = ~F.exists(
         scans, lambda x: (s(x) > C.PHYSICS_RSSI_MAX) | (s(x) < C.PHYSICS_RSSI_MIN)
     )
-    freqs = F.array_distinct(F.transform(scans, lambda x: x.getField(freq_field)))
+    freqs = F.array_distinct(F.transform(scans, lambda x: x.getField("frequency")))
 
     def freq_bad(f: Column) -> Column:
-        grp = F.filter(scans, lambda x: x.getField(freq_field).eqNullSafe(f))
+        grp = F.filter(scans, lambda x: x.getField("frequency").eqNullSafe(f))
         mx = F.array_max(F.transform(grp, s))
         mn = F.array_min(F.transform(grp, s))
         return (
@@ -83,7 +88,7 @@ def physics_valid_expr(
 # per-element derived values — codegen column exprs on the EXPLODED rows
 # (semantics: LogDistancePathLossAlgorithm / WCL weight formulas; same
 # expressions the retired staged SQL evaluated per array element, now run
-# inside whole-stage codegen before the pack)
+# inside whole-stage codegen before the kernel)
 # ---------------------------------------------------------------------------
 
 
@@ -134,26 +139,6 @@ def _derived_element_cols() -> dict[str, Column]:
     )
     return {"d": d, "iw": 1.0 / F.greatest(F.lit(1.0), d), "cw": cw, "w": w}
 
-
-# struct field order = the pack sort key. The first 8 fields are the
-# original observation columns (mac first ⇒ keep-first dedup per mac = the
-# min-struct element of each mac run, as the staged plan defined it); the
-# derived tail fields are functions of the originals, so they can never
-# change the sort outcome on ties.
-_PACK_FIELDS = (
-    "mac_addr",
-    "signal_strength",
-    "frequency",
-    "ap_lat",
-    "ap_lon",
-    "ap_alt",
-    "ap_haccuracy",
-    "ap_confidence",
-    "d",
-    "iw",
-    "cw",
-    "w",
-)
 
 _CAL_INFO_T = T.ArrayType(
     T.StructType(
@@ -303,18 +288,17 @@ def position_requests_onepass(
     requests: DataFrame,
     access_points: DataFrame,
     with_reasons: bool = False,
-    staged_sink: list | None = None,
     numeric_tier: str = "auto",
 ) -> DataFrame:
     """Nested requests + AP dimension → combined positions, one job.
 
-    Plan: physics gate (nested-array filter) → explode → broadcast AP join →
-    derived element values (codegen projection) → explicit hash partition on
-    request_id + pack aggregate (the one data shuffle; the explicit
-    repartition keeps the kernel stage at cluster width — AQE would coalesce
-    the tiny packed exchange to 1 partition and single-thread the NumPy) →
-    vectorized Arrow kernel (context/selection/algorithms/numeric/combine,
-    onepass_kernel.py).
+    Plan: physics gate (nested-array filter) → explode → broadcast AP join
+    (``known_ap_lookup``) → derived element values (codegen projection) →
+    vectorized Arrow kernel that packs each request and runs
+    context/selection/algorithms/numeric/combine (onepass_kernel.py). No
+    shuffle: the kernel runs in the partitions of ``requests``, so its
+    parallelism is the input's (a caller holding a few large splits can
+    repartition ``requests`` first).
 
     ``with_reasons=True`` adds the reference's ``selectionInfo`` diagnostics
     (CalculationInfo.java:9-65; AlgorithmSelector.selectAlgorithmsWithReasons,
@@ -324,73 +308,36 @@ def position_requests_onepass(
     the request's packed context classes, so the reason bookkeeping costs
     one broadcast join at ANY scale instead of per-request string assembly.
 
-    ``numeric_tier``: the trilateration/MLE tier now runs INSIDE the kernel
-    (no separate Python stage, no numeric-count job), so "auto" and "eager"
-    are equivalent; "off" keeps its contract — the kernel raises at
-    execution if selection routes any request to the numeric tier.
-
-    ``staged_sink`` is kept for API compatibility (the staged-SQL
-    formulation registered an interior cache per call that long-running
-    callers had to unpersist); the kernel plan has no interior cache, so
-    nothing is appended.
+    ``numeric_tier``: the trilateration/MLE tier runs INSIDE the kernel.
+    "auto" runs it wherever selection routes a request; "off" makes the
+    kernel raise at execution if selection routes any request to it.
     """
-    del staged_sink  # no interior cache in the kernel plan
-    gated = requests.filter(physics_valid_expr(F.col("wifiScanResults")))
-    obs = join_known_aps(explode_requests(gated), access_points)
-    obs = obs.withColumns(_derived_element_cols())
-
-    spark = requests.sparkSession
-    # "eager" is the serving hint (streaming/positioning.py): a micro-batch
-    # is bounded by maxFilesPerTrigger, so two kernel tasks cost less in
-    # scheduling than cluster-width near-empty ones. Batch jobs take the
-    # full width.
-    n_parts = (
-        2 if numeric_tier == "eager"
-        else max(2, spark.sparkContext.defaultParallelism // 2)
+    return position_requests_from_lookup(
+        requests, known_ap_lookup(access_points), with_reasons, numeric_tier
     )
-    packed = (
-        obs.repartition(n_parts, "request_id")
-        .groupBy("request_id")
-        .agg(
-            F.max("n_scanned").alias("n_scanned"),
-            F.array_sort(F.collect_list(F.struct(*_PACK_FIELDS))).alias("arr"),
-        )
-    )
-    return _kernel_over_packed(packed, with_reasons, numeric_tier)
 
 
-def _kernel_over_packed(
-    packed: DataFrame, with_reasons: bool, numeric_tier: str
+def position_requests_from_lookup(
+    requests: DataFrame,
+    ap_lookup: DataFrame,
+    with_reasons: bool = False,
+    numeric_tier: str = "auto",
 ) -> DataFrame:
-    """Packed (request_id, n_scanned, arr) → kernel output (shared tail)."""
-    flat = packed.select(
+    """``position_requests_onepass`` against a prepared ``known_ap_lookup``,
+    for callers that prepare (and cache) the lookup once and apply the plan
+    to many request sets — the positioning stream."""
+    if numeric_tier not in ("auto", "off"):
+        raise ValueError(f"numeric_tier must be 'auto' or 'off', got {numeric_tier!r}")
+    gated = requests.filter(physics_valid_expr(F.col("wifiScanResults")))
+    obs = explode_requests(gated).join(F.broadcast(ap_lookup), "mac_addr", "inner")
+    derived = _derived_element_cols()
+    obs = obs.select(
         "request_id",
         "n_scanned",
-        F.col("arr.signal_strength").alias("s"),
-        F.col("arr.frequency").cast("array<double>").alias("freq"),
-        F.col("arr.ap_lat").alias("lat"),
-        F.col("arr.ap_lon").alias("lon"),
-        F.col("arr.ap_alt").alias("alt"),
-        F.col("arr.ap_haccuracy").alias("hacc"),
-        F.col("arr.ap_confidence").alias("conf"),
-        F.col("arr.d").alias("d"),
-        F.col("arr.iw").alias("iw"),
-        F.col("arr.cw").alias("cw"),
-        F.col("arr.w").alias("w"),
-        # keep-first dedup flags: arr is mac-sorted, flag marks each mac
-        # run's first element (the only remaining HOF — O(K) string compares)
-        F.expr(
-            "transform(arr, (x, i) -> i = 0"
-            " OR x.mac_addr != element_at(arr, i).mac_addr)"
-        ).alias("newmac"),
+        *[derived[c].alias(c) if c in derived else F.col(c) for c in PACK_FIELDS],
     )
-
-    from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
-        make_onepass_kernel,
-    )
-
     schema = _OUT_SCHEMA_CTX if with_reasons else _OUT_SCHEMA
-    out = flat.mapInPandas(make_onepass_kernel(with_reasons, numeric_tier), schema)
+    out = obs.mapInPandas(make_onepass_kernel(with_reasons, numeric_tier), schema)
     if with_reasons:
         out = _attach_selection_info(out)
     return out
@@ -402,53 +349,46 @@ def position_observations_onepass(
     with_reasons: bool = False,
     numeric_tier: str = "auto",
 ) -> DataFrame:
-    """Flat-observation twin of ``position_requests_onepass``.
+    """Flat-observation entry of ``position_requests_onepass``.
 
     For callers whose scans are already one row per observation
-    (``request_id, mac_addr, signal_strength, frequency`` + optional ssid
-    fields) — e.g. the oracle-gate companions that derive observations
-    relationally — nesting them into request structs only for
-    ``explode_requests`` to flatten them again costs a collect_list shuffle
-    plus an explode stage that this path skips: broadcast AP join → derived
-    codegen columns → ONE repartition+pack → physics gate on the packed
-    array → kernel.
+    (``request_id, mac_addr, signal_strength, frequency``) — e.g. the
+    oracle-gate companions that derive observations relationally. The
+    observations whose AP resolves are nested into request structs (the one
+    request_id shuffle) and positioned by the nested entry.
 
     Semantics note vs the nested API: the physics gate and ``n_scanned``
-    here see only observations whose AP RESOLVES (the pack runs post-join),
-    while the nested path gates pre-join on every scanned mac. Callers whose
-    observations may carry unknown MACs and need them gated/counted must use
-    the nested API; when every mac resolves (all gate-companion fixtures),
-    the two paths are value-identical — pinned by
+    here see only observations whose AP RESOLVES (the nest runs after a
+    semi join with the AP lookup), while the nested path gates pre-join on
+    every scanned mac. Callers whose observations may carry unknown MACs and
+    need them gated/counted must use the nested API; when every mac
+    resolves (all gate-companion fixtures), the two paths are
+    value-identical — pinned by
     tests/test_positioning.py::test_flat_onepass_matches_nested.
     """
-    from wifi_location_data_pipeline_spark.functions.identifiers import (
-        normalize_bssid,
-    )
-
+    lookup = known_ap_lookup(access_points)
     # normalize like explode_requests does on the nested path — without
     # this, an uppercase/dash-format mac that DOES exist in the dimension
-    # silently drops at the inner join instead of resolving
-    observations = observations.withColumn(
+    # silently drops at the semi join instead of resolving
+    resolved = observations.withColumn(
         "mac_addr", normalize_bssid(F.col("mac_addr"))
+    ).join(F.broadcast(lookup), "mac_addr", "left_semi")
+    scan = F.struct(
+        F.col("mac_addr").alias("macAddress"),
+        F.col("signal_strength").alias("signalStrength"),
+        F.col("frequency"),
+        F.lit(None).cast("string").alias("ssid"),
+        F.lit(None).cast("int").alias("linkSpeed"),
+        F.lit(None).cast("int").alias("channelWidth"),
     )
-    obs = join_known_aps(observations, access_points)
-    obs = obs.withColumns(_derived_element_cols())
-    spark = observations.sparkSession
-    n_parts = (
-        2 if numeric_tier == "eager"
-        else max(2, spark.sparkContext.defaultParallelism // 2)
-    )
-    packed = (
-        obs.repartition(n_parts, "request_id")
+    # an explicit partition count keeps the kernel at cluster width: AQE
+    # would coalesce the tiny nested exchange to one partition and
+    # single-thread the NumPy
+    n_parts = max(2, observations.sparkSession.sparkContext.defaultParallelism // 2)
+    requests = (
+        resolved.repartition(n_parts, "request_id")
         .groupBy("request_id")
-        .agg(
-            F.count("*").cast("int").alias("n_scanned"),
-            F.array_sort(F.collect_list(F.struct(*_PACK_FIELDS))).alias("arr"),
-        )
+        .agg(F.collect_list(scan).alias("wifiScanResults"))
+        .withColumnRenamed("request_id", "requestId")
     )
-    packed = packed.filter(
-        physics_valid_expr(
-            F.col("arr"), rssi_field="signal_strength", freq_field="frequency"
-        )
-    )
-    return _kernel_over_packed(packed, with_reasons, numeric_tier)
+    return position_requests_from_lookup(requests, lookup, with_reasons, numeric_tier)

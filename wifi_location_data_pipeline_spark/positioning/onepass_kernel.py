@@ -9,16 +9,18 @@ single-node oracle at sf1 purely on that interpreter overhead, plus a
 multi-second Catalyst analysis of the generated SQL per invocation (paid per
 micro-batch on the serving path).
 
-This kernel takes the packed per-request arrays (padded to (rows, K)
-matrices, K = max scans per request ≤ 20) and computes context
+This kernel takes the observation rows of whole requests (one row per
+resolved scan, as the explode and broadcast AP join leave them: every row of
+a request sits in the partition of its input row), groups them by request_id
+itself, sorts each request by ``PACK_FIELDS`` and pads the requests to
+(rows, K) matrices, K = the 20-scan request cap. It then computes context
 classification, algorithm selection, the four closed-form algorithms, the
 trilateration/MLE numeric tier, and the robust combiner in one
 ``mapInPandas`` pass of batched NumPy — the same Arrow-kernel pattern as the
 dedup signature kernels. Scale shape: per-request work is O(K²) bounded by
-the 20-scan request cap, batches are embarrassingly parallel across
-partitions, and the plan collapses to scan → broadcast join → ONE shuffle
-(the pack groupBy) → this kernel. No interior cache, no numeric-count job,
-no split/union — one job end to end.
+the 20-scan request cap, partitions are independent, and the plan is scan →
+explode → broadcast join → this kernel with no shuffle. No interior cache,
+no numeric-count job, no split/union — one job end to end.
 
 Semantics are the row-wise phase modules' (context.py, selection.py,
 algorithms.py, numeric.py, combiner.py — the auditable Spark-declarative
@@ -73,14 +75,75 @@ _GEO_W = np.array([GEOMETRY_MULT[k] for k in _GQ])
 _DIST_W = np.array([DISTRIBUTION_MULT[k] for k in _SD])
 
 
-def _pad(col, lens: np.ndarray, K: int, fill: float = np.nan) -> np.ndarray:
-    """Ragged list-of-arrays column → (rows, K) float64 matrix."""
-    n = len(lens)
-    out = np.full((n, K), fill)
-    if n:
-        mask = np.arange(K) < lens[:, None]
-        out[mask] = np.concatenate([np.asarray(a, dtype=float) for a in col])
-    return out
+# Kernel input columns after (request_id, n_scanned), in pack-sort order:
+# mac first, so the first row of each mac run is the minimum struct for that
+# mac (keep-first dedup, the rule array_sort(collect_list(struct)) defined);
+# then the original observation and AP fields; the derived tail (d, iw, cw,
+# w) is a function of the fields before it, so it never decides a tie.
+PACK_FIELDS = (
+    "mac_addr",
+    "signal_strength",
+    "frequency",
+    "ap_lat",
+    "ap_lon",
+    "ap_alt",
+    "ap_haccuracy",
+    "ap_confidence",
+    "d",
+    "iw",
+    "cw",
+    "w",
+)
+# kernel-side name of each value field
+_SHORT = dict(zip(PACK_FIELDS[1:], (
+    "s", "freq", "lat", "lon", "alt", "hacc", "conf", "d", "iw", "cw", "w",
+)))
+
+
+def pack_requests(pdf):
+    """Observation rows of whole requests → padded per-request matrices.
+
+    Groups rows by request_id (requests in first-appearance order) and sorts
+    each request by ``PACK_FIELDS`` ascending, nulls first inside each
+    field: the order array_sort gives an array of those structs. Arrow hands
+    a null double over as NaN, so NaN sorts as null here; the only field a
+    real NaN could reach is signal_strength, and the physics gate drops such
+    requests before the kernel.
+
+    Returns (rids, n_scanned, lens, mats, ded): ``mats`` maps each short
+    field name to an (n, K) matrix, NaN-padded past each request's length;
+    ``ded`` marks the first row of each mac run (the dedup-keep mask). K is
+    at least the 20-scan request cap, so a request's row reductions run over
+    the same width, and give the same bits, whichever requests share its
+    batch.
+    """
+    import pandas as pd
+
+    rid_code, rids = pd.factorize(pdf["request_id"], use_na_sentinel=False)
+    mac_code = pd.factorize(pdf["mac_addr"], sort=True, use_na_sentinel=False)[0]
+    vals = {c: pdf[c].to_numpy(dtype=float, na_value=np.nan) for c in _SHORT}
+    keys = []
+    for c in reversed(PACK_FIELDS[1:]):  # np.lexsort: last key is primary
+        known = ~np.isnan(vals[c])
+        keys += [np.where(known, vals[c], 0.0), known]
+    order = np.lexsort(keys + [mac_code, rid_code])
+
+    rid_s, mac_s = rid_code[order], mac_code[order]
+    lens = np.bincount(rid_code, minlength=len(rids))
+    starts = np.cumsum(lens) - lens
+    pos = np.arange(len(order)) - starts[rid_s]
+    shape = (len(rids), max(int(lens.max()), C.POSITIONING_MAX_SCANS_PER_REQUEST))
+
+    mats = {}
+    for c, short in _SHORT.items():
+        mats[short] = np.full(shape, np.nan)
+        mats[short][rid_s, pos] = vals[c][order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (rid_s[1:] != rid_s[:-1]) | (mac_s[1:] != mac_s[:-1])
+    ded = np.zeros(shape, dtype=bool)
+    ded[rid_s, pos] = first
+    n_scanned = np.maximum.reduceat(pdf["n_scanned"].to_numpy()[order], starts)
+    return rids, n_scanned, lens, mats, ded
 
 
 def _row_median(sorted_vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -94,38 +157,27 @@ def _row_median(sorted_vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
 
 
 def compute_onepass(
-    rids,
     n_scanned: np.ndarray,
     lens: np.ndarray,
-    cols: dict[str, list],
-    newmac,
+    mats: dict[str, np.ndarray],
+    ded: np.ndarray,
     numeric_tier: str = "auto",
 ):
-    """One padded batch of packed requests → per-request result dict arrays.
+    """One batch of packed requests (``pack_requests``) → per-request
+    result dict arrays.
 
-    ``cols``: per-element array columns (s, freq, lat, lon, alt, hacc, conf,
-    d, iw, cw, w — the last four precomputed JVM-side in the pre-pack
-    codegen projection). ``newmac``: per-element keep-first dedup flags
-    (arr is mac-sorted; flag marks the first element of each mac run).
+    ``mats``: (rows, K) element matrices (s, freq, lat, lon, alt, hacc,
+    conf, d, iw, cw, w — the last four precomputed JVM-side in the codegen
+    projection). ``ded``: keep-first dedup flags (each request is
+    mac-sorted; a flag marks the first element of each mac run).
     """
-    n = len(lens)
-    K = int(lens.max()) if n else 1
+    n, K = ded.shape
     M = np.arange(K) < lens[:, None]  # real-element mask (n, K)
 
-    s = _pad(cols["s"], lens, K)
-    lat = _pad(cols["lat"], lens, K)
-    lon = _pad(cols["lon"], lens, K)
-    alt = _pad(cols["alt"], lens, K)
-    hacc = _pad(cols["hacc"], lens, K)
-    d = _pad(cols["d"], lens, K)
-    iw = _pad(cols["iw"], lens, K)
-    cw = _pad(cols["cw"], lens, K)
-    w = _pad(cols["w"], lens, K)
-
-    ded = _pad(newmac, lens, K, fill=0.0) > 0.5  # dedup-keep mask
-    ded &= M
-    # mac-group code per element: arr is mac-sorted, so cumsum of the
-    # boundary flags labels each element with its (request-local) AP index
+    s, lat, lon, alt, hacc = (mats[k] for k in ("s", "lat", "lon", "alt", "hacc"))
+    d, iw, cw, w = (mats[k] for k in ("d", "iw", "cw", "w"))
+    # mac-group code per element: each request is mac-sorted, so cumsum of
+    # the boundary flags labels each element with its (request-local) AP index
     grp = np.cumsum(ded, axis=1)
 
     def msum(x, mask=M):
@@ -347,8 +399,7 @@ def compute_onepass(
         _trilat_arrays,
     )
 
-    freq = _pad(cols["freq"], lens, K)
-    conf = _pad(cols["conf"], lens, K)
+    freq, conf = mats["freq"], mats["conf"]
     tri_res: dict[int, list] = {}
     mle_res: dict[int, list] = {}
     num_idx = np.flatnonzero(has_numeric)
@@ -578,26 +629,37 @@ def build_output(rids, res, with_reasons: bool):
 
 
 def make_onepass_kernel(with_reasons: bool, numeric_tier: str):
-    """mapInPandas body over the flattened packed rows."""
+    """mapInPandas body over observation rows (request_id, n_scanned,
+    *PACK_FIELDS) in which each request's rows are contiguous.
+
+    A request can straddle two Arrow batches, so the rows of each batch's
+    last request are held back and prepended to the next batch; the final
+    carry is solved after the last batch.
+    """
     import pandas as pd
 
-    col_names = ("s", "freq", "lat", "lon", "alt", "hacc", "conf", "d", "iw", "cw", "w")
+    def solve(pdf):
+        rids, n_scanned, lens, mats, ded = pack_requests(pdf)
+        res = compute_onepass(n_scanned, lens, mats, ded, numeric_tier=numeric_tier)
+        return build_output(rids, res, with_reasons)
 
     def run(batches):
         any_out = False
+        carry = None
         for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
             if not len(pdf):
                 continue
-            lens = np.fromiter((len(a) for a in pdf["s"]), dtype=np.int64, count=len(pdf))
-            cols = {c: list(pdf[c]) for c in col_names}
-            res = compute_onepass(
-                list(pdf["request_id"]),
-                pdf["n_scanned"].to_numpy(),
-                lens, cols, list(pdf["newmac"]),
-                numeric_tier=numeric_tier,
-            )
+            rid_code = pd.factorize(pdf["request_id"], use_na_sentinel=False)[0]
+            tail = rid_code == rid_code[-1]
+            carry = pdf[tail]
+            if not tail.all():
+                any_out = True
+                yield solve(pdf[~tail])
+        if carry is not None:
             any_out = True
-            yield build_output(list(pdf["request_id"]), res, with_reasons)
+            yield solve(carry)
         if not any_out:
             cols_out = {
                 "request_id": pd.Series(dtype=object),

@@ -40,14 +40,13 @@ def explode_requests(requests: DataFrame) -> DataFrame:
     )
 
 
-def join_known_aps(observations: DataFrame, access_points: DataFrame) -> DataFrame:
-    """Attach AP golden records; keep-first on duplicate mac; filter to usable
-    statuses (WifiAccessPoint.java:37-38; PositioningServiceImpl.java:350-356).
-
-    Unknown MACs are dropped (inner join) — the reference ignores scans whose
-    AP is absent from the store (WifiPositioningCalculator.filterValidScans).
-    """
-    aps = (
+def known_ap_lookup(access_points: DataFrame) -> DataFrame:
+    """AP golden records usable for positioning, one row per mac: filter to
+    usable statuses (WifiAccessPoint.java:37-38; PositioningServiceImpl.java:
+    350-356), keep-first by version on duplicate mac, and rename to the
+    ``ap_*`` columns the positioning plans read. Long-running callers (the
+    positioning stream) prepare and cache it once."""
+    return (
         access_points.filter(F.col("status").isin(*C.VALID_AP_STATUSES))
         .withColumn(
             "_rn",
@@ -56,7 +55,6 @@ def join_known_aps(observations: DataFrame, access_points: DataFrame) -> DataFra
             ),
         )
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
         .select(
             F.col("mac_addr"),
             F.col("latitude").alias("ap_lat"),
@@ -68,7 +66,17 @@ def join_known_aps(observations: DataFrame, access_points: DataFrame) -> DataFra
             F.col("vendor").alias("ap_vendor"),
         )
     )
-    return observations.join(F.broadcast(aps), "mac_addr", "inner")
+
+
+def join_known_aps(observations: DataFrame, access_points: DataFrame) -> DataFrame:
+    """Attach the ``known_ap_lookup`` record of each observation's mac.
+
+    Unknown MACs are dropped (inner join) — the reference ignores scans whose
+    AP is absent from the store (WifiPositioningCalculator.filterValidScans).
+    """
+    return observations.join(
+        F.broadcast(known_ap_lookup(access_points)), "mac_addr", "inner"
+    )
 
 
 def physics_gate(observations: DataFrame) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Streaming positioning: request JSON zone → positions, per micro-batch.
+"""Streaming positioning: request JSON zone → positions, one plan per stream.
 
 The reference serves positioning as a long-lived HTTP API
 (`wifi-positioning-service`, PositioningController.java:30-49 →
@@ -7,20 +7,37 @@ Spark-first equivalent of "requests arrive continuously, answers leave
 continuously" is Structured Streaming over a request zone:
 
     readStream.json(request_zone, POSITIONING_REQUEST_SCHEMA)
-      → foreachBatch: position_requests_onepass ⋈ broadcast(AP dimension)
-      → per-batch_id overwrite sink (idempotent under foreachBatch's
-        at-least-once replay ⇒ effectively exactly-once results)
+      → position_requests_from_lookup ⋈ broadcast(cached AP lookup)
+        (applied ONCE, to the streaming DataFrame)
+      → foreachBatch: per-batch_id overwrite sink (idempotent under
+        foreachBatch's at-least-once replay ⇒ effectively exactly-once)
 
-foreachBatch rather than a stateless map: the ensemble is a multi-stage
-aggregation (pack → context/selection/algorithms → combine) with an
-optional Arrow tier, which the streaming planner cannot express as a
-continuous query — per-batch execution of the BATCH plan is the supported
-Spark shape for this (and mirrors the reference's request-batched executor,
-WifiPositioningCalculator.java:106-176).
+The one-pass plan is shuffle-free (positioning/onepass.py): filter,
+generate, the stream-static broadcast join, project and MapInPandas are all
+stateless, so the stream plans it as a continuous query and the driver
+builds no Python plan per micro-batch. The AP lookup (status filter,
+keep-first by version, rename — the analog of the service's DynamoDB lookup
+path with its long-lived client) is prepared and cached once at stream
+start, so its window shuffle never runs per batch. A micro-batch is then two
+Spark jobs: the AP broadcast, and one scan → kernel → write stage, run as a
+single task. An empty request file commits a batch with no answers. The
+per-request diagnostics (``with_reasons``) ride along identically to the
+batch path.
 
-The AP dimension is loaded ONCE and broadcast per batch — the analog of the
-service's DynamoDB lookup path with its long-lived client. The per-request
-diagnostics (``with_reasons``) ride along identically to the batch path.
+Why the plan keeps exactly ONE Python stage: on a 4-core host each Python
+stage costs about 200 ms of fixed time, whatever its input. An identity
+mapInPandas over 28 rows in one task takes ≈400 ms to a parquet sink where
+the same job without it takes ≈160 ms (≈220 vs ≈40 ms to the noop sink);
+the Python worker spends ~150–200 ms in ``setup_spark_files`` waiting for
+the JVM's task header. ``spark.python.worker.reuse``, unix-domain sockets
+and the Arrow buffer size did not change this. So the kernel packs, solves
+and combines in the one stage; splitting any phase into its own Python
+stage would add that floor to every micro-batch. The same floor is paid per
+task, so the stage runs as one task: on the serving benchmark (4 cores,
+seeds 13–15) that lowered p50 latency from 958/1300/1317 ms with the file
+source's ~4 tasks per micro-batch to 752/977/1143 ms. The cost lands on
+large micro-batches (a backfill drain): 20 000 requests position in ≈2.2 s
+in one task against ≈1.7 s in four.
 """
 
 from __future__ import annotations
@@ -29,8 +46,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from wifi_location_data_pipeline_spark.positioning.onepass import (
-    position_requests_onepass,
+    position_requests_from_lookup,
 )
+from wifi_location_data_pipeline_spark.positioning.prepare import known_ap_lookup
 from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
 
 
@@ -43,8 +61,7 @@ def start_positioning_stream(
     with_reasons: bool = False,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    numeric_tier: str = "eager",
-    sink_coalesce: int | None = None,
+    numeric_tier: str = "auto",
 ) -> StreamingQuery:
     """Answer positioning requests from a streaming file zone.
 
@@ -53,11 +70,8 @@ def start_positioning_stream(
     are answered in the next micro-batch, the streaming analog of the
     service's request loop.
 
-    ``numeric_tier`` defaults to "eager": a serving micro-batch is bounded
-    (maxFilesPerTrigger), so skipping the per-batch numeric-count job in
-    favor of an always-on 2-task Python branch cuts one whole Spark job of
-    latency per batch (see position_requests_onepass). Pass "auto" for
-    large backfill drains where tier sizing matters.
+    ``numeric_tier`` is passed to the kernel ("auto" or "off", see
+    position_requests_onepass).
     """
     reader = spark.readStream.schema(POSITIONING_REQUEST_SCHEMA)
     if max_files_per_trigger is not None:
@@ -65,38 +79,29 @@ def start_positioning_stream(
         # max-poll / SQS batch limits); also gives the latency bench one
         # micro-batch per request file
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    requests = reader.json(request_zone)
+    # one task per micro-batch: a serving batch holds far less kernel work
+    # than one Python task's fixed cost (module docstring), and the file
+    # source would split even a few small files into ~one task per core.
+    # coalesce is narrow, so the plan stays shuffle-free and stateless.
+    requests = reader.json(request_zone).coalesce(1)
 
-    def _answer(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        staged: list = []
-        try:
-            out = position_requests_onepass(
-                batch_df, access_points,
-                with_reasons=with_reasons, staged_sink=staged,
-                numeric_tier=numeric_tier,
-            )
-            # foreachBatch is AT-LEAST-once: a batch that fails after the
-            # write but before the checkpoint commit REPLAYS. Writing each
-            # batch to its own batch_id=N partition directory with overwrite
-            # makes the replay idempotent — the second attempt replaces the
-            # first attempt's files instead of appending duplicates, so the
-            # sink as a whole is effectively exactly-once.
-            if sink_coalesce is not None:
-                # bounded serving micro-batches produce a few hundred rows;
-                # writing them as shuffle-partition-many files bills one
-                # task + one file-commit each for near-empty outputs
-                out = out.coalesce(sink_coalesce)
-            out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-        finally:
-            # one interior cache point is registered per call; unpersist it
-            # or a continuous stream pins one plan + blocks per micro-batch
-            for df in staged:
-                df.unpersist()
+    ap_lookup = known_ap_lookup(access_points).cache()
+    ap_lookup.count()  # materialize now, not in the first micro-batch
+    answers = position_requests_from_lookup(
+        requests, ap_lookup, with_reasons=with_reasons, numeric_tier=numeric_tier
+    )
+
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        # foreachBatch is AT-LEAST-once: a batch that fails after the
+        # write but before the checkpoint commit REPLAYS. Writing each
+        # batch to its own batch_id=N partition directory with overwrite
+        # makes the replay idempotent — the second attempt replaces the
+        # first attempt's files instead of appending duplicates, so the
+        # sink as a whole is effectively exactly-once.
+        batch_df.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
     writer = (
-        requests.writeStream.foreachBatch(_answer)
+        answers.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
