@@ -142,11 +142,16 @@ def main() -> None:
     # is the COLD path that trains from data, while the recorded min amortizes
     # the fit — emit both so the record carries the training cost too
     # (r11 VERDICT item 4; disclosure-only, the timed region is unchanged)
+    # (first_attempt and re_measured are keyed by the normalized full path:
+    # two scale dirs that share a basename must not overwrite each other)
     first_attempt: dict[str, dict[str, float]] = {}
+
+    def dir_key(d: str) -> str:
+        return os.path.normpath(os.path.abspath(d))
 
     def run_suite(bench_dir: str) -> dict[str, float]:
         timings: dict[str, float] = {}
-        first_attempt[os.path.basename(bench_dir.rstrip("/"))] = firsts = {}
+        first_attempt[dir_key(bench_dir)] = firsts = {}
         baseline = (
             min(canary_time(bench_dir) for _ in range(3)) if canary_name else None
         )
@@ -197,7 +202,7 @@ def main() -> None:
         ]
         for n in flagged:
             timings[n] = round(min([timings[n]] + [measure(n) for _ in range(2)]), 3)
-        re_measured[scale_key] = sorted(flagged)
+        re_measured[dir_key(bench_dir)] = sorted(flagged)
         prev_records[scale_key] = timings
         return timings
 
@@ -248,16 +253,15 @@ def main() -> None:
     ]
     if amortized:
         result["amortized_artifact"] = amortized
-        sf_key = os.path.basename(sf_dir.rstrip("/"))
         result["amortized_cold_sec"] = {
-            n: first_attempt.get(sf_key, {}).get(n) for n in amortized
+            n: first_attempt.get(dir_key(sf_dir), {}).get(n) for n in amortized
         }
     if tainted:
         # queries whose window the canary flagged as degraded even after a
         # settle-and-retry — their recorded minima are upper bounds
         result["tainted"] = sorted(set(tainted))
         tainted.clear()
-    rm = re_measured.get(os.path.basename(sf_dir.rstrip("/")), [])
+    rm = re_measured.get(dir_key(sf_dir), [])
     if rm:
         result["re_measured"] = rm
 
@@ -300,15 +304,14 @@ def main() -> None:
                 "queries": sf1_timings,
                 "dir": sf1_dir,
             }
-            sf1_key = os.path.basename(sf1_dir.rstrip("/"))
             amort1 = [n for n in result.get("amortized_artifact", []) if n in sf1_timings]
             if amort1:
                 result["sf1"]["amortized_cold_sec"] = {
-                    n: first_attempt.get(sf1_key, {}).get(n) for n in amort1
+                    n: first_attempt.get(dir_key(sf1_dir), {}).get(n) for n in amort1
                 }
             if tainted:
                 result["sf1"]["tainted"] = sorted(set(tainted))
-            rm1 = re_measured.get(os.path.basename(sf1_dir.rstrip("/")), [])
+            rm1 = re_measured.get(dir_key(sf1_dir), [])
             if rm1:
                 result["sf1"]["re_measured"] = rm1
         except Exception as e:  # never let the scale pass break the capture

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.wifi_fixtures import make_access_points
-from wifi_location_data_pipeline_spark.positioning.pipeline import position_requests
+from wifi_location_data_pipeline_spark.positioning.onepass import position_requests_onepass
 from wifi_location_data_pipeline_spark.schemas import (
     POSITIONING_REQUEST_SCHEMA,
     WIFI_ACCESS_POINTS_SCHEMA,
@@ -64,7 +64,7 @@ def ap_df(spark):
 
 def run(spark, ap_df, requests):
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    out = position_requests(rdf, ap_df)
+    out = position_requests_onepass(rdf, ap_df)
     return {r["request_id"]: r for r in out.collect()}
 
 
@@ -225,7 +225,6 @@ def test_onepass_matches_multipass(spark, ap_df):
     """The one-shuffle array-native plan must agree with the phase-by-phase
     row-wise reference plan on every fixture request."""
     from wifi_location_data_pipeline_spark.positioning.pipeline import (
-        position_requests,
         position_requests_multipass,
     )
 
@@ -240,7 +239,7 @@ def test_onepass_matches_multipass(spark, ap_df):
         req("pc", [scan(f"00:bb:00:00:00:0{k}", -58.0 - k) for k in (1, 2, 3)]),
     ]
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    one = {r["request_id"]: r for r in position_requests(rdf, ap_df).collect()}
+    one = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
     multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
     assert set(one) == set(multi) and one
     for rid, a in one.items():
@@ -250,48 +249,55 @@ def test_onepass_matches_multipass(spark, ap_df):
             assert abs(a[c] - b[c]) < 1e-6, (rid, c, a[c], b[c])
 
 
-def test_numeric_packed_matches_grouped(spark, ap_df):
-    """The packed mapInPandas numeric tier must agree with the per-group
-    applyInPandas reference shape (same math, different batching)."""
-    from pyspark.sql import functions as F
+def test_numeric_batched_matches_sequential():
+    """The batched numeric twins the one-pass kernel runs (_trilat_arrays,
+    lockstep _mle_batch) must agree with the sequential reference forms the
+    multipass plan runs (_trilaterate_group, _mle_group): same math,
+    different batching."""
+    import pandas as pd
 
     from wifi_location_data_pipeline_spark.positioning.numeric import (
-        numeric_positions,
-        numeric_positions_grouped,
+        _mle_batch,
+        _mle_group,
+        _trilat_arrays,
+        _trilaterate_group,
     )
-    from wifi_location_data_pipeline_spark.positioning.prepare import prepare_observations
-    from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
 
-    macs = [r["mac_addr"] for r in ap_df.select("mac_addr").collect()][:8]
-    # group sizes 2..8: exercises the <3-AP trilateration and <4-AP MLE
-    # bail-outs and the padded-tensor batching across ragged group sizes
-    reqs = [
-        {
-            "requestId": f"r{k}",
-            "client": "t",
-            "application": "t",
-            "calculationDetail": False,
-            "wifiScanResults": [
-                {"macAddress": m, "signalStrength": -55.0 - 4 * i - 2 * k, "frequency": 2437,
-                 "ssid": "t", "linkSpeed": None, "channelWidth": None}
-                for i, m in enumerate(macs[: 2 + k])
-            ],
-        }
+    # group sizes 2..8 over the first 8 (all usable) fixture APs, as the
+    # ap_df fixture resolves them: exercises the <3-AP trilateration and
+    # <4-AP MLE bail-outs and the padded-tensor batching across ragged sizes
+    aps = APS[:8]
+    pdfs = [
+        pd.DataFrame({
+            "signal_strength": [-55.0 - 4 * i - 2 * k for i in range(2 + k)],
+            "frequency": [2437] * (2 + k),
+            "ap_lat": [a[1] for a in aps[: 2 + k]],
+            "ap_lon": [a[2] for a in aps[: 2 + k]],
+            "ap_alt": [a[3] for a in aps[: 2 + k]],
+            "ap_confidence": [0.7] * (2 + k),
+        })
         for k in range(7)
     ]
-    rdf = spark.createDataFrame(reqs, POSITIONING_REQUEST_SCHEMA)
-    obs = prepare_observations(rdf, ap_df)
-    sel = spark.createDataFrame(
-        [(f"r{k}", a) for k in range(7) for a in ("trilateration", "maximum_likelihood")],
-        "request_id string, algorithm string",
-    )
-    joined = obs.join(sel, "request_id")
-    packed = {(r["request_id"], r["algorithm"]): r for r in numeric_positions(joined).collect()}
-    grouped = {(r["request_id"], r["algorithm"]): r for r in numeric_positions_grouped(joined).collect()}
-    assert set(packed) == set(grouped) and packed
-    for k in packed:
-        for c in ("latitude", "longitude", "accuracy", "confidence"):
-            assert abs(packed[k][c] - grouped[k][c]) < 1e-9, (k, c)
+    groups = [
+        {key: pdf[col].to_numpy(dtype=float) for key, col in (
+            ("rssi", "signal_strength"), ("freq", "frequency"), ("lat", "ap_lat"),
+            ("lon", "ap_lon"), ("conf", "ap_confidence"), ("alt", "ap_alt"))}
+        for pdf in pdfs
+    ]
+    batched = {}
+    sequential = {}
+    for k, (pdf, g, mle) in enumerate(zip(pdfs, groups, _mle_batch(groups))):
+        for alg, b, q in (("trilateration", _trilat_arrays(g), _trilaterate_group(pdf)),
+                          ("maximum_likelihood", mle, _mle_group(pdf))):
+            if b is not None:
+                batched[(k, alg)] = b
+            if q is not None:
+                sequential[(k, alg)] = q
+    assert set(batched) == set(sequential) and len(batched) == 11
+    for key, b in batched.items():
+        # latitude, longitude, accuracy, confidence
+        for c in (0, 1, 3, 4):
+            assert abs(b[c] - sequential[key][c]) < 1e-9, (key, c)
 
 
 def test_physics_gate_array_matches_rowwise(spark):
@@ -748,7 +754,6 @@ def test_onepass_matches_multipass_randomized(spark, seed, signals):
     import random
 
     from wifi_location_data_pipeline_spark.positioning.pipeline import (
-        position_requests,
         position_requests_multipass,
     )
 
@@ -790,7 +795,7 @@ def test_onepass_matches_multipass_randomized(spark, seed, signals):
                          "calculationDetail": False, "wifiScanResults": scans})
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
 
-    one = {r["request_id"]: r for r in position_requests(rdf, ap_df).collect()}
+    one = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
     multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
     assert set(one) == set(multi)
     assert len(one) >= 15  # the corpus isn't degenerate (23 with this seed)
@@ -908,7 +913,7 @@ def test_onepass_duplicate_mac_keeps_min_scan(spark, ap_df):
                               scan(macs[3], -70.0, 5240), scan(macs[4], -74.0, 2462)]),
     ]
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    one = {r["request_id"]: r for r in position_requests(rdf, ap_df).collect()}
+    one = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
     multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
     assert set(one) == set(multi) == {"dup_rssi", "dup_null_freq"}
     for rid, a in one.items():

@@ -3,15 +3,18 @@
 The reference ships no property-based testing (SURVEY §5); these cover the
 two places where a subtle bug would survive example-based tests — the line
 codec (arbitrary unicode payloads, MessageTransformationService.java:64-99 /
-DataDecodingService.java:47-108) and the 12-layer generated-SQL robust
-combiner (WeightedAveragePositionCombiner.java:105-461). Each property runs
-as ONE Spark job over hundreds of generated cases (per-example jobs would
-take minutes); corpora are seeded so failures reproduce exactly.
+DataDecodingService.java:47-108) and the production robust combiner, the
+one-pass kernel's ``_combine`` (WeightedAveragePositionCombiner.java:105-461).
+Each codec property runs as ONE Spark job over hundreds of generated cases
+(per-example jobs would take minutes); the combiner properties call the
+kernel function directly on padded NumPy slot arrays. Corpora are seeded so
+failures reproduce exactly.
 """
 
 import math
 import random
 
+import numpy as np
 from pyspark.sql import functions as F
 
 # -- codec ------------------------------------------------------------------
@@ -86,8 +89,6 @@ def test_codec_malformed_lines_decode_to_null(spark):
 
 # -- robust combiner --------------------------------------------------------
 
-_POS_FIELDS = "algorithm string, weight double, latitude double, longitude double, altitude double, accuracy double, confidence double"
-
 _ALGOS = (
     "proximity",
     "weighted_centroid",
@@ -115,18 +116,41 @@ def _rand_positions(rng, n, lat0, lon0, spread):
     return rows
 
 
-def _combine(spark, rows_by_req):
-    from wifi_location_data_pipeline_spark.positioning.combiner import combine_packed
-
-    data = [(rid, pos) for rid, pos in rows_by_req.items()]
-    df = spark.createDataFrame(
-        data, f"request_id string, pos array<struct<{_POS_FIELDS}>>"
+def _combine(rows_by_req):
+    """Pack each request's positions, in list order, into the kernel's
+    padded (rows, 6) slot arrays and run the production combiner."""
+    from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
+        _ALPHA_RANK,
+        _combine as combine,
     )
-    out = combine_packed(df, "pos")
-    return {r["request_id"]: r for r in out.collect()}
+    from wifi_location_data_pipeline_spark.positioning.selection import ALGORITHMS
+
+    fields = ("latitude", "longitude", "altitude", "accuracy", "confidence")
+    rids = list(rows_by_req)
+    shape = (len(rids), len(ALGORITHMS))
+    p_w = np.zeros(shape)
+    vals = {f: np.full(shape, np.nan) for f in fields}
+    p_alg = np.full(shape, -1)
+    for i, rid in enumerate(rids):
+        for j, r in enumerate(rows_by_req[rid]):
+            p_w[i, j] = r["weight"]
+            for f in fields:
+                vals[f][i, j] = r[f]
+            p_alg[i, j] = ALGORITHMS.index(r["algorithm"])
+    present = p_alg >= 0
+    out = combine(p_w, *(vals[f] for f in fields), present, present.sum(axis=1),
+                  _ALPHA_RANK[np.maximum(p_alg, 0)])
+    return {
+        rid: {
+            **{f: float(out[f][i]) for f in fields},
+            "is_collinear": bool(out["is_collinear"][i]),
+            "methods_used": sorted(ALGORITHMS[a] for a in p_alg[i][present[i]]),
+        }
+        for i, rid in enumerate(rids)
+    }
 
 
-def test_combiner_identical_points_collapse_to_that_point(spark):
+def test_combiner_identical_points_collapse_to_that_point():
     """All algorithms reporting the SAME coordinates (any weights) must
     combine to exactly those coordinates — median, trimmed mean, and MAD
     outlier handling all degenerate to the common value."""
@@ -145,7 +169,7 @@ def test_combiner_identical_points_collapse_to_that_point(spark):
             r["latitude"], r["longitude"], r["altitude"] = lat, lon, alt
         cases[f"c{i}"] = rows
         want[f"c{i}"] = (lat, lon, alt)
-    got = _combine(spark, cases)
+    got = _combine(cases)
     assert set(got) == set(cases)
     for rid, (lat, lon, alt) in want.items():
         r = got[rid]
@@ -154,7 +178,7 @@ def test_combiner_identical_points_collapse_to_that_point(spark):
         assert math.isclose(r["altitude"], alt, abs_tol=1e-9), rid
 
 
-def test_combiner_is_permutation_invariant(spark):
+def test_combiner_is_permutation_invariant():
     """Reordering the positions array must not change the output beyond
     float summation order (last-ulp): the reference's parallel execution
     returns algorithms in arbitrary completion order
@@ -173,8 +197,8 @@ def test_combiner_is_permutation_invariant(spark):
         rng.shuffle(perm)
         base[f"p{i}"] = rows
         shuffled[f"p{i}"] = perm
-    a = _combine(spark, base)
-    b = _combine(spark, shuffled)
+    a = _combine(base)
+    b = _combine(shuffled)
     for rid in base:
         ra, rb = a[rid], b[rid]
         for fld in ("latitude", "longitude", "altitude", "accuracy", "confidence"):
@@ -189,7 +213,7 @@ def test_combiner_is_permutation_invariant(spark):
         assert sorted(ra["methods_used"]) == sorted(rb["methods_used"]), rid
 
 
-def test_combiner_single_position_passes_through(spark):
+def test_combiner_single_position_passes_through():
     """A lone algorithm's position must come back unchanged (modulo the
     combiner's accuracy/confidence adjustments being deterministic): the
     degenerate one-element case of every robust statistic."""
@@ -202,7 +226,7 @@ def test_combiner_single_position_passes_through(spark):
         )
         cases[f"s{i}"] = rows
         src[f"s{i}"] = rows[0]
-    got = _combine(spark, cases)
+    got = _combine(cases)
     for rid, r in src.items():
         o = got[rid]
         assert math.isclose(o["latitude"], r["latitude"], abs_tol=1e-12), rid

@@ -128,6 +128,9 @@ GDOP_EXCELLENT = 2.0
 GDOP_GOOD = 4.0
 GDOP_FAIR = 6.0
 GDOP_MAX = 30.0
+SINGULARITY = 1e-10                      # near-zero determinant / variance
+# collinear iff every AP lies within this many degrees of the best-fit line
+COLLINEARITY_MAX_DEVIATION_DEG = 0.0002  # GeometricQualityFactor.java:145
 
 # Selection framework (documents/algorithm-selection-framework.md:13-85; AlgorithmSelector.java)
 SELECTION_MIN_WEIGHT = 0.4               # drop algorithms below this weight

@@ -3,14 +3,17 @@
 The full ensemble (``positioning_ensemble``) and the tiered batch job carry
 iterative numerics (trilateration lstsq / MLE gradient ascent) that no SQL
 oracle can express, so the external gate records rows-only checks for them.
-These companions put the SAME engine code paths under a value-level oracle:
+These companions put the closed-form parts under a value-level oracle:
 
 - ``position_combiner_robust`` — synthetic per-request algorithm positions
   (3-7 per request; planted collinear sets, MAD accuracy outliers,
-  zero-total-weight and single-position requests) run through the REAL
-  ``combiner.combine_positions``; the oracle is an independent row-wise SQL
-  formulation of WeightedAveragePositionCombiner.java:105-461 +
-  GDOPCalculator.java:650-731 semantics.
+  zero-total-weight and single-position requests) run through the reference
+  Column-DSL combiner ``combiner.combine_positions``; the oracle is an
+  independent row-wise SQL formulation of
+  WeightedAveragePositionCombiner.java:105-461 + GDOPCalculator.java:650-731
+  semantics. Production combines in ``onepass_kernel._combine``; the
+  onepass-vs-multipass parity tests and the combiner property tests tie it
+  to this reference.
 
 - ``ensemble_closed_form`` — positioning requests restricted to ≤2 distinct
   APs, where trilateration/MLE carry base weight 0 (selection framework
@@ -264,8 +267,9 @@ def combiner_positions_sql(d: str) -> str:
 
 
 def combiner_robust_fn(spark, sf_dir):
-    """REAL combiner (combiner.combine_positions, the Column-DSL formulation)
-    over the derived positions; output rounded with the shared FLOOR form.
+    """Reference combiner (combiner.combine_positions, the Column-DSL
+    formulation) over the derived positions; output rounded with the shared
+    FLOOR form.
 
     WeightedAveragePositionCombiner.java:105-461 semantics; SURVEY §2.5
     'Weighted position combine' — previously driver-unchecked."""
@@ -629,13 +633,14 @@ register(
 
 register(
     "position_combiner_robust",
-    "Robust weighted position combiner on the REAL engine path "
+    "Robust weighted position combiner, reference Column-DSL formulation "
     "(combiner.combine_positions): normalized weighted means, exact "
     "median/25%-trimmed accuracy blend, 2-MAD outlier inflation, covariance "
     "condition number, collinearity cap, single-position and zero-weight "
     "fallbacks (WeightedAveragePositionCombiner.java:105-461; "
     "GDOPCalculator.java:650-731; SURVEY §2.5). Oracle is an independent "
-    "row-wise SQL formulation.",
+    "row-wise SQL formulation; parity and property tests tie the production "
+    "kernel combiner to this reference.",
     sql=lambda d: combiner_robust_oracle(),
     spark_fn=combiner_robust_fn,
 )

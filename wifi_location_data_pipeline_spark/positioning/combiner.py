@@ -16,6 +16,11 @@ The per-request groups are tiny (≤3 rows) and exact order statistics are
 required, so values are gathered with collect_list and reduced with Spark's
 higher-order array functions — exact, JVM-side, no UDF (SURVEY §7: do NOT use
 approx percentiles here).
+
+This is the row-wise reference combiner of the multipass plan
+(pipeline.position_requests_multipass) and the ``position_combiner_robust``
+oracle companion. Production combines in onepass_kernel._combine, tied to
+this formulation by the onepass-vs-multipass parity tests.
 """
 
 from __future__ import annotations
@@ -24,9 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
-
-SINGULARITY = 1e-10
-COLLINEARITY_MAX_DEVIATION_DEG = 0.0002
 
 
 def _median_expr(sorted_arr: Column) -> Column:
@@ -68,207 +70,8 @@ def combine_positions(algorithm_positions: DataFrame) -> DataFrame:
     return _finish(agg)
 
 
-_PACKED_VIEW_SEQ = [0]
-
-
-def combine_packed(df: DataFrame, pos_col: str, passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """Array-input twin of ``combine_positions``: one row per request with an
-    array of (algorithm, weight, latitude, longitude, altitude, accuracy,
-    confidence) structs — zero-shuffle (projection-only) combining for the
-    one-pass pipeline. ``passthrough`` columns ride along unchanged (e.g.
-    diagnostics).
-
-    Emitted as ONE generated spark.sql statement over a temp view rather
-    than the Column DSL: the DSL builds this tree through thousands of
-    eager-analyzed py4j calls (a measured multi-second driver cost per
-    invocation), while a single SQL string parses and analyzes once
-    JVM-side. ``combine_positions`` keeps the Column implementation, so the
-    onepass-vs-multipass parity tests cross-check the two formulations.
-    Semantics are _finish()'s, replicated expression for expression
-    (WeightedAveragePositionCombiner.java:105-461; GDOPCalculator.java:650-731).
-    """
-    _PACKED_VIEW_SEQ[0] += 1
-    view = f"_combine_packed_in_{_PACKED_VIEW_SEQ[0]}"
-    df.createOrReplaceTempView(view)
-    pt = "".join(f", {c}" for c in passthrough)
-    out = df.sparkSession.sql(f"WITH {_combine_sql_body(view, pt, pos_col)}")
-    # the analyzed plan no longer needs the view; drop it so long-lived
-    # sessions don't accumulate one per invocation
-    df.sparkSession.catalog.dropTempView(view)
-    return out
-
-
-def combine_weighted_packed(df: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """One-statement tail for the one-pass pipeline: attach each computed
-    position's selection weight, drop weightless positions and empty
-    requests, then combine — the weight-attach projection (formerly a
-    Column-DSL tree, ~0.7 s of eager py4j analysis per invocation) is the
-    ``b0`` layer of the same generated SQL statement as the combiner.
-
-    Input schema: (request_id, selection: array<struct<algorithm, weight>>,
-    positions: array<struct<algorithm, latitude, longitude, altitude,
-    accuracy, confidence>>). ``selection`` rides through as
-    ``calculation_info`` (the reference's CalculationInfo diagnostics).
-    """
-    _PACKED_VIEW_SEQ[0] += 1
-    view = f"_combine_packed_in_{_PACKED_VIEW_SEQ[0]}"
-    df.createOrReplaceTempView(view)
-    pt = "".join(f", {c}" for c in ("calculation_info", *passthrough))
-    extra = "".join(f", {c}" for c in passthrough)
-    b0 = f"""b0 AS (
-  SELECT request_id, selection AS calculation_info{extra},
-    filter(transform(positions, p -> named_struct(
-      'algorithm', p.algorithm,
-      'weight', coalesce(element_at(transform(
-          filter(selection, e -> e.algorithm = p.algorithm),
-          e -> e.weight), 1), CAST(0.0 AS DOUBLE)),
-      'latitude', p.latitude, 'longitude', p.longitude,
-      'altitude', p.altitude, 'accuracy', p.accuracy,
-      'confidence', p.confidence)),
-      p -> p.weight > 0.0) AS pos
-  FROM {view}
-)"""
-    out = df.sparkSession.sql(
-        f"WITH {b0},\n{_combine_sql_body('b0 WHERE size(pos) > 0', pt, 'pos')}"
-    )
-    df.sparkSession.catalog.dropTempView(view)
-    return out
-
-
-def _combine_sql_body(src: str, pt: str, pos: str) -> str:
-    """The combiner as chained CTE text ``b1 .. b12 SELECT`` (no leading
-    WITH) over relation ``src`` — shared by combine_packed and
-    combine_weighted_packed."""
-    sing = SINGULARITY
-    return f"""b1 AS (
-  SELECT request_id{pt},
-    CAST(size({pos}) AS BIGINT) AS n,
-    aggregate({pos}, CAST(0.0 AS DOUBLE), (a, p) -> a + p.weight) AS total_w,
-    aggregate({pos}, CAST(0.0 AS DOUBLE), (a, p) -> a + p.latitude * p.weight) AS swlat,
-    aggregate({pos}, CAST(0.0 AS DOUBLE), (a, p) -> a + p.longitude * p.weight) AS swlon,
-    aggregate({pos}, CAST(0.0 AS DOUBLE), (a, p) -> a + p.altitude * p.weight) AS swalt,
-    aggregate({pos}, CAST(0.0 AS DOUBLE), (a, p) -> a + p.confidence * p.weight) AS swconf,
-    array_sort(transform({pos}, p -> p.accuracy)) AS accs,
-    transform({pos}, p -> named_struct('latitude', p.latitude, 'longitude', p.longitude)) AS pts,
-    array_max(transform({pos}, p -> named_struct(
-      '_w', p.weight, '_a', p.algorithm, 'latitude', p.latitude,
-      'longitude', p.longitude, 'altitude', p.altitude,
-      'accuracy', p.accuracy, 'confidence', p.confidence))) AS topw,
-    array_distinct(transform({pos}, p -> p.algorithm)) AS methods_used
-  FROM {src}
-),
-b2 AS (
-  SELECT *,
-    swlat / total_w AS mean_lat, swlon / total_w AS mean_lon,
-    swalt / total_w AS mean_alt, swconf / total_w AS mean_conf,
-    CAST(size(pts) AS DOUBLE) AS npts
-  FROM b1
-),
-b3 AS (
-  SELECT *,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + power(p.latitude - mean_lat, 2)) / npts AS cov_ll,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + power(p.longitude - mean_lon, 2)) / npts AS cov_oo,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + (p.latitude - mean_lat) * (p.longitude - mean_lon)) / npts AS cov_lo,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + p.latitude) / npts AS plain_lat,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + p.longitude) / npts AS plain_lon
-  FROM b2
-),
-b4 AS (
-  SELECT *,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + power(p.latitude - plain_lat, 2)) / npts AS pcov_ll,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + power(p.longitude - plain_lon, 2)) / npts AS pcov_oo,
-    aggregate(pts, CAST(0.0 AS DOUBLE), (a, p) -> a + (p.latitude - plain_lat) * (p.longitude - plain_lon)) / npts AS pcov_lo,
-    cov_ll + cov_oo AS trace_v,
-    cov_ll * cov_oo - cov_lo * cov_lo AS det_v
-  FROM b3
-),
-b5 AS (
-  SELECT *,
-    trace_v * trace_v - 4.0 * det_v AS disc_v,
-    try_divide(pcov_lo, pcov_oo) AS slope
-  FROM b4
-),
-b6 AS (
-  SELECT *,
-    CASE WHEN abs(det_v) < {sing} OR disc_v < 0.0 THEN CAST(1e12 AS DOUBLE)
-         ELSE coalesce(try_divide(
-                abs((trace_v + sqrt(greatest(disc_v, CAST(0.0 AS DOUBLE)))) / 2.0),
-                greatest(abs((trace_v - sqrt(greatest(disc_v, CAST(0.0 AS DOUBLE)))) / 2.0),
-                         CAST({sing} AS DOUBLE))),
-              CAST(1e12 AS DOUBLE)) END AS cond_v,
-    plain_lat - slope * plain_lon AS intercept_v
-  FROM b5
-),
-b7 AS (
-  SELECT *,
-    array_max(transform(pts, p -> abs(p.latitude - (slope * p.longitude + intercept_v)))) AS max_dev,
-    CASE WHEN size(accs) % 2 = 1 THEN element_at(accs, CAST(size(accs) / 2 AS INT) + 1)
-         ELSE (element_at(accs, CAST(size(accs) / 2 AS INT))
-             + element_at(accs, CAST(size(accs) / 2 AS INT) + 1)) / 2.0 END AS med
-  FROM b6
-),
-b8 AS (
-  SELECT *,
-    (size(pts) >= 3) AND (pcov_ll < {sing} OR pcov_oo < {sing}
-      OR coalesce(max_dev, CAST(0.0 AS DOUBLE)) <= {COLLINEARITY_MAX_DEVIATION_DEG}) AS is_collinear,
-    CASE WHEN size(accs) <= 3 THEN med
-         ELSE 0.7 * med + 0.3 * (
-           aggregate(
-             slice(accs, CAST(FLOOR(size(accs) * {C.COMBINER_TRIM_FRACTION}) AS INT) + 1,
-                   CAST(size(accs) - 2 * CAST(FLOOR(size(accs) * {C.COMBINER_TRIM_FRACTION}) AS INT) AS INT)),
-             CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)
-           / size(slice(accs, CAST(FLOOR(size(accs) * {C.COMBINER_TRIM_FRACTION}) AS INT) + 1,
-                        CAST(size(accs) - 2 * CAST(FLOOR(size(accs) * {C.COMBINER_TRIM_FRACTION}) AS INT) AS INT)))
-         ) END AS robust0,
-    array_sort(transform(accs, x -> abs(x - med))) AS deviations
-  FROM b7
-),
-b9 AS (
-  SELECT *,
-    CASE WHEN size(deviations) % 2 = 1 THEN element_at(deviations, CAST(size(deviations) / 2 AS INT) + 1)
-         ELSE (element_at(deviations, CAST(size(deviations) / 2 AS INT))
-             + element_at(deviations, CAST(size(deviations) / 2 AS INT) + 1)) / 2.0 END AS mad
-  FROM b8
-),
-b10 AS (
-  SELECT *,
-    size(filter(accs, x -> x > med + {C.COMBINER_MAD_MULTIPLIER} * mad)) AS n_outliers,
-    CASE WHEN is_collinear
-         THEN 2.0 + least(CAST(1.0 AS DOUBLE), log10(greatest(cond_v, CAST(1.0 AS DOUBLE))) / 2.0)
-         ELSE CASE WHEN cond_v < 5.0 THEN CAST(1.0 AS DOUBLE)
-                   WHEN cond_v < 20.0 THEN 1.0 + (cond_v - 5.0) / 15.0
-                   ELSE 2.0 + least(CAST(1.0 AS DOUBLE), (cond_v - 20.0) / 80.0) END END AS gqf
-  FROM b9
-),
-b11 AS (
-  SELECT *,
-    robust0 * (1.0 + (CAST(n_outliers AS DOUBLE) / CAST(size(accs) AS DOUBLE)) * 0.5) AS robust
-  FROM b10
-),
-b12 AS (
-  SELECT *,
-    CASE WHEN is_collinear
-         THEN greatest(CAST(6.0 AS DOUBLE), robust * greatest(gqf, sqrt(cond_v / 10.0)))
-         ELSE greatest(robust, robust * gqf) END AS adj_accuracy,
-    CASE WHEN is_collinear
-         THEN least(CAST({C.COMBINER_COLLINEAR_CONF_CAP} AS DOUBLE), mean_conf / (gqf * 1.2))
-         ELSE mean_conf / sqrt(gqf) END AS adj_confidence
-  FROM b11
-)
-SELECT request_id,
-  CASE WHEN n = 1 OR total_w <= 0.0 THEN topw.latitude ELSE mean_lat END AS latitude,
-  CASE WHEN n = 1 OR total_w <= 0.0 THEN topw.longitude ELSE mean_lon END AS longitude,
-  CASE WHEN n = 1 OR total_w <= 0.0 THEN topw.altitude ELSE mean_alt END AS altitude,
-  CASE WHEN n = 1 OR total_w <= 0.0 THEN topw.accuracy ELSE adj_accuracy END AS accuracy,
-  CASE WHEN n = 1 OR total_w <= 0.0 THEN topw.confidence ELSE adj_confidence END AS confidence,
-  array_sort(methods_used) AS methods_used,
-  CASE WHEN n = 1 THEN false ELSE is_collinear END AS is_collinear{pt}
-FROM b12
-"""
-
-
-def _finish(agg: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """Shared combiner core over the aggregate columns
+def _finish(agg: DataFrame) -> DataFrame:
+    """Combiner core over the aggregate columns
     (n, total_w, swlat/swlon/swalt/swconf, accs, pts, top, methods_used)."""
     # weighted means (the reference normalizes by total weight)
     mean_lat = F.col("swlat") / F.col("total_w")
@@ -301,9 +104,12 @@ def _finish(agg: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
     lam1 = (trace + F.sqrt(F.greatest(disc, F.lit(0.0)))) / 2.0
     lam2 = (trace - F.sqrt(F.greatest(disc, F.lit(0.0)))) / 2.0
     cond = F.when(
-        (F.abs(det) < SINGULARITY) | (disc < 0.0), F.lit(1e12)
+        (F.abs(det) < C.SINGULARITY) | (disc < 0.0), F.lit(1e12)
     ).otherwise(
-        F.coalesce(F.try_divide(F.abs(lam1), F.greatest(F.abs(lam2), F.lit(SINGULARITY))), F.lit(1e12))
+        F.coalesce(
+            F.try_divide(F.abs(lam1), F.greatest(F.abs(lam2), F.lit(C.SINGULARITY))),
+            F.lit(1e12),
+        )
     )
 
     # collinearity of the raw positions around their PLAIN mean (:158-205)
@@ -323,9 +129,9 @@ def _finish(agg: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
         F.transform(pts, lambda p: F.abs(p["latitude"] - (slope * p["longitude"] + intercept)))
     )
     is_collinear = (F.size(pts) >= 3) & (
-        (pcov_ll < SINGULARITY)
-        | (pcov_oo < SINGULARITY)
-        | (F.coalesce(max_dev, F.lit(0.0)) <= COLLINEARITY_MAX_DEVIATION_DEG)
+        (pcov_ll < C.SINGULARITY)
+        | (pcov_oo < C.SINGULARITY)
+        | (F.coalesce(max_dev, F.lit(0.0)) <= C.COLLINEARITY_MAX_DEVIATION_DEG)
     )
 
     # geometric quality factor (GDOPCalculator.calculateGeometricQualityFactor :707-731)
@@ -374,5 +180,4 @@ def _finish(agg: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
         F.when(single | zero_w, F.col("top.confidence")).otherwise(adj_confidence).alias("confidence"),
         F.array_sort("methods_used").alias("methods_used"),
         F.when(single, F.lit(False)).otherwise(is_collinear).alias("is_collinear"),
-        *passthrough,
     )

@@ -22,9 +22,6 @@ from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
 
-SINGULARITY = 1e-10
-COLLINEARITY_MAX_DEVIATION_DEG = 0.0002  # GeometricQualityFactor.java:145
-
 
 def signal_context(observations: DataFrame) -> DataFrame:
     """AP-count / signal-quality / signal-distribution classes per request."""
@@ -119,9 +116,9 @@ def geometric_context(observations: DataFrame) -> DataFrame:
         (
             (F.col("n_aps") >= 3)
             & (
-                (F.col("cov_ll") < SINGULARITY)
-                | (F.col("cov_oo") < SINGULARITY)
-                | (F.coalesce(F.col("max_deviation"), F.lit(0.0)) <= COLLINEARITY_MAX_DEVIATION_DEG)
+                (F.col("cov_ll") < C.SINGULARITY)
+                | (F.col("cov_oo") < C.SINGULARITY)
+                | (F.coalesce(F.col("max_deviation"), F.lit(0.0)) <= C.COLLINEARITY_MAX_DEVIATION_DEG)
             )
         ).alias("is_collinear"),
     )
@@ -147,7 +144,7 @@ def geometric_context(observations: DataFrame) -> DataFrame:
     # trace((HtH)^-1) = (a + c) / det for the 2x2 analytic inverse
     gdop_raw = F.sqrt(F.try_divide(F.col("a") + F.col("c"), det))
     gdop = (
-        F.when(F.abs(det) < SINGULARITY, F.lit(C.GDOP_MAX))
+        F.when(F.abs(det) < C.SINGULARITY, F.lit(C.GDOP_MAX))
         .otherwise(F.coalesce(F.least(F.lit(C.GDOP_MAX), gdop_raw), F.lit(C.GDOP_MAX)))
         .alias("gdop")
     )

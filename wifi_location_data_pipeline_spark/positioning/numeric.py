@@ -1,10 +1,16 @@
 """Iterative/numeric positioning algorithms: trilateration + maximum likelihood.
 
 These are genuinely non-closed-form (QR least squares; gradient ascent), so
-they run as a single ``applyInPandas`` over request groups — the Spark-native
-slot for per-group imperative numerics (SURVEY.md §2.7/§2.10). Groups are
-bounded by the ≤20-observation request limit, so per-group work is O(1);
-at scale the cost is one shuffle on request_id shared by both algorithms.
+they run as imperative NumPy per request (SURVEY.md §2.7/§2.10). Requests
+are bounded by the ≤20-observation limit, so per-request work is O(1).
+Two forms of each algorithm:
+
+- production: the batched twins ``_trilat_arrays`` and ``_mle_batch``
+  (lockstep MLE across requests), called by the one-pass kernel;
+- reference: the sequential ``_trilaterate_group`` and ``_mle_group``, run
+  per request group by ``numeric_positions_grouped`` in the multipass plan.
+  tests/test_positioning.py::test_numeric_batched_matches_sequential ties
+  the two forms together.
 
 Reference semantics:
 - trilateration: TrilaterationAlgorithm.java:80-356,393-470,619-676,805-899,
@@ -518,10 +524,17 @@ def _trilat_arrays(g: dict) -> list | None:
 
 
 def _run_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map body: run whichever numeric algorithms this request selected."""
+    """Grouped-map body: run whichever numeric algorithms this request selected.
+
+    Duplicate macs keep their minimum scan (mac, signal, frequency with nulls
+    first) — the one-pass kernel's keep-first rule, after the reference's
+    createAPMap — and the kept rows stay
+    in mac order, so trilateration's reference AP (row 0) is the kernel's."""
     rid = pdf["request_id"].iloc[0]
     wanted = set(pdf["algorithm"].unique())
-    obs = pdf.drop_duplicates(subset=["mac_addr"])
+    obs = pdf.sort_values(
+        ["mac_addr", "signal_strength", "frequency"], na_position="first"
+    ).drop_duplicates(subset=["mac_addr"])
     rows = []
     if "trilateration" in wanted:
         r = _trilaterate_group(obs)
@@ -535,111 +548,10 @@ def _run_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def numeric_positions_grouped(obs_with_selection: DataFrame) -> DataFrame:
-    """Reference shape: one applyInPandas call per request group.
-
-    Kept for parity testing; ``numeric_positions`` (the packed mapInPandas
-    variant) is ~10x cheaper because it amortizes the per-group Arrow and
-    pandas overhead across a whole batch of requests.
-    """
+    """The multipass reference's numeric tier: one applyInPandas call per
+    request over its observations joined with its selected numeric
+    algorithms (one row per observation × algorithm), running the sequential
+    ``_trilaterate_group`` / ``_mle_group``. Output: RESULT_SCHEMA rows."""
     return obs_with_selection.groupBy("request_id").applyInPandas(
         _run_numeric, RESULT_SCHEMA
     )
-
-
-_PACK_COLS = (
-    "signal_strength",
-    "frequency",
-    "ap_lat",
-    "ap_lon",
-    "ap_alt",
-    "ap_confidence",
-)
-
-
-def _group_arrays(obs_dicts) -> dict:
-    """Per-observation dict list → the group-arrays form the numeric
-    algorithms consume (keys: rssi, freq, lat, lon, conf, alt)."""
-    to = lambda key: np.array([o[key] for o in obs_dicts], dtype=float)  # noqa: E731
-    return {
-        "rssi": to("signal_strength"),
-        "freq": to("frequency"),
-        "lat": to("ap_lat"),
-        "lon": to("ap_lon"),
-        "conf": to("ap_confidence"),
-        "alt": to("ap_alt"),
-    }
-
-
-def _run_numeric_packed(batches):
-    """mapInPandas body: each input row is one whole request (arrays packed
-    by the upstream collect_list), so a single Python call processes
-    thousands of requests at pure-NumPy speed — no per-group Arrow round
-    trip; the MLE gradient ascent runs lockstep-batched across requests."""
-    for pdf in batches:
-        reqs = []
-        for rid, algs, packed in zip(pdf["request_id"], pdf["algorithms"], pdf["obs"]):
-            # collect_list order is nondeterministic; sort by the FULL
-            # observation tuple (mac, signal, frequency — None smallest,
-            # matching SQL NULLS FIRST) so both the trilateration
-            # reference-AP choice (row 0) AND the keep-first dedup winner
-            # among same-mac duplicates are deterministic and identical to
-            # the onepass kernel's min-struct-per-mac dedup. "Keep-first"
-            # per AP mirrors the reference's createAPMap.
-            def okey(o):
-                f = o["frequency"]
-                return (
-                    o["mac_addr"],
-                    o["signal_strength"],
-                    f is not None,
-                    f if f is not None else 0,
-                )
-
-            seen = set()
-            ded = []
-            for o in sorted(packed, key=okey):
-                if o["mac_addr"] in seen:
-                    continue
-                seen.add(o["mac_addr"])
-                ded.append(o)
-            reqs.append((rid, set(algs), _group_arrays(ded)))
-
-        rows = []
-        mle_groups = [g for _, wanted, g in reqs if "maximum_likelihood" in wanted]
-        mle_results = iter(_mle_batch(mle_groups))
-        for rid, wanted, g in reqs:
-            if "trilateration" in wanted:
-                r = _trilat_arrays(g)
-                if r is not None:
-                    rows.append([rid, "trilateration", *r])
-            if "maximum_likelihood" in wanted:
-                r = next(mle_results)
-                if r is not None:
-                    rows.append([rid, "maximum_likelihood", *r])
-        yield pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
-
-
-def numeric_positions(obs_with_selection: DataFrame) -> DataFrame:
-    """Run trilateration/MLE for the requests that selected them.
-
-    Input: observations joined with the (request_id, algorithm) selection rows
-    restricted to numeric algorithms — i.e. one row per request × algorithm ×
-    observation. Output: ALGORITHM_POSITION rows.
-
-    Plan shape: ONE hash aggregate packs each request's ≤20 observations into
-    an array column + its selected-algorithm set; mapInPandas then streams
-    Arrow batches of whole requests through NumPy. Per-request Python cost is
-    amortized across the batch — the difference between ~6 ms/group framework
-    overhead and ~6 ms/group of actual math.
-    """
-    from pyspark.sql import functions as F
-
-    packed = obs_with_selection.groupBy("request_id").agg(
-        F.collect_set("algorithm").alias("algorithms"),
-        F.collect_list(F.struct("mac_addr", *_PACK_COLS)).alias("obs"),
-    )
-    # explicit fan-out: AQE coalesces the tiny packed shuffle to ~1 partition,
-    # which would single-thread the NumPy stage; an explicit numPartitions is
-    # exempt from AQE coalescing
-    spark = obs_with_selection.sparkSession
-    n_parts = max(2, spark.sparkContext.defaultParallelism // 2)
-    return packed.repartition(n_parts).mapInPandas(_run_numeric_packed, RESULT_SCHEMA)

@@ -1,11 +1,11 @@
 """Shuffle-free positioning ensemble: narrow plan, one Arrow kernel.
 
-The multi-pass pipeline (pipeline.position_observations) expresses each phase
-— context, selection, four closed-form algorithms, numeric tier, combiner —
-as its own aggregation/join over the observation rows. Correct, but the plan
-is a dozen exchanges deep: at small scale wall-clock is dominated by stage
-scheduling, codegen, and Python-worker spin-up; at 100 TB it is a dozen
-passes over the fact table.
+The multipass reference (pipeline.position_requests_multipass) expresses each
+phase — context, selection, four closed-form algorithms, numeric tier,
+combiner — as its own aggregation/join over the observation rows. Correct,
+but the plan is a dozen exchanges deep: at small scale wall-clock is
+dominated by stage scheduling, codegen, and Python-worker spin-up; at 100 TB
+it is a dozen passes over the fact table.
 
 Every phase keys on request_id and every request holds ≤20 observations, so
 the Spark-first shape is: physics gate on the nested scan array → explode →
@@ -28,10 +28,10 @@ projection path (they disqualify whole-stage codegen), which the round-5
 judge measured at 13.5× of the single-node oracle at sf1; the generated SQL
 also cost multi-second Catalyst analysis per invocation and needed an
 interior .cache() plus a numeric-count job to split the Python tier.
-Reference semantics per phase remain documented in the row-wise twins
-(context.py, selection.py, algorithms.py, numeric.py, combiner.py), which
-are the auditable implementation and the parity-test baseline
-(test_onepass_matches_multipass).
+Reference semantics per phase remain documented in the row-wise reference
+modules (prepare.py, context.py, selection.py, algorithms.py, numeric.py,
+combiner.py), which the multipass plan wires together as the parity-test
+baseline (test_onepass_matches_multipass).
 """
 
 from __future__ import annotations
@@ -44,6 +44,10 @@ from wifi_location_data_pipeline_spark import config as C
 from wifi_location_data_pipeline_spark.functions.identifiers import normalize_bssid
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
     PACK_FIELDS,
+    _APC,
+    _GQ,
+    _SD,
+    _SQ,
     make_onepass_kernel,
 )
 from wifi_location_data_pipeline_spark.positioning.prepare import (
@@ -177,25 +181,6 @@ _CTX_FIELD = T.StructField(
 _OUT_SCHEMA = T.StructType(_OUT_FIELDS)
 _OUT_SCHEMA_CTX = T.StructType(_OUT_FIELDS + [_CTX_FIELD])
 
-_CTX_CLASSES = {
-    "ap_count_class": ("SINGLE_AP", "TWO_APS", "THREE_APS", "FOUR_PLUS_APS"),
-    "signal_quality": (
-        "STRONG_SIGNAL",
-        "MEDIUM_SIGNAL",
-        "WEAK_SIGNAL",
-        "VERY_WEAK_SIGNAL",
-    ),
-    "geometric_quality": (
-        "EXCELLENT_GDOP",
-        "GOOD_GDOP",
-        "FAIR_GDOP",
-        "POOR_GDOP",
-        "COLLINEAR",
-    ),
-    "signal_distribution": ("UNIFORM_SIGNALS", "MIXED_SIGNALS", "SIGNAL_OUTLIERS"),
-}
-
-
 # applicationId → analyzed+cached 480-row selection-info dimension. The dim
 # is STATIC (pure product of the context enums — no data dependency), yet
 # rebuilding its createDataFrame + reasons transformation chain cost ~1 s of
@@ -224,15 +209,7 @@ def _selection_info_dim(spark) -> DataFrame:
     if hit is not None:
         return hit
 
-    combos = list(
-        itertools.product(
-            _CTX_CLASSES["ap_count_class"],
-            _CTX_CLASSES["signal_quality"],
-            _CTX_CLASSES["geometric_quality"],
-            _CTX_CLASSES["signal_distribution"],
-            (False, True),
-        )
-    )
+    combos = list(itertools.product(_APC, _SQ, _GQ, _SD, (False, True)))
     grid = spark.createDataFrame(
         [(i, *c) for i, c in enumerate(combos)],
         "request_id bigint, ap_count_class string, signal_quality string, "

@@ -22,12 +22,12 @@ the 20-scan request cap, partitions are independent, and the plan is scan →
 explode → broadcast join → this kernel with no shuffle. No interior cache,
 no numeric-count job, no split/union — one job end to end.
 
-Semantics are the row-wise phase modules' (context.py, selection.py,
-algorithms.py, numeric.py, combiner.py — the auditable Spark-declarative
-twins), pinned by test_onepass_matches_multipass and the golden-range
-acceptance suites. Reference: PositioningServiceImpl.java:168-190,
-AlgorithmSelector.java:67-438, WeightedAveragePositionCombiner.java:105-461,
-GDOPCalculator.java:603-731.
+Semantics are the row-wise reference modules' (context.py, selection.py,
+algorithms.py, numeric.py, combiner.py, wired by
+pipeline.position_requests_multipass), pinned by
+test_onepass_matches_multipass and the golden-range acceptance suites.
+Reference: PositioningServiceImpl.java:168-190, AlgorithmSelector.java:67-438,
+WeightedAveragePositionCombiner.java:105-461, GDOPCalculator.java:603-731.
 
 NumPy reductions sum in a different association order than the SQL left-fold
 they replace; differences are O(n·eps) on all-finite data and vanish under
@@ -35,8 +35,6 @@ the 1e-6 output rounding of every oracle-checked consumer.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 
@@ -48,9 +46,6 @@ from wifi_location_data_pipeline_spark.positioning.selection import (
     GEOMETRY_MULT,
     SIGNAL_MULT,
 )
-
-SINGULARITY = 1e-10
-COLLINEARITY_MAX_DEVIATION_DEG = 0.0002
 
 # class label tables (index = code used in the vectorized middle)
 _APC = ("SINGLE_AP", "TWO_APS", "THREE_APS", "FOUR_PLUS_APS")
@@ -279,7 +274,7 @@ def compute_onepass(
         gdet = ga * gc - gb * gb
         gdop_raw = np.sqrt((ga + gc) / gdet)
         gdop = np.where(
-            (n_aps < 3) | (np.abs(gdet) < SINGULARITY) | ~np.isfinite(gdop_raw),
+            (n_aps < 3) | (np.abs(gdet) < C.SINGULARITY) | ~np.isfinite(gdop_raw),
             C.GDOP_MAX,
             np.minimum(C.GDOP_MAX, gdop_raw),
         )
@@ -310,8 +305,8 @@ def compute_onepass(
         max_dev = np.max(np.where(ded, dev, -np.inf), axis=1)
         max_dev = np.where(np.isfinite(max_dev), max_dev, 0.0)  # coalesce(·, 0)
         is_collinear_aps = (n_aps >= 3) & (
-            (cov_ll < SINGULARITY) | (cov_oo < SINGULARITY)
-            | (np.where(np.isnan(max_dev), 0.0, max_dev) <= COLLINEARITY_MAX_DEVIATION_DEG)
+            (cov_ll < C.SINGULARITY) | (cov_oo < C.SINGULARITY)
+            | (np.where(np.isnan(max_dev), 0.0, max_dev) <= C.COLLINEARITY_MAX_DEVIATION_DEG)
         )
         gq_code = np.select(
             [n_aps < 3, is_collinear_aps, gdop < C.GDOP_EXCELLENT,
@@ -472,9 +467,13 @@ def compute_onepass(
 
 
 def _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, alpha_rank):
-    """Vectorized robust combiner (combiner._combine_sql_body semantics:
-    WeightedAveragePositionCombiner.java:105-461, GDOPCalculator.java:650-731)
-    over the padded per-request position slots."""
+    """Vectorized robust combiner over the padded per-request position slots:
+    the production twin of the reference combiner.combine_positions/_finish
+    (WeightedAveragePositionCombiner.java:105-461, GDOPCalculator.java:650-731).
+
+    Each argument is a (rows, P) slot array except ``cnt`` (present slots per
+    row); ``alpha_rank`` is each slot's algorithm rank by name
+    (``_ALPHA_RANK``), the tie-break of the single/zero-weight arm."""
     n, P = p_w.shape
     rows = np.arange(n)
     cnt_safe = np.maximum(cnt, 1)
@@ -505,8 +504,8 @@ def _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, alpha_rank):
         disc_v = trace_v * trace_v - 4.0 * det_v
         sq_disc = np.sqrt(np.maximum(disc_v, 0.0))
         lam1 = np.abs((trace_v + sq_disc) / 2.0)
-        lam2 = np.maximum(np.abs((trace_v - sq_disc) / 2.0), SINGULARITY)
-        cond = np.where((np.abs(det_v) < SINGULARITY) | (disc_v < 0.0), 1e12, lam1 / lam2)
+        lam2 = np.maximum(np.abs((trace_v - sq_disc) / 2.0), C.SINGULARITY)
+        cond = np.where((np.abs(det_v) < C.SINGULARITY) | (disc_v < 0.0), 1e12, lam1 / lam2)
 
         slope = np.where(pcov_oo != 0.0, pcov_lo / pcov_oo, np.nan)
         intercept = plain_lat - slope * plain_lon
@@ -514,8 +513,8 @@ def _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, alpha_rank):
         max_dev = np.max(np.where(present, dev, -np.inf), axis=1)
         max_dev = np.where(np.isnan(max_dev), np.nan, max_dev)
         is_collinear = (cnt >= 3) & (
-            (pcov_ll < SINGULARITY) | (pcov_oo < SINGULARITY)
-            | (np.where(np.isnan(max_dev), 0.0, max_dev) <= COLLINEARITY_MAX_DEVIATION_DEG)
+            (pcov_ll < C.SINGULARITY) | (pcov_oo < C.SINGULARITY)
+            | (np.where(np.isnan(max_dev), 0.0, max_dev) <= C.COLLINEARITY_MAX_DEVIATION_DEG)
         )
 
         # exact order statistics over the ≤P accuracies

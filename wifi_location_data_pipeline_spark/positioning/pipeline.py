@@ -1,16 +1,14 @@
-"""End-to-end positioning job: request DataFrame in → position DataFrame out.
+"""Multipass positioning: the row-wise parity reference for the one-pass plan.
 
 The Spark re-expression of POST /api/positioning/calculate
-(SURVEY.md §3.2): what the reference does per-request across services and
-thread pools becomes one declarative plan over *all* requests at once.
-
-Plan shape (and why it scales):
-- the AP dimension joins via broadcast → no shuffle on the fact side
-- context/selection/algorithms each aggregate by request_id → AQE coalesces
-  the single shuffle; closed-form algorithms never leave the JVM
-- the numeric tier (trilateration/MLE) runs applyInPandas only over the
-  requests whose selection actually includes those algorithms (semi-join
-  restriction), so the Python hop touches the minimal row set
+(SURVEY.md §3.2), one phase per module: prepare (explode, physics gate,
+broadcast AP join) → context → selection → the closed-form algorithms →
+the numeric tier → combiner, each its own aggregation or join over the
+observation rows. Jobs, the positioning stream and the query registry do not
+run this plan; they run positioning/onepass.py. It exists so that tests can
+compare the one-pass kernel (onepass_kernel.py) against an independent,
+phase-by-phase formulation of the same semantics
+(test_onepass_matches_multipass and its randomized variants).
 """
 
 from __future__ import annotations
@@ -23,7 +21,7 @@ from pyspark.sql import functions as F
 from wifi_location_data_pipeline_spark.positioning import algorithms as alg
 from wifi_location_data_pipeline_spark.positioning.combiner import combine_positions
 from wifi_location_data_pipeline_spark.positioning.context import build_context
-from wifi_location_data_pipeline_spark.positioning.numeric import numeric_positions
+from wifi_location_data_pipeline_spark.positioning.numeric import numeric_positions_grouped
 from wifi_location_data_pipeline_spark.positioning.prepare import (
     explode_requests,
     join_known_aps,
@@ -31,48 +29,20 @@ from wifi_location_data_pipeline_spark.positioning.prepare import (
 )
 from wifi_location_data_pipeline_spark.positioning.selection import select_algorithms
 
-CLOSED_FORM = {
-    "proximity": alg.proximity,
-    "weighted_centroid": alg.weighted_centroid,
-    "rssi_ratio": alg.rssi_ratio,
-    "log_distance": alg.log_distance,
-}
 NUMERIC = ("trilateration", "maximum_likelihood")
 
 
-def position_requests(requests: DataFrame, access_points: DataFrame) -> DataFrame:
-    """Nested request rows + AP dimension → one combined position per request.
-
-    Delegates to the one-pass array-native plan (positioning/onepass.py):
-    one shuffle, one optional Python stage. ``position_requests_multipass``
-    keeps the phase-by-phase row-wise plan as the auditable reference shape.
-    """
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_requests_onepass,
-    )
-
-    return position_requests_onepass(requests, access_points)
-
-
 def position_requests_multipass(requests: DataFrame, access_points: DataFrame) -> DataFrame:
-    """Reference multi-pass plan: each phase its own aggregation/join."""
-    exploded = explode_requests(requests)  # carries n_scanned from array size
-    gated = physics_gate(exploded)
-    obs = join_known_aps(gated, access_points)
-    return position_observations(obs)
+    """Nested request rows + AP dimension → one combined position per request,
+    each phase its own aggregation/join.
 
-
-def position_observations(obs: DataFrame) -> DataFrame:
-    """Prepared observations (with AP columns + n_scanned) → combined positions.
-
-    Shuffle budget: ONE hash aggregate computes the three aggregate-shaped
-    algorithms (closed_form_positions), rssi_ratio adds its bounded pairwise
-    pass, and the numeric tier's applyInPandas touches only requests whose
-    selection includes trilateration/MLE. Selection pruning for the closed
-    forms happens on the per-request aggregate output (tiny) via the final
-    inner join on (request_id, algorithm) — cheaper than semi-join-
-    restricting the full observation set once per algorithm.
+    The numeric tier's applyInPandas touches only requests whose selection
+    includes trilateration/MLE. Selection pruning for the closed forms
+    happens on the per-request aggregate output (tiny) via the final inner
+    join on (request_id, algorithm).
     """
+    exploded = explode_requests(requests)  # carries n_scanned from array size
+    obs = join_known_aps(physics_gate(exploded), access_points)
     # ONE shuffle on request_id up front: every downstream groupBy/window/join
     # clusters on request_id, so Catalyst reuses this partitioning and plans
     # them exchange-free (the stage-count win dominates at every scale)
@@ -87,7 +57,7 @@ def position_observations(obs: DataFrame) -> DataFrame:
 
     numeric_sel = selection.filter(F.col("algorithm").isin(*NUMERIC))
     numeric_obs = obs.join(numeric_sel, "request_id")
-    numeric = numeric_positions(numeric_obs)
+    numeric = numeric_positions_grouped(numeric_obs)
 
     positions = reduce(lambda a, b: a.unionByName(b), [closed, rr, numeric])
     # inner join keeps exactly the selected (request, algorithm) pairs and

@@ -102,8 +102,3 @@ def physics_gate(observations: DataFrame) -> DataFrame:
     ).select("request_id").distinct()
     return observations.join(bad, "request_id", "left_anti")
 
-
-def prepare_observations(requests: DataFrame, access_points: DataFrame) -> DataFrame:
-    """Full preparation chain: explode → physics gate → AP join."""
-    obs = explode_requests(requests)
-    return join_known_aps(physics_gate(obs), access_points)

@@ -1,20 +1,18 @@
-"""Algorithm selection framework as a literal weight-matrix DataFrame + CASE exprs.
+"""Algorithm selection framework: the weight matrix as CASE exprs.
 
 Implements the three-phase selection of
 wifi-positioning-service/documents/algorithm-selection-framework.md:13-85
 (hard constraints → multiplicative weighting → threshold + adaptive top-K),
 matching AlgorithmSelector.java:67-120,273-320,365-438.
 
-Spark-first: the full weight matrix is a ~100-row literal DataFrame
-(algorithm × factor-class → multiplier) broadcast-joined against the
-per-request context — the idiomatic way to keep a constant-dense decision
-table out of nested CASE pyramids, auditable, and still shuffle-free.
+The weight tables below (factor class → per-algorithm multiplier) are the
+single source: ``select_algorithms`` (the multipass reference) compiles them
+to CASE expressions, and the one-pass kernel indexes them as NumPy arrays.
 """
 
 from __future__ import annotations
 
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
@@ -60,25 +58,6 @@ DISTRIBUTION_MULT = {
     "MIXED_SIGNALS": (0.7, 0.9, 1.2, 0.8, 1.3, 0.8),
     "SIGNAL_OUTLIERS": (0.9, 0.7, 1.4, 0.5, 1.2, 0.8),
 }
-
-
-def weight_matrix_df(spark: SparkSession) -> DataFrame:
-    """The flattened (factor_kind, factor_class, algorithm, multiplier) table —
-    the auditable form of the matrix (tests and docs); ``select_algorithms``
-    compiles the same dicts into CASE expressions instead of joining this."""
-    rows = []
-    for kind, table in (
-        ("base", BASE_WEIGHTS),
-        ("signal", SIGNAL_MULT),
-        ("geometry", GEOMETRY_MULT),
-        ("distribution", DISTRIBUTION_MULT),
-    ):
-        for klass, mults in table.items():
-            for algo, m in zip(ALGORITHMS, mults):
-                rows.append((kind, klass, algo, float(m)))
-    return spark.createDataFrame(
-        rows, "factor_kind string, factor_class string, algorithm string, multiplier double"
-    )
 
 
 def _multiplier_expr(table: dict[str, tuple[float, ...]], class_col: str):

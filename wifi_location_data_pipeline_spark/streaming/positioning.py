@@ -61,7 +61,6 @@ def start_positioning_stream(
     with_reasons: bool = False,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    numeric_tier: str = "auto",
 ) -> StreamingQuery:
     """Answer positioning requests from a streaming file zone.
 
@@ -69,9 +68,6 @@ def start_positioning_stream(
     ``False`` runs continuously with the default trigger — new request files
     are answered in the next micro-batch, the streaming analog of the
     service's request loop.
-
-    ``numeric_tier`` is passed to the kernel ("auto" or "off", see
-    position_requests_onepass).
     """
     reader = spark.readStream.schema(POSITIONING_REQUEST_SCHEMA)
     if max_files_per_trigger is not None:
@@ -87,9 +83,7 @@ def start_positioning_stream(
 
     ap_lookup = known_ap_lookup(access_points).cache()
     ap_lookup.count()  # materialize now, not in the first micro-batch
-    answers = position_requests_from_lookup(
-        requests, ap_lookup, with_reasons=with_reasons, numeric_tier=numeric_tier
-    )
+    answers = position_requests_from_lookup(requests, ap_lookup, with_reasons=with_reasons)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is AT-LEAST-once: a batch that fails after the
