@@ -70,6 +70,106 @@ def test_iqr_and_percentile_variants(measurements):
         assert flagged.filter(F.col("global_detection_algorithm") == algo).count() > 0
 
 
+def _numpy_centroid_distances(rows):
+    """bssid -> (rows, haversine distance of each row to the AP's mean
+    lat/lon), in plain NumPy: the reference for the window aggregates."""
+    import numpy as np
+
+    from wifi_location_data_pipeline_spark.functions.geo import EARTH_RADIUS_M
+
+    by_ap = {}
+    for r in rows:
+        by_ap.setdefault(r["bssid"], []).append(r)
+    out = {}
+    for bssid, rs in by_ap.items():
+        lat = np.radians([r["latitude"] for r in rs])
+        lon = np.radians([r["longitude"] for r in rs])
+        clat, clon = lat.mean(), lon.mean()
+        a = np.sin((clat - lat) / 2) ** 2 + np.cos(lat) * np.cos(clat) * np.sin((clon - lon) / 2) ** 2
+        out[bssid] = (rs, 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(a)))
+    return out
+
+
+def test_mad_window_flags_match_numpy_reference(measurements):
+    """The window-aggregate MAD detector flags exactly the rows a per-bssid
+    NumPy median/MAD flags; distance and threshold agree within 1e-6 m (the
+    window avg sums in another order than NumPy)."""
+    import numpy as np
+
+    rows = make_measurements()
+    expected = {}
+    for rs, dist in _numpy_centroid_distances(rows).values():
+        med = np.median(dist)
+        threshold = med + 3.0 * np.median(np.abs(dist - med))
+        for r, d in zip(rs, dist):
+            expected[r["id"]] = (d, threshold, d > threshold)
+    assert len(expected) == len(rows)
+
+    got = flag_global_outliers(measurements, algorithm="MAD", exact=True).select(
+        "id", "global_outlier_distance", "global_outlier_threshold", "is_global_outlier"
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        d, threshold, flag = expected[r["id"]]
+        assert r["is_global_outlier"] == flag, r["id"]
+        assert abs(r["global_outlier_distance"] - d) < 1e-6, r["id"]
+        assert abs(r["global_outlier_threshold"] - threshold) < 1e-6, r["id"]
+    assert any(flag for _, _, flag in expected.values())
+
+
+def test_hotspot_window_matches_numpy_reference(measurements):
+    import re
+
+    from wifi_location_data_pipeline_spark import config as C
+
+    ssid_hit = re.compile("|".join(C.HOTSPOT_SSID_PATTERNS))
+    expected = {
+        bssid
+        for bssid, (rs, dist) in _numpy_centroid_distances(make_measurements()).items()
+        if dist.mean() > C.HOTSPOT_SPATIAL_STDDEV_M
+        or any(r["ssid"] is not None and ssid_hit.search(r["ssid"]) for r in rs)
+    }
+    got = {r["bssid"] for r in behavioral_hotspot_bssids(measurements).collect()}
+    assert got == expected
+    assert {"aa:00:00:00:00:20", "aa:00:00:00:00:21"} <= got
+
+
+@pytest.fixture(scope="module")
+def measurements_parquet(measurements, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("measurements") / "m")
+    measurements.write.parquet(path)
+    return measurements.sparkSession.read.parquet(path)
+
+
+@pytest.mark.parametrize("algorithm", ["MAD", "IQR", "PERCENTILE"])
+def test_outlier_plan_is_one_scan_one_bssid_exchange(measurements_parquet, algorithm):
+    """Centroid, distance, percentiles and threshold are window aggregates
+    over one bssid partitioning: one parquet scan, one bssid exchange (the
+    aggregate + join-back form re-scanned and re-shuffled per aggregate)."""
+    import re
+
+    out = flag_global_outliers(measurements_parquet, algorithm=algorithm)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(bssid", plan)) == 1, plan
+    assert out.count() == measurements_parquet.count()
+
+
+def test_localize_all_with_prior_is_one_python_pass(measurements):
+    """With a prior for EVERY bssid, MLE and BAYESIAN run in one mapInPandas
+    and only BAYESIAN-tier APs fuse their prior: labels equal the tiers."""
+    from wifi_location_data_pipeline_spark.operators.localization import wcl_prior_state
+
+    flagged = flag_global_outliers(measurements, algorithm="MAD", exact=True)
+    out = localize_all(flagged, prior_state=wcl_prior_state(measurements))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    tiers = {r["bssid"]: r["tier"] for r in tier_routing(flagged).collect()}
+    labels = {r["bssid"]: r["algorithm"] for r in out.collect()}
+    assert labels == tiers
+    assert set(tiers.values()) == {"WCL", "MLE", "BAYESIAN"}
+
+
 def test_per_ap_stats_and_sufficiency(measurements):
     stats = {r["bssid"]: r for r in per_ap_stats(measurements).collect()}
     assert stats["aa:00:00:00:00:10"]["total_measurements"] == 10

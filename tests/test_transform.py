@@ -115,6 +115,98 @@ def test_conform_schema_has_45_columns(measurements):
     assert conformed.filter(F.col("is_global_outlier").isNotNull()).count() == 0
 
 
+def test_tier_rows_survive_null_and_empty_sibling_arrays(spark):
+    """Both tiers come from one generator over concat(connected, flatten(scan
+    rows)); concat and flatten are NULL if any input is NULL, so a NULL or
+    empty array must cost only its own rows, never the document's others."""
+    import copy
+
+    base = next(d for d in make_documents(n_docs=8) if d["wifiConnectedEvents"])
+    sr = base["scanResults"][0]
+    variants = {
+        "connected_null": dict(base, wifiConnectedEvents=None),
+        "connected_empty": dict(base, wifiConnectedEvents=[]),
+        "scans_null": dict(base, scanResults=None),
+        "scans_empty": dict(base, scanResults=[]),
+        "results_null": dict(base, scanResults=[dict(sr, results=None), sr]),
+        "results_only_null": dict(base, scanResults=[dict(sr, results=None)]),
+    }
+    for name, doc in variants.items():
+        doc = copy.deepcopy(doc)
+        doc["model"] = name
+        variants[name] = doc
+    expected = {
+        (name, status): n
+        for name, doc in variants.items()
+        for status, n in (
+            ("CONNECTED", len(doc["wifiConnectedEvents"] or [])),
+            ("SCAN", sum(len(s["results"] or []) for s in doc["scanResults"] or [])),
+        )
+        if n
+    }
+    assert {k[0] for k in expected} == set(variants)  # every variant keeps rows
+    df = spark.createDataFrame(
+        [(l,) for l in documents_as_json_lines(list(variants.values()))], "json string"
+    )
+    docs = df.select(F.from_json("json", RAW_SCAN_DOCUMENT_SCHEMA).alias("doc")).select("doc.*")
+    out = transform_documents(docs, now_ms=F.lit(NOW_MS), dedup=False)
+    got = {
+        (r["device_model"], r["connection_status"]): r["count"]
+        for r in out.groupBy("device_model", "connection_status").count().collect()
+    }
+    assert got == expected
+
+
+def test_one_generator_matches_tier_union(docs_df):
+    """transform_documents's rows (before dedup) are exactly the union of the
+    two tier frames after the same stage-1 and OUI filters."""
+    from wifi_location_data_pipeline_spark.operators.flatten import (
+        flatten_connected_events,
+        flatten_scan_results,
+        union_tiers,
+        with_derived_columns,
+    )
+    from wifi_location_data_pipeline_spark.operators.hotspot import (
+        apply_oui_filter,
+        hotspot_oui_df,
+    )
+    from wifi_location_data_pipeline_spark.operators.validation import apply_stage1_filters
+
+    union = union_tiers(flatten_connected_events(docs_df), flatten_scan_results(docs_df))
+    reference = apply_oui_filter(
+        apply_stage1_filters(with_derived_columns(union), now_ms=F.lit(NOW_MS)),
+        hotspot_oui_df(docs_df.sparkSession),
+    )
+    one_pass = transform_documents(docs_df, now_ms=F.lit(NOW_MS), dedup=False)
+    assert one_pass.columns == reference.columns
+    key = ["id", "bssid", "rssi", "source_file"]
+    assert sorted(one_pass.select(*key).collect()) == sorted(reference.select(*key).collect())
+    assert one_pass.count() > 0
+
+
+def test_ingest_plan_decodes_each_line_once(spark, tmp_path, measurements):
+    """The executed ingest plan scans the raw zone once and has ONE Python
+    node: the gzip UDF is nondeterministic, so Catalyst neither copies it
+    into the pushed ``_json IS NOT NULL`` filter nor re-runs it, and both
+    tiers come from one generator (the two-explode union planned 2 text
+    scans and 4 ArrowEvalPython nodes)."""
+    import base64
+    import gzip
+
+    from wifi_location_data_pipeline_spark.sources.raw_scan import read_raw_scan_documents
+
+    zone = tmp_path / "zone"
+    zone.mkdir()
+    with open(zone / "u0.txt", "w") as f:
+        for line in documents_as_json_lines():
+            f.write(base64.b64encode(gzip.compress(line.encode(), mtime=0)).decode() + "\n")
+    out = transform_documents(read_raw_scan_documents(spark, str(zone)), now_ms=F.lit(NOW_MS))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan text") == 1, plan
+    assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, plan
+    assert out.count() == measurements.count()
+
+
 def test_stream_name_extraction(spark):
     """FeedUploadEvent.extractStreamName parity (FeedUploadEvent.java:94-165):
     second-to-last path component, URL-decoded, 'unknown' on failure."""

@@ -2,15 +2,19 @@
 
 The transform proper (SURVEY.md §2.3). Semantics from
 wifi-measurements-transformer-service/.../WifiDataTransformationService.java:
-- explode connected events (:180-189, :240-281, :283-340)
-- explode scan results, two levels, parent location carried (:170-178, :374-395, :481-542)
-- union of tiers (:147-168) — scan rows carry NULL for the 11 connected-only cols
+- connected events, one row each (:180-189, :240-281, :283-340)
+- scan results, two levels, parent location carried (:170-178, :374-395, :481-542)
+- concatenation of tiers (:147-168) — scan rows carry NULL for the 11 connected-only cols
 - derived columns: device_id (:748-761), event_id (:789-791),
   quality_weight (:653-660), quality_score (:698-718)
 
-Spark expression: two `explode` projections + `unionByName`, all JVM-side.
-One scan of the document table produces both tiers; Catalyst prunes the
-unused nested fields from the parquet/JSON read per branch.
+Spark expression (``flatten_tiers``): ONE ``inline`` generator over
+``concat(connected rows, flatten(scan rows))``, all JVM-side. Both tiers
+come from one pass over the documents, so the raw zone is scanned and the
+codec's gzip UDF runs once per line (an ``explode`` per tier joined by
+``unionByName`` would plan the whole document lineage, scan and decode
+included, once per tier). ``flatten_connected_events`` /
+``flatten_scan_results`` are tier filters of the same generator.
 """
 
 from __future__ import annotations
@@ -70,24 +74,41 @@ def _location_cols(loc: Column) -> list[Column]:
     ]
 
 
-def flatten_connected_events(docs: DataFrame) -> DataFrame:
-    """One row per element of wifiConnectedEvents[] with device + location context."""
-    e = F.col("e")
+# Column order of a flattened row (both tiers)
+FLAT_COLS = (
+    "bssid",
+    "measurement_timestamp",
+    "device_id",
+    "device_model",
+    "device_manufacturer",
+    "os_version",
+    "app_version",
+    "data_version",
+    "latitude",
+    "longitude",
+    "altitude",
+    "location_accuracy",
+    "location_timestamp",
+    "location_provider",
+    "location_source",
+    "speed",
+    "bearing",
+    "ssid",
+    "rssi",
+    "frequency",
+    "scan_timestamp",
+    "connection_status",
+    *CONNECTED_ONLY_COLS,
+    "source_file",
+)
+
+
+def _connected_row(e: Column) -> Column:
+    """One wifiConnectedEvents[] element → a tier row struct."""
     info = e.getField("wifiConnectedInfo")
-    exploded = docs.select(
-        *_device_cols(docs),
-        F.explode("wifiConnectedEvents").alias("e"),
-        F.col("source_file") if "source_file" in docs.columns else F.lit(None).cast("string").alias("source_file"),
-    )
-    return exploded.select(
+    return F.struct(
         normalize_bssid(info.getField("bssid")).alias("bssid"),
         e.getField("timestamp").alias("measurement_timestamp"),
-        F.col("device_id"),
-        F.col("device_model"),
-        F.col("device_manufacturer"),
-        F.col("os_version"),
-        F.col("app_version"),
-        F.col("data_version"),
         *_location_cols(e.getField("location")),
         clean_ssid(info.getField("ssid")).alias("ssid"),
         info.getField("rssi").alias("rssi"),
@@ -105,45 +126,16 @@ def flatten_connected_events(docs: DataFrame) -> DataFrame:
         info.getField("venueName").alias("venue_name"),
         e.getField("isCaptive").alias("is_captive"),
         info.getField("numOfScanResults").alias("num_scan_results"),
-        F.col("source_file"),
     )
 
 
-def flatten_scan_results(docs: DataFrame) -> DataFrame:
-    """Two-level explode: scanResults[] → results[]; parent scan's location shared."""
-    sr = F.col("sr")
-    r = F.col("r")
-    level1 = docs.select(
-        *_device_cols(docs),
-        F.explode("scanResults").alias("sr"),
-        F.col("source_file") if "source_file" in docs.columns else F.lit(None).cast("string").alias("source_file"),
-    )
-    level2 = level1.select(
-        F.col("device_id"),
-        F.col("device_model"),
-        F.col("device_manufacturer"),
-        F.col("os_version"),
-        F.col("app_version"),
-        F.col("data_version"),
+def _scan_row(sr: Column, r: Column) -> Column:
+    """One scanResults[].results[] entry → a tier row struct; the parent
+    scan's timestamp and location are shared by its entries."""
+    return F.struct(
+        normalize_bssid(r.getField("bssid")).alias("bssid"),
         sr.getField("timestamp").alias("measurement_timestamp"),
         *_location_cols(sr.getField("location")),
-        F.explode(sr.getField("results")).alias("r"),
-        F.col("source_file"),
-    )
-    return level2.select(
-        normalize_bssid(r.getField("bssid")).alias("bssid"),
-        F.col("measurement_timestamp"),
-        F.col("device_id"),
-        F.col("device_model"),
-        F.col("device_manufacturer"),
-        F.col("os_version"),
-        F.col("app_version"),
-        F.col("data_version"),
-        *[F.col(c) for c in (
-            "latitude", "longitude", "altitude", "location_accuracy",
-            "location_timestamp", "location_provider", "location_source",
-            "speed", "bearing",
-        )],
         clean_ssid(r.getField("ssid")).alias("ssid"),
         r.getField("rssi").alias("rssi"),
         F.lit(None).cast("int").alias("frequency"),
@@ -157,12 +149,48 @@ def flatten_scan_results(docs: DataFrame) -> DataFrame:
             ("venue_name", "string"), ("is_captive", "boolean"),
             ("num_scan_results", "int"),
         )],
-        F.col("source_file"),
     )
 
 
+def flatten_tiers(docs: DataFrame) -> DataFrame:
+    """Both tiers from ONE ``Generate``: ``inline`` over the concatenation of
+    the connected-event rows and the (two-level) scan-result rows.
+
+    Every array is ``coalesce``d to empty first: ``concat`` and ``flatten``
+    return NULL when any input is NULL, which would drop the whole document
+    (a NULL ``wifiConnectedEvents`` would lose its scan rows, a NULL
+    ``results`` its sibling scans' and connected rows)."""
+    connected = F.transform("wifiConnectedEvents", _connected_row)
+    scans = F.flatten(F.transform(
+        "scanResults",
+        lambda sr: F.coalesce(
+            F.transform(sr.getField("results"), lambda r: _scan_row(sr, r)), F.array()
+        ),
+    ))
+    rows = F.concat(F.coalesce(connected, F.array()), F.coalesce(scans, F.array()))
+    return docs.select(
+        *_device_cols(docs),
+        F.inline(rows),
+        F.col("source_file") if "source_file" in docs.columns else F.lit(None).cast("string").alias("source_file"),
+    ).select(*FLAT_COLS)
+
+
+def flatten_connected_events(docs: DataFrame) -> DataFrame:
+    """Connected tier of ``flatten_tiers``: one row per wifiConnectedEvents[]
+    element with device + location context."""
+    return flatten_tiers(docs).filter(F.col("connection_status") == "CONNECTED")
+
+
+def flatten_scan_results(docs: DataFrame) -> DataFrame:
+    """Scan tier of ``flatten_tiers``: one row per scanResults[].results[]
+    entry; the parent scan's location is shared."""
+    return flatten_tiers(docs).filter(F.col("connection_status") == "SCAN")
+
+
 def union_tiers(connected: DataFrame, scans: DataFrame) -> DataFrame:
-    """Stream.concat equivalent (WifiDataTransformationService.java:167)."""
+    """Stream.concat of two separately built tiers
+    (WifiDataTransformationService.java:167); ``flatten_tiers`` builds both
+    in one pass."""
     return connected.unionByName(scans, allowMissingColumns=True)
 
 

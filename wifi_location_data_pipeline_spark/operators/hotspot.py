@@ -16,7 +16,7 @@ blacklist join adds no shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
@@ -59,17 +59,17 @@ def behavioral_hotspot_bssids(
     ``bssid``; callers DELETE (anti-join) these from the fact table.
     """
     ssid_regex = "|".join(ssid_patterns)
-    centroids = measurements.groupBy("bssid").agg(
-        F.avg("latitude").alias("_clat"),
-        F.avg("longitude").alias("_clon"),
-        F.max(F.col("ssid").rlike(ssid_regex).cast("int")).alias("_ssid_hit"),
-    )
+    # centroid as a window aggregate: one bssid exchange, which the groupBy
+    # below reuses (no centroid re-join, no second scan)
+    ap = Window.partitionBy("bssid")
     spread = (
-        measurements.select("bssid", "latitude", "longitude")
-        .join(centroids, "bssid")
-        .withColumn(
-            "_dist_m",
-            haversine_m(F.col("latitude"), F.col("longitude"), F.col("_clat"), F.col("_clon")),
+        measurements.select(
+            "bssid",
+            haversine_m(
+                F.col("latitude"), F.col("longitude"),
+                F.avg("latitude").over(ap), F.avg("longitude").over(ap),
+            ).alias("_dist_m"),
+            F.col("ssid").rlike(ssid_regex).cast("int").alias("_ssid_hit"),
         )
         .groupBy("bssid")
         .agg(F.avg("_dist_m").alias("_mean_dist"), F.max("_ssid_hit").alias("_ssid_hit"))

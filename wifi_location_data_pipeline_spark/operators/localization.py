@@ -12,12 +12,13 @@ Implements the FRAMEWORK doc's algorithm-selection matrix (Table 2, doc
   fuses via the Kalman update in ``kalman_update`` (doc :172-213)
 
 Spark shape (§3.3): the reference's SQS-message-per-MAC orchestration
-disappears — ONE job localizes every sufficient BSSID in a single groupBy.
-The WCL tier is a pure SQL aggregate; the MLE tier is applyInPandas over only
-the BSSIDs routed to it (tier routing via a CASE + semi-join, so the Python
-hop sees the minimal rows). Skew note: a mega-popular BSSID is capped by
-per-group sampling (``max_rows_per_ap``) before the Python tier, mirroring the
-reference's per-query LIMIT (APMeasurementsLookUpService :140-157).
+disappears — ONE job localizes every sufficient BSSID. The tier is attached
+by one broadcast join; the WCL tier is a pure SQL aggregate; the MLE and
+BAYESIAN tiers pack each AP's rows into one array row and share ONE
+mapInPandas pass (the Python hop sees only their rows). Skew note: a
+mega-popular BSSID is capped by per-group sampling (``max_rows_per_ap``)
+before the Python tier, mirroring the reference's per-query LIMIT
+(APMeasurementsLookUpService :140-157).
 """
 
 from __future__ import annotations
@@ -390,37 +391,43 @@ def _capped(measurements: DataFrame, max_rows_per_ap: int) -> DataFrame:
     )
 
 
-def _pack_obs(measurements: DataFrame, max_rows_per_ap: int = 2000) -> DataFrame:
-    """(bssid, obs array) — the lockstep kernel's packed input."""
-    return (
-        _capped(measurements, max_rows_per_ap)
-        .groupBy("bssid")
+def _localize_numeric(
+    rows: DataFrame, prior_state: DataFrame | None = None, max_rows_per_ap: int = 2000
+) -> DataFrame:
+    """The MLE and BAYESIAN tiers in ONE mapInPandas pass.
+
+    ``rows`` carries a ``tier`` column. Each AP's capped rows are packed
+    into one array row (the lockstep kernel's input); only BAYESIAN-tier APs
+    take their prior (x̂, P) from ``prior_state``, so an MLE-tier AP is never
+    fused and keeps its 'MLE' label. A missing prior degrades to plain MLE
+    per AP. The kernel runs once per Arrow batch of APs, not once per AP."""
+    packed = (
+        _capped(rows, max_rows_per_ap)
+        .groupBy("bssid", "tier")
         .agg(F.collect_list(F.struct(*_MLE_PACK_COLS)).alias("obs"))
     )
-
-
-def _prior_cols(prior_state: DataFrame) -> DataFrame:
-    """(bssid, prior_lat/lon/var) — the kernel's prior-column convention."""
-    return prior_state.select(
-        "bssid",
-        F.col("latitude").alias("prior_lat"),
-        F.col("longitude").alias("prior_lon"),
-        F.col("p_var_m2").alias("prior_var"),
-    )
-
-
-def _dispatch_numeric(packed: DataFrame) -> DataFrame:
-    """Repartition to kernel width and run the lockstep gradient ascent."""
+    if prior_state is not None:
+        # the kernel's prior-column convention
+        prior = prior_state.select(
+            "bssid",
+            F.lit("BAYESIAN").alias("tier"),
+            F.col("latitude").alias("prior_lat"),
+            F.col("longitude").alias("prior_lon"),
+            F.col("p_var_m2").alias("prior_var"),
+        )
+        packed = packed.join(F.broadcast(prior), ["bssid", "tier"], "left")
     spark = packed.sparkSession
     n_parts = max(2, spark.sparkContext.defaultParallelism // 2)
-    return packed.repartition(n_parts).mapInPandas(_run_mle_packed, AP_LOCATION_SCHEMA)
+    return packed.drop("tier").repartition(n_parts).mapInPandas(
+        _run_mle_packed, AP_LOCATION_SCHEMA
+    )
 
 
 def mle_localize(measurements: DataFrame, max_rows_per_ap: int = 2000) -> DataFrame:
-    """Tier-2/3 MLE: pack each AP's capped rows into one array row, then run
-    the lockstep-batched gradient ascent in mapInPandas (one Python call per
-    Arrow batch of APs instead of one per AP)."""
-    return _dispatch_numeric(_pack_obs(measurements, max_rows_per_ap))
+    """Tier-2 MLE over every AP in ``measurements`` (see ``_localize_numeric``)."""
+    return _localize_numeric(
+        measurements.withColumn("tier", F.lit("MLE")), max_rows_per_ap=max_rows_per_ap
+    )
 
 
 def mle_localize_grouped(measurements: DataFrame, max_rows_per_ap: int = 2000) -> DataFrame:
@@ -443,10 +450,9 @@ def bayesian_localize(
 
     prior_state: (bssid, latitude, longitude, p_var_m2) — the kalman_update
     state convention."""
-    packed = _pack_obs(measurements, max_rows_per_ap).join(
-        F.broadcast(_prior_cols(prior_state)), "bssid", "left"
+    return _localize_numeric(
+        measurements.withColumn("tier", F.lit("BAYESIAN")), prior_state, max_rows_per_ap
     )
-    return _dispatch_numeric(packed)
 
 
 def wcl_prior_state(history: DataFrame) -> DataFrame:
@@ -462,6 +468,17 @@ def wcl_prior_state(history: DataFrame) -> DataFrame:
     )
 
 
+def _attach_tiers(measurements: DataFrame, cfg: C.EngineConfig) -> DataFrame:
+    """Clean rows of every sufficient BSSID with its ``tier``, by ONE
+    broadcast join: the inner join drops below-bootstrap bssids (routing
+    excludes them), and callers that pre-partition ``measurements`` by bssid
+    (the registry's batch entry does) keep every per-AP window/groupBy
+    downstream exchange-free."""
+    clean = measurements.filter(~F.coalesce(F.col("is_global_outlier"), F.lit(False)))
+    routing = tier_routing(measurements, cfg).select("bssid", "tier")
+    return clean.join(F.broadcast(routing), "bssid", "inner")
+
+
 def localize_all(
     measurements: DataFrame,
     cfg: C.EngineConfig = C.DEFAULT_CONFIG,
@@ -472,20 +489,13 @@ def localize_all(
     With ``prior_state`` (the persisted AP state), tier-3 BAYESIAN APs run
     MAP estimation against their prior (doc :163-169). Without it they run
     the prior-less MLE estimator and the posterior fusion is deferred to
-    ``kalman_update`` against the existing AP state (doc :184-213).
+    ``kalman_update`` against the existing AP state (doc :184-213). The MLE
+    and BAYESIAN tiers share one Python pass.
     """
-    clean = measurements.filter(~F.coalesce(F.col("is_global_outlier"), F.lit(False)))
-    routing = tier_routing(measurements, cfg)
-    wcl_ids = routing.filter(F.col("tier") == "WCL").select("bssid")
-    wcl_out = wcl_localize(clean.join(wcl_ids, "bssid", "left_semi"))
-    if prior_state is None:
-        mle_ids = routing.filter(F.col("tier").isin("MLE", "BAYESIAN")).select("bssid")
-        return wcl_out.unionByName(mle_localize(clean.join(mle_ids, "bssid", "left_semi")))
-    mle_ids = routing.filter(F.col("tier") == "MLE").select("bssid")
-    bayes_ids = routing.filter(F.col("tier") == "BAYESIAN").select("bssid")
-    mle_out = mle_localize(clean.join(mle_ids, "bssid", "left_semi"))
-    bayes_out = bayesian_localize(clean.join(bayes_ids, "bssid", "left_semi"), prior_state)
-    return wcl_out.unionByName(mle_out).unionByName(bayes_out)
+    tiered = _attach_tiers(measurements, cfg)
+    wcl_out = wcl_localize(tiered.filter(F.col("tier") == "WCL").drop("tier"))
+    numeric = _localize_numeric(tiered.filter(F.col("tier") != "WCL"), prior_state)
+    return wcl_out.unionByName(numeric)
 
 
 def localize_with_history(
@@ -500,43 +510,17 @@ def localize_with_history(
     Requires ``measurement_timestamp`` and ``id`` columns (the
     wifi_measurements layout) for the deterministic history split.
     """
-    clean = measurements.filter(~F.coalesce(F.col("is_global_outlier"), F.lit(False)))
-    # ONE broadcast tier-attach instead of three per-tier semi-joins: the
-    # inner join drops below-bootstrap bssids exactly like the semi joins
-    # did (routing excludes them), the identical broadcast subtree is
-    # reused across the three branches (ReuseExchange), and callers that
-    # pre-partition `measurements` by bssid (the bench entry does) get
-    # every window/groupBy below exchange-free on top of it
-    routing = tier_routing(measurements, cfg)
-    tiered = clean.join(
-        F.broadcast(routing.select("bssid", "tier")), "bssid", "inner"
-    )
+    tiered = _attach_tiers(measurements, cfg)
     wcl_out = wcl_localize(tiered.filter(F.col("tier") == "WCL").drop("tier"))
 
-    bayes = tiered.filter(F.col("tier") == "BAYESIAN").drop("tier")
-    w = Window.partitionBy("bssid").orderBy("measurement_timestamp", "id")
-    cnt = Window.partitionBy("bssid")
-    split = bayes.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_n", F.count("*").over(cnt)
-    )
-    hist = split.filter(F.col("_rn") <= F.col("_n") / 2).drop("_rn", "_n")
-    new = split.filter(F.col("_rn") > F.col("_n") / 2).drop("_rn", "_n")
-
-    # MLE and BAYESIAN share _run_mle_packed (a missing prior degrades to
-    # plain MLE per row); packing both tiers into ONE relation runs the
-    # numeric tier in ONE mapInPandas pass instead of two — the round-6
-    # form paid a second full Python-pass floor for the Bayesian branch
-    prior = _prior_cols(wcl_prior_state(hist))
-    mle_packed = _pack_obs(tiered.filter(F.col("tier") == "MLE").drop("tier")).select(
-        "bssid",
-        "obs",
-        F.lit(None).cast("double").alias("prior_lat"),
-        F.lit(None).cast("double").alias("prior_lon"),
-        F.lit(None).cast("double").alias("prior_var"),
-    )
-    bayes_packed = _pack_obs(new).join(F.broadcast(prior), "bssid", "left")
-    packed = mle_packed.unionByName(bayes_packed.select(*mle_packed.columns))
-    return wcl_out.unionByName(_dispatch_numeric(packed))
+    ap = Window.partitionBy("bssid")
+    newer = F.row_number().over(ap.orderBy("measurement_timestamp", "id")) > F.count("*").over(ap) / 2
+    split = tiered.filter(F.col("tier") != "WCL").withColumn("_newer", newer)
+    bayesian = F.col("tier") == "BAYESIAN"
+    hist = split.filter(bayesian & ~F.col("_newer")).drop("tier", "_newer")
+    # MLE-tier APs keep all their rows; BAYESIAN ones the newer half
+    rows = split.filter(~bayesian | F.col("_newer")).drop("_newer")
+    return wcl_out.unionByName(_localize_numeric(rows, wcl_prior_state(hist)))
 
 
 def kalman_update(prior_state: DataFrame, new_estimates: DataFrame) -> DataFrame:

@@ -7,58 +7,28 @@ rows with distance > 3×MAD (alternatives: IQR, PERCENTILE). The six flag
 columns are then written back (UPDATE … CASE per event_id → here: a join-based
 column replacement, see table_dml.py).
 
-Scale design: medians/MADs are per-AP aggregates. At 100 TB a popular BSSID has
-millions of rows; ``percentile_approx`` (t-digest sketch, partial-aggregable)
-keeps the job one shuffle — exactness of the 3×MAD boundary is not required by
-the spec (the threshold itself is heuristic). For the DuckDB-checked oracle
-variant the registry uses exact percentiles at small SF.
+Spark shape: the centroid ``avg``, the distance, the percentiles and the
+threshold are all window aggregates over ONE ``Window.partitionBy("bssid")``,
+so every detector plans one scan of its input and one
+``Exchange hashpartitioning(bssid)``, with the window operators (MAD stacks
+two: the median, then the median of deviations from it) pipelined on that
+partitioning. A downstream per-bssid window or groupBy (the behavioral
+hotspot pass) reuses it; a per-AP aggregate joined back per statistic would
+re-scan and re-shuffle the input for each one. ``exact=False`` uses
+``percentile_approx`` (t-digest); exactness of the 3×MAD boundary is not
+required by the spec (the threshold itself is heuristic). For the
+DuckDB-checked oracle variant the registry uses exact percentiles at small SF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
 from wifi_location_data_pipeline_spark.functions.geo import haversine_m
 
 DETECTION_VERSION = "spark-mad-1.0"
-
-
-def distances_to_centroid(measurements: DataFrame) -> DataFrame:
-    """Attach per-row haversine distance to the AP's centroid (meters)."""
-    centroids = measurements.groupBy("bssid").agg(
-        F.avg("latitude").alias("_clat"), F.avg("longitude").alias("_clon")
-    )
-    return measurements.join(centroids, "bssid").withColumn(
-        "_dist_m",
-        haversine_m(F.col("latitude"), F.col("longitude"), F.col("_clat"), F.col("_clon")),
-    )
-
-
-def mad_thresholds(
-    with_dist: DataFrame, exact: bool = False, multiplier: float = C.OUTLIER_MAD_MULTIPLIER
-) -> DataFrame:
-    """Per-AP (median, MAD, threshold). ``exact=False`` uses the t-digest
-    sketch (partial-aggregable → one shuffle) for 100 TB runs."""
-    pct = (lambda c: F.percentile(c, F.lit(0.5))) if exact else (
-        lambda c: F.percentile_approx(c, F.lit(0.5), F.lit(10000))
-    )
-    med = with_dist.groupBy("bssid").agg(pct(F.col("_dist_m")).alias("_med"))
-    mad = (
-        with_dist.join(med, "bssid")
-        .groupBy("bssid")
-        .agg(
-            pct(F.abs(F.col("_dist_m") - F.col("_med"))).alias("_mad"),
-            F.min("_med").alias("_med"),
-        )
-    )
-    return mad.select(
-        "bssid",
-        "_med",
-        "_mad",
-        (F.col("_med") + multiplier * F.col("_mad")).alias("_threshold"),
-    )
 
 
 def flag_global_outliers(
@@ -71,36 +41,43 @@ def flag_global_outliers(
     ``algorithm``: MAD (default), IQR (Q3 + 1.5×IQR), or PERCENTILE (p99) —
     the three detector variants named by SCHEMA doc :59.
     """
-    with_dist = distances_to_centroid(measurements)
-    if algorithm == "MAD":
-        thresholds = mad_thresholds(with_dist, exact=exact)
-    elif algorithm == "IQR":
-        pct = (lambda c, p: F.percentile(c, F.lit(p))) if exact else (
-            lambda c, p: F.percentile_approx(c, F.lit(p), F.lit(10000))
-        )
-        thresholds = with_dist.groupBy("bssid").agg(
-            (
-                pct(F.col("_dist_m"), 0.75)
-                + 1.5 * (pct(F.col("_dist_m"), 0.75) - pct(F.col("_dist_m"), 0.25))
-            ).alias("_threshold")
-        )
-    elif algorithm == "PERCENTILE":
-        pct = (lambda c: F.percentile(c, F.lit(0.99))) if exact else (
-            lambda c: F.percentile_approx(c, F.lit(0.99), F.lit(10000))
-        )
-        thresholds = with_dist.groupBy("bssid").agg(pct(F.col("_dist_m")).alias("_threshold"))
-    else:
+    if algorithm not in C.OUTLIER_ALGORITHMS:
         raise ValueError(f"unknown outlier algorithm: {algorithm}")
+    ap = Window.partitionBy("bssid")
 
-    flagged = with_dist.join(thresholds, "bssid")
+    def pct(c, p):
+        if exact:
+            return F.percentile(c, F.lit(p)).over(ap)
+        return F.percentile_approx(c, F.lit(p), F.lit(10000)).over(ap)
+
+    dist = F.col("_dist_m")
+    with_dist = measurements.withColumn(
+        "_dist_m",
+        haversine_m(
+            F.col("latitude"), F.col("longitude"),
+            F.avg("latitude").over(ap), F.avg("longitude").over(ap),
+        ),
+    )
+    if algorithm == "MAD":
+        med = with_dist.withColumn("_med", pct(dist, 0.5))
+        thr = med.withColumn(
+            "_threshold",
+            F.col("_med") + C.OUTLIER_MAD_MULTIPLIER * pct(F.abs(dist - F.col("_med")), 0.5),
+        )
+    elif algorithm == "IQR":
+        q3 = pct(dist, 0.75)
+        thr = with_dist.withColumn("_threshold", q3 + 1.5 * (q3 - pct(dist, 0.25)))
+    else:
+        thr = with_dist.withColumn("_threshold", pct(dist, 0.99))
+
     return (
-        flagged.withColumn("is_global_outlier", F.col("_dist_m") > F.col("_threshold"))
-        .withColumn("global_outlier_distance", F.col("_dist_m"))
+        thr.withColumn("is_global_outlier", dist > F.col("_threshold"))
+        .withColumn("global_outlier_distance", dist)
         .withColumn("global_outlier_threshold", F.col("_threshold"))
         .withColumn("global_detection_algorithm", F.lit(algorithm))
         .withColumn("global_detection_timestamp", F.current_timestamp())
         .withColumn("global_detection_version", F.lit(DETECTION_VERSION))
-        .drop("_clat", "_clon", "_dist_m", "_med", "_mad", "_threshold")
+        .drop("_dist_m", "_med", "_threshold")
     )
 
 

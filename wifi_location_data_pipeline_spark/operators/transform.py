@@ -4,8 +4,8 @@ Collapses the reference's transformer microservice
 (wifi-measurements-transformer-service: SQS poll → S3 get → decode → validate
 → flatten → Firehose publish; SURVEY.md §3.1) into one declarative lineage:
 
-    read raw lines → decode/parse → explode tiers → union → derive columns
-    → stage-1 filters → hotspot OUI action → dedup
+    read raw lines → decode/parse → one generator over both tiers
+    → derive columns → stage-1 filters → hotspot OUI action → dedup
 
 All JVM-side except the gzip hop in the codec. The same function body serves
 batch and streaming inputs (the plan is identical; only the source differs).
@@ -18,12 +18,7 @@ from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
 from wifi_location_data_pipeline_spark.operators.dedup import dedup_measurements
-from wifi_location_data_pipeline_spark.operators.flatten import (
-    flatten_connected_events,
-    flatten_scan_results,
-    union_tiers,
-    with_derived_columns,
-)
+from wifi_location_data_pipeline_spark.operators.flatten import flatten_tiers, with_derived_columns
 from wifi_location_data_pipeline_spark.operators.hotspot import apply_oui_filter, hotspot_oui_df
 from wifi_location_data_pipeline_spark.operators.validation import apply_stage1_filters
 from wifi_location_data_pipeline_spark.schemas import WIFI_MEASUREMENTS_SCHEMA
@@ -39,8 +34,7 @@ def transform_documents(
 ) -> DataFrame:
     """Typed scan documents → wifi_measurements rows (validated, deduped)."""
     spark = docs.sparkSession
-    flat = union_tiers(flatten_connected_events(docs), flatten_scan_results(docs))
-    derived = with_derived_columns(flat, batch_id=batch_id)
+    derived = with_derived_columns(flatten_tiers(docs), batch_id=batch_id)
     validated = apply_stage1_filters(derived, now_ms=now_ms, cfg=cfg)
     filtered = apply_oui_filter(
         validated, hotspot_oui_df(spark, cfg.hotspot_ouis), cfg.hotspot_action

@@ -8,7 +8,15 @@ Invalid lines decode to NULL and are dropped — the reference's
 
 Spark 4 has no built-in gzip column function, so decompression is an
 Arrow-batched pandas UDF (the *only* Python hop in the ingest path; base64 and
-JSON parsing stay JVM-side via ``unbase64`` / ``from_json``).
+JSON parsing stay JVM-side via ``try_to_binary`` / ``from_json``).
+
+The UDF is marked nondeterministic so it runs ONCE per line. Catalyst
+inlines a deterministic expression wherever its alias is used, so the
+pushed-down ``_json IS NOT NULL`` filter would get its own copy and every
+line would be decompressed twice. A nondeterministic projection is neither
+inlined nor crossed by filter pushdown: the executed ingest plan
+(``transform_documents(read_raw_scan_documents(...))``) has one
+``FileScan text`` and one ``ArrowEvalPython``.
 """
 
 from __future__ import annotations
@@ -35,8 +43,7 @@ def _gzip_compress(data: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.StringType())
-def _gzip_decompress_utf8(data: pd.Series) -> pd.Series:
+def _gunzip_utf8(data: pd.Series) -> pd.Series:
     def _one(b: bytes | None) -> str | None:
         # empty binary → NULL, not "": gzip.decompress(b"") returns b"" on
         # Python 3.11+ (zero gzip members), and try_to_binary maps
@@ -52,6 +59,10 @@ def _gzip_decompress_utf8(data: pd.Series) -> pd.Series:
             return None  # invalid line → NULL → dropped downstream
 
     return data.map(_one)
+
+
+# Nondeterministic = evaluated once per row (see the module docstring).
+_gzip_decompress_utf8 = F.pandas_udf(_gunzip_utf8, T.StringType()).asNondeterministic()
 
 
 def encode_scan_line(json_col: Column) -> Column:
