@@ -231,15 +231,15 @@ def main() -> None:
         )
     # trained-artifact reuse disclosure (r9 ADVICE): ann_ivf_probe fits its
     # coarse quantizer once per (app, corpus) and reuses it across attempts
-    # (plans/llm_queries.py _IVF_CENTROIDS — a served index's real shape),
+    # (a corpus_memo entry, "ivf_centroids" — a served index's real shape),
     # while the DuckDB oracle re-fits every run; its recorded minimum
     # amortizes the fit. The first execution always fits from data, so the
     # correctness gate is unaffected.
     # (bpe_apply_tokenize likewise reuses the learned merge table per
-    # (app, corpus) — _BPE_MERGES — while its oracle re-derives the merges
+    # (app, corpus) — "bpe_merges" — while its oracle re-derives the merges
     # every run; first execution always trains from data.
     # ann_ivf_pq_search and ann_recall_eval likewise reuse the trained PQ
-    # search artifacts — _PQ_SEARCH_ART — and the memoized coarse
+    # search artifacts — "pq_search_artifacts" — and the memoized coarse
     # quantizer; their oracles re-train every run.)
     amortized = [
         n

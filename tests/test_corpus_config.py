@@ -8,8 +8,8 @@ session can visit both (bench runs sf0.1 then the sf1 replica). A stale
 restore would silently run the 100 TB path without AQE's skew handling —
 this is the regression these tests pin.
 
-Keyed memo caches (the trained-artifact / persisted-input pattern:
-_CMS_COUNTS, _BPE_MERGES) must not accumulate persisted relations across
+Corpus memos (corpus_memo: the CMS counts, the BPE word-frequency view,
+the collocation counts) must not accumulate persisted relations across
 repeated invocations — the r9 ADVICE leak.
 """
 

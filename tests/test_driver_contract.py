@@ -72,9 +72,10 @@ def test_loader_reads_events_on_foreign_session(spark, sf_dir):
 
 def test_service_plan_cache_reuse_is_value_stable(spark, sf_dir, monkeypatch):
     """QueryDef.service plan reuse: a cache hit after clearCache() must
-    re-execute from the scans and produce identical values (the re-arm
-    hooks re-register interior persist points, see plan_cache.py), and
+    re-execute from the scans and produce identical values (the plan is a
+    corpus_memo entry, which re-arms persisted values on a hit), and
     SPARK_GRAFT_PLAN_CACHE=0 must bypass the cache entirely."""
+    from wifi_location_data_pipeline_spark import corpus_memo
     from wifi_location_data_pipeline_spark.plans import queries as Q
 
     name = "ensemble_closed_form"
@@ -85,20 +86,18 @@ def test_service_plan_cache_reuse_is_value_stable(spark, sf_dir, monkeypatch):
         return sorted(tuple(r) for r in df.collect())
 
     first = rows(q.spark(spark, sf_dir))
-    key = (
-        spark.sparkContext.applicationId, name, sf_dir,
-        Q._corpus_fingerprint(sf_dir),
-    )
-    assert key in Q._PLAN_CACHE
-    cached_df, rearms = Q._PLAN_CACHE[key]
+    key = (f"plan:{name}", spark.sparkContext.applicationId, sf_dir)
+    assert key in corpus_memo._MEMO
+    gen, cached_df, _ = corpus_memo._MEMO[key]
+    assert gen == corpus_memo.fingerprint(sf_dir)
 
     spark.catalog.clearCache()
     again = q.spark(spark, sf_dir)
     assert again is cached_df  # the analyzed plan was reused
     assert rows(again) == first
 
-    # the full ensemble (Python numeric tier + interior staged.cache())
-    # must also survive reuse after clearCache via its re-arm hook
+    # the full ensemble (Python numeric tier) must also give identical
+    # values after clearCache
     pname = "positioning_ensemble"
     p = Q.QUERIES[pname]
     pfirst = rows(p.spark(spark, sf_dir))
@@ -139,7 +138,7 @@ def test_fixture_shapes():
         assert n == ndist, (sf, n, ndist)
 
 
-def test_events_footer_max_matches_scan_max():
+def test_events_footer_max_matches_scan_max(spark):
     """plans.queries._fold_events_stats folds `(SELECT MAX(user_id) FROM
     events)` into a literal read from the parquet footer min/max stats (the
     same stats DuckDB answers the scalar from). Assert footer-max == true
@@ -159,18 +158,18 @@ def test_events_footer_max_matches_scan_max():
         (true_max,) = con.execute(
             f"SELECT MAX(user_id) FROM read_parquet('{sf_dir}/events.parquet')"
         ).fetchone()
-        assert _events_max_user_id(sf_dir) == true_max, sf
+        assert _events_max_user_id(spark, sf_dir) == true_max, sf
         folded = _fold_events_stats(
-            sf_dir, "SELECT (SELECT MAX(user_id) FROM events) AS m"
+            spark, sf_dir, "SELECT (SELECT MAX(user_id) FROM events) AS m"
         )
         assert folded == f"SELECT CAST({true_max} AS BIGINT) AS m", sf
     # a corpus dir without events.parquet keeps the subquery untouched
     assert _fold_events_stats(
-        "/nonexistent", "SELECT (SELECT MAX(user_id) FROM events) AS m"
+        spark, "/nonexistent", "SELECT (SELECT MAX(user_id) FROM events) AS m"
     ) == "SELECT (SELECT MAX(user_id) FROM events) AS m"
 
 
-def test_events_footer_ts_minmax_matches_scan():
+def test_events_footer_ts_minmax_matches_scan(spark):
     """Mirror of the MAXUID pin for the time-split midpoint fold:
     plans.queries._fold_events_stats replaces `(SELECT mid_s FROM split)`
     with ((MIN_s + MAX_s) / 2.0) where MIN_s/MAX_s come from the parquet
@@ -196,15 +195,17 @@ def test_events_footer_ts_minmax_matches_scan():
             " MAX(CAST(FLOOR(epoch(ts)) AS BIGINT))"
             f" FROM read_parquet('{sf_dir}/events.parquet')"
         ).fetchone()
-        assert _events_ts_minmax_s(sf_dir) == (true_mn, true_mx), sf
-        folded = _fold_events_stats(sf_dir, "SELECT (SELECT mid_s FROM split) AS m")
+        assert _events_ts_minmax_s(spark, sf_dir) == (true_mn, true_mx), sf
+        folded = _fold_events_stats(
+            spark, sf_dir, "SELECT (SELECT mid_s FROM split) AS m"
+        )
         assert folded == (
             f"SELECT ((CAST({true_mn} AS BIGINT) + CAST({true_mx} AS BIGINT))"
             " / CAST(2.0 AS DOUBLE)) AS m"
         ), sf
     # a corpus dir without events.parquet keeps the subquery untouched
     assert _fold_events_stats(
-        "/nonexistent", "SELECT (SELECT mid_s FROM split) AS m"
+        spark, "/nonexistent", "SELECT (SELECT mid_s FROM split) AS m"
     ) == "SELECT (SELECT mid_s FROM split) AS m"
 
 

@@ -269,11 +269,14 @@ def test_signature_table_memo_rearms_and_invalidates(spark):
     RE-ARM the persist on the next hit (without it every consumer would
     silently recompute the kernel uncached); regenerating the corpus
     in-place must miss the memo (fingerprint keying — the round-5 ADVICE
-    staleness class)."""
+    staleness class), release the superseded table from the cache, and
+    rebuild from the new rows."""
     import os
     import shutil
     import tempfile
     import time
+
+    import pyarrow.parquet as pq
 
     from wifi_location_data_pipeline_spark.plans.llm_queries import (
         minhash_signature_table,
@@ -295,6 +298,13 @@ def test_signature_table_memo_rearms_and_invalidates(spark):
     time.sleep(0.01)
     os.utime(os.path.join(d, "documents.parquet"))
     assert minhash_signature_table(spark, d) is not t1
+    # regeneration with new content: half the documents
+    docs = pq.read_table(os.path.join(d, "documents.parquet"))
+    half = docs.slice(0, docs.num_rows // 2)
+    pq.write_table(half, os.path.join(d, "documents.parquet"))
+    t3 = minhash_signature_table(spark, d)
+    assert not t1.storageLevel.useMemory  # superseded table was released
+    assert t3.count() == half.num_rows
 
 
 def test_spread_view_survives_corpus_switching(spark):

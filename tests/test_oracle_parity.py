@@ -97,6 +97,12 @@ def test_strategy_agreement_fused_matches_two_pipeline(spark, sf_dir, monkeypatc
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
+    # the fused branch also needs the array-verify regime: assert the fixture
+    # is in it, so forcing the size crossover really runs both branches
+    _, _, n_cand = L._ngram_jaccard_parts(
+        spark, sf_dir, L.minhash_signature_table(spark, sf_dir)
+    )
+    assert n_cand <= L.NGRAM_ARRAY_VERIFY_MAX_PAIRS
     monkeypatch.setattr(L, "_AGREE_FUSED_MIN_BYTES", 1 << 60)  # force two-pipeline
     two = L._strategy_agreement_spark_fn(spark, sf_dir).collect()
     monkeypatch.setattr(L, "_AGREE_FUSED_MIN_BYTES", 0)  # force fused

@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+from contextlib import contextmanager
 
+from wifi_location_data_pipeline_spark import corpus_memo
 from wifi_location_data_pipeline_spark.plans.dialect import (
     SPARK,
     array_double,
@@ -72,78 +74,65 @@ def spread_documents_src(spark, sf_dir, full_fanout: bool = False) -> str:
     )
 
     register_views(spark, sf_dir)
-    # key on the corpus CONTENT too: the _documents_spread view pins the
-    # parquet file listing captured at first build, so a corpus regenerated
-    # in-place at the same sf_dir must rebuild the view (else the shingle /
-    # simhash / ngram queries silently read stale data or fail on deleted
-    # files). Mirrors queries._corpus_fingerprint for the same reason.
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _corpus_fp(sf_dir),
-        bool(full_fanout),
-    )
-    hit = _SPREAD_SRC.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _SPREAD_SRC if k[:2] == key[:2] and k[3] == key[3]]:
-        # evict superseded corpus generations AND drop their (per-generation
-        # named) views so long sessions don't accumulate catalog entries
-        stale = _SPREAD_SRC.pop(k)
-        if stale != "documents":
-            spark.catalog.dropTempView(stale)
-    try:
-        # single FILE (the test corpus): size known, scan is 1 task/row-group.
-        # A directory layout (any real lakehouse) raises -> plain table, no
-        # shuffle: its scan is already as parallel as the storage allows.
-        # Floor at ~16 KB text/task: every consumer is now an Arrow kernel
-        # (hashlib md5 over shingles/windows — CPU-bound Python), so spread
-        # to the full core count as soon as the corpus can feed it; the old
-        # 64 KB floor was tuned for the retired JVM HOF builders and left
-        # sf0.1 on 10 of 32 cores.
-        sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-        target = min(
-            spark.sparkContext.defaultParallelism, sz // _SPREAD_TEXT_PER_TASK + 1
-        )
-    except OSError:
-        target = 1
-    if target > 1:
-        # repartition ONLY when the scan itself is under-split for this
-        # consumer class (see docstring). When openCost-driven splitting
-        # already hands the scan enough of the target (the multi-row-group
-        # 10x replica: 9-13 splits for 32 cores), the round-robin exchange
-        # costs more than the marginal cores earn — measured at the
-        # replica: the unconditional spread held bigram/tfidf/cms at
-        # 1.3-2.0 s in EVERY scan mode while the plain row-group-parallel
-        # scan runs 0.6-0.9 s.
-        frac = 2 if full_fanout else 4
-        scan_parts = load_table(spark, sf_dir, "documents").rdd.getNumPartitions()
-        if scan_parts * frac > target:
+
+    def build():
+        try:
+            # single FILE (the test corpus): size known, scan is 1 task/row-group.
+            # A directory layout (any real lakehouse) raises -> plain table, no
+            # shuffle: its scan is already as parallel as the storage allows.
+            # Floor at ~16 KB text/task: every consumer is now an Arrow kernel
+            # (hashlib md5 over shingles/windows — CPU-bound Python), so spread
+            # to the full core count as soon as the corpus can feed it; the old
+            # 64 KB floor was tuned for the retired JVM HOF builders and left
+            # sf0.1 on 10 of 32 cores.
+            sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
+            target = min(
+                spark.sparkContext.defaultParallelism, sz // _SPREAD_TEXT_PER_TASK + 1
+            )
+        except OSError:
             target = 1
-    # Derive the view NAME from the memo key: sessions that alternate
-    # between corpora (A -> B -> A) would otherwise get a memo hit for A
-    # that returns the shared "documents" name now bound to B's documents,
-    # and every spread consumer (minhash/shingle/simhash/substring kernels)
-    # silently reads the wrong corpus. One view per (dir, fingerprint)
-    # generation keeps every memoized name permanently correct — ALSO on
-    # the no-repartition path: the alias view pins this generation's file
-    # listing at creation and adds no exchange (plan-identical to the
-    # plain table).
-    tag = hashlib.md5(
-        f"{sf_dir}|{key[2]}|{int(key[3])}".encode()
-    ).hexdigest()[:12]
-    df = load_table(spark, sf_dir, "documents")
-    if target <= 1:
-        src = f"_documents_plain_{tag}"
-        df.createOrReplaceTempView(src)
-    else:
-        src = f"_documents_spread_{tag}"
-        df.repartition(target).createOrReplaceTempView(src)
-    _SPREAD_SRC[key] = src
-    return src
+        if target > 1:
+            # repartition ONLY when the scan itself is under-split for this
+            # consumer class (see docstring). When openCost-driven splitting
+            # already hands the scan enough of the target (the multi-row-group
+            # 10x replica: 9-13 splits for 32 cores), the round-robin exchange
+            # costs more than the marginal cores earn — measured at the
+            # replica: the unconditional spread held bigram/tfidf/cms at
+            # 1.3-2.0 s in EVERY scan mode while the plain row-group-parallel
+            # scan runs 0.6-0.9 s.
+            frac = 2 if full_fanout else 4
+            scan_parts = load_table(spark, sf_dir, "documents").rdd.getNumPartitions()
+            if scan_parts * frac > target:
+                target = 1
+        # Derive the view NAME from (dir, corpus generation, fan-out): the
+        # view pins this generation's file listing at creation, and sessions
+        # that alternate between corpora (A -> B -> A) must never get a memo
+        # hit for A that returns a name now bound to B's documents — every
+        # spread consumer (minhash/shingle/simhash/substring kernels) would
+        # silently read the wrong corpus. One name per generation keeps
+        # every memoized name permanently correct — ALSO on the
+        # no-repartition path: the alias view adds no exchange
+        # (plan-identical to the plain table).
+        tag = hashlib.md5(
+            f"{sf_dir}|{corpus_memo.fingerprint(sf_dir)}|{int(full_fanout)}".encode()
+        ).hexdigest()[:12]
+        df = load_table(spark, sf_dir, "documents")
+        if target <= 1:
+            src = f"_documents_plain_{tag}"
+            df.createOrReplaceTempView(src)
+        else:
+            src = f"_documents_spread_{tag}"
+            df.repartition(target).createOrReplaceTempView(src)
+        return src
+
+    # the view pins the corpus file listing, so it is a corpus memo: an
+    # in-place regeneration at the same sf_dir rebuilds it (and drops the
+    # superseded view) instead of reading stale data or deleted files
+    return corpus_memo.memo(
+        spark, sf_dir, f"spread_src:{bool(full_fanout)}", build
+    )
 
 
-_SPREAD_SRC: dict = {}
 # spread fan-out floor: raw text bytes each task should own before the
 # repartition adds another. Each Arrow task carries a fixed ~5-10 ms of
 # scheduling + serialization, so sub-~50 KB slices cost more than the
@@ -152,11 +141,8 @@ _SPREAD_SRC: dict = {}
 # measures minhash 0.99 / jaccard 1.94 s, the 48 KB floor (13 tasks) 0.85 /
 # 1.40 s, with simhash/clusters a tie; 96 KB starts re-serializing jaccard.
 # Corpora big enough to cap the target at the core count (the 10x replica
-# and up) are unaffected by the floor. Env-tunable for storage profiles
-# with different task overheads.
-_SPREAD_TEXT_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TEXT_PER_TASK", str(48 << 10))
-)
+# and up) are unaffected by the floor.
+_SPREAD_TEXT_PER_TASK = 48 << 10
 
 
 # Plan-evidence tap for internal-collect jobs (set by tools/capture_plans.py):
@@ -178,21 +164,6 @@ def _tap_plan(label: str, df) -> None:
     except Exception:
         txt = "(explain failed)"
     _PLAN_TAP.append((label, txt))
-
-
-def _maybe_eager(df):
-    """Optionally force a persisted relation to materialize NOW.
-
-    Local mode relies on lazy persist + per-partition cache locks (one
-    compute even under AQE-concurrent consumers, and one fewer job). Those
-    locks are per-executor, so multi-executor clusters can recompute an
-    uncached partition on two executors before the cache fills; deployments
-    there set SPARK_GRAFT_EAGER_PERSIST=1 to pay one scheduling round for a
-    guaranteed single computation of the expensive shingle/md5 projections.
-    """
-    if os.environ.get("SPARK_GRAFT_EAGER_PERSIST", "0") == "1":
-        df.count()
-    return df
 
 
 def shingles_cte(d: str, n: int = 3, src: str = "documents") -> str:
@@ -493,20 +464,6 @@ NGRAM_ARRAY_VERIFY_MAX_PAIRS = 200_000  # measured break-even between the
 # array-intersect verify (wins when candidates ≈ true near-dups) and the
 # join-count verify (wins when blocking generates O(Σ df²) candidates)
 
-_NGRAM_REGIME: dict = {}  # (app, sf_dir, corpus fp) -> Σ C(df,2) decision
-
-
-def _corpus_fp(sf_dir: str) -> tuple:
-    """(mtime_ns, size) fingerprint of the documents table — the shared
-    memo-key component of spread_documents_src / minhash_signature_table /
-    the ngram regime decision, so an in-place corpus regeneration at the
-    same path invalidates every derived memo together."""
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return ()
-
 
 def _ngram_jaccard_duck_sql(d: str) -> str | None:
     if d == "spark":
@@ -591,13 +548,8 @@ def _ngram_jaccard_parts(spark, sf_dir, arrs):
         )
         .select("p.doc_a", "p.doc_b")
     )
-    # adaptive-verify decision, memoized per (app, corpus fingerprint) so
-    # repeated invocations — and plan-only consumers after the first build
-    # (plan_audit, schema gates) — skip the decision job
-    dkey = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    n_cand = _NGRAM_REGIME.get(dkey)
-    if n_cand is None:
-        n_cand = (
+    def count_candidates():
+        n = (
             bstats.filter(F2.col("df") <= NGRAM_DF_CAP)
             .agg(
                 F2.sum(
@@ -605,11 +557,13 @@ def _ngram_jaccard_parts(spark, sf_dir, arrs):
                 ).alias("n")
             )
             .first()["n"]
-            or 0
         )
-        for k in [k for k in _NGRAM_REGIME if k[:2] == dkey[:2]]:
-            del _NGRAM_REGIME[k]
-        _NGRAM_REGIME[dkey] = n_cand
+        return n or 0
+
+    # adaptive-verify decision, a corpus memo so repeated invocations — and
+    # plan-only consumers after the first build (plan_audit, schema gates)
+    # — skip the decision job
+    n_cand = corpus_memo.memo(spark, sf_dir, "ngram_regime", count_candidates)
     return bstats, rare_pairs, n_cand
 
 
@@ -828,9 +782,8 @@ def persisted_shingle_bases(spark, sf_dir, n: int = 3):
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # lazily materialized: per-partition cache locks serialize concurrent
-    # consumer stages; an eager count costs one extra scheduling round
-    # (per-executor locks — cluster caveat + opt-out in _maybe_eager)
-    return _maybe_eager(df)
+    # consumer stages; an eager count would cost one extra scheduling round
+    return df
 
 
 def _minhash_based_sql(d: str) -> str:
@@ -924,27 +877,26 @@ def minhash_signature_table(spark, sf_dir):
     (O(true near-dups)) against this 50k-row/sf table instead of the 2.6M-row
     exploded relation — the verify shuffle disappears entirely.
 
-    Memoized per (application, sf_dir, corpus fingerprint) — the same
-    keying as ``spread_documents_src`` — so the three consumers in a suite
-    run (MinHash, ngram Jaccard, strategy agreement) share ONE kernel pass
-    and ONE cache instead of building three copies. On a memo hit the
-    persist marker is re-armed: a caller's ``spark.catalog.clearCache()``
-    (the bench does this between attempts) drops the cached blocks AND the
-    plan's storage registration, and without re-arming every downstream
-    consumer would silently recompute the kernel uncached.
+    A corpus memo (``corpus_memo.memo``), like ``spread_documents_src``, so
+    the three consumers in a suite run (MinHash, ngram Jaccard, strategy
+    agreement) share ONE kernel pass and ONE cache instead of building
+    three copies. A hit after ``spark.catalog.clearCache()`` (the bench
+    runs one between attempts) re-arms the persist, and a regenerated
+    corpus unpersists the superseded table before the rebuild.
     """
-    from pyspark import StorageLevel
-
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    hit = _SIG_TABLE.get(key)
-    if hit is not None:
-        hit.persist(StorageLevel.MEMORY_AND_DISK)  # re-arm after clearCache
-        return hit
-    for k in [k for k in _SIG_TABLE if k[:2] == key[:2]]:
-        del _SIG_TABLE[k]  # evict superseded corpus generations
+    return corpus_memo.memo(
+        spark,
+        sf_dir,
+        "minhash_signature_table",
+        lambda: _build_signature_table(spark, sf_dir),
+    )
+
+
+def _build_signature_table(spark, sf_dir):
+    from pyspark import StorageLevel
 
     src = spread_documents_src(spark, sf_dir, full_fanout=True)
     docs = spark.sql(f"SELECT doc_id, text FROM {src}")
@@ -975,12 +927,7 @@ def minhash_signature_table(spark, sf_dir):
         + ", ".join(f"m{j} long" for j in range(12))
         + ", bases array<long>"
     )
-    arrs = docs.mapInPandas(to_sigs, schema).persist(StorageLevel.MEMORY_AND_DISK)
-    _SIG_TABLE[key] = arrs
-    return _maybe_eager(arrs)
-
-
-_SIG_TABLE: dict = {}
+    return docs.mapInPandas(to_sigs, schema).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _minhash_spark_fn(spark, sf_dir, arrs=None):
@@ -1219,10 +1166,9 @@ WHERE size(w) >= 3"""
     blocked = docarr.mapInPandas(
         to_sigs, "doc_id long, blk0 long, blk1 long, blk2 long, blk3 long"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _maybe_eager(blocked)
     # lazily materialized (see persisted_shingle_bases): per-partition cache
-    # locks serialize the three consumer stages; an eager count costs one
-    # extra scheduling round (per-executor locks — caveat in _maybe_eager)
+    # locks serialize the three consumer stages; an eager count would cost
+    # one extra scheduling round
     blocks = blocked.select(
         "doc_id",
         F2.explode(
@@ -2597,15 +2543,35 @@ FROM ranked WHERE rank <= 3
 """
 
 
-# (applicationId, sf_dir, corpus_fp) -> (labels, C) — the fitted coarse
-# quantizer. An IVF index's centroids are a TRAINED, PERSISTED artifact
-# (that is the point of an inverted-file index — FAISS/Milvus never refit
-# the coarse quantizer per probe; the engine's ivf_kmeans_train is that
-# trainer), so repeated probes against the same corpus reuse the fit the
-# way the service family reuses analyzed plans. Keyed on corpus CONTENT:
-# a regenerated corpus refits. The first probe on a corpus (the driver's
-# one-shot correctness gate, always) computes it distributed from data.
-_IVF_CENTROIDS: dict = {}
+def _fit_ivf_centroids(spark, emb):
+    """Per-label mean embedding: (ascending labels, |labels| x dims matrix)."""
+    import numpy as np
+    from pyspark.sql import functions as F2
+
+    # AQE off for this one bounded collect: the |labels| x |dims| grid
+    # is 640 rows, and AQE's materialize-then-replan split turns the
+    # tiny two-stage agg into two scheduled jobs (~0.15 s of pure job
+    # floor). (A union folding the 8-query collect into the same job
+    # was measured slower — it re-scans the exploded elements twice
+    # inside one stage.)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        cent_rows = (
+            emb.select("label", F2.posexplode("embedding").alias("dim", "x"))
+            .groupBy("label", "dim")
+            .agg(F2.avg(F2.col("x").cast("double")).alias("cx"))
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    labels = sorted({r.label for r in cent_rows})
+    dims = 1 + max(r.dim for r in cent_rows)
+    C = np.zeros((len(labels), dims), dtype=np.float64)
+    lab_idx = {lab: i for i, lab in enumerate(labels)}
+    for r in cent_rows:
+        C[lab_idx[r.label], r.dim] = r.cx
+    return labels, C
 
 
 def _ann_ivf_spark_fn(spark, sf_dir):
@@ -2626,38 +2592,17 @@ def _ann_ivf_spark_fn(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
 
-    ckey = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    hit = _IVF_CENTROIDS.get(ckey)
-    if hit is not None:
-        labels, C = hit
-    else:
-        # AQE off for this one bounded collect: the |labels| x |dims| grid
-        # is 640 rows, and AQE's materialize-then-replan split turns the
-        # tiny two-stage agg into two scheduled jobs (~0.15 s of pure job
-        # floor). (A union folding the 8-query collect into the same job
-        # was measured slower — it re-scans the exploded elements twice
-        # inside one stage.)
-        aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            cent_rows = (
-                emb.select("label", F2.posexplode("embedding").alias("dim", "x"))
-                .groupBy("label", "dim")
-                .agg(F2.avg(F2.col("x").cast("double")).alias("cx"))
-                .collect()
-            )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        labels = sorted({r.label for r in cent_rows})
-        dims = 1 + max(r.dim for r in cent_rows)
-        C = np.zeros((len(labels), dims), dtype=np.float64)
-        lab_idx = {lab: i for i, lab in enumerate(labels)}
-        for r in cent_rows:
-            C[lab_idx[r.label], r.dim] = r.cx
-        stale = [k for k in _IVF_CENTROIDS if k[:2] == ckey[:2] and k != ckey]
-        for k in stale:
-            del _IVF_CENTROIDS[k]
-        _IVF_CENTROIDS[ckey] = (labels, C)
+    # (labels, C), the fitted coarse quantizer. An IVF index's centroids are
+    # a TRAINED, PERSISTED artifact (that is the point of an inverted-file
+    # index — FAISS/Milvus never refit the coarse quantizer per probe; the
+    # engine's ivf_kmeans_train is that trainer), so repeated probes against
+    # the same corpus reuse the fit as a corpus memo, the way the service
+    # family reuses analyzed plans: a regenerated corpus refits. The first
+    # probe on a corpus (the driver's one-shot correctness gate, always)
+    # computes it distributed from data.
+    labels, C = corpus_memo.memo(
+        spark, sf_dir, "ivf_centroids", lambda: _fit_ivf_centroids(spark, emb)
+    )
     cnorm = np.sqrt((C * C).sum(axis=1))
 
     qids, Q = _emb_head_vectors(sf_dir, 8)
@@ -3201,25 +3146,28 @@ def _ivf_pq_search_spark_fn(spark, sf_dir):
     At 100 TB the plan moves code-book-sized relations and per-partition
     top-8 rows only; the corpus is scanned twice and never shuffled.
     Steps 1-3 (the trained search artifacts: code books, routing, LUTs)
-    memoize per (app, corpus) like _IVF_CENTROIDS — a served index's
+    are a corpus memo like the IVF coarse quantizer — a served index's
     real shape; the DuckDB oracle re-trains every run, so repeat
     invocations amortize the training sweep (disclosed in bench.py's
     amortized_artifact; the driver's one-shot gate always trains from
     data)."""
-    import numpy as np
-    from pyspark.sql import functions as F2  # noqa: F401
-
     from wifi_location_data_pipeline_spark.sources.tables import load_table
 
-    M, sd, k = _PQ_M, _PQ_SUBDIM, _PQ_K
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    akey = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    hit = _PQ_SEARCH_ART.get(akey)
-    if hit is not None:
-        qids, q_lab, C1, LUT = hit
-        return _pq_probe_emit(spark, emb, qids, q_lab, C1, LUT)
+    qids, q_lab, C1, LUT = corpus_memo.memo(
+        spark, sf_dir, "pq_search_artifacts", lambda: _train_pq_search(sf_dir, emb)
+    )
+    return _pq_probe_emit(spark, emb, qids, q_lab, C1, LUT)
+
+
+def _train_pq_search(sf_dir, emb):
+    """Steps 1-3 of _ivf_pq_search_spark_fn: (query ids, coarse routing,
+    dyadic code books, ADC lookup tables)."""
+    import numpy as np
+
+    M, sd, k = _PQ_M, _PQ_SUBDIM, _PQ_K
     _, seed = _emb_head_vectors(sf_dir, k)
     C0 = [seed[:, m * sd : (m + 1) * sd].copy() for m in range(M)]
 
@@ -3300,16 +3248,7 @@ def _ivf_pq_search_spark_fn(spark, sf_dir):
         / 1048576.0
         for m in range(M)
     ]
-    stale = [k2 for k2 in _PQ_SEARCH_ART if k2[:2] == akey[:2] and k2 != akey]
-    for k2 in stale:
-        del _PQ_SEARCH_ART[k2]
-    _PQ_SEARCH_ART[akey] = (qids, q_lab, C1, LUT)
-    return _pq_probe_emit(spark, emb, qids, q_lab, C1, LUT)
-
-
-# (applicationId, sf_dir, corpus fp) -> trained PQ search artifacts
-# (query ids, coarse routing, dyadic code books, ADC lookup tables)
-_PQ_SEARCH_ART: dict = {}
+    return qids, q_lab, C1, LUT
 
 
 def _pq_probe_emit(spark, emb, qids, q_lab, C1, LUT):
@@ -3438,12 +3377,11 @@ def _ann_recall_spark_fn(spark, sf_dir):
     own kernel, so results are bit-identical to running them apart);
     the IVF probe and IVF-PQ search run their own label-pruned probe
     scans through the existing audited pipelines (coarse quantizer and
-    PQ artifacts memoized per (app, corpus) — _IVF_CENTROIDS /
-    _PQ_SEARCH_ART). Every relation past the scans is bounded by
-    construction (<= 2 methods x 8 queries x 8 rows x #partitions from
-    the sweep; <= 24 rows from each probe), so the per-method rank
-    merge, hit counting against the brute top-k, and the 1e-4
-    integer-grid recall all run driver-side and fold back as one
+    PQ artifacts are corpus memos, see corpus_memo). Every relation past
+    the scans is bounded by construction (<= 2 methods x 8 queries x 8
+    rows x #partitions from the sweep; <= 24 rows from each probe), so
+    the per-method rank merge, hit counting against the brute top-k, and
+    the 1e-4 integer-grid recall all run driver-side and fold back as one
     24-row VALUES LocalRelation — zero data-sized joins or shuffles."""
     import math
 
@@ -4551,7 +4489,7 @@ def _bm25_spark_fn(spark, sf_dir):
     — measured 1.02 s vs DuckDB's 0.15 s (which shares CTE results) at
     the 10x replica, ~0.45 s of it the second tokenize. Here the narrow
     tf relation (doc_id, dl, one BIGINT per query term — no text) is
-    computed once and persisted under the keyed-memo discipline, the
+    computed once and persisted as a corpus memo, the
     one-row corpus stats COLLECT (bounded by construction: 2 + |terms|
     integers), and idf/norm/score evaluate IN-PLAN over integer literals
     with the identical expression text — same IEEE op sequence, so the
@@ -4571,38 +4509,30 @@ def _bm25_spark_fn(spark, sf_dir):
         # scoring job) costs more than the second tokenize it saves — run
         # the declared single-job text as-is (measured at sf0.1: 0.48 s SQL
         # vs 0.64 s twin; the crossover rides the same text-volume axis as
-        # the corpus config, env-overridable for other storage profiles)
+        # the corpus config)
         text = _bm25_sql("spark").replace(
             DOCS_SPREAD_TOKEN, spread_documents_src(spark, sf_dir)
         )
         return spark.sql(text)
 
     k1, b, k = _BM25_K1, _BM25_B, _BM25_TOPK
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    tf = _BM25_TF.get(key)
-    if tf is None:
+
+    def build_tf():
         tfs = ", ".join(
             f"CAST(size(filter(w, x -> x = '{t}')) AS BIGINT) AS tf_{t}"
             for t in _BM25_TERMS
         )
         src = spread_documents_src(spark, sf_dir)
-        tf = _maybe_eager(
-            spark.sql(
-                f"SELECT doc_id, CAST(size(w) AS BIGINT) AS dl, {tfs}"
-                f" FROM (SELECT doc_id, {_ws_tokens('spark', 'text')} AS w"
-                f" FROM {src} WHERE text IS NOT NULL) t"
-            ).persist()
-        )
-        for kk in [kk for kk in _BM25_TF if kk[:2] == key[:2]]:
-            _BM25_TF.pop(kk).unpersist()
-        _BM25_TF[key] = tf
-    else:
-        # re-register with the cache manager: a session-wide clearCache()
-        # (the bench runs one before every timed attempt) silently drops the
-        # registration, and without it the stats job and the scoring job
-        # each re-tokenize the corpus — the exact double pass this twin
-        # exists to remove. persist() is a no-op while still registered.
-        tf.persist()
+        return spark.sql(
+            f"SELECT doc_id, CAST(size(w) AS BIGINT) AS dl, {tfs}"
+            f" FROM (SELECT doc_id, {_ws_tokens('spark', 'text')} AS w"
+            f" FROM {src} WHERE text IS NOT NULL) t"
+        ).persist()
+
+    # a corpus memo: its re-arm after the bench's per-attempt clearCache()
+    # is what keeps the stats job and the scoring job from each
+    # re-tokenizing the corpus — the exact double pass this twin removes
+    tf = corpus_memo.memo(spark, sf_dir, "bm25_tf", build_tf)
     s = tf.agg(
         F2.count("*").alias("n_docs"),
         F2.sum("dl").alias("sum_dl"),
@@ -4648,12 +4578,9 @@ def _bm25_spark_fn(spark, sf_dir):
     )
 
 
-_BM25_TF: dict = {}
 # tokenize-once twin crossover: below this documents.parquet size the saved
 # second tokenize is smaller than one scheduled job round (see _bm25_spark_fn)
-_BM25_TWIN_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BM25_TWIN_MIN_BYTES", str(2 << 20))
-)
+_BM25_TWIN_MIN_BYTES = 2 << 20
 
 
 register(
@@ -5155,6 +5082,30 @@ FROM top
 """
 
 
+@contextmanager
+def _vocab_sized_reducers(spark, sf_dir):
+    """Run the body at 1 reducer per 4 MB of ``documents.parquet`` (floor
+    1), restoring the session's shuffle partitions afterwards; yields the
+    file size, or None when it cannot be read (the session policy stays).
+
+    For the queries whose every post-scan relation is vocabulary-sized
+    (collocations, CMS, BPE training): the session's static sizing targets
+    the corpus, so their downstream stages would be mostly empty task
+    launches, while map-side partial aggregation keeps the scan stage
+    parallel at any reducer count."""
+    try:
+        doc_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
+    except OSError:
+        doc_sz = None
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if doc_sz is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(1, doc_sz >> 22)))
+    try:
+        yield doc_sz
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
 def _collocations_fn(spark, sf_dir):
     """Collocation mining (pointwise mutual information over adjacent
     token pairs) — the phrase-vocabulary pass a tokenizer/data pipeline
@@ -5187,69 +5138,41 @@ def _collocations_fn(spark, sf_dir):
     1e-4 dyadic floor (LN ulp disparity ~1e-15 against the grid — the
     unigram query's documented discipline). The collected relations are
     vocabulary-sized (the tfidf df-table / bigram vocab precedent), never
-    corpus-sized. The pair counts persist via the keyed-memo discipline
-    of _CMS_COUNTS (evict + unpersist stale generations; the bench's
+    corpus-sized. The pair counts persist as a corpus memo (the bench's
     clearCache drops the data every attempt, so each attempt recomputes
     from parquet) because the collect's three branches would otherwise
     re-inline the explode."""
     from pyspark.sql import functions as F2
 
-    src = spread_documents_src(spark, sf_dir)
-    toks = f"(SELECT split(text, ' ') AS t FROM {src} WHERE text IS NOT NULL)"
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    # Every post-scan relation here is count-table-sized (pairs + vocab ≈
-    # 1000 rows at the replica), but the session's static shuffle sizing
-    # targets the corpus — 20-32 reducers per exchange — so the downstream
-    # stages are ~95% empty task launches (measured: the relational
-    # downstream cost ~0.7 s against a warm cache, all scheduling). For a
-    # single-FILE corpus, size the query's reducers from the file instead
-    # (1 per 4 MB of documents, floor 1) for the duration of the fn's
-    # planning/actions; map-side partial aggregation keeps the scan stage
-    # parallel regardless of reducer count. Directory corpora (real
-    # lakehouse) skip the override and keep the session policy.
-    prev_parts = None
-    try:
-        doc_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        doc_sz = None  # directory corpus (real lakehouse): size unknown
-    if doc_sz is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, doc_sz >> 22))
-        )
-    try:
-        pc = _COLL_COUNTS.get(key)
-        if pc is None:
-            # ONE corpus pass for BOTH relations: each doc's adjacent pairs
-            # AND its single last-token marker row (w2 IS NULL) come out of
-            # the same inline() — the previous separate doc-level last-token
-            # aggregation re-scanned and re-tokenized every document. A
-            # single-token doc contributes no pairs (empty zip_with slices)
-            # and exactly its marker, so both relations are row-identical
-            # to the two-pass form.
-            pc = _maybe_eager(
-                spark.sql(
-                    f"""
+    def build_counts():
+        # ONE corpus pass for BOTH relations: each doc's adjacent pairs AND
+        # its single last-token marker row (w2 IS NULL) come out of the same
+        # inline() — the previous separate doc-level last-token aggregation
+        # re-scanned and re-tokenized every document. A single-token doc
+        # contributes no pairs (empty zip_with slices) and exactly its
+        # marker, so both relations are row-identical to the two-pass form.
+        src = spread_documents_src(spark, sf_dir)
+        return spark.sql(
+            f"""
 SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM (
   SELECT inline(concat(
     zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
              (a, b) -> struct(a AS w1, b AS w2)),
     array(struct(element_at(t, -1) AS w1, CAST(NULL AS STRING) AS w2))))
-  FROM {toks}
+  FROM (SELECT split(text, ' ') AS t FROM {src} WHERE text IS NOT NULL)
 ) GROUP BY w1, w2
 """
-                ).persist()
-            )
-            for k in [k for k in _COLL_COUNTS if k[:2] == key[:2]]:
-                _COLL_COUNTS.pop(k).unpersist()
-            _COLL_COUNTS[key] = pc
-        else:
-            # re-register with the cache manager: a session-wide
-            # clearCache() (the bench runs one before every timed attempt)
-            # drops the registration, and without it the collect's three
-            # union branches each re-run the corpus explode (the bm25 twin
-            # lesson). persist() is a no-op while still registered.
-            pc.persist()
+        ).persist()
+
+    # Every post-scan relation here is count-table-sized (pairs + vocab ≈
+    # 1000 rows at the replica), but the session's static shuffle sizing
+    # targets the corpus — 20-32 reducers per exchange — so the downstream
+    # stages are ~95% empty task launches (measured: the relational
+    # downstream cost ~0.7 s against a warm cache, all scheduling).
+    with _vocab_sized_reducers(spark, sf_dir) as doc_sz:
+        # the memo's re-arm after a session-wide clearCache() keeps the
+        # collect's union branches from each re-running the corpus explode
+        pc = corpus_memo.memo(spark, sf_dir, "collocation_counts", build_counts)
         pairs = pc.where("w2 IS NOT NULL")
         lastn = pc.where("w2 IS NULL").select(
             F2.col("w1").alias("lw"), F2.col("c").alias("lc")
@@ -5325,9 +5248,6 @@ SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM (
                 "ngram_collocations: small-corpus tagged-union collect", un
             )
             rows = un.collect()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     u: dict = {}
     nb = 0
     if bounded:
@@ -5377,26 +5297,20 @@ FROM (VALUES {vals}) AS t(w1, w2, c, c1, c2)
     )
 
 
-_COLL_COUNTS: dict = {}
-
 # documents-file size above which dedup_strategy_agreement fuses its two
 # strategy verifications into ONE pass (union candidates with provenance
 # flags, verify once): below it the extra union-dedup shuffle round costs
 # more than the saved (broadcast-probe) verify; above it the verify pass
 # over the signature relation is the dominant cost and halving it wins
 # (guide §2.1 — the at-scale shape, validated on the >=256 MB corpus).
-_AGREE_FUSED_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_AGREE_FUSED_MIN_BYTES", str(32 << 20))
-)
+_AGREE_FUSED_MIN_BYTES = 32 << 20
 
 # documents-file size above which ngram_collocations switches its driver
 # collects to the vocabulary-independent bounded form (top-20 TakeOrdered +
 # ≤41-row-per-branch grouped stats). Below it the vocabulary is trivially
 # driver-sized and the one-job collect saves a scheduled round + branch
 # stages (measured 0.82 s vs 1.61 s at the 10x replica — pure job floor).
-_COLL_BOUNDED_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_COLL_BOUNDED_MIN_BYTES", str(32 << 20))
-)
+_COLL_BOUNDED_MIN_BYTES = 32 << 20
 
 
 register(
@@ -5833,7 +5747,6 @@ def _substring_spans_spark_fn(spark, sf_dir):
     wins = docs.mapInPandas(to_wins, "doc_id long, p long, h long").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _maybe_eager(wins)
     # "2+ distinct docs" as min(doc) != max(doc): same set as
     # COUNT(DISTINCT doc_id) >= 2 but with cheap map-side-combinable
     # partial aggregates instead of a per-group distinct structure
@@ -6149,50 +6062,29 @@ def _cms_spark_fn(spark, sf_dir):
     relational MIN (the DuckDB oracle keeps the shared-CTE join text)."""
     from pyspark.sql import functions as F2
 
-    # Keyed memo like _BPE_WF / _IVF_CENTROIDS: without it every bench /
-    # driver invocation persisted a fresh copy of the same counts relation
-    # for the app lifetime (r9 ADVICE). Evict (and unpersist) stale
-    # same-corpus-dir entries on refresh. Still needed with the single
-    # collect: the union's two branches would otherwise re-run the token
-    # explode once each inside the one job.
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    # post-scan relations here are vocabulary-sized; for a single-file
-    # corpus size this query's reducers from the documents file (1 per
-    # 4 MB, floor 1) for the duration of the fn's actions — map-side
-    # partial aggregation keeps the scan stage parallel regardless
-    # (the collocations/bpe_merge in-fn sizing discipline)
-    prev_parts = None
-    try:
-        doc_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(1, doc_sz >> 22)))
-    except OSError:
-        pass
-    try:
-        counts = _CMS_COUNTS.get(key)
-        if counts is None:
-            # spread view: the token explode re-runs per bench attempt (the
-            # persisted relation is dropped by clearCache) and the coarse
-            # small-corpus scan serialized it (1.69 s vs 0.56 s at the 10x
-            # replica, mode A/B)
-            docs = spark.table(spread_documents_src(spark, sf_dir))
-            w = docs.select(
-                F2.explode(F2.split("text", " ")).alias("word")
-            ).filter("word != ''")
-            counts = _maybe_eager(
-                w.groupBy("word")
-                .agg(F2.count("*").cast("long").alias("true_count"))
-                .persist()
-            )
-            for k in [k for k in _CMS_COUNTS if k[:2] == key[:2]]:
-                _CMS_COUNTS.pop(k).unpersist()
-            _CMS_COUNTS[key] = counts
-        else:
-            # re-register after a session-wide clearCache() (the bm25 twin
-            # lesson): the sketch build and the truth probe both consume
-            # this relation, and without the registration each re-runs the
-            # word explode. persist() is a no-op while still registered.
-            counts.persist()
+    def build_counts():
+        # spread view: the token explode re-runs per bench attempt (the
+        # persisted relation is dropped by clearCache) and the coarse
+        # small-corpus scan serialized it (1.69 s vs 0.56 s at the 10x
+        # replica, mode A/B)
+        docs = spark.table(spread_documents_src(spark, sf_dir))
+        w = docs.select(F2.explode(F2.split("text", " ")).alias("word")).filter(
+            "word != ''"
+        )
+        return (
+            w.groupBy("word")
+            .agg(F2.count("*").cast("long").alias("true_count"))
+            .persist()
+        )
+
+    # post-scan relations here are vocabulary-sized (see
+    # _vocab_sized_reducers). The counts are a corpus memo: without it every
+    # bench / driver invocation persisted a fresh copy of the same counts
+    # relation for the app lifetime (r9 ADVICE), and its re-arm after
+    # clearCache() keeps the union's two branches (sketch build, truth
+    # probe) from each re-running the word explode inside the one job.
+    with _vocab_sized_reducers(spark, sf_dir):
+        counts = corpus_memo.memo(spark, sf_dir, "cms_counts", build_counts)
         depth = spark.sql("SELECT * FROM (VALUES (0), (1), (2), (3)) AS t(j)")
         col = F2.expr(
             "CAST(conv(substr(md5(concat('cms', CAST(j AS STRING), '|', word)),"
@@ -6223,9 +6115,6 @@ def _cms_spark_fn(spark, sf_dir):
             )
         )
         rows = sketch.unionAll(truth).collect()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     import hashlib
 
     counters = {(r.j, r.col): r.cnt for r in rows if r.tag == 0}
@@ -6264,9 +6153,6 @@ SELECT word, true_count, cms_estimate,
 FROM (VALUES {vals}) AS t(word, true_count, cms_estimate)
 """
     )
-
-
-_CMS_COUNTS: dict = {}
 
 
 register(
@@ -6386,39 +6272,24 @@ def _bpe_merge_train_fn(spark, sf_dir):
     subqueries per replace pass), which Spark's WITH re-inlining turns
     into six re-executions (2.5 s vs 0.5 s at sf0.1; DuckDB shares CTEs
     and keeps the unrolled text as the oracle)."""
-    import hashlib
-
-    from pyspark.sql import functions as F2
-
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    tag = hashlib.md5(f"{sf_dir}|{key[2]}".encode()).hexdigest()[:12]
-    view = f"_bpe_wf_{tag}"
     # every exchange in this trainer carries |vocab|-or-smaller relations
-    # (word frequencies, pair counts), so for a single-FILE corpus size the
-    # reducers from the file (1 per 4 MB, floor 1) for the duration of the
-    # fn's in-fn actions — the collocations discipline: map-side partials
-    # keep the scan parallel, and the session policy is restored before
-    # returning (the returned relation is a VALUES literal, no shuffle).
-    prev_parts = None
-    try:
-        doc_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, doc_sz >> 22))
-        )
-    except OSError:
-        pass
-    try:
-        return _bpe_merge_train_body(spark, sf_dir, key, view)
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # (word frequencies, pair counts): see _vocab_sized_reducers. The
+    # returned relation is a VALUES literal, no shuffle.
+    with _vocab_sized_reducers(spark, sf_dir):
+        return _bpe_merge_train_body(spark, _bpe_word_freq_view(spark, sf_dir))
 
 
-def _bpe_merge_train_body(spark, sf_dir, key, view):
-    from pyspark.sql import functions as F2
+def _bpe_word_freq_view(spark, sf_dir):
+    """Name of the cached (word, freq) view of the corpus, a corpus memo.
 
-    if _BPE_WF.get(key) != view:
+    Every merge round queries this view several times, so the memo's
+    re-arm after a session-wide clearCache() keeps each reference from
+    re-running the corpus explode (cache matching strips the view alias,
+    so re-persisting through spark.table serves every consumer)."""
+
+    def build():
+        from pyspark.sql import functions as F2
+
         # spread view: same rationale as _cms_spark_fn — the word-frequency
         # explode recomputes per bench attempt on a coarse 2-split scan
         wf = (
@@ -6429,20 +6300,17 @@ def _bpe_merge_train_body(spark, sf_dir, key, view):
             .agg(F2.count("*").cast("long").alias("freq"))
             .persist()
         )
-        _maybe_eager(wf)
+        tag = hashlib.md5(
+            f"{sf_dir}|{corpus_memo.fingerprint(sf_dir)}".encode()
+        ).hexdigest()[:12]
+        view = f"_bpe_wf_{tag}"
         wf.createOrReplaceTempView(view)
-        for k in [k for k in _BPE_WF if k[:2] == key[:2]]:
-            spark.catalog.dropTempView(_BPE_WF.pop(k))
-        _BPE_WF[key] = view
-    else:
-        # re-register the word-frequency cache after a session-wide
-        # clearCache() (the bm25 twin lesson): every merge round queries
-        # this view several times, and without the registration each
-        # reference re-runs the corpus explode. Cache matching strips the
-        # view alias, so registering through spark.table serves every
-        # consumer; persist() is a no-op while still registered.
-        spark.table(view).persist()
+        return view
 
+    return corpus_memo.memo(spark, sf_dir, "bpe_word_freq_view", build)
+
+
+def _bpe_merge_train_body(spark, view):
     def q(sql):
         # This literal is interpolated into SPARK SQL text only, where the
         # default parser honors backslash escapes (unlike DuckDB) — escape
@@ -6477,9 +6345,6 @@ def _bpe_merge_train_body(spark, sf_dir, key, view):
         f"SELECT merge_rank, pair, merged_symbol, pair_count FROM (VALUES"
         f" {rows}) AS t(merge_rank, pair, merged_symbol, pair_count)"
     )
-
-
-_BPE_WF: dict = {}
 
 
 def _bpe_apply_duck_sql(d: str) -> str | None:
@@ -6549,21 +6414,20 @@ def _bpe_apply_fn(spark, sf_dir):
 
     register_views(spark, sf_dir)
     # The learned merge table is a trained artifact (a production
-    # tokenizer is trained once and applied daily): memoize it per
-    # (app, corpus) like _IVF_CENTROIDS — the first execution always
-    # trains from data; repeated bench attempts amortize the two argmax
-    # jobs (disclosed in bench.py's amortized_artifact list).
-    key = (spark.sparkContext.applicationId, sf_dir, _corpus_fp(sf_dir))
-    merges = _BPE_MERGES.get(key)
-    if merges is None or key not in _BPE_WF:
-        merges = {
+    # tokenizer is trained once and applied daily): a corpus memo like the
+    # IVF coarse quantizer — the first execution always trains from data;
+    # repeated bench attempts amortize the two argmax jobs (disclosed in
+    # bench.py's amortized_artifact list).
+    merges = corpus_memo.memo(
+        spark,
+        sf_dir,
+        "bpe_merges",
+        lambda: {
             int(r.merge_rank): (r.pair, r.merged_symbol)
             for r in _bpe_merge_train_fn(spark, sf_dir).collect()
-        }
-        for k in [k for k in _BPE_MERGES if k[:2] == key[:2]]:
-            del _BPE_MERGES[k]
-        _BPE_MERGES[key] = merges
-    view = _BPE_WF[key]
+        },
+    )
+    view = _bpe_word_freq_view(spark, sf_dir)
 
     def q(s):
         return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
@@ -6608,9 +6472,6 @@ def _bpe_apply_fn(spark, sf_dir):
             .alias("compression_ratio"),
         )
     )
-
-
-_BPE_MERGES: dict = {}
 
 
 register(

@@ -277,7 +277,7 @@ def combiner_robust_fn(spark, sf_dir):
 
     from wifi_location_data_pipeline_spark.positioning.combiner import combine_positions
 
-    pos = spark.sql(_fold(sf_dir, f"SELECT * FROM ({combiner_positions_sql(SPARK)})"))
+    pos = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({combiner_positions_sql(SPARK)})"))
     out = combine_positions(pos)
     return out.select(
         "request_id",
@@ -364,8 +364,8 @@ def ensemble_closed_fn(spark, sf_dir):
         position_observations_onepass,
     )
 
-    obs = spark.sql(_fold(sf_dir, f"SELECT * FROM ({ecf_obs_sql(SPARK)}) o"))
-    apdim = spark.sql(_fold(sf_dir, f"SELECT * FROM ({ecf_aps_sql(SPARK)}) a"))
+    obs = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({ecf_obs_sql(SPARK)}) o"))
+    apdim = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({ecf_aps_sql(SPARK)}) a"))
 
     # flat-observation entry: the fixture is already one row per scan, and
     # every mac resolves (ap_ids 0..49 cover the dimension), so
@@ -687,7 +687,7 @@ def selection_reasons_fn(spark, sf_dir):
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
-    ctx = spark.sql(_fold(sf_dir, f"SELECT * FROM ({selreason_ctx_sql(SPARK)}) c"))
+    ctx = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({selreason_ctx_sql(SPARK)}) c"))
     out = select_algorithms_with_reasons(ctx)
     return out.select(
         "request_id",

@@ -15,13 +15,14 @@ citations sit on each query.
 
 from __future__ import annotations
 
+import datetime
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wifi_location_data_pipeline_spark import plan_cache
+from wifi_location_data_pipeline_spark import corpus_memo
 from wifi_location_data_pipeline_spark.plans.dialect import (
     DOCS_SPREAD_TOKEN,
     DUCK,
@@ -195,70 +196,47 @@ class QueryDef:
     # calls skip SQL generation + Catalyst analysis exactly as the reference
     # skips recompiling its beans. Only the plan is reused — executed data
     # caches are still dropped by ``spark.catalog.clearCache()`` and the
-    # plan re-executes from the parquet scans. Disable with
+    # plan re-executes from the parquet scans. The plan is held by
+    # ``corpus_memo`` under the corpus generation, so an in-place corpus
+    # regeneration rebuilds it from a fresh file listing; no builder
+    # registers interior re-arm hooks (a builder's own persisted relations
+    # go through ``corpus_memo`` and re-arm there). Disable with
     # SPARK_GRAFT_PLAN_CACHE=0. Batch/ETL queries (transform, dedup, LLM
     # ops) deliberately do NOT set this: those are per-job submissions in
     # the reference too, so their per-invocation planning cost is honest.
     service: bool = False
 
     def spark(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        if self.service and os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") != "0":
+            return corpus_memo.memo(
+                spark, sf_dir, f"plan:{self.name}", lambda: self._build(spark, sf_dir)
+            )
+        return self._build(spark, sf_dir)
+
+    def _build(self, spark: SparkSession, sf_dir: str) -> DataFrame:
         from wifi_location_data_pipeline_spark.sources.tables import register_views
 
-        use_cache = self.service and os.environ.get(
-            "SPARK_GRAFT_PLAN_CACHE", "1"
-        ) != "0"
-        if use_cache:
-            # the fingerprint keys the cache on the corpus CONTENT, not just
-            # its path: a cached analyzed plan pins the parquet file listing
-            # captured at first build, so a corpus regenerated in-place at
-            # the same sf_dir must miss (and rebuild from a fresh listing)
-            key = (
-                spark.sparkContext.applicationId, self.name, sf_dir,
-                _corpus_fingerprint(sf_dir),
-            )
-            hit = _PLAN_CACHE.get(key)
-            if hit is not None:
-                df, rearms = hit
-                for r in rearms:
-                    r()  # re-register interior persist points (see plan_cache)
-                return df
-            plan_cache.begin()  # open the re-arm collection window
         register_views(spark, sf_dir)
         if self.spark_fn is not None:
-            df = self.spark_fn(spark, sf_dir)
-        else:
-            text = _fold_events_stats(sf_dir, self.sql(SPARK))
-            if DOCS_SPREAD_TOKEN in text:
-                # dialect.docs_table opt-in: swap the placeholder for the
-                # parallelism-restored documents view. Run-time substitution
-                # (not SQL-build-time) because the view name is derived from
-                # the live (session, corpus-generation) pair.
-                from wifi_location_data_pipeline_spark.plans.llm_queries import (
-                    spread_documents_src,
-                )
+            return self.spark_fn(spark, sf_dir)
+        text = _fold_events_stats(spark, sf_dir, self.sql(SPARK))
+        if DOCS_SPREAD_TOKEN in text:
+            # dialect.docs_table opt-in: swap the placeholder for the
+            # parallelism-restored documents view. Run-time substitution
+            # (not SQL-build-time) because the view name is derived from
+            # the live (session, corpus-generation) pair.
+            from wifi_location_data_pipeline_spark.plans.llm_queries import (
+                spread_documents_src,
+            )
 
-                text = text.replace(
-                    DOCS_SPREAD_TOKEN, spread_documents_src(spark, sf_dir)
-                )
-            df = spark.sql(text)
-        if use_cache:
-            # evict superseded entries for the same (app, query, sf_dir):
-            # each in-place corpus regen changes the fingerprint, and without
-            # eviction a long-lived session leaks one analyzed plan (plus
-            # re-arm closures holding superseded plans) per regeneration
-            stale = [k for k in _PLAN_CACHE if k[:3] == key[:3] and k != key]
-            for k in stale:
-                del _PLAN_CACHE[k]
-            _PLAN_CACHE[key] = (df, plan_cache.drain())
-        return df
+            text = text.replace(DOCS_SPREAD_TOKEN, spread_documents_src(spark, sf_dir))
+        return spark.sql(text)
 
     def oracle(self) -> str | None:
         return self.sql(DUCK) if self.sql is not None else None
 
 
 QUERIES: dict[str, QueryDef] = {}
-# (applicationId, query, sf_dir, corpus_fp) → (analyzed DataFrame, re-arm hooks)
-_PLAN_CACHE: dict[tuple, tuple[DataFrame, list]] = {}
 
 
 # The positioning-family fixtures size their synthetic request population by
@@ -270,17 +248,16 @@ _PLAN_CACHE: dict[tuple, tuple[DataFrame, list]] = {}
 # same footer stats pyarrow-side once per corpus and fold the literal into
 # the Spark SQL text. Exactness guard: parquet column statistics for an
 # int64 column written by any conforming writer are exact (no truncation);
-# tests/test_fixture_shapes.py asserts footer-max == scan-max per corpus.
-# Falls back to the original subquery if stats are absent.
+# tests/test_driver_contract.py::test_events_footer_max_matches_scan_max
+# asserts footer-max == scan-max per corpus. Falls back to the original
+# subquery if stats are absent.
 _EVENTS_MAXUID_SQL = "(SELECT MAX(user_id) FROM events)"
-_EVENTS_MAXUID_CACHE: dict[tuple, int | None] = {}
 
 
-def _events_max_user_id(sf_dir: str) -> int | None:
-    key = (sf_dir, _corpus_fingerprint(sf_dir))
-    if key in _EVENTS_MAXUID_CACHE:
-        return _EVENTS_MAXUID_CACHE[key]
-    mx: int | None = None
+def _events_footer_minmax(sf_dir: str, column: str) -> tuple | None:
+    """(min, max) of one ``events`` column from the parquet footer stats of
+    every row group, or None when the table or any row group's stats are
+    missing."""
     try:
         import pyarrow.parquet as pq
 
@@ -290,20 +267,28 @@ def _events_max_user_id(sf_dir: str) -> int | None:
             if os.path.isdir(path)
             else [path]
         )
+        mn = mx = None
         for p in paths:
             md = pq.ParquetFile(p).metadata
             names = [md.schema.column(i).name for i in range(len(md.schema))]
-            idx = names.index("user_id")
+            idx = names.index(column)
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(idx).statistics
                 if st is None or not st.has_min_max:
-                    return None  # stats missing: keep the subquery
+                    return None
+                mn = st.min if mn is None else min(mn, st.min)
                 mx = st.max if mx is None else max(mx, st.max)
     except Exception:
-        mx = None
-    _EVENTS_MAXUID_CACHE.clear()  # one corpus at a time; drop stale regens
-    _EVENTS_MAXUID_CACHE[key] = mx
-    return mx
+        return None
+    return None if mn is None else (mn, mx)
+
+
+def _events_max_user_id(spark: SparkSession, sf_dir: str) -> int | None:
+    def build():
+        mm = _events_footer_minmax(sf_dir, "user_id")
+        return None if mm is None else mm[1]
+
+    return corpus_memo.memo(spark, sf_dir, "events_max_user_id", build)
 
 
 # The time-split queries (relocation_time_split, kalman_update_step) anchor
@@ -320,61 +305,31 @@ def _events_max_user_id(sf_dir: str) -> int | None:
 # constant-folds to the same double. Falls back to the subquery (one extra
 # job, still correct) when stats are absent.
 _EVENTS_TSMID_REF = "(SELECT mid_s FROM split)"
-_EVENTS_TS_MINMAX_CACHE: dict[tuple, tuple[int, int] | None] = {}
 
 
-def _events_ts_minmax_s(sf_dir: str) -> tuple[int, int] | None:
-    key = (sf_dir, _corpus_fingerprint(sf_dir))
-    if key in _EVENTS_TS_MINMAX_CACHE:
-        return _EVENTS_TS_MINMAX_CACHE[key]
-    import datetime as _dt
+def _events_ts_minmax_s(spark: SparkSession, sf_dir: str) -> tuple[int, int] | None:
+    def build():
+        mm = _events_footer_minmax(sf_dir, "ts")
+        if mm is None or mm[0].tzinfo is not None or mm[1].tzinfo is not None:
+            return None  # stats missing, or a tz-aware corpus (NTZ only)
+        # floor-to-seconds in exact integer arithmetic (timedelta normalizes
+        # to non-negative days/seconds for post-epoch values)
+        epoch = datetime.datetime(1970, 1, 1)
+        d0, d1 = mm[0] - epoch, mm[1] - epoch
+        return (d0.days * 86400 + d0.seconds, d1.days * 86400 + d1.seconds)
 
-    out: tuple[int, int] | None = None
-    epoch = _dt.datetime(1970, 1, 1)
-    try:
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir, "events.parquet")
-        paths = (
-            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
-        mn = mx = None
-        for p in paths:
-            md = pq.ParquetFile(p).metadata
-            names = [md.schema.column(i).name for i in range(len(md.schema))]
-            idx = names.index("ts")
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError("ts stats missing")
-                lo, hi = st.min, st.max
-                if lo.tzinfo is not None or hi.tzinfo is not None:
-                    raise ValueError("tz-aware ts stats")  # NTZ corpus only
-                mn = lo if mn is None else min(mn, lo)
-                mx = hi if mx is None else max(mx, hi)
-        if mn is not None:
-            # floor-to-seconds in exact integer arithmetic (timedelta
-            # normalizes to non-negative days/seconds for post-epoch values)
-            d0, d1 = mn - epoch, mx - epoch
-            out = (d0.days * 86400 + d0.seconds, d1.days * 86400 + d1.seconds)
-    except Exception:
-        out = None
-    _EVENTS_TS_MINMAX_CACHE.clear()  # one corpus at a time; drop stale regens
-    _EVENTS_TS_MINMAX_CACHE[key] = out
-    return out
+    return corpus_memo.memo(spark, sf_dir, "events_ts_minmax_s", build)
 
 
-def _fold_events_stats(sf_dir: str, sql_text: str) -> str:
+def _fold_events_stats(spark: SparkSession, sf_dir: str, sql_text: str) -> str:
     if _EVENTS_MAXUID_SQL in sql_text:
-        mx = _events_max_user_id(sf_dir)
+        mx = _events_max_user_id(spark, sf_dir)
         if mx is not None:
             sql_text = sql_text.replace(
                 _EVENTS_MAXUID_SQL, f"CAST({int(mx)} AS BIGINT)"
             )
     if _EVENTS_TSMID_REF in sql_text:
-        mm = _events_ts_minmax_s(sf_dir)
+        mm = _events_ts_minmax_s(spark, sf_dir)
         if mm is not None:
             sql_text = sql_text.replace(
                 _EVENTS_TSMID_REF,
@@ -382,19 +337,6 @@ def _fold_events_stats(sf_dir: str, sql_text: str) -> str:
                 f" / CAST(2.0 AS DOUBLE))",
             )
     return sql_text
-
-
-def _corpus_fingerprint(sf_dir: str) -> tuple:
-    """(name, mtime_ns, size) of each parquet entry — cheap (~10 stats) and
-    changes whenever the corpus at sf_dir is regenerated."""
-    try:
-        return tuple(
-            (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-            for e in sorted(os.scandir(sf_dir), key=lambda e: e.name)
-            if e.name.endswith(".parquet")
-        )
-    except OSError:
-        return ()
 
 
 def register(name: str, description: str, sql=None, spark_fn=None, service=False) -> None:
@@ -3454,7 +3396,7 @@ def _selection_matrix_spark_fn(spark, sf_dir):
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
-    mx = _events_max_user_id(sf_dir)
+    mx = _events_max_user_id(spark, sf_dir)
     if mx is None:  # stats-less corpus: one bounded 1-row scalar job
         mx = spark.sql("SELECT MAX(user_id) FROM events").collect()[0][0]
     return spark.sql(_selection_matrix_spark_sql(int(mx)))

@@ -66,11 +66,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # count (8 per 8 MB of fact data, cores-capped) keeps partitions in the
 # tens-of-MB range the tuning guide targets without per-exchange jobs;
 # above it, AQE + advisory sizing + skew joins take over (the 100 TB
-# features). Env-tunable for deployments whose scheduling/network economics
-# differ: SPARK_GRAFT_SCALE_MODE_MIN_BYTES.
-_SCALE_MODE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCALE_MODE_MIN_BYTES", str(256 << 20))
-)
+# features).
+_SCALE_MODE_MIN_BYTES = 256 << 20
 
 
 def _row_group_open_cost(sf_dir: str) -> int:
@@ -156,10 +153,7 @@ def configure_for_corpus(spark: SparkSession, sf_dir: str) -> None:
         # fixed 4 MB openCost that floored those scans at 2-6 splits).
         # Clamped to [256 KB, 4 MB]: the r10/r11 endpoints.
         spark.conf.set(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get(
-                "SPARK_GRAFT_SMALL_OPENCOST", str(_row_group_open_cost(sf_dir))
-            ),
+            "spark.sql.files.openCostInBytes", str(_row_group_open_cost(sf_dir))
         )
         # Below the scale threshold the AQE machinery is pure overhead:
         # each exchange materializes as its OWN scheduled job (a 2-shuffle
@@ -188,16 +182,8 @@ def configure_for_corpus(spark: SparkSession, sf_dir: str) -> None:
         # only embedding_cosine +0.12, within noise). Python-kernel stages
         # that need cores-level fan-out request it explicitly at their
         # repartition sites (codec, localization, the spread view) and are
-        # unaffected. Deployments can pin SPARK_GRAFT_SMALL_SHUFFLE_PARTS
-        # to override the derived count.
-        parts_env = os.environ.get("SPARK_GRAFT_SMALL_SHUFFLE_PARTS")
-        parts = (
-            int(parts_env)
-            if parts_env
-            else max(
-                8, min(int(largest >> 22), spark.sparkContext.defaultParallelism)
-            )
-        )
+        # unaffected.
+        parts = max(8, min(int(largest >> 22), spark.sparkContext.defaultParallelism))
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
 
 
