@@ -12,7 +12,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.wifi_fixtures import make_access_points
+from tests.wifi_fixtures import (
+    RANDOMIZED_CORPORA,
+    make_access_points,
+    randomized_positioning_corpus,
+)
 from wifi_location_data_pipeline_spark.positioning.onepass import position_requests_onepass
 from wifi_location_data_pipeline_spark.schemas import (
     POSITIONING_REQUEST_SCHEMA,
@@ -51,15 +55,18 @@ def req(rid, scans):
             "calculationDetail": True, "wifiScanResults": scans}
 
 
-@pytest.fixture(scope="module")
-def ap_df(spark):
-    rows = [
+def golden_ap_rows():
+    return [
         {"mac_addr": m, "version": "1", "latitude": la, "longitude": lo, "altitude": al,
          "horizontal_accuracy": 8.0, "vertical_accuracy": 4.0, "confidence": 0.7,
          "ssid": "t", "frequency": fq, "vendor": v, "status": st, "geohash": "dr5ru7"}
         for m, la, lo, al, v, st, fq in APS
     ]
-    return spark.createDataFrame(rows, WIFI_ACCESS_POINTS_SCHEMA).cache()
+
+
+@pytest.fixture(scope="module")
+def ap_df(spark):
+    return spark.createDataFrame(golden_ap_rows(), WIFI_ACCESS_POINTS_SCHEMA).cache()
 
 
 def run(spark, ap_df, requests):
@@ -221,16 +228,10 @@ def test_calculation_info_diagnostics(results):
     assert all(w > 0 for w in info.values())
 
 
-def test_onepass_matches_multipass(spark, ap_df):
-    """The one-shuffle array-native plan must agree with the phase-by-phase
-    row-wise reference plan on every fixture request."""
-    from wifi_location_data_pipeline_spark.positioning.pipeline import (
-        position_requests_multipass,
-    )
-
+def multipass_parity_requests():
     macs = [a[0] for a in APS[:5]]
     freqs = [a[6] for a in APS[:5]]
-    requests = [
+    return [
         req("p1", [scan(macs[0], -55.0, freqs[0])]),
         req("p2", [scan(macs[0], -60.0, freqs[0]), scan(macs[1], -65.0, freqs[1])]),
         req("p3", [scan(m, -60.0 - 4 * i, f) for i, (m, f) in enumerate(zip(macs[:3], freqs[:3]))]),
@@ -238,9 +239,55 @@ def test_onepass_matches_multipass(spark, ap_df):
         req("pw", [scan(m, -97.0) for m, *_ in APS[:4]]),
         req("pc", [scan(f"00:bb:00:00:00:0{k}", -58.0 - k) for k in (1, 2, 3)]),
     ]
+
+
+def duplicate_mac_requests():
+    macs = [a[0] for a in APS[:5]]
+    return [
+        req("dup_rssi", [scan(macs[0], -60.0, 2437), scan(macs[1], -64.0, 5180),
+                         scan(macs[0], -66.0, 5180), scan(macs[2], -70.0, 2412),
+                         scan(macs[3], -72.0, 5240)]),
+        req("dup_null_freq", [scan(macs[1], -62.0, 5180), scan(macs[0], -61.0, 2437),
+                              scan(macs[1], -62.0, None), scan(macs[2], -68.0, None),
+                              scan(macs[3], -70.0, 5240), scan(macs[4], -74.0, 2462)]),
+    ]
+
+
+@pytest.fixture(scope="module")
+def multipass_answers(spark):
+    """The row-wise reference plan, run ONCE over the union of every
+    multipass parity test's requests: the golden-AP request sets and each
+    randomized corpus, whose tagged macs keep the corpora apart in one AP
+    dimension. request_id → answer row."""
+    from wifi_location_data_pipeline_spark.positioning.pipeline import (
+        position_requests_multipass,
+    )
+
+    requests = multipass_parity_requests() + duplicate_mac_requests()
+    ap_rows = golden_ap_rows()
+    for corpus in RANDOMIZED_CORPORA:
+        reqs, aps = randomized_positioning_corpus(*corpus)
+        requests += reqs
+        ap_rows += aps
+    assert len({r["mac_addr"] for r in ap_rows}) == len(ap_rows)
+    rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
+    aps = spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA)
+    return {r["request_id"]: r for r in position_requests_multipass(rdf, aps).collect()}
+
+
+def multipass_for(multipass_answers, requests):
+    """The reference answers of one parity test's own requests."""
+    rids = {r["requestId"] for r in requests}
+    return {rid: r for rid, r in multipass_answers.items() if rid in rids}
+
+
+def test_onepass_matches_multipass(spark, ap_df, multipass_answers):
+    """The one-shuffle array-native plan must agree with the phase-by-phase
+    row-wise reference plan on every fixture request."""
+    requests = multipass_parity_requests()
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
     one = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
-    multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
+    multi = multipass_for(multipass_answers, requests)
     assert set(one) == set(multi) and one
     for rid, a in one.items():
         b = multi[rid]
@@ -732,71 +779,20 @@ def test_time_series_same_spot_21_25(scenario6_results):
     assert dist_m(r, (37.7780, -122.4220)) < 5
 
 
-@pytest.mark.parametrize(
-    "seed,signals",
-    [
-        # broad corpus: every context class, strong spreads, physics edges
-        (20240815, [-97.5, -95.0, -94.9, -90.0, -85.0, -84.9, -80.0, -70.1,
-                    -70.0, -69.9, -60.0, -50.0, -45.0, -35.0, -30.0]),
-        # weak/duplicate-heavy corpus: very-weak override + equal-signal
-        # pairs (the zero-pair-weight rssi_ratio gate) dominate
-        (977, [-97.0, -97.0, -96.0, -95.0, -95.0, -94.9, -90.0, -90.0,
-               -88.0, -70.0, -70.0]),
-    ],
-)
-def test_onepass_matches_multipass_randomized(spark, seed, signals):
+@pytest.mark.parametrize("seed,signals", RANDOMIZED_CORPORA)
+def test_onepass_matches_multipass_randomized(spark, seed, signals, multipass_answers):
     """Randomized kernel-vs-multipass parity net (round 6: the packed middle
     moved from staged SQL to the NumPy kernel, so pin equivalence on a
     corpus dense in the awkward shapes: NULL altitude / accuracy /
     confidence / vendor / frequency on the AP side, duplicate macs within a
     request, 1-20 scans, boundary signal strengths crossing every context
     class). Seeded: deterministic across runs."""
-    import random
-
-    from wifi_location_data_pipeline_spark.positioning.pipeline import (
-        position_requests_multipass,
-    )
-
-    rng = random.Random(seed)
-    n_aps = 40
-    vendors = ["cisco", "aruba", "meraki", "ubiquiti", "ruckus", "hpe-aruba",
-               "  Cisco  ", "unknown-vendor", None]
-    ap_rows = []
-    for k in range(n_aps):
-        ap_rows.append({
-            "mac_addr": f"02:00:00:00:{k // 256:02x}:{k % 256:02x}",
-            "version": "1",
-            "latitude": 40.75 + rng.uniform(-0.01, 0.01),
-            "longitude": -73.98 + rng.uniform(-0.01, 0.01),
-            "altitude": None if rng.random() < 0.3 else rng.uniform(0, 50),
-            "horizontal_accuracy": None if rng.random() < 0.3 else rng.uniform(3, 40),
-            "vertical_accuracy": 4.0,
-            "confidence": None if rng.random() < 0.3 else rng.uniform(0.3, 1.0),
-            "ssid": "t",
-            "frequency": rng.choice([2412, 2437, 5180, 5500, 6100, None]),
-            "vendor": rng.choice(vendors),
-            "status": rng.choice(["active", "active", "warning", "verified", "expired"]),
-            "geohash": None,
-        })
-    ap_df = spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA)
-    macs = [r["mac_addr"] for r in ap_rows]
-
-    requests = []
-    for i in range(60):
-        k = rng.randint(1, 20)
-        chosen = [rng.choice(macs) for _ in range(k)]  # duplicates likely
-        scans = [
-            {"macAddress": m, "signalStrength": rng.choice(signals),
-             "frequency": rng.choice([2437, 5180, None]), "ssid": "t",
-             "linkSpeed": None, "channelWidth": None}
-            for m in chosen
-        ]
-        requests.append({"requestId": f"x{i}", "client": "t", "application": "t",
-                         "calculationDetail": False, "wifiScanResults": scans})
+    requests, ap_rows = randomized_positioning_corpus(seed, signals)
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
+    ap_df = spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA)
 
     one = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
-    multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
+    multi = multipass_for(multipass_answers, requests)
     assert set(one) == set(multi)
     assert len(one) >= 15  # the corpus isn't degenerate (23 with this seed)
     for rid, a in one.items():
@@ -811,55 +807,9 @@ def test_onepass_matches_multipass_randomized(spark, seed, signals):
                 assert abs(av - bv) < 1e-6 * max(1.0, abs(bv)), (rid, c, av, bv)
 
 
-def _randomized_corpus(spark, seed, signals):
-    """The seeded corpus of test_onepass_matches_multipass_randomized, as
-    (requests, access points) DataFrames."""
-    import random
-
-    rng = random.Random(seed)
-    vendors = ["cisco", "aruba", "meraki", "ubiquiti", "ruckus", "hpe-aruba",
-               "  Cisco  ", "unknown-vendor", None]
-    ap_rows = [{
-        "mac_addr": f"02:00:00:00:{k // 256:02x}:{k % 256:02x}",
-        "version": "1",
-        "latitude": 40.75 + rng.uniform(-0.01, 0.01),
-        "longitude": -73.98 + rng.uniform(-0.01, 0.01),
-        "altitude": None if rng.random() < 0.3 else rng.uniform(0, 50),
-        "horizontal_accuracy": None if rng.random() < 0.3 else rng.uniform(3, 40),
-        "vertical_accuracy": 4.0,
-        "confidence": None if rng.random() < 0.3 else rng.uniform(0.3, 1.0),
-        "ssid": "t",
-        "frequency": rng.choice([2412, 2437, 5180, 5500, 6100, None]),
-        "vendor": rng.choice(vendors),
-        "status": rng.choice(["active", "active", "warning", "verified", "expired"]),
-        "geohash": None,
-    } for k in range(40)]
-    macs = [r["mac_addr"] for r in ap_rows]
-    requests = []
-    for i in range(60):
-        chosen = [rng.choice(macs) for _ in range(rng.randint(1, 20))]
-        scans = [
-            {"macAddress": m, "signalStrength": rng.choice(signals),
-             "frequency": rng.choice([2437, 5180, None]), "ssid": "t",
-             "linkSpeed": None, "channelWidth": None}
-            for m in chosen
-        ]
-        requests.append({"requestId": f"x{i}", "client": "t", "application": "t",
-                         "calculationDetail": False, "wifiScanResults": scans})
-    return (spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA),
-            spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA))
-
-
 @pytest.mark.parametrize(
     "corpus",
-    [
-        "golden",
-        # the two seeded corpora of test_onepass_matches_multipass_randomized
-        (20240815, [-97.5, -95.0, -94.9, -90.0, -85.0, -84.9, -80.0, -70.1,
-                    -70.0, -69.9, -60.0, -50.0, -45.0, -35.0, -30.0]),
-        (977, [-97.0, -97.0, -96.0, -95.0, -95.0, -94.9, -90.0, -90.0,
-               -88.0, -70.0, -70.0]),
-    ],
+    ["golden", *RANDOMIZED_CORPORA],
     ids=["golden", "randomized_broad", "randomized_weak"],
 )
 def test_kernel_pack_across_arrow_batches(spark, ap_df, corpus):
@@ -867,16 +817,14 @@ def test_kernel_pack_across_arrow_batches(spark, ap_df, corpus):
     two Arrow batches into the next one. With 3-row batches nearly every
     request straddles a boundary; the answers must be identical to a run at
     the default batch size."""
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_requests_onepass,
-    )
-
     if corpus == "golden":
         rdf = spark.createDataFrame(golden_requests() + extended_requests(),
                                     POSITIONING_REQUEST_SCHEMA)
         aps = ap_df
     else:
-        rdf, aps = _randomized_corpus(spark, *corpus)
+        requests, ap_rows = randomized_positioning_corpus(*corpus)
+        rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
+        aps = spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA)
 
     def answers():
         out = position_requests_onepass(rdf, aps, with_reasons=True)
@@ -894,27 +842,15 @@ def test_kernel_pack_across_arrow_batches(spark, ap_df, corpus):
     assert small == default
 
 
-def test_onepass_duplicate_mac_keeps_min_scan(spark, ap_df):
+def test_onepass_duplicate_mac_keeps_min_scan(spark, ap_df, multipass_answers):
     """A MAC scanned twice in one request keeps its minimum scan struct:
     lowest RSSI first, and on equal RSSI the null frequency first. Both
     duplicates feed the full-array statistics; the kept one feeds the
     dedup'd set, whose frequency the MLE tier reads."""
-    from wifi_location_data_pipeline_spark.positioning.pipeline import (
-        position_requests_multipass,
-    )
-
-    macs = [a[0] for a in APS[:5]]
-    requests = [
-        req("dup_rssi", [scan(macs[0], -60.0, 2437), scan(macs[1], -64.0, 5180),
-                         scan(macs[0], -66.0, 5180), scan(macs[2], -70.0, 2412),
-                         scan(macs[3], -72.0, 5240)]),
-        req("dup_null_freq", [scan(macs[1], -62.0, 5180), scan(macs[0], -61.0, 2437),
-                              scan(macs[1], -62.0, None), scan(macs[2], -68.0, None),
-                              scan(macs[3], -70.0, 5240), scan(macs[4], -74.0, 2462)]),
-    ]
+    requests = duplicate_mac_requests()
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
     one = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
-    multi = {r["request_id"]: r for r in position_requests_multipass(rdf, ap_df).collect()}
+    multi = multipass_for(multipass_answers, requests)
     assert set(one) == set(multi) == {"dup_rssi", "dup_null_freq"}
     for rid, a in one.items():
         b = multi[rid]

@@ -160,8 +160,8 @@ def test_session_window_stream_twin(spark, tmpzone):
 
 def test_streaming_positioning_answers_requests(spark, tmpzone):
     """§3.2 online positioning as a streaming job: requests land as JSON
-    files, each micro-batch answers them through the REAL one-pass ensemble
-    against a broadcast AP dimension, commits append-exactly-once, and a
+    files, each micro-batch answers them through the REAL one-pass kernel
+    against the stream's AP index, commits append-exactly-once, and a
     re-run with the same checkpoint adds nothing."""
     import json
 
@@ -249,11 +249,12 @@ def _positioning_fixture(spark, tmpzone):
     return zone, out, ckpt, aps, write_requests
 
 
-def test_streaming_positioning_two_jobs_per_batch(spark, tmpzone):
-    """The stream applies the shuffle-free one-pass plan once, so a
-    non-empty micro-batch runs exactly two Spark jobs: the AP broadcast and
-    one scan → kernel → write stage (no isEmpty probe, no AP window
-    shuffle). Counted under the stream's runId job group."""
+def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):
+    """The stream applies only the physics gate and explode to its
+    streaming frame and answers each micro-batch in the driver, so a
+    non-empty micro-batch runs exactly ONE Spark job (the toArrow collect)
+    and its plan holds no Python node. Counted under the stream's runId
+    job group."""
     from wifi_location_data_pipeline_spark.streaming.positioning import (
         start_positioning_stream,
     )
@@ -266,13 +267,103 @@ def test_streaming_positioning_two_jobs_per_batch(spark, tmpzone):
             q.processAllAvailable()
         batches = [p for p in q.recentProgress if p["numInputRows"]]
         jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        capsys.readouterr()
+        q.explain()  # the last micro-batch's physical plan
+        plan = capsys.readouterr().out
     finally:
         q.stop()
     assert len(batches) == 3
-    assert len(jobs) == 2 * len(batches), sorted(jobs)
+    assert len(jobs) == len(batches), sorted(jobs)
+    assert "FileScan json" in plan, plan
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
     rows = spark.read.parquet(out).collect()
     assert sorted(r["request_id"] for r in rows) == sorted(
         f"r{k}{c}" for k in range(3) for c in "ab")
+
+
+@pytest.mark.parametrize("with_reasons", [False, True], ids=["plain", "reasons"])
+def test_streaming_positioning_matches_batch_placement(spark, tmpzone, with_reasons):
+    """The stream runs the batch plan's kernel in the driver: its answers
+    must EQUAL position_requests_onepass's on the same requests. The corpus
+    has unknown and null MACs, physics-gate failures, duplicate MACs in a
+    request, NULL AP vendor / confidence / altitude / frequency and 1-20
+    scans, and lands as three files, one micro-batch each."""
+    import json
+
+    from tests.wifi_fixtures import RANDOMIZED_CORPORA, randomized_positioning_corpus
+    from wifi_location_data_pipeline_spark.positioning.onepass import (
+        position_requests_onepass,
+    )
+    from wifi_location_data_pipeline_spark.schemas import (
+        POSITIONING_REQUEST_SCHEMA,
+        WIFI_ACCESS_POINTS_SCHEMA,
+    )
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    requests, ap_rows = randomized_positioning_corpus(*RANDOMIZED_CORPORA[0])
+    for i, r in enumerate(requests[::3]):  # an unknown MAC among known ones
+        r["wifiScanResults"][0]["macAddress"] = f"ff:ff:00:00:00:{i:02x}"
+    requests[1]["wifiScanResults"] = [  # nothing but unknown MACs
+        {**sc, "macAddress": f"ff:ff:00:00:01:{j:02x}"}
+        for j, sc in enumerate(requests[1]["wifiScanResults"])
+    ]
+    requests[2]["wifiScanResults"][0]["macAddress"] = None  # a null MAC
+    aps = spark.createDataFrame(ap_rows, WIFI_ACCESS_POINTS_SCHEMA)
+    want = {
+        r["request_id"]: r.asDict(recursive=True)
+        for r in position_requests_onepass(
+            spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA), aps,
+            with_reasons=with_reasons,
+        ).collect()
+    }
+    assert 15 <= len(want) < len(requests)
+
+    zone = os.path.join(tmpzone, "reqs"); os.makedirs(zone)
+    out, ckpt = os.path.join(tmpzone, "positions"), os.path.join(tmpzone, "pos_ckpt")
+    for k in range(3):
+        with open(os.path.join(zone, f"part{k}.json"), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in requests[k::3])
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, with_reasons=with_reasons,
+                                 max_files_per_trigger=1)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) == 3
+    got = {
+        r["request_id"]: r.asDict(recursive=True)
+        for r in spark.read.parquet(out).drop("batch_id").collect()
+    }
+    assert got == want
+
+
+def test_streaming_positioning_replay_replaces_batch_dir(spark, tmpzone, monkeypatch):
+    """foreachBatch is at-least-once: a replayed batch_id=N must REPLACE
+    what an earlier attempt left there (no stale part file survives), and
+    _SUCCESS is written after the part file it vouches for. The sink path
+    is relative, as Spark's own writer accepts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    stale_dir = os.path.join(out, "batch_id=0")
+    os.makedirs(stale_dir)
+    pq.write_table(pa.table({"request_id": ["stale"]}),
+                   os.path.join(stale_dir, "part-00007-stale.parquet"))
+    open(os.path.join(stale_dir, "_SUCCESS"), "w").close()
+    write_requests("a.json", ["f1", "f2"])
+    monkeypatch.chdir(tmpzone)
+    q = start_positioning_stream(spark, zone, aps, os.path.relpath(out), ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sorted(os.listdir(stale_dir)) == ["_SUCCESS", "part-00000.parquet"]
+    part = os.stat(os.path.join(stale_dir, "part-00000.parquet")).st_mtime_ns
+    assert os.stat(os.path.join(stale_dir, "_SUCCESS")).st_mtime_ns >= part
+    assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == ["f1", "f2"]
 
 
 def test_streaming_positioning_empty_file_commits_empty_batch(spark, tmpzone):

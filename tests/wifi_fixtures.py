@@ -222,3 +222,57 @@ def make_measurements(seed: int = 42) -> list[dict]:
     add_cloud("aa:00:00:00:00:30", "MovedAP", 40.7754, -73.9700, 40, tm + 86_400_000, t1,
               spread_m=25.0, outlier_frac=0.0)
     return rows
+
+
+# The two seeded positioning corpora of the kernel parity nets, as
+# (seed, signals). Broad: every context class, strong spreads, physics edges.
+# Weak/duplicate-heavy: the very-weak override and equal-signal pairs (the
+# zero-pair-weight rssi_ratio gate) dominate.
+RANDOMIZED_CORPORA = [
+    (20240815, [-97.5, -95.0, -94.9, -90.0, -85.0, -84.9, -80.0, -70.1,
+                -70.0, -69.9, -60.0, -50.0, -45.0, -35.0, -30.0]),
+    (977, [-97.0, -97.0, -96.0, -95.0, -95.0, -94.9, -90.0, -90.0,
+           -88.0, -70.0, -70.0]),
+]
+
+
+def randomized_positioning_corpus(seed: int, signals: list[float]) -> tuple[list[dict], list[dict]]:
+    """(request rows, access-point rows) of one seeded corpus, dense in the
+    awkward shapes: NULL altitude / accuracy / confidence / vendor /
+    frequency on the AP side, unusable AP statuses, duplicate macs within a
+    request, 1-20 scans, boundary signal strengths crossing every context
+    class and the physics gate. The corpus's index in ``RANDOMIZED_CORPORA``
+    tags its macs and request ids, so corpora can share one AP dimension;
+    the tag keeps every corpus's mac order."""
+    tag = [c[0] for c in RANDOMIZED_CORPORA].index(seed) + 1
+    rng = random.Random(seed)
+    vendors = ["cisco", "aruba", "meraki", "ubiquiti", "ruckus", "hpe-aruba",
+               "  Cisco  ", "unknown-vendor", None]
+    ap_rows = [{
+        "mac_addr": f"02:00:{tag:02x}:00:{k // 256:02x}:{k % 256:02x}",
+        "version": "1",
+        "latitude": 40.75 + rng.uniform(-0.01, 0.01),
+        "longitude": -73.98 + rng.uniform(-0.01, 0.01),
+        "altitude": None if rng.random() < 0.3 else rng.uniform(0, 50),
+        "horizontal_accuracy": None if rng.random() < 0.3 else rng.uniform(3, 40),
+        "vertical_accuracy": 4.0,
+        "confidence": None if rng.random() < 0.3 else rng.uniform(0.3, 1.0),
+        "ssid": "t",
+        "frequency": rng.choice([2412, 2437, 5180, 5500, 6100, None]),
+        "vendor": rng.choice(vendors),
+        "status": rng.choice(["active", "active", "warning", "verified", "expired"]),
+        "geohash": None,
+    } for k in range(40)]
+    macs = [r["mac_addr"] for r in ap_rows]
+    requests = []
+    for i in range(60):
+        chosen = [rng.choice(macs) for _ in range(rng.randint(1, 20))]  # duplicates likely
+        scans = [
+            {"macAddress": m, "signalStrength": rng.choice(signals),
+             "frequency": rng.choice([2437, 5180, None]), "ssid": "t",
+             "linkSpeed": None, "channelWidth": None}
+            for m in chosen
+        ]
+        requests.append({"requestId": f"x{tag}_{i}", "client": "t", "application": "t",
+                         "calculationDetail": False, "wifiScanResults": scans})
+    return requests, ap_rows

@@ -1,25 +1,23 @@
-"""Streaming positioning latency bench.
+"""Positioning-stream backfill drain timer.
 
-Measures the §3.2 online request/response loop (streaming/positioning.py)
-against the reference's latency envelope — p95 ≤ 150 ms added latency per
-sync call, 800 ms hard timeout, 1–20 scans per request
-(wifi-positioning-integration-service/documents/integration-requirements.md:333,
-BASELINE.md rows 1–3). A micro-batch engine doesn't answer one request per
-call; the comparable figures are per-BATCH service time and per-REQUEST
-amortized latency at a given arrival batch size.
+Serving latency is measured by perfbench's ``position_serving`` workload;
+this tool times the other end of the stream's envelope, throughput: a
+request zone that filled up while the stream was down, drained by
+``start_positioning_stream(available_now=True)`` in one micro-batch.
 
-Method: N_FILES request files × BATCH_REQUESTS requests each land in a zone;
-`start_positioning_stream(available_now=True)` drains them through the REAL
-one-pass ensemble, planned once for the stream (cached AP lookup broadcast
-per micro-batch, with_reasons diagnostics on).
-`maxFilesPerTrigger=1` makes each file one micro-batch, so recentProgress
-yields one batchDuration sample per file. Prints ONE JSON line:
+Method: ``--requests`` perfbench-generated requests (1-20 scans, unknown
+MACs and physics-gate failures included, against a 1 600-AP city) land in
+files of 100 requests. One untimed drain warms the session; each of
+``--reps`` timed drains then starts a fresh stream (new sink and checkpoint)
+over the same zone and is timed from ``start_positioning_stream`` to
+``awaitTermination``. Every drain must answer the same number of requests.
+Prints ONE JSON line:
 
-    {"metric": "streaming_positioning_latency", "batches": K,
-     "p50_batch_ms": ..., "p95_batch_ms": ..., "requests_per_sec": ...,
-     "ms_per_request": ..., "n_requests": N}
+    {"metric": "positioning_backfill_drain", "n_requests": N, "answered": A,
+     "reps": R, "drain_s": <median>, "drain_s_all": [...],
+     "requests_per_s": N / drain_s}
 
-Usage: python tools/bench_streaming.py [--requests 100] [--files 8]
+Usage: python tools/bench_streaming.py [--requests 20000] [--reps 5] [--seed 1]
 """
 
 from __future__ import annotations
@@ -28,6 +26,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -35,130 +34,77 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+PER_FILE = 100
+N_APS = 1600
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--requests", type=int, default=96, help="requests per file")
-    ap.add_argument("--files", type=int, default=8, help="micro-batches")
+    ap.add_argument("--requests", type=int, default=20_000)
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
+    from perfbench import gen
+    from wifi_location_data_pipeline_spark.schemas import WIFI_ACCESS_POINTS_SCHEMA
     from wifi_location_data_pipeline_spark.session import build_session
     from wifi_location_data_pipeline_spark.streaming.positioning import (
         start_positioning_stream,
     )
 
-    # serving-tuned session: a dedicated request-serving deployment sizes
-    # its session for SMALL bounded batches — AQE's per-stage re-plan adds
-    # pure latency when every stage holds a few hundred rows (the stream's
-    # plan has no shuffle to size). Batch/ETL sessions keep the engine
-    # defaults.
+    ncpu = len(os.sched_getaffinity(0))
+    work = tempfile.mkdtemp(prefix="bench_drain_")
     spark = build_session(
-        app_name="bench-streaming",
+        app_name="bench-drain", master=f"local[{ncpu}]", shuffle_partitions=ncpu,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
-            "spark.sql.adaptive.enabled": "false",
+            "spark.local.dir": os.path.join(work, "spark-local"),
         },
     )
+    try:
+        city = gen.City(args.seed, N_APS)
+        spark.createDataFrame(gen.ap_dimension(city), WIFI_ACCESS_POINTS_SCHEMA) \
+            .write.parquet(os.path.join(work, "access_points"))
+        aps = spark.read.parquet(os.path.join(work, "access_points")).cache()
+        aps.count()
+        reqs, _truth = gen.make_requests(city, args.seed, args.requests, "d")
+        zone = os.path.join(work, "zone")
+        os.makedirs(zone)
+        for f in range(0, len(reqs), PER_FILE):
+            gen.write_json_lines(os.path.join(zone, f"req-{f // PER_FILE:05d}.json"),
+                                 reqs[f:f + PER_FILE])
 
-    # 50-AP dimension on a lattice (same synthetic layout as the batch
-    # ensemble queries); requests observe 1..8 of them
-    def mac(i: int) -> str:
-        return "02:00:00:00:%02x:%02x" % (i // 256, i % 256)
+        def drain(k: int) -> tuple[float, int]:
+            out, ckpt = os.path.join(work, f"out{k}"), os.path.join(work, f"ckpt{k}")
+            t0 = time.perf_counter()
+            q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=True)
+            q.awaitTermination()
+            wall = time.perf_counter() - t0
+            if q.exception() is not None:
+                raise RuntimeError(f"drain {k} failed: {q.exception()}")
+            return wall, spark.read.parquet(out).count()
 
-    aps = [
-        {
-            "mac_addr": mac(i), "version": "1",
-            "latitude": 40.0 + i * 0.01,
-            "longitude": -74.0 + (i * 7 % 50) * 0.01,
-            "altitude": 10.0, "horizontal_accuracy": 10.0,
-            "vertical_accuracy": 5.0, "confidence": 0.8, "ssid": f"ap-{i}",
-            "frequency": 2437, "vendor": ["cisco", "aruba", "ubiquiti", "generic"][i % 4],
-            "status": "active", "geohash": None,
-        }
-        for i in range(50)
-    ]
-    from wifi_location_data_pipeline_spark.schemas import WIFI_ACCESS_POINTS_SCHEMA
+        _wall, answered = drain(0)  # warm-up
+        walls = []
+        for k in range(1, args.reps + 1):
+            wall, n = drain(k)
+            if n != answered:
+                raise RuntimeError(f"drain {k} answered {n} requests, warm-up {answered}")
+            walls.append(wall)
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
 
-    ap_df = spark.createDataFrame(aps, WIFI_ACCESS_POINTS_SCHEMA).cache()
-    ap_df.count()
-
-    def request(rid: int) -> dict:
-        n_obs = 1 + rid % 8
-        return {
-            "requestId": f"r{rid}",
-            "client": "bench", "application": "bench-streaming",
-            "calculationDetail": True,
-            "wifiScanResults": [
-                {
-                    "macAddress": mac((rid * 13 + j * 7) % 50),
-                    "signalStrength": -45.0 - ((rid * 3 + j * 11) % 50),
-                    "frequency": 2437, "ssid": "b",
-                    "linkSpeed": None, "channelWidth": None,
-                }
-                for j in range(n_obs)
-            ],
-        }
-
-    work = tempfile.mkdtemp(prefix="bench_stream_")
-    zone = os.path.join(work, "zone")
-    out = os.path.join(work, "out")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(zone)
-    rid = 0
-    for f in range(args.files):
-        with open(os.path.join(zone, f"batch{f:03d}.json"), "w") as fh:
-            for _ in range(args.requests):
-                fh.write(json.dumps(request(rid)) + "\n")
-                rid += 1
-
-    # warm the Python worker pool so batch 1 doesn't bill worker fork+import
-    def _noop(b):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from b
-
-    spark.range(0, spark.sparkContext.defaultParallelism, 1,
-                spark.sparkContext.defaultParallelism).mapInPandas(_noop, "id long").count()
-
-    t0 = time.perf_counter()
-    q = start_positioning_stream(
-        spark, zone, ap_df, out, ckpt,
-        with_reasons=True, available_now=True, max_files_per_trigger=1,
-    )
-    q.awaitTermination(600)
-    wall = time.perf_counter() - t0
-
-    answered = spark.read.parquet(out).count()
-    durations = sorted(
-        p["batchDuration"] for p in (q.recentProgress or []) if p.get("numInputRows")
-    )
-
-    def pct(p: float) -> float:
-        if not durations:
-            return float("nan")
-        i = min(len(durations) - 1, int(round(p * (len(durations) - 1))))
-        return float(durations[i])
-
-    n_req = args.requests * args.files
-    result = {
-        "metric": "streaming_positioning_latency",
-        "unit": "ms",
-        "n_requests": n_req,
-        "n_answered": answered,
-        "batches": len(durations),
-        "batch_requests": args.requests,
-        "p50_batch_ms": pct(0.50),
-        "p95_batch_ms": pct(0.95),
-        "wall_clock_sec": round(wall, 3),
-        "requests_per_sec": round(answered / wall, 1) if wall > 0 else None,
-        "ms_per_request": round(1000.0 * wall / max(1, answered), 2),
-    }
-    spark.stop()
-    shutil.rmtree(work, ignore_errors=True)
-    print(json.dumps(result))
+    med = statistics.median(walls)
+    print(json.dumps({
+        "metric": "positioning_backfill_drain",
+        "n_requests": len(reqs),
+        "answered": answered,
+        "reps": len(walls),
+        "drain_s": round(med, 3),
+        "drain_s_all": [round(w, 3) for w in walls],
+        "requests_per_s": round(len(reqs) / med, 1),
+    }))
 
 
 if __name__ == "__main__":

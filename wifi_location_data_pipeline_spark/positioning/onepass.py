@@ -9,18 +9,18 @@ it is a dozen passes over the fact table.
 
 Every phase keys on request_id and every request holds ≤20 observations, so
 the Spark-first shape is: physics gate on the nested scan array → explode →
-broadcast AP join → per-element derived values as CODEGEN column expressions
-(path-loss distance, inverse-distance weight, confidence weight, WCL weight —
-computed on the exploded rows where whole-stage codegen applies) → one
-vectorized Arrow kernel (positioning/onepass_kernel) that packs each request
-itself and computes context, selection, the closed-form algorithms, the
+broadcast AP join → one vectorized Arrow kernel (positioning/onepass_kernel)
+that derives the per-element values (path-loss distance, inverse-distance
+weight, confidence weight, WCL weight), packs each request itself and
+computes context, selection, the closed-form algorithms, the
 trilateration/MLE numeric tier, and the robust combiner in a single
 mapInPandas pass. Every operator before the kernel is narrow, so the rows of
 a request stay contiguous in the partition of their input row and the plan
 has no shuffle: the kernel groups rows by request_id, sorts each request by
 its pack key, and carries a request that straddles two Arrow batches into
-the next one. The same plan runs on a streaming DataFrame
-(streaming/positioning.py), where every operator in it is stateless.
+the next one. The positioning stream (streaming/positioning.py) shares the
+gate and explode (``gated_observations``) and runs the same kernel in the
+driver.
 
 History: rounds 2–5 expressed the packed middle as generated SQL over lambda
 higher-order array functions. Lambda HOFs run in Spark's INTERPRETED
@@ -36,14 +36,15 @@ baseline (test_onepass_matches_multipass).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wifi_location_data_pipeline_spark import config as C
 from wifi_location_data_pipeline_spark.functions.identifiers import normalize_bssid
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
-    PACK_FIELDS,
+    CONTEXT_FIELDS,
+    KERNEL_INPUT,
     _APC,
     _GQ,
     _SD,
@@ -88,62 +89,6 @@ def physics_valid_expr(scans: Column) -> Column:
     return rssi_ok & ~F.exists(freqs, freq_bad)
 
 
-# ---------------------------------------------------------------------------
-# per-element derived values — codegen column exprs on the EXPLODED rows
-# (semantics: LogDistancePathLossAlgorithm / WCL weight formulas; same
-# expressions the retired staged SQL evaluated per array element, now run
-# inside whole-stage codegen before the kernel)
-# ---------------------------------------------------------------------------
-
-
-def _derived_element_cols() -> dict[str, Column]:
-    s = F.col("signal_strength")
-    vend = F.lower(F.trim(F.col("ap_vendor")))
-    vendor_n = (
-        F.when(vend == "cisco", 3.0)
-        .when(vend == "aruba", 2.8)
-        .when(vend == "meraki", 3.0)
-        .when(vend == "ubiquiti", 2.7)
-        .when(vend == "ruckus", 2.9)
-        .when(vend == "hpe-aruba", 2.8)
-        .otherwise(C.DEFAULT_PATH_LOSS_EXPONENT)
-    )
-    n_adj = (
-        F.when(s >= -50.0, vendor_n - F.least(F.lit(1.0), (s + 50.0) / 5.0))
-        .when(s <= -80.0, vendor_n + F.least(F.lit(1.5), (-80.0 - s) / 5.0))
-        .otherwise(vendor_n)
-    )
-    nn = F.greatest(
-        F.lit(C.PATH_LOSS_EXPONENT_MIN), F.least(F.lit(C.PATH_LOSS_EXPONENT_MAX), n_adj)
-    )
-    freq = F.col("frequency")
-    ref = (
-        F.when(freq >= 5000, C.REF_RSSI_5GHZ)
-        .when(freq >= 2400, C.REF_RSSI_2_4GHZ)
-        .otherwise(C.REF_RSSI_6GHZ)
-    )
-    sigma = (
-        F.when(s >= -50.0, C.SHADOW_SIGMA_LOW)
-        .when(s <= -80.0, C.SHADOW_SIGMA_HIGH)
-        .otherwise(C.SHADOW_SIGMA_MEDIUM)
-    )
-    d = F.pow(F.lit(10.0), (ref - s) / (10.0 * nn)) * (1.0 + sigma / 10.0)
-    cw = F.greatest(
-        F.lit(0.6),
-        F.least(
-            F.lit(1.0),
-            (1.0 / (1.0 + F.exp(-4.0 * ((s + 100.0) / 70.0 - 0.5))))
-            * F.greatest(F.lit(0.7), F.coalesce(F.col("ap_confidence"), F.lit(0.85)))
-            * F.when(F.col("ap_vendor").isNotNull(), 1.2).otherwise(0.85),
-        ),
-    )
-    w = F.pow(
-        F.lit(10.0),
-        F.greatest(F.lit(0.0), F.least(F.lit(1.0), (s + 30.0) / (-70.0))),
-    )
-    return {"d": d, "iw": 1.0 / F.greatest(F.lit(1.0), d), "cw": cw, "w": w}
-
-
 _CAL_INFO_T = T.ArrayType(
     T.StructType(
         [
@@ -165,39 +110,51 @@ _OUT_FIELDS = [
     T.StructField("calculation_info", _CAL_INFO_T),
 ]
 
-_CTX_FIELD = T.StructField(
-    "_ctx",
-    T.StructType(
-        [
-            T.StructField("ap_count_class", T.StringType()),
-            T.StructField("signal_quality", T.StringType()),
-            T.StructField("geometric_quality", T.StringType()),
-            T.StructField("signal_distribution", T.StringType()),
-            T.StructField("all_very_weak", T.BooleanType()),
-        ]
+_REASON_FIELDS = [
+    T.StructField(
+        "selection_context",
+        T.StructType(
+            [T.StructField(k, T.StringType()) for k in CONTEXT_FIELDS[:-1]]
+            + [T.StructField(CONTEXT_FIELDS[-1], T.BooleanType())]
+        ),
     ),
-)
+    T.StructField(
+        "selection_info",
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("algorithm", T.StringType()),
+                    T.StructField("selected", T.BooleanType()),
+                    T.StructField("weight", T.DoubleType()),
+                    T.StructField("reasons", T.ArrayType(T.StringType())),
+                ]
+            )
+        ),
+    ),
+]
 
-_OUT_SCHEMA = T.StructType(_OUT_FIELDS)
-_OUT_SCHEMA_CTX = T.StructType(_OUT_FIELDS + [_CTX_FIELD])
 
-# applicationId → analyzed+cached 480-row selection-info dimension. The dim
-# is STATIC (pure product of the context enums — no data dependency), yet
-# rebuilding its createDataFrame + reasons transformation chain cost ~1 s of
-# driver-side plan work per call — per MICRO-BATCH on the streaming serving
-# path. Build once per session, .cache() the 480 rows, reuse the analyzed
-# plan; clearCache() only drops the data (recomputed in one tiny job), the
-# plan reuse survives.
-_SEL_DIM_CACHE: dict[str, DataFrame] = {}
+def answer_schema(with_reasons: bool) -> T.StructType:
+    """Schema of the positioning answers, with or without the
+    selection_context / selection_info diagnostics."""
+    return T.StructType(_OUT_FIELDS + (_REASON_FIELDS if with_reasons else []))
 
 
-def _selection_info_dim(spark) -> DataFrame:
-    """480-row broadcast dimension: every possible SelectionContext →
-    packed per-algorithm (selected, weight, reasons[]) array, computed ONCE
-    by the oracle-checked ``select_algorithms_with_reasons`` twin
-    (positioning/selection.py; AlgorithmSelector.java:308-330). Scale-free:
-    the context space is the product of the four class enums × the
-    very-weak flag, independent of data volume."""
+# applicationId → the selection-info dimension, collected to the driver. The
+# dim is STATIC (pure product of the context enums — no data dependency), so
+# it is computed and collected once per session and handed to the kernel,
+# which attaches each answer's entry itself.
+_SEL_INFO: dict[str, dict[tuple, list[dict]]] = {}
+
+
+def selection_info_by_context(spark: SparkSession) -> dict[tuple, list[dict]]:
+    """Every possible SelectionContext (``CONTEXT_FIELDS`` tuple) → its
+    per-algorithm (algorithm, selected, weight, reasons[]) list sorted by
+    algorithm, computed ONCE per session by the oracle-checked
+    ``select_algorithms_with_reasons`` twin (positioning/selection.py;
+    AlgorithmSelector.java:308-330). 480 entries, scale-free: the context
+    space is the product of the four class enums × the very-weak flag,
+    independent of data volume."""
     import itertools
 
     from wifi_location_data_pipeline_spark.positioning.selection import (
@@ -205,7 +162,7 @@ def _selection_info_dim(spark) -> DataFrame:
     )
 
     key = spark.sparkContext.applicationId
-    hit = _SEL_DIM_CACHE.get(key)
+    hit = _SEL_INFO.get(key)
     if hit is not None:
         return hit
 
@@ -218,13 +175,7 @@ def _selection_info_dim(spark) -> DataFrame:
     reasons = select_algorithms_with_reasons(grid)
     dim = (
         reasons.join(grid, "request_id")
-        .groupBy(
-            "ap_count_class",
-            "signal_quality",
-            "geometric_quality",
-            "signal_distribution",
-            "all_very_weak",
-        )
+        .groupBy(*CONTEXT_FIELDS)
         .agg(
             F.array_sort(
                 F.collect_list(
@@ -232,32 +183,23 @@ def _selection_info_dim(spark) -> DataFrame:
                 )
             ).alias("selection_info")
         )
-        .cache()
     )
-    _SEL_DIM_CACHE[key] = dim
-    return dim
+    info = {
+        tuple(r[k] for k in CONTEXT_FIELDS): [e.asDict(recursive=True) for e in r["selection_info"]]
+        for r in dim.collect()
+    }
+    _SEL_INFO[key] = info
+    return info
 
 
-def _attach_selection_info(out: DataFrame) -> DataFrame:
-    """Broadcast-join the selection-reason dimension on the packed context
-    struct and surface ``selection_info`` (the reference's CalculationInfo
-    selectionInfo list)."""
-    dim = _selection_info_dim(out.sparkSession)
-    cond = [
-        out["_ctx"][k] == dim[k]
-        for k in (
-            "ap_count_class",
-            "signal_quality",
-            "geometric_quality",
-            "signal_distribution",
-            "all_very_weak",
-        )
-    ]
-    joined = out.join(F.broadcast(dim), cond, "left")
-    return joined.select(
-        *[c for c in out.columns if c != "_ctx"],
-        out["_ctx"].alias("selection_context"),
-        dim["selection_info"],
+def gated_observations(requests: DataFrame) -> DataFrame:
+    """Nested requests → the kernel's observation columns before the AP
+    join (request_id, n_scanned, mac_addr, signal_strength, frequency): the
+    physics gate on the nested scan array, then the explode. Stateless, so
+    the positioning stream applies it to its streaming frame."""
+    gated = requests.filter(physics_valid_expr(F.col("wifiScanResults")))
+    return explode_requests(gated).select(
+        "request_id", "n_scanned", "mac_addr", "signal_strength", "frequency"
     )
 
 
@@ -270,8 +212,8 @@ def position_requests_onepass(
     """Nested requests + AP dimension → combined positions, one job.
 
     Plan: physics gate (nested-array filter) → explode → broadcast AP join
-    (``known_ap_lookup``) → derived element values (codegen projection) →
-    vectorized Arrow kernel that packs each request and runs
+    (``known_ap_lookup``) → vectorized Arrow kernel that derives the element
+    values, packs each request and runs
     context/selection/algorithms/numeric/combine (onepass_kernel.py). No
     shuffle: the kernel runs in the partitions of ``requests``, so its
     parallelism is the input's (a caller holding a few large splits can
@@ -279,45 +221,25 @@ def position_requests_onepass(
 
     ``with_reasons=True`` adds the reference's ``selectionInfo`` diagnostics
     (CalculationInfo.java:9-65; AlgorithmSelector.selectAlgorithmsWithReasons,
-    AlgorithmSelector.java:308-330): a ``selection_info`` column of
-    per-algorithm (selected, weight, reasons[]) structs from a 480-row
-    broadcast dimension — one row per possible SelectionContext — joined on
-    the request's packed context classes, so the reason bookkeeping costs
-    one broadcast join at ANY scale instead of per-request string assembly.
+    AlgorithmSelector.java:308-330): a ``selection_context`` struct and a
+    ``selection_info`` column of per-algorithm (selected, weight, reasons[])
+    structs, which the kernel looks up by the request's context classes in
+    the 480-entry ``selection_info_by_context`` table, so the reason
+    bookkeeping costs no join and no per-request string assembly.
 
     ``numeric_tier``: the trilateration/MLE tier runs INSIDE the kernel.
     "auto" runs it wherever selection routes a request; "off" makes the
     kernel raise at execution if selection routes any request to it.
     """
-    return position_requests_from_lookup(
-        requests, known_ap_lookup(access_points), with_reasons, numeric_tier
-    )
-
-
-def position_requests_from_lookup(
-    requests: DataFrame,
-    ap_lookup: DataFrame,
-    with_reasons: bool = False,
-    numeric_tier: str = "auto",
-) -> DataFrame:
-    """``position_requests_onepass`` against a prepared ``known_ap_lookup``,
-    for callers that prepare (and cache) the lookup once and apply the plan
-    to many request sets — the positioning stream."""
     if numeric_tier not in ("auto", "off"):
         raise ValueError(f"numeric_tier must be 'auto' or 'off', got {numeric_tier!r}")
-    gated = requests.filter(physics_valid_expr(F.col("wifiScanResults")))
-    obs = explode_requests(gated).join(F.broadcast(ap_lookup), "mac_addr", "inner")
-    derived = _derived_element_cols()
-    obs = obs.select(
-        "request_id",
-        "n_scanned",
-        *[derived[c].alias(c) if c in derived else F.col(c) for c in PACK_FIELDS],
+    obs = gated_observations(requests).join(
+        F.broadcast(known_ap_lookup(access_points)), "mac_addr", "inner"
     )
-    schema = _OUT_SCHEMA_CTX if with_reasons else _OUT_SCHEMA
-    out = obs.mapInPandas(make_onepass_kernel(with_reasons, numeric_tier), schema)
-    if with_reasons:
-        out = _attach_selection_info(out)
-    return out
+    info = selection_info_by_context(requests.sparkSession) if with_reasons else None
+    return obs.select(*KERNEL_INPUT).mapInPandas(
+        make_onepass_kernel(info, numeric_tier), answer_schema(with_reasons)
+    )
 
 
 def position_observations_onepass(
@@ -343,13 +265,12 @@ def position_observations_onepass(
     value-identical — pinned by
     tests/test_positioning.py::test_flat_onepass_matches_nested.
     """
-    lookup = known_ap_lookup(access_points)
     # normalize like explode_requests does on the nested path — without
     # this, an uppercase/dash-format mac that DOES exist in the dimension
     # silently drops at the semi join instead of resolving
     resolved = observations.withColumn(
         "mac_addr", normalize_bssid(F.col("mac_addr"))
-    ).join(F.broadcast(lookup), "mac_addr", "left_semi")
+    ).join(F.broadcast(known_ap_lookup(access_points)), "mac_addr", "left_semi")
     scan = F.struct(
         F.col("mac_addr").alias("macAddress"),
         F.col("signal_strength").alias("signalStrength"),
@@ -368,4 +289,4 @@ def position_observations_onepass(
         .agg(F.collect_list(scan).alias("wifiScanResults"))
         .withColumnRenamed("request_id", "requestId")
     )
-    return position_requests_from_lookup(requests, lookup, with_reasons, numeric_tier)
+    return position_requests_onepass(requests, access_points, with_reasons, numeric_tier)

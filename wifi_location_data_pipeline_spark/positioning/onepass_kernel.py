@@ -10,17 +10,19 @@ multi-second Catalyst analysis of the generated SQL per invocation (paid per
 micro-batch on the serving path).
 
 This kernel takes the observation rows of whole requests (one row per
-resolved scan, as the explode and broadcast AP join leave them: every row of
-a request sits in the partition of its input row), groups them by request_id
+resolved scan, as the explode and AP join leave them: every row of a request
+sits in the partition of its input row), derives the per-element path-loss
+and weight values (``element_values``), groups the rows by request_id
 itself, sorts each request by ``PACK_FIELDS`` and pads the requests to
 (rows, K) matrices, K = the 20-scan request cap. It then computes context
 classification, algorithm selection, the four closed-form algorithms, the
-trilateration/MLE numeric tier, and the robust combiner in one
-``mapInPandas`` pass of batched NumPy — the same Arrow-kernel pattern as the
-dedup signature kernels. Scale shape: per-request work is O(K²) bounded by
-the 20-scan request cap, partitions are independent, and the plan is scan →
-explode → broadcast join → this kernel with no shuffle. No interior cache,
-no numeric-count job, no split/union — one job end to end.
+trilateration/MLE numeric tier, and the robust combiner in one pass of
+batched NumPy. The one kernel has two placements: the batch plan runs it as
+a ``mapInPandas`` body in the executors (scan → explode → broadcast join →
+this kernel, no shuffle, one job end to end), and the positioning stream
+runs it in the driver over each collected micro-batch. Scale shape:
+per-request work is O(K²) bounded by the 20-scan request cap, and
+partitions are independent.
 
 Semantics are the row-wise reference modules' (context.py, selection.py,
 algorithms.py, numeric.py, combiner.py, wired by
@@ -73,8 +75,9 @@ _DIST_W = np.array([DISTRIBUTION_MULT[k] for k in _SD])
 # Kernel input columns after (request_id, n_scanned), in pack-sort order:
 # mac first, so the first row of each mac run is the minimum struct for that
 # mac (keep-first dedup, the rule array_sort(collect_list(struct)) defined);
-# then the original observation and AP fields; the derived tail (d, iw, cw,
-# w) is a function of the fields before it, so it never decides a tie.
+# then the original observation and AP fields. ap_vendor feeds the derived
+# element values but is no sort key: one mac carries one AP record, so rows
+# that tie on mac_addr tie on the vendor and on every value derived from it.
 PACK_FIELDS = (
     "mac_addr",
     "signal_strength",
@@ -84,19 +87,67 @@ PACK_FIELDS = (
     "ap_alt",
     "ap_haccuracy",
     "ap_confidence",
-    "d",
-    "iw",
-    "cw",
-    "w",
 )
+# the kernel's input columns, whichever placement feeds it
+KERNEL_INPUT = ("request_id", "n_scanned", *PACK_FIELDS, "ap_vendor")
 # kernel-side name of each value field
-_SHORT = dict(zip(PACK_FIELDS[1:], (
-    "s", "freq", "lat", "lon", "alt", "hacc", "conf", "d", "iw", "cw", "w",
-)))
+_SHORT = dict(zip(PACK_FIELDS[1:], ("s", "freq", "lat", "lon", "alt", "hacc", "conf")))
+
+# path-loss exponent per normalized vendor (LogDistancePathLossAlgorithm)
+_VENDOR_N = {
+    "cisco": 3.0, "aruba": 2.8, "meraki": 3.0, "ubiquiti": 2.7, "ruckus": 2.9,
+    "hpe-aruba": 2.8,
+}
+
+
+def element_values(s, freq, conf, vendor) -> dict[str, np.ndarray]:
+    """Per-element derived values of flat observation rows: path-loss
+    distance ``d``, inverse-distance weight ``iw``, confidence weight ``cw``
+    and WCL weight ``w`` (LogDistancePathLossAlgorithm /
+    WeightedCentroidAlgorithm; the formulas the multipass reference
+    evaluates as column expressions in algorithms.closed_form_positions).
+
+    ``s``, ``freq``, ``conf``: float arrays, NaN for null; ``vendor``: the
+    AP vendor strings (a pandas Series, null allowed). A vendor normalizes
+    like Spark's lower(trim(·)), which strips spaces only.
+    """
+    import pandas as pd
+
+    codes, names = pd.factorize(vendor)  # null vendor -> code -1
+    vendor_n = np.array(
+        [_VENDOR_N.get(v.strip(" ").lower(), C.DEFAULT_PATH_LOSS_EXPONENT) for v in names]
+        + [C.DEFAULT_PATH_LOSS_EXPONENT]
+    )[codes]
+    with np.errstate(all="ignore"):
+        n_adj = np.select(
+            [s >= -50.0, s <= -80.0],
+            [vendor_n - np.minimum(1.0, (s + 50.0) / 5.0),
+             vendor_n + np.minimum(1.5, (-80.0 - s) / 5.0)],
+            default=vendor_n,
+        )
+        nn = np.maximum(C.PATH_LOSS_EXPONENT_MIN, np.minimum(C.PATH_LOSS_EXPONENT_MAX, n_adj))
+        ref = np.select(
+            [freq >= 5000, freq >= 2400], [C.REF_RSSI_5GHZ, C.REF_RSSI_2_4GHZ],
+            default=C.REF_RSSI_6GHZ,
+        )
+        sigma = np.select(
+            [s >= -50.0, s <= -80.0], [C.SHADOW_SIGMA_LOW, C.SHADOW_SIGMA_HIGH],
+            default=C.SHADOW_SIGMA_MEDIUM,
+        )
+        d = np.power(10.0, (ref - s) / (10.0 * nn)) * (1.0 + sigma / 10.0)
+        sig_w = 1.0 / (1.0 + np.exp(-4.0 * ((s + 100.0) / 70.0 - 0.5)))
+        cw = np.maximum(0.6, np.minimum(
+            1.0,
+            sig_w * np.maximum(0.7, np.where(np.isnan(conf), 0.85, conf))
+            * np.where(codes >= 0, 1.2, 0.85),
+        ))
+        w = np.power(10.0, np.maximum(0.0, np.minimum(1.0, (s + 30.0) / (-70.0))))
+    return {"d": d, "iw": 1.0 / np.maximum(1.0, d), "cw": cw, "w": w}
 
 
 def pack_requests(pdf):
-    """Observation rows of whole requests → padded per-request matrices.
+    """Observation rows (``KERNEL_INPUT``) of whole requests → padded
+    per-request matrices.
 
     Groups rows by request_id (requests in first-appearance order) and sorts
     each request by ``PACK_FIELDS`` ascending, nulls first inside each
@@ -106,22 +157,23 @@ def pack_requests(pdf):
     requests before the kernel.
 
     Returns (rids, n_scanned, lens, mats, ded): ``mats`` maps each short
-    field name to an (n, K) matrix, NaN-padded past each request's length;
-    ``ded`` marks the first row of each mac run (the dedup-keep mask). K is
-    at least the 20-scan request cap, so a request's row reductions run over
-    the same width, and give the same bits, whichever requests share its
-    batch.
+    field name, and each ``element_values`` name, to an (n, K) matrix,
+    NaN-padded past each request's length; ``ded`` marks the first row of
+    each mac run (the dedup-keep mask). K is at least the 20-scan request
+    cap, so a request's row reductions run over the same width, and give the
+    same bits, whichever requests share its batch.
     """
     import pandas as pd
 
     rid_code, rids = pd.factorize(pdf["request_id"], use_na_sentinel=False)
     mac_code = pd.factorize(pdf["mac_addr"], sort=True, use_na_sentinel=False)[0]
-    vals = {c: pdf[c].to_numpy(dtype=float, na_value=np.nan) for c in _SHORT}
+    vals = {short: pdf[c].to_numpy(dtype=float, na_value=np.nan) for c, short in _SHORT.items()}
     keys = []
-    for c in reversed(PACK_FIELDS[1:]):  # np.lexsort: last key is primary
-        known = ~np.isnan(vals[c])
-        keys += [np.where(known, vals[c], 0.0), known]
+    for short in reversed(_SHORT.values()):  # np.lexsort: last key is primary
+        known = ~np.isnan(vals[short])
+        keys += [np.where(known, vals[short], 0.0), known]
     order = np.lexsort(keys + [mac_code, rid_code])
+    vals.update(element_values(vals["s"], vals["freq"], vals["conf"], pdf["ap_vendor"]))
 
     rid_s, mac_s = rid_code[order], mac_code[order]
     lens = np.bincount(rid_code, minlength=len(rids))
@@ -130,9 +182,9 @@ def pack_requests(pdf):
     shape = (len(rids), max(int(lens.max()), C.POSITIONING_MAX_SCANS_PER_REQUEST))
 
     mats = {}
-    for c, short in _SHORT.items():
+    for short, v in vals.items():
         mats[short] = np.full(shape, np.nan)
-        mats[short][rid_s, pos] = vals[c][order]
+        mats[short][rid_s, pos] = v[order]
     first = np.ones(len(order), dtype=bool)
     first[1:] = (rid_s[1:] != rid_s[:-1]) | (mac_s[1:] != mac_s[:-1])
     ded = np.zeros(shape, dtype=bool)
@@ -162,9 +214,9 @@ def compute_onepass(
     result dict arrays.
 
     ``mats``: (rows, K) element matrices (s, freq, lat, lon, alt, hacc,
-    conf, d, iw, cw, w — the last four precomputed JVM-side in the codegen
-    projection). ``ded``: keep-first dedup flags (each request is
-    mac-sorted; a flag marks the first element of each mac run).
+    conf, and d, iw, cw, w from ``element_values``). ``ded``: keep-first
+    dedup flags (each request is mac-sorted; a flag marks the first element
+    of each mac run).
     """
     n, K = ded.shape
     M = np.arange(K) < lens[:, None]  # real-element mask (n, K)
@@ -574,8 +626,23 @@ def _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, alpha_rank):
     }
 
 
-def build_output(rids, res, with_reasons: bool):
-    """Kernel result arrays → pandas output frame (the only per-row Python)."""
+# field names of the selection_context struct, in label-table order
+CONTEXT_FIELDS = (
+    "ap_count_class",
+    "signal_quality",
+    "geometric_quality",
+    "signal_distribution",
+    "all_very_weak",
+)
+
+
+def build_output(rids, res, selection_info: dict | None):
+    """Kernel result arrays → pandas output frame (the only per-row Python).
+
+    ``selection_info`` maps each SelectionContext tuple (``CONTEXT_FIELDS``
+    order) to its per-algorithm reason list; when given, each answer carries
+    its ``selection_context`` struct and that list as ``selection_info``.
+    """
     import pandas as pd
 
     keep = res["keep"]
@@ -609,38 +676,34 @@ def build_output(rids, res, with_reasons: bool):
         "is_collinear": res["is_collinear"][idx].astype(bool),
         "calculation_info": cal_info,
     })
-    if with_reasons:
+    if selection_info is not None:
         apc, sq, gq, sd, avw = (
             res["apc_code"], res["sq_code"], res["gq_code"], res["sd_code"],
             res["all_very_weak"],
         )
-        out["_ctx"] = [
-            {
-                "ap_count_class": _APC[apc[i]],
-                "signal_quality": _SQ[sq[i]],
-                "geometric_quality": _GQ[gq[i]],
-                "signal_distribution": _SD[sd[i]],
-                "all_very_weak": bool(avw[i]),
-            }
-            for i in idx
-        ]
+        ctx = [(_APC[apc[i]], _SQ[sq[i]], _GQ[gq[i]], _SD[sd[i]], bool(avw[i])) for i in idx]
+        out["selection_context"] = [dict(zip(CONTEXT_FIELDS, c)) for c in ctx]
+        out["selection_info"] = [selection_info[c] for c in ctx]
     return out
 
 
-def make_onepass_kernel(with_reasons: bool, numeric_tier: str):
-    """mapInPandas body over observation rows (request_id, n_scanned,
-    *PACK_FIELDS) in which each request's rows are contiguous.
+def make_onepass_kernel(selection_info: dict | None, numeric_tier: str):
+    """The positioning kernel: a generator over pandas frames of observation
+    rows (``KERNEL_INPUT``) in which each request's rows are contiguous,
+    yielding answer frames. The batch plan runs it as a mapInPandas body in
+    the executors; the positioning stream runs it in the driver.
 
     A request can straddle two Arrow batches, so the rows of each batch's
     last request are held back and prepended to the next batch; the final
-    carry is solved after the last batch.
+    carry is solved after the last batch. ``selection_info``: see
+    ``build_output``.
     """
     import pandas as pd
 
     def solve(pdf):
         rids, n_scanned, lens, mats, ded = pack_requests(pdf)
         res = compute_onepass(n_scanned, lens, mats, ded, numeric_tier=numeric_tier)
-        return build_output(rids, res, with_reasons)
+        return build_output(rids, res, selection_info)
 
     def run(batches):
         any_out = False
@@ -671,8 +734,9 @@ def make_onepass_kernel(with_reasons: bool, numeric_tier: str):
                 "is_collinear": pd.Series(dtype=bool),
                 "calculation_info": pd.Series(dtype=object),
             }
-            if with_reasons:
-                cols_out["_ctx"] = pd.Series(dtype=object)
+            if selection_info is not None:
+                cols_out["selection_context"] = pd.Series(dtype=object)
+                cols_out["selection_info"] = pd.Series(dtype=object)
             yield pd.DataFrame(cols_out)
 
     return run

@@ -1,4 +1,4 @@
-"""Streaming positioning: request JSON zone → positions, one plan per stream.
+"""Streaming positioning: request JSON zone → positions, answered in the driver.
 
 The reference serves positioning as a long-lived HTTP API
 (`wifi-positioning-service`, PositioningController.java:30-49 →
@@ -7,46 +7,58 @@ Spark-first equivalent of "requests arrive continuously, answers leave
 continuously" is Structured Streaming over a request zone:
 
     readStream.json(request_zone, POSITIONING_REQUEST_SCHEMA)
-      → position_requests_from_lookup ⋈ broadcast(cached AP lookup)
-        (applied ONCE, to the streaming DataFrame)
-      → foreachBatch: per-batch_id overwrite sink (idempotent under
-        foreachBatch's at-least-once replay ⇒ effectively exactly-once)
+      → physics gate → explode          (applied ONCE, to the streaming frame)
+      → foreachBatch: toArrow → join with the driver-held AP index
+        → the one-pass kernel → pyarrow write of batch_id=N
 
-The one-pass plan is shuffle-free (positioning/onepass.py): filter,
-generate, the stream-static broadcast join, project and MapInPandas are all
-stateless, so the stream plans it as a continuous query and the driver
-builds no Python plan per micro-batch. The AP lookup (status filter,
+The streaming frame holds only the stateless gate and explode of the batch
+plan (``onepass.gated_observations``): no join, no Python and no coalesce,
+so each non-empty micro-batch is ONE Spark job, the ``toArrow`` collect. The
+rest runs in the driver, where a micro-batch of a few requests costs the
+kernel's ~20 ms instead of a Python-worker hop (about 200 ms of fixed time
+per Python task on a 4-core host, whatever its input) plus a stream-static
+broadcast join that re-collected and re-broadcast the AP lookup on every
+micro-batch. The kernel is the batch plan's (``make_onepass_kernel``): one
+kernel, placed in the executors for batch and in the driver for the stream,
+so the two placements give equal answers.
+
+The AP index is ``known_ap_lookup(access_points)`` (status filter,
 keep-first by version, rename — the analog of the service's DynamoDB lookup
-path with its long-lived client) is prepared and cached once at stream
-start, so its window shuffle never runs per batch. A micro-batch is then two
-Spark jobs: the AP broadcast, and one scan → kernel → write stage, run as a
-single task. An empty request file commits a batch with no answers. The
-per-request diagnostics (``with_reasons``) ride along identically to the
-batch path.
+path with its long-lived client), collected into the driver once at stream
+start: the snapshot a cache at stream start would hold. Driver memory is
+bounded by that lookup, the same bytes the per-batch broadcast pulled
+through the driver, plus one micro-batch of observation rows; bound the
+latter with ``max_files_per_trigger``.
 
-Why the plan keeps exactly ONE Python stage: on a 4-core host each Python
-stage costs about 200 ms of fixed time, whatever its input. An identity
-mapInPandas over 28 rows in one task takes ≈400 ms to a parquet sink where
-the same job without it takes ≈160 ms (≈220 vs ≈40 ms to the noop sink);
-the Python worker spends ~150–200 ms in ``setup_spark_files`` waiting for
-the JVM's task header. ``spark.python.worker.reuse``, unix-domain sockets
-and the Arrow buffer size did not change this. So the kernel packs, solves
-and combines in the one stage; splitting any phase into its own Python
-stage would add that floor to every micro-batch. The same floor is paid per
-task, so the stage runs as one task: on the serving benchmark (4 cores,
-seeds 13–15) that lowered p50 latency from 958/1300/1317 ms with the file
-source's ~4 tasks per micro-batch to 752/977/1143 ms. The cost lands on
-large micro-batches (a backfill drain): 20 000 requests position in ≈2.2 s
-in one task against ≈1.7 s in four.
+The sink writes each batch to its own ``batch_id=N`` directory: it clears
+the directory, writes ``part-00000.parquet``, and writes ``_SUCCESS`` last.
+foreachBatch is at-least-once, and a replayed batch replaces the first
+attempt's files, so the sink is effectively exactly-once; ``_SUCCESS`` means
+the batch's answers are complete. An empty request file commits a batch with
+an empty, schema'd part file. The per-request diagnostics
+(``with_reasons``) ride along identically to the batch path.
 """
 
 from __future__ import annotations
 
+import os
+
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 
 from wifi_location_data_pipeline_spark.positioning.onepass import (
-    position_requests_from_lookup,
+    answer_schema,
+    gated_observations,
+    selection_info_by_context,
+)
+from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
+    KERNEL_INPUT,
+    make_onepass_kernel,
 )
 from wifi_location_data_pipeline_spark.positioning.prepare import known_ap_lookup
 from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
@@ -72,30 +84,33 @@ def start_positioning_stream(
     reader = spark.readStream.schema(POSITIONING_REQUEST_SCHEMA)
     if max_files_per_trigger is not None:
         # bound the arrival batch (the analog of the reference's Kafka
-        # max-poll / SQS batch limits); also gives the latency bench one
-        # micro-batch per request file
+        # max-poll / SQS batch limits), and with it the driver's share
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    # one task per micro-batch: a serving batch holds far less kernel work
-    # than one Python task's fixed cost (module docstring), and the file
-    # source would split even a few small files into ~one task per core.
-    # coalesce is narrow, so the plan stays shuffle-free and stateless.
-    requests = reader.json(request_zone).coalesce(1)
+    observations = gated_observations(reader.json(request_zone))
 
-    ap_lookup = known_ap_lookup(access_points).cache()
-    ap_lookup.count()  # materialize now, not in the first micro-batch
-    answers = position_requests_from_lookup(requests, ap_lookup, with_reasons=with_reasons)
+    ap_index = known_ap_lookup(access_points).toArrow().to_pandas()
+    kernel = make_onepass_kernel(
+        selection_info_by_context(spark) if with_reasons else None, "auto"
+    )
+    schema = to_arrow_schema(answer_schema(with_reasons))
+    try:
+        fs, root = pafs.FileSystem.from_uri(out_path)
+    except pa.ArrowInvalid:  # a relative local path, as Spark's writer takes
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(out_path)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is AT-LEAST-once: a batch that fails after the
-        # write but before the checkpoint commit REPLAYS. Writing each
-        # batch to its own batch_id=N partition directory with overwrite
-        # makes the replay idempotent — the second attempt replaces the
-        # first attempt's files instead of appending duplicates, so the
-        # sink as a whole is effectively exactly-once.
-        batch_df.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        rows = batch_df.toArrow().to_pandas().merge(ap_index, on="mac_addr", how="inner")
+        answers = pd.concat(list(kernel([rows[list(KERNEL_INPUT)]])), ignore_index=True)
+        table = pa.Table.from_pandas(answers, schema=schema, preserve_index=False)
+        batch_dir = f"{root}/batch_id={batch_id}"
+        fs.create_dir(batch_dir)
+        fs.delete_dir_contents(batch_dir)  # a replay replaces the first attempt
+        pq.write_table(table, f"{batch_dir}/part-00000.parquet", filesystem=fs)
+        with fs.open_output_stream(f"{batch_dir}/_SUCCESS"):
+            pass
 
     writer = (
-        answers.writeStream.foreachBatch(_commit)
+        observations.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
