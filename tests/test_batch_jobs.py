@@ -256,6 +256,67 @@ def test_lof_scores(measurements):
     assert by_truth[True] > by_truth[False]          # planted outliers score higher
 
 
+def test_lof_ignores_row_order(spark):
+    """A lattice AP is full of equidistant neighbours, so a kNN that breaks
+    ties by row position scores the same points differently per arrival
+    order. Twenty copies of one 60-point lattice, each shuffled, must get
+    identical scores point for point."""
+    import random
+
+    points = [
+        (f"p{i:02d}", 40.0 + (i // 10) * 5e-5, -75.0 + (i % 10) * 5e-5) for i in range(60)
+    ]
+    rows = []
+    for copy in range(20):
+        order = list(points)
+        random.Random(copy).shuffle(order)
+        rows += [(f"ap{copy:02d}", pid, lat, lon) for pid, lat, lon in order]
+    df = spark.createDataFrame(rows, "bssid string, id string, latitude double, longitude double")
+    scores: dict[str, set[float]] = {}
+    for r in local_outlier_factor(df, max_rows_per_ap=None).collect():
+        scores.setdefault(r["id"], set()).add(r["lof"])
+    assert len(scores) == 60
+    assert all(len(s) == 1 for s in scores.values()), {
+        pid: sorted(s) for pid, s in scores.items() if len(s) > 1
+    }
+
+
+def test_dbscan_labels_border_noise_and_lone_point():
+    """Border points take the smallest label among their core neighbours
+    (not the cluster their row meets first), points whose neighbours are
+    all non-core are noise, and labels follow the points under any row
+    order."""
+    import numpy as np
+
+    from wifi_location_data_pipeline_spark.operators.relocation import dbscan_labels
+
+    pts = {
+        # cluster A (ids 10-13) first in row order, cluster B (ids 3-6) last
+        10: (0.0, 0.0), 11: (1.0, 0.0), 12: (0.0, 1.0), 13: (1.0, 1.0),
+        20: (2.5, 0.0),   # border: 1.5 from A's (1,0) and from B's (4,0)
+        21: (9.0, 0.0), 22: (10.0, 0.0),  # a pair, neither core: noise
+        0: (10.0, 10.0),  # far from everything: noise
+        3: (4.0, 0.0), 4: (5.0, 0.0), 5: (4.0, 1.0), 6: (5.0, 1.0),
+    }
+    want_label = {
+        10: 10, 11: 10, 12: 10, 13: 10, 20: 3, 21: -1, 22: -1, 0: -1, 3: 3, 4: 3, 5: 3, 6: 3,
+    }
+    want_core = {i: i in (3, 4, 5, 6, 10, 11, 12, 13) for i in pts}
+    ids = list(pts)
+    for perm in (ids, ids[::-1], sorted(ids)):
+        xy = np.array([pts[i] for i in perm])
+        label, core = dbscan_labels(xy, np.array(perm), eps=1.5, min_pts=4)
+        assert dict(zip(perm, label.tolist())) == {i: want_label[i] for i in perm}
+        assert dict(zip(perm, core.tolist())) == {i: want_core[i] for i in perm}
+
+    # a lone point is noise unless min_pts admits a cluster of one
+    lone = np.array([[0.0, 0.0]])
+    label, core = dbscan_labels(lone, np.array([7]), eps=1.5, min_pts=4)
+    assert label.tolist() == [-1] and core.tolist() == [False]
+    label, core = dbscan_labels(lone, np.array([7]), eps=1.5, min_pts=1)
+    assert label.tolist() == [7] and core.tolist() == [True]
+
+
 def test_kalman_update_fusion_and_relocation(spark):
     prior = spark.createDataFrame(
         [("ap1", 40.0, -74.0, 100.0), ("ap2", 41.0, -75.0, 25.0)],

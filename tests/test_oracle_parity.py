@@ -43,6 +43,65 @@ def test_registry_window_invariant():
     assert set(_TAIL) == set(names[len(names) - len(_TAIL):])
 
 
+# Gate queries whose Spark side runs product code, so the DuckDB oracle checks
+# what the product runs. Extend this list as gate queries move onto product
+# operators; never shrink it.
+GATE_ON_PRODUCT = [
+    "codec_roundtrip",
+    "comparison_scenarios",
+    "ensemble_closed_form",
+    "position_combiner_robust",
+    "selection_reasons",
+    "lof_closed_form",
+    "dbscan_closed_form",
+]
+_PKG = "wifi_location_data_pipeline_spark."
+_PRODUCT = tuple(_PKG + m + "." for m in ("operators", "positioning", "sources"))
+_HARNESS = {_PKG + "sources.tables"}  # registry corpus views, not product code
+
+
+def _product_refs(fn) -> set[str]:
+    """Product modules that ``fn``'s code imports or calls into, following
+    nested functions and the plans/ helpers it calls (static: reads the
+    bytecode, runs nothing)."""
+    import dis
+    import types
+
+    refs: set[str] = set()
+    seen: set = set()
+    todo = [(fn.__code__, fn.__globals__)]
+    while todo:
+        code, glb = todo.pop()
+        if code in seen:
+            continue
+        seen.add(code)
+        todo += [(c, glb) for c in code.co_consts if isinstance(c, types.CodeType)]
+        for ins in dis.get_instructions(code):
+            if ins.opname == "IMPORT_NAME":
+                mod = ins.argval
+            elif ins.opname == "LOAD_GLOBAL" and callable(glb.get(ins.argval)):
+                target = glb[ins.argval]
+                mod = getattr(target, "__module__", "") or ""
+                if mod.startswith(_PKG + "plans.") and hasattr(target, "__code__"):
+                    todo.append((target.__code__, target.__globals__))
+            else:
+                continue
+            if mod.startswith(_PRODUCT) and mod not in _HARNESS:
+                refs.add(mod)
+    return refs
+
+
+@pytest.mark.parametrize("name", GATE_ON_PRODUCT)
+def test_gate_query_reaches_product_code(name):
+    """The Spark side of each listed gate query must reach operators/,
+    positioning/ or sources/ (beyond the corpus views): a query that falls
+    back to a registry-only twin would leave the oracle checking code no
+    product path runs."""
+    fn = QUERIES[name].spark_fn
+    assert fn is not None, f"{name} has no Spark function"
+    assert _product_refs(fn), f"{name} reaches no product module"
+
+
 def test_bm25_twin_matches_declared_sql(spark, sf_dir, monkeypatch):
     """The tokenize-once spark twin must reproduce the declared SQL exactly.
 

@@ -109,7 +109,6 @@ SHADOW_SIGMA_HIGH = 5.0
 
 # Trilateration (TrilaterationAlgorithm.java:80-356,1034-1123)
 TRILAT_MIN_APS = 3
-TRILAT_METERS_PER_DEG = 111_000.0        # :87-94
 TRILAT_CONF_SIGNAL_COEF = 0.7
 TRILAT_CONF_APCOUNT_COEF = 0.3
 TRILAT_CONF_MIN = 0.55

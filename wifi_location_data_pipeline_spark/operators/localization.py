@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wifi_location_data_pipeline_spark import config as C
+from wifi_location_data_pipeline_spark.functions.geo import METERS_PER_DEG
+from wifi_location_data_pipeline_spark.positioning.numeric import mle_ascent
 
 AP_LOCATION_SCHEMA = T.StructType(
     [
@@ -45,8 +47,6 @@ AP_LOCATION_SCHEMA = T.StructType(
         T.StructField("measurement_count", T.LongType()),
     ]
 )
-
-METERS_PER_DEG = 111_000.0
 
 
 def tier_routing(measurements: DataFrame, cfg: C.EngineConfig = C.DEFAULT_CONFIG) -> DataFrame:
@@ -179,10 +179,11 @@ def _mle_localize_group(pdf: pd.DataFrame) -> pd.DataFrame:
 def _mle_localize_batch(groups: list[dict]) -> list[list]:
     """Lockstep-vectorized twin of ``_mle_localize_group`` across many APs.
 
-    Same batching rationale as positioning/numeric._mle_batch: the ~100
-    gradient iterations per AP dominate when run sequentially per group.
-    Padded (R×K) tensors with per-AP learning rates and convergence masks;
-    element-wise ops keep per-AP math identical to the sequential reference.
+    The ~100 gradient iterations per AP dominate when run sequentially per
+    group, so the APs become padded (R×K) tensors (per-row n, σ and
+    reference RSSI; padding weight 0) and run the ascent positioning's
+    ``_mle_batch`` runs too, ``positioning.numeric.mle_ascent``; element-wise
+    ops keep per-AP math identical to the sequential reference.
 
     Bayesian tier (doc :163-169): a group may carry ``prior`` =
     (lat, lon, p_var_m2) — the AP's persisted state (x̂, P). The objective
@@ -233,83 +234,9 @@ def _mle_localize_batch(groups: list[dict]) -> list[list]:
     sw0 = np.maximum(w0.sum(axis=1), 1e-300)
     px = (ax * w0).sum(axis=1) / sw0
     py = (ay * w0).sum(axis=1) / sw0
-    kgrad = 10.0 * n_exp / math.log(10.0)
-
-    # Working-set ascent with compaction + (d, err) reuse between the
-    # likelihood and gradient evaluations — same rework as
-    # positioning/numeric._mle_batch, bit-identical per AP (element-wise
-    # ops; valid is exactly 0/1 so folding it into qv is exact). Without
-    # compaction the loop runs all iterations at full width for the
-    # slowest straggler AP.
-    sig2 = sigma**2
-    two_sig2 = 2.0 * sigma**2
-    qv = qw * valid
-
-    best_x_full, best_y_full = px.copy(), py.copy()
-    widx = np.arange(R)
-    ax_w, ay_w, rssi_w, ref_w, nexp_w = ax, ay, rssi, ref, n_exp
-    sig2_w, two_sig2_w, qv_w, kgrad_w = sig2, two_sig2, qv, kgrad
-    ppx_w, ppy_w, ipv_w = ppx, ppy, ipv
-    cur_x, cur_y = px.copy(), py.copy()
-    best_x, best_y = px.copy(), py.copy()
-
-    def eval_point(x, y):
-        d = np.maximum(np.hypot(ax_w - x[:, None], ay_w - y[:, None]), 1.0)
-        err = rssi_w - (ref_w - 10.0 * nexp_w * np.log10(d))
-        ll = np.sum(-(err**2) / two_sig2_w * qv_w, axis=1)
-        # Gaussian log-prior (zero when ipv=0): MAP = MLE + prior pull
-        ll = ll - 0.5 * ipv_w * ((x - ppx_w) ** 2 + (y - ppy_w) ** 2)
-        return d, err, ll
-
-    d_cur, err_cur, best_ll = eval_point(cur_x, cur_y)
-    lr = np.ones(R)
-    frozen = np.zeros(R, dtype=bool)
-    for _ in range(C.MLE_MAX_ITERATIONS):
-        kk = err_cur / sig2_w * qv_w * kgrad_w / (d_cur**2)
-        gx = np.sum(kk * (ax_w - cur_x[:, None]), axis=1) + ipv_w * (ppx_w - cur_x)
-        gy = np.sum(kk * (ay_w - cur_y[:, None]), axis=1) + ipv_w * (ppy_w - cur_y)
-        gn = np.hypot(gx, gy)
-        dead = ~frozen & (gn < 1e-12)
-        safe = np.where(gn > 0, gn, 1.0)
-        step_x = cur_x + lr * gx / safe
-        step_y = cur_y + lr * gy / safe
-        d_s, err_s, ll = eval_point(step_x, step_y)
-        improved = ~frozen & ~dead & (ll > best_ll)
-        best_ll = np.where(improved, ll, best_ll)
-        best_x = np.where(improved, step_x, best_x)
-        best_y = np.where(improved, step_y, best_y)
-        cur_x = np.where(improved, step_x, cur_x)
-        cur_y = np.where(improved, step_y, cur_y)
-        imp2 = improved[:, None]
-        d_cur = np.where(imp2, d_s, d_cur)
-        err_cur = np.where(imp2, err_s, err_cur)
-        lr = np.where(frozen | dead, lr, np.where(improved, lr * 1.2, lr * 0.5))
-        frozen |= dead | (lr < C.MLE_CONVERGENCE_M)
-        n_frozen = int(frozen.sum())
-        if n_frozen == len(widx):
-            break
-        if n_frozen * 8 >= len(widx):
-            done = frozen
-            best_x_full[widx[done]] = best_x[done]
-            best_y_full[widx[done]] = best_y[done]
-            keep = ~done
-            widx = widx[keep]
-            ax_w, ay_w, rssi_w, ref_w, nexp_w = (
-                ax_w[keep], ay_w[keep], rssi_w[keep], ref_w[keep], nexp_w[keep],
-            )
-            sig2_w, two_sig2_w, qv_w, kgrad_w = (
-                sig2_w[keep], two_sig2_w[keep], qv_w[keep], kgrad_w[keep],
-            )
-            ppx_w, ppy_w, ipv_w = ppx_w[keep], ppy_w[keep], ipv_w[keep]
-            d_cur, err_cur = d_cur[keep], err_cur[keep]
-            cur_x, cur_y = cur_x[keep], cur_y[keep]
-            best_x, best_y, best_ll = best_x[keep], best_y[keep], best_ll[keep]
-            lr = lr[keep]
-            frozen = frozen[keep]
-    if len(widx):
-        best_x_full[widx] = best_x
-        best_y_full[widx] = best_y
-    best_x, best_y = best_x_full, best_y_full
+    best_x, best_y = mle_ascent(
+        ax, ay, rssi, ref, n_exp, sigma**2, qw * valid, px, py, (ppx, ppy, ipv)
+    )
 
     out = []
     for r, g in enumerate(groups):

@@ -5,12 +5,16 @@
   (a) ``relocation_by_time_split`` — cheap SQL change-point: compare the
       centroid of the oldest vs newest halves of the AP's measurements; a gap
       ≫ the cloud's own spread flags relocation. One shuffle, any scale.
-  (b) ``relocation_by_dbscan`` — per-AP DBSCAN (pandas, no sklearn) finding
-      ≥2 dense spatial clusters separated in time; precise but Python-tier,
-      run only on candidates from (a).
-- LOF (doc :113-115): density-based local outliers per AP, kNN implemented in
-  NumPy inside applyInPandas; an optional refinement tier after the global
-  MAD pass (operators/outliers.py).
+  (b) ``relocation_by_dbscan`` — per-AP DBSCAN (``dbscan_labels``, NumPy,
+      no sklearn) finding ≥2 dense spatial clusters separated in time;
+      precise but Python-tier, run only on candidates from (a).
+- LOF (doc :113-115): density-based local outliers per AP (``lof_scores``,
+  NumPy kNN inside applyInPandas); an optional refinement tier after the
+  global MAD pass (operators/outliers.py).
+
+``lof_scores`` and ``dbscan_labels`` are the package's only LOF and DBSCAN
+bodies: the registry's ``lof_closed_form`` and ``dbscan_closed_form`` run
+them too, so the DuckDB oracle checks the kernels these operators run.
 """
 
 from __future__ import annotations
@@ -21,9 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wifi_location_data_pipeline_spark.functions.geo import haversine_m
-
-METERS_PER_DEG = 111_000.0
+from wifi_location_data_pipeline_spark.functions.geo import METERS_PER_DEG, haversine_m
 
 
 def relocation_by_time_split(measurements: DataFrame, gap_factor: float = 3.0, min_gap_m: float = 100.0) -> DataFrame:
@@ -80,47 +82,71 @@ _DBSCAN_SCHEMA = T.StructType(
 )
 
 
-def _dbscan_group(pdf: pd.DataFrame, eps_m: float = 75.0, min_pts: int = 5) -> pd.DataFrame:
-    """Plain-NumPy DBSCAN over one AP's points; relocated = ≥2 clusters whose
-    time ranges are essentially disjoint (bimodal in space AND time)."""
-    bssid = pdf["bssid"].iloc[0]
+def _ap_xy(pdf: pd.DataFrame) -> np.ndarray:
+    """One AP's points in local meters around their mean position."""
     lat = pdf["latitude"].to_numpy(float)
     lon = pdf["longitude"].to_numpy(float)
-    ts = pdf["measurement_timestamp"].to_numpy(float)
-    n = len(pdf)
     lat0 = float(np.mean(lat))
     x = (lon - float(np.mean(lon))) * METERS_PER_DEG * np.cos(np.radians(lat0))
     y = (lat - lat0) * METERS_PER_DEG
-    pts = np.column_stack([x, y])
-    d2 = ((pts[:, None, :] - pts[None, :, :]) ** 2).sum(-1)
-    neigh = d2 <= eps_m**2
+    return np.column_stack([x, y])
 
-    labels = np.full(n, -1)
-    cluster = 0
-    for i in range(n):
-        if labels[i] != -1 or neigh[i].sum() < min_pts:
-            continue
-        # BFS expand
-        labels[i] = cluster
-        frontier = [i]
-        while frontier:
-            j = frontier.pop()
-            for k in np.flatnonzero(neigh[j]):
-                if labels[k] == -1:
-                    labels[k] = cluster
-                    if neigh[k].sum() >= min_pts:
-                        frontier.append(k)
-        cluster += 1
+
+def _pair_dist(xy: np.ndarray) -> np.ndarray:
+    """n×n Euclidean distances, self-pairs at +inf."""
+    diff = xy[:, None, :] - xy[None, :, :]
+    d = np.sqrt(diff[..., 0] * diff[..., 0] + diff[..., 1] * diff[..., 1])
+    np.fill_diagonal(d, np.inf)
+    return d
+
+
+def dbscan_labels(
+    xy: np.ndarray, ids: np.ndarray, eps: float, min_pts: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Deterministic DBSCAN* over one point set: (cluster label, is_core).
+
+    A point is core iff |N_eps| + 1 ≥ ``min_pts``, N_eps being the other
+    points at distance ≤ ``eps``. A core's label is the smallest core id in
+    its component of the core eps-graph; a border point takes the smallest
+    label among its core neighbours; noise is −1. Labels depend only on the
+    points and ``ids`` (distinct int64), never on row order. Both the
+    relocation operator and the ``dbscan_closed_form`` gate run this."""
+    ids = np.asarray(ids, dtype=np.int64)
+    nbrs = _pair_dist(xy) <= eps
+    core = nbrs.sum(axis=1) + 1 >= min_pts
+    none = np.iinfo(np.int64).max
+    # min-id propagation over core-core edges (self included) to a fixpoint
+    edges = nbrs & core[:, None] & core[None, :]
+    np.fill_diagonal(edges, core)
+    label = np.where(core, ids, none)
+    while True:
+        nxt = np.where(edges, label[None, :], none).min(axis=1, initial=none)
+        if np.array_equal(nxt, label):
+            break
+        label = nxt
+    border = np.where(nbrs & core[None, :], label[None, :], none).min(axis=1, initial=none)
+    label = np.where(core, label, border)
+    return np.where(label == none, -1, label), core
+
+
+def _dbscan_group(pdf: pd.DataFrame, eps_m: float = 75.0, min_pts: int = 5) -> pd.DataFrame:
+    """DBSCAN (``dbscan_labels``) over one AP's points, ids = row positions;
+    relocated = ≥2 clusters whose time ranges are essentially disjoint
+    (bimodal in space AND time)."""
+    bssid = pdf["bssid"].iloc[0]
+    ts = pdf["measurement_timestamp"].to_numpy(float)
+    labels, _ = dbscan_labels(_ap_xy(pdf), np.arange(len(pdf)), eps_m, min_pts)
+    clusters = np.unique(labels[labels >= 0])
 
     relocated = False
-    if cluster >= 2:
-        ranges = [
-            (ts[labels == c].min(), ts[labels == c].max()) for c in range(cluster)
-        ]
-        ranges.sort()
+    if len(clusters) >= 2:
+        ranges = sorted((ts[labels == c].min(), ts[labels == c].max()) for c in clusters)
         # disjoint-in-time clusters → the AP moved between them
         relocated = all(b0 > a1 for (_, a1), (b0, _) in zip(ranges, ranges[1:]))
-    return pd.DataFrame([[bssid, int(cluster), bool(relocated)]], columns=[f.name for f in _DBSCAN_SCHEMA.fields])
+    return pd.DataFrame(
+        [[bssid, len(clusters), bool(relocated)]],
+        columns=[f.name for f in _DBSCAN_SCHEMA.fields],
+    )
 
 
 def relocation_by_dbscan(
@@ -154,24 +180,29 @@ _LOF_SCHEMA = T.StructType(
 )
 
 
-def _lof_group(pdf: pd.DataFrame, k: int = 10) -> pd.DataFrame:
-    bssid = pdf["bssid"].iloc[0]
-    n = len(pdf)
+def lof_scores(xy: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Local Outlier Factor of each point (≈1 inlier, ≫1 local outlier).
+
+    The k nearest neighbours are chosen by (distance, id), so ties resolve
+    by id and the scores never depend on row order; then reach-dist → lrd →
+    LOF. Up to k + 1 points every score is 1.0. Both the operator and the
+    ``lof_closed_form`` gate run this."""
+    n = len(xy)
     if n <= k + 1:
-        return pd.DataFrame({"bssid": pdf["bssid"], "id": pdf["id"], "lof": 1.0})
-    lat = pdf["latitude"].to_numpy(float)
-    lon = pdf["longitude"].to_numpy(float)
-    lat0 = float(np.mean(lat))
-    x = (lon - float(np.mean(lon))) * METERS_PER_DEG * np.cos(np.radians(lat0))
-    y = (lat - lat0) * METERS_PER_DEG
-    pts = np.column_stack([x, y])
-    d = np.sqrt(((pts[:, None, :] - pts[None, :, :]) ** 2).sum(-1))
-    np.fill_diagonal(d, np.inf)
-    idx = np.argsort(d, axis=1)[:, :k]
-    kdist = np.take_along_axis(d, idx[:, [k - 1]], axis=1)[:, 0]
-    reach = np.maximum(np.take_along_axis(d, idx, axis=1), kdist[idx])
+        return np.ones(n)
+    d = _pair_dist(xy)
+    # lexsort's LAST key is the primary one
+    idx = np.lexsort((np.broadcast_to(ids, (n, n)), d), axis=1)[:, :k]
+    drows = np.take_along_axis(d, idx, axis=1)
+    reach = np.maximum(drows, drows[:, k - 1][idx])
     lrd = 1.0 / np.maximum(reach.mean(axis=1), 1e-9)
-    lof = (lrd[idx].mean(axis=1)) / lrd
+    return lrd[idx].mean(axis=1) / lrd
+
+
+def _lof_group(pdf: pd.DataFrame, k: int = 10) -> pd.DataFrame:
+    pdf = pdf.sort_values("id", kind="stable")
+    # ids = positions in id order, so neighbour ties resolve by id
+    lof = lof_scores(_ap_xy(pdf), np.arange(len(pdf)), k)
     return pd.DataFrame({"bssid": pdf["bssid"], "id": pdf["id"], "lof": lof})
 
 

@@ -43,6 +43,7 @@ from wifi_location_data_pipeline_spark.plans.queries import (  # noqa: E402
 from wifi_location_data_pipeline_spark.plans.queries import (
     _fold_events_stats as _fold,
 )
+from wifi_location_data_pipeline_spark.positioning.onepass_kernel import _APC, _GQ, _SD, _SQ
 from wifi_location_data_pipeline_spark.positioning.selection import (
     ALGORITHMS,
     BASE_WEIGHTS,
@@ -650,11 +651,6 @@ register(
 # selection_reasons: selectAlgorithmsWithReasons over every factor combination
 # ---------------------------------------------------------------------------
 
-_AP_CLASSES = ("SINGLE_AP", "TWO_APS", "THREE_APS", "FOUR_PLUS_APS")
-_SQ_CLASSES = ("STRONG_SIGNAL", "MEDIUM_SIGNAL", "WEAK_SIGNAL", "VERY_WEAK_SIGNAL")
-_GEO_CLASSES = ("EXCELLENT_GDOP", "GOOD_GDOP", "FAIR_GDOP", "POOR_GDOP", "COLLINEAR")
-_DIST_CLASSES = ("UNIFORM_SIGNALS", "MIXED_SIGNALS", "SIGNAL_OUTLIERS")
-
 
 def selreason_ctx_sql(d: str) -> str:
     """480 contexts covering EVERY (ap x signal x geometry x distribution x
@@ -664,10 +660,10 @@ def selreason_ctx_sql(d: str) -> str:
     e = "event_id"
     return f"""
   SELECT CAST(event_id AS BIGINT) AS request_id,
-    {_pick(d, _AP_CLASSES, f"{e} % 4 + 1")} AS ap_count_class,
-    {_pick(d, _SQ_CLASSES, f"{intdiv(e, 4)} % 4 + 1")} AS signal_quality,
-    {_pick(d, _GEO_CLASSES, f"{intdiv(e, 16)} % 5 + 1")} AS geometric_quality,
-    {_pick(d, _DIST_CLASSES, f"{intdiv(e, 80)} % 3 + 1")} AS signal_distribution,
+    {_pick(d, _APC, f"{e} % 4 + 1")} AS ap_count_class,
+    {_pick(d, _SQ, f"{intdiv(e, 4)} % 4 + 1")} AS signal_quality,
+    {_pick(d, _GQ, f"{intdiv(e, 16)} % 5 + 1")} AS geometric_quality,
+    {_pick(d, _SD, f"{intdiv(e, 80)} % 3 + 1")} AS signal_distribution,
     ({intdiv(e, 240)} % 2) = 1 AS all_very_weak
   FROM events WHERE event_id < 480
 """

@@ -36,6 +36,13 @@ from wifi_location_data_pipeline_spark.plans.dialect import (
     regexp_like,
     ts_expr,
 )
+from wifi_location_data_pipeline_spark.positioning.selection import (
+    ALGORITHMS,
+    BASE_WEIGHTS,
+    DISTRIBUTION_MULT,
+    GEOMETRY_MULT,
+    SIGNAL_MULT,
+)
 
 # ---------------------------------------------------------------------------
 # Shared derivation: a deterministic wifi-measurement analog from `events`.
@@ -1619,17 +1626,19 @@ register(
 )
 
 
+_LOF_K = 5
+
+
 def _lof_sql(d: str) -> str:
-    """Local Outlier Factor in pure SQL (FRAMEWORK:113-115; the pandas
-    implementation in operators/relocation.py:139 is the production tier).
+    """Local Outlier Factor in pure SQL (FRAMEWORK:113-115; the oracle of
+    ``operators.relocation.lof_scores``, the kernel the product runs).
     Per AP: cap to 40 points (the reference's LIMIT-per-query lookback
     bound, so pair count is O(cap²)=1600/AP at ANY corpus size), project
     to meters around the AP's exact lattice anchor (constants, not an
     AVG — no cross-engine summation-order risk in the kNN ordering),
     k=5 nearest by (distance, id) (deterministic ties), then the textbook
-    reach-dist/lrd/LOF chain. pytest cross-checks this SQL against the
-    applyInPandas implementation on the same capped input."""
-    k = 5
+    reach-dist/lrd/LOF chain."""
+    k = _LOF_K
     return f"""
 WITH m AS ({measurements_cte(d)}),
 capped AS (
@@ -1690,44 +1699,28 @@ FROM lof
 
 
 def _lof_closed_spark_fn(spark, sf_dir):
-    """Spark side of lof_closed_form: the same LOF definition as the SQL
-    oracle (lattice anchor, k=5 nearest by (dist, event_id), reach-dist/
-    lrd/LOF, half-up 4-decimal rounding) executed as ONE applyInPandas
-    kernel per AP instead of the SQL's 7-shuffle pairs/knn/kdist/reach/
-    lrd/lof chain — the round-3 verdict's fuse-the-stages item. x/y come
-    from the SAME generated SQL fragment the oracle uses, so the kernel's
-    float64 math sees bit-identical inputs; ≤40 points per group bounds
-    every task."""
+    """Spark side of lof_closed_form: the relocation operator's LOF kernel
+    (``operators.relocation.lof_scores``: k nearest by (dist, event_id),
+    reach-dist/lrd/LOF) run as ONE applyInPandas call per AP instead of the
+    SQL's 7-shuffle pairs/knn/kdist/reach/lrd/lof chain, then half-up
+    4-decimal rounding. x/y come from the SAME generated SQL fragment the
+    oracle uses, so the kernel's float64 math sees bit-identical inputs;
+    ≤40 points per group bounds every task."""
     import numpy as np
     import pandas as pd
 
+    from wifi_location_data_pipeline_spark.operators.relocation import lof_scores
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
     pts = spark.sql(f"WITH {_capped_pts_sql(SPARK)} SELECT * FROM pts")
-    k = 5
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
         ids = pdf["event_id"].to_numpy(np.int64)
-        if n == 1:
+        if len(pdf) == 1:
             # the SQL emits nothing for single-point APs (no pairs)
             return pd.DataFrame({"ap_id": [], "event_id": [], "lof": []})
-        if n <= k + 1:
-            return pd.DataFrame(
-                {"ap_id": pdf["ap_id"], "event_id": ids, "lof": 1.0}
-            )
-        xy = pdf[["x", "y"]].to_numpy(np.float64)
-        diff = xy[:, None, :] - xy[None, :, :]
-        d = np.sqrt(diff[..., 0] * diff[..., 0] + diff[..., 1] * diff[..., 1])
-        np.fill_diagonal(d, np.inf)
-        # k nearest by (dist, o_id): lexsort's LAST key is primary
-        idx = np.lexsort((np.broadcast_to(ids, (n, n)), d), axis=1)[:, :k]
-        drows = np.take_along_axis(d, idx, axis=1)
-        kd = drows[:, k - 1]
-        reach = np.maximum(drows, kd[idx])
-        lrd = 1.0 / np.maximum(reach.mean(axis=1), 1e-9)
-        lof = lrd[idx].mean(axis=1) / lrd
+        lof = lof_scores(pdf[["x", "y"]].to_numpy(np.float64), ids, _LOF_K)
         lof = np.floor(lof * 10000.0 + 0.5) / 10000.0
         return pd.DataFrame({"ap_id": pdf["ap_id"], "event_id": ids, "lof": lof})
 
@@ -1741,11 +1734,10 @@ register(
     "Local Outlier Factor over per-AP capped points (k=5, cap 40 — pair "
     "count bounded at 1600/AP at any corpus size): kNN by (distance, id), "
     "reach-dist/lrd/LOF chain, deterministic projection anchor. Spark side "
-    "is one fused applyInPandas kernel per AP; the oracle is the full "
-    "pure-SQL pairs/knn/kdist/reach/lrd/lof chain, so the driver "
-    "VALUE-checks the operator cross-engine (the production "
-    "applyInPandas tier in operators/relocation.py is pytest-cross-checked "
-    "against it).",
+    "runs the relocation operator's LOF kernel (operators/relocation.py "
+    "lof_scores) once per AP; the oracle is the full pure-SQL "
+    "pairs/knn/kdist/reach/lrd/lof chain, so the correctness gate "
+    "VALUE-checks the product kernel cross-engine.",
     sql=lambda d: None if d == SPARK else _lof_sql(d),
     spark_fn=_lof_closed_spark_fn,
 )
@@ -1835,64 +1827,28 @@ LEFT JOIN border_label bl ON bl.ap_id = p.ap_id AND bl.event_id = p.event_id
 
 
 def _dbscan_spark_fn(spark, sf_dir):
-    """Deterministic DBSCAN* per AP as applyInPandas over the capped points
-    — the production shape for FRAMEWORK:71-87's relocation clustering
-    (operators/relocation.py holds the relocation-specific variant): each
-    AP's ≤40 points solve independently in one bounded task, so the
-    operator scales with #APs, never points². Labels are canonical (min
-    core id per component; border = min core-neighbor label), matching the
-    recursive-CTE oracle exactly."""
-    import numpy as np
+    """Spark side of dbscan_closed_form: the relocation operator's DBSCAN*
+    kernel (``operators.relocation.dbscan_labels``) as applyInPandas over
+    the capped points with ``event_id`` as the ids: each AP's ≤40 points
+    solve independently in one bounded task, so the operator scales with
+    #APs, never points². Labels are canonical (min core id per component;
+    border = min core-neighbor label), matching the recursive-CTE oracle
+    exactly."""
     import pandas as pd
 
+    from wifi_location_data_pipeline_spark.operators.relocation import dbscan_labels
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
     pts = spark.sql(f"WITH {_capped_pts_sql(SPARK)} SELECT * FROM pts")
 
-    eps, min_pts = _DBSCAN_EPS, _DBSCAN_MIN_PTS
-
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["event_id"].to_numpy()
-        xy = pdf[["x", "y"]].to_numpy(float)
-        n = len(pdf)
-        dmat = np.sqrt(((xy[:, None, :] - xy[None, :, :]) ** 2).sum(-1))
-        np.fill_diagonal(dmat, np.inf)
-        nbrs = dmat <= eps
-        core = nbrs.sum(1) + 1 >= min_pts
-        # union-find over core-core edges, root = min id in component
-        parent = {int(ids[i]): int(ids[i]) for i in range(n) if core[i]}
-
-        def find(a):
-            r = a
-            while parent[r] != r:
-                r = parent[r]
-            while parent[a] != r:
-                parent[a], a = r, parent[a]
-            return r
-
-        ci = np.where(core)[0]
-        for i in ci:
-            for j in ci:
-                if nbrs[i, j]:
-                    ra, rb = find(int(ids[i])), find(int(ids[j]))
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-        cluster = np.full(n, -1, dtype=np.int64)
-        for i in ci:
-            cluster[i] = find(int(ids[i]))
-        for i in range(n):
-            if not core[i]:
-                labels = [cluster[j] for j in ci if nbrs[i, j]]
-                if labels:
-                    cluster[i] = min(labels)
+        cluster, core = dbscan_labels(
+            pdf[["x", "y"]].to_numpy(float), ids, _DBSCAN_EPS, _DBSCAN_MIN_PTS
+        )
         return pd.DataFrame(
-            {
-                "ap_id": pdf["ap_id"],
-                "event_id": ids,
-                "cluster": cluster,
-                "is_core": core,
-            }
+            {"ap_id": pdf["ap_id"], "event_id": ids, "cluster": cluster, "is_core": core}
         )
 
     return pts.groupBy("ap_id").applyInPandas(
@@ -1905,9 +1861,10 @@ register(
     "Deterministic DBSCAN* over per-AP capped points (eps 12 m, minPts 4): "
     "core = eps-degree threshold, clusters = components of the core "
     "eps-graph labeled by min core id, borders take the min core-neighbor "
-    "label, noise -1. Spark side is applyInPandas per AP (bounded 40-point "
-    "tasks — scales with #APs, never points²); the oracle rebuilds the "
-    "same components via recursive-CTE transitive closure, giving the "
+    "label, noise -1. Spark side runs the relocation operator's DBSCAN "
+    "kernel (operators/relocation.py dbscan_labels) per AP (bounded "
+    "40-point tasks — scales with #APs, never points²); the oracle rebuilds "
+    "the same components via recursive-CTE transitive closure, giving the "
     "DBSCAN operator a VALUE-checked row (FRAMEWORK:71-87).",
     sql=_dbscan_duck_sql,
     spark_fn=_dbscan_spark_fn,
@@ -3116,42 +3073,11 @@ FROM gdop
 """,
 )
 
-# SELECTION.md:31-74 weight matrices as Python dicts -> CASE expressions.
-# Round-1 joined four 24/30/18-row VALUES tables per algorithm; the matrices
-# are static, so they fold into pure CASE arithmetic over one exploded
-# 6-element algorithm list: ONE tiny lateral expansion, ZERO multiplier joins.
-_SEL_ALGOS = (
-    "proximity",
-    "rssi_ratio",
-    "weighted_centroid",
-    "trilateration",
-    "maximum_likelihood",
-    "log_distance",
-)
-_SEL_BASE_W = {
-    "SINGLE_AP": (1.0, 0.0, 0.0, 0.0, 0.0, 0.4),
-    "TWO_APS": (0.4, 1.0, 0.8, 0.0, 0.0, 0.5),
-    "THREE_APS": (0.3, 0.7, 0.8, 1.0, 0.0, 0.5),
-    "FOUR_PLUS_APS": (0.2, 0.5, 0.7, 0.8, 1.0, 0.4),
-}
-_SEL_SIG_W = {
-    "STRONG_SIGNAL": (0.9, 1.0, 1.0, 1.1, 1.2, 1.0),
-    "MEDIUM_SIGNAL": (0.7, 0.9, 1.0, 0.8, 0.9, 0.8),
-    "WEAK_SIGNAL": (0.4, 0.6, 0.8, 0.3, 0.5, 0.6),
-    "VERY_WEAK_SIGNAL": (0.5, 0.0, 0.0, 0.0, 0.0, 0.0),
-}
-_SEL_GEO_W = {
-    "EXCELLENT_GDOP": (1.0, 1.0, 1.0, 1.3, 1.2, 1.0),
-    "GOOD_GDOP": (1.0, 1.0, 1.1, 0.9, 1.1, 1.0),
-    "FAIR_GDOP": (1.0, 0.9, 1.2, 0.6, 0.9, 0.8),
-    "POOR_GDOP": (1.0, 0.8, 1.3, 0.3, 0.7, 0.7),
-    "COLLINEAR": (1.0, 0.7, 1.4, 0.0, 0.5, 0.6),
-}
-_SEL_DIST_W = {
-    "UNIFORM_SIGNALS": (1.0, 1.2, 1.0, 1.1, 0.9, 1.1),
-    "MIXED_SIGNALS": (0.7, 0.9, 1.2, 0.8, 1.3, 0.8),
-    "SIGNAL_OUTLIERS": (0.9, 0.7, 1.4, 0.5, 1.2, 0.8),
-}
+# SELECTION.md:31-74 weight matrices (positioning/selection.py's tables) ->
+# CASE expressions. Round-1 joined four 24/30/18-row VALUES tables per
+# algorithm; the matrices are static, so they fold into pure CASE arithmetic
+# over one exploded 6-element algorithm list: ONE tiny lateral expansion,
+# ZERO multiplier joins.
 
 
 def _sel_mult_case(
@@ -3164,7 +3090,7 @@ def _sel_mult_case(
         # and a decimal product leaks into the output type (hash mismatch vs
         # the DOUBLE oracle column) — same discipline as the engine's selection weight CASEs.
         inner = " ".join(
-            f"WHEN '{a}' THEN CAST({m} AS DOUBLE)" for a, m in zip(_SEL_ALGOS, mults)
+            f"WHEN '{a}' THEN CAST({m} AS DOUBLE)" for a, m in zip(ALGORITHMS, mults)
         )
         outer.append(f"WHEN '{klass}' THEN CASE {algo_col} {inner} END")
     return f"CASE {klass_col} {' '.join(outer)} END"
@@ -3173,7 +3099,7 @@ def _sel_mult_case(
 def _sel_algo_lateral(d: str) -> str:
     """Expand each ctx row into one row per algorithm (literal 6-list, no
     join): Spark LATERAL VIEW explode, DuckDB unnest-in-FROM."""
-    vals = ", ".join(f"'{a}'" for a in _SEL_ALGOS)
+    vals = ", ".join(f"'{a}'" for a in ALGORITHMS)
     if d == SPARK:
         return f"FROM ctx c LATERAL VIEW explode(array({vals})) t AS algorithm"
     return f"FROM ctx c, unnest([{vals}]) AS t(algorithm)"
@@ -3213,7 +3139,7 @@ def _selection_matrix_spark_sql(mx: int) -> str:
     per-user fold order vs the oracle's group order cannot flip any FLOOR.
     """
     lim = min(49, mx)
-    algos = ", ".join(f"'{a}'" for a in _SEL_ALGOS)
+    algos = ", ".join(f"'{a}'" for a in ALGORITHMS)
 
     def let(bind: str, var: str, body: str, i: str) -> str:
         return f"aggregate(array(0), {bind}, ({var}, {i}) -> {var}, {var} -> {body})"
@@ -3290,10 +3216,10 @@ def _selection_matrix_spark_sql(mx: int) -> str:
                  WHEN z1.gd < 6.0 THEN 'FAIR_GDOP'
                  ELSE 'POOR_GDOP' END)"""
     weight_expr = (
-        f"({_sel_mult_case('z2.ac', _SEL_BASE_W, 'a')})"
-        f" * ({_sel_mult_case('z2.sq', _SEL_SIG_W, 'a')})"
-        f" * ({_sel_mult_case('z2.gq', _SEL_GEO_W, 'a')})"
-        f" * ({_sel_mult_case('z2.sdist', _SEL_DIST_W, 'a')})"
+        f"({_sel_mult_case('z2.ac', BASE_WEIGHTS, 'a')})"
+        f" * ({_sel_mult_case('z2.sq', SIGNAL_MULT, 'a')})"
+        f" * ({_sel_mult_case('z2.gq', GEOMETRY_MULT, 'a')})"
+        f" * ({_sel_mult_case('z2.sdist', DISTRIBUTION_MULT, 'a')})"
     )
     sorted_bind = f"""array_sort(
       filter(
@@ -3487,10 +3413,10 @@ ctx AS (
 ),
 weighted AS (
   SELECT c.user_id, algorithm,
-    ({_sel_mult_case('c.ap_count_class', _SEL_BASE_W)})
-    * ({_sel_mult_case('c.signal_quality', _SEL_SIG_W)})
-    * ({_sel_mult_case('c.geometric_quality', _SEL_GEO_W)})
-    * ({_sel_mult_case('c.signal_distribution', _SEL_DIST_W)}) AS weight,
+    ({_sel_mult_case('c.ap_count_class', BASE_WEIGHTS)})
+    * ({_sel_mult_case('c.signal_quality', SIGNAL_MULT)})
+    * ({_sel_mult_case('c.geometric_quality', GEOMETRY_MULT)})
+    * ({_sel_mult_case('c.signal_distribution', DISTRIBUTION_MULT)}) AS weight,
     c.signal_quality
   {_sel_algo_lateral(d)}
 ),

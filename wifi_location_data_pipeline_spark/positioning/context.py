@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
+from wifi_location_data_pipeline_spark.functions.geo import METERS_PER_DEG
 
 
 def signal_context(observations: DataFrame) -> DataFrame:
@@ -125,8 +126,8 @@ def geometric_context(observations: DataFrame) -> DataFrame:
 
     # ---- GDOP: unit vectors from estimate (local-meters projection) ----
     with_est = aps.join(collinear.select("request_id", "est_lat", "est_lon"), "request_id")
-    dx = (F.col("ap_lon") - F.col("est_lon")) * 111_000.0 * F.cos(F.radians(F.col("est_lat")))
-    dy = (F.col("ap_lat") - F.col("est_lat")) * 111_000.0
+    dx = (F.col("ap_lon") - F.col("est_lon")) * METERS_PER_DEG * F.cos(F.radians(F.col("est_lat")))
+    dy = (F.col("ap_lat") - F.col("est_lat")) * METERS_PER_DEG
     r = F.sqrt(dx * dx + dy * dy)
     ux = dx / F.greatest(r, F.lit(1e-9))
     uy = dy / F.greatest(r, F.lit(1e-9))

@@ -5,8 +5,10 @@ they run as imperative NumPy per request (SURVEY.md §2.7/§2.10). Requests
 are bounded by the ≤20-observation limit, so per-request work is O(1).
 Two forms of each algorithm:
 
-- production: the batched twins ``_trilat_arrays`` and ``_mle_batch``
-  (lockstep MLE across requests), called by the one-pass kernel;
+- production: the batched twins ``_trilat_arrays`` and ``_mle_batch``,
+  called by the one-pass kernel. ``_mle_batch`` runs ``mle_ascent``, the
+  package's one lockstep MLE/MAP ascent loop, which the AP localization
+  tiers (operators/localization.py) run too;
 - reference: the sequential ``_trilaterate_group`` and ``_mle_group``, run
   per request group by ``numeric_positions_grouped`` in the multipass plan.
   tests/test_positioning.py::test_numeric_batched_matches_sequential ties
@@ -35,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from wifi_location_data_pipeline_spark import config as C
+from wifi_location_data_pipeline_spark.functions.geo import METERS_PER_DEG
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -49,7 +52,6 @@ RESULT_SCHEMA = T.StructType(
 )
 
 SPEED_OF_LIGHT = 299_792_458.0
-METERS_PER_DEG = 111_000.0
 
 
 def _distance_from_rssi(rssi: np.ndarray, freq_mhz: np.ndarray) -> np.ndarray:
@@ -264,15 +266,109 @@ def _mle_group(pdf: pd.DataFrame) -> list | None:
     return [out_lat, out_lon, altitude, float(accuracy), float(conf)]
 
 
+def mle_ascent(ax, ay, rssi, ref, n_exp, sig2, weight, px, py, prior=None):
+    """The lockstep MLE/MAP gradient ascent over R padded (R×K) problems —
+    the one loop positioning's ``_mle_batch`` and the localization tiers'
+    ``_mle_localize_batch`` share.
+
+    Per row it maximizes L = Σ −(rssi − (ref − 10·n_exp·log10 d))²/(2σ²)·weight
+    with d = max(‖a − pos‖, 1), from the start point (px, py). ``prior`` =
+    (ppx, ppy, 1/P) adds the Gaussian log-prior −‖pos − (ppx, ppy)‖²/(2P)
+    (MAP; a row with 1/P = 0 stays plain MLE). Schedule: a step of length lr
+    along the normalized gradient, lr ×1.2 on improvement and ×0.5 otherwise;
+    a row stops at a flat point (‖g‖ < 1e-12), at lr < C.MLE_CONVERGENCE_M or
+    after C.MLE_MAX_ITERATIONS. Padded entries carry weight 0. Returns the
+    best (x, y) per row.
+
+    Every op is element-wise per row, so each row gets the bits a sequential
+    run over that row alone would. That stays true under two savings:
+    - frozen rows leave the working set (compaction once 1/8 of it froze)
+      without changing the other rows' values; without compaction the loop
+      runs at full width for the slowest straggler, while typical batches
+      converge in ~20-40 iterations;
+    - the gradient at an unchanged point reuses the (d, err) of its last
+      evaluation (the same floats either way).
+    """
+    ten_n = 10.0 * n_exp
+    # per-element working set: ax, ay, rssi, ref, 10·n, ∂ scale, σ², 2σ², weight
+    el = [ax, ay, rssi, ref, ten_n, ten_n / math.log(10.0), sig2, 2.0 * sig2, weight]
+    pr = [] if prior is None else list(prior)  # per-row: ppx, ppy, 1/P
+
+    def eval_point(x, y):
+        ax_w, ay_w, rssi_w, ref_w, ten_w, _, _, two_sig2_w, w_w = el
+        d = np.maximum(np.hypot(ax_w - x[:, None], ay_w - y[:, None]), 1.0)
+        err = rssi_w - (ref_w - ten_w * np.log10(d))
+        ll = np.sum(-(err**2) / two_sig2_w * w_w, axis=1)
+        if pr:
+            ppx, ppy, ipv = pr
+            ll = ll - 0.5 * ipv * ((x - ppx) ** 2 + (y - ppy) ** 2)
+        return d, err, ll
+
+    best_x_full, best_y_full = px.copy(), py.copy()
+    widx = np.arange(len(px))
+    cur_x, cur_y = px.copy(), py.copy()
+    best_x, best_y = px.copy(), py.copy()
+    d_cur, err_cur, best_ll = eval_point(cur_x, cur_y)
+    lr = np.ones(len(px))
+    frozen = np.zeros(len(px), dtype=bool)  # converged rows awaiting compaction
+
+    for _ in range(C.MLE_MAX_ITERATIONS):
+        ax_w, ay_w, _, _, _, kgrad_w, sig2_w, _, w_w = el
+        kk = err_cur / sig2_w * w_w * kgrad_w / (d_cur**2)
+        gx = np.sum(kk * (ax_w - cur_x[:, None]), axis=1)
+        gy = np.sum(kk * (ay_w - cur_y[:, None]), axis=1)
+        if pr:
+            ppx, ppy, ipv = pr
+            gx = gx + ipv * (ppx - cur_x)
+            gy = gy + ipv * (ppy - cur_y)
+        gn = np.hypot(gx, gy)
+        dead = ~frozen & (gn < 1e-12)  # flat point: freeze at current best
+        safe_gn = np.where(gn > 0, gn, 1.0)
+        step_x = cur_x + lr * gx / safe_gn
+        step_y = cur_y + lr * gy / safe_gn
+        d_s, err_s, ll = eval_point(step_x, step_y)
+        improved = ~frozen & ~dead & (ll > best_ll)
+        best_ll = np.where(improved, ll, best_ll)
+        best_x = np.where(improved, step_x, best_x)
+        best_y = np.where(improved, step_y, best_y)
+        cur_x = np.where(improved, step_x, cur_x)
+        cur_y = np.where(improved, step_y, cur_y)
+        imp2 = improved[:, None]
+        d_cur = np.where(imp2, d_s, d_cur)
+        err_cur = np.where(imp2, err_s, err_cur)
+        lr = np.where(frozen | dead, lr, np.where(improved, lr * 1.2, lr * 0.5))
+        frozen |= dead | (lr < C.MLE_CONVERGENCE_M)
+        n_frozen = int(frozen.sum())
+        if n_frozen == len(widx):
+            break
+        # compact once a meaningful slice converged; tiny tails ride along
+        # (frozen rows are excluded from every update above, so carrying
+        # them a few extra iterations is wasted flops, never wrong values)
+        if n_frozen * 8 >= len(widx):
+            best_x_full[widx[frozen]] = best_x[frozen]
+            best_y_full[widx[frozen]] = best_y[frozen]
+            keep = ~frozen
+            widx = widx[keep]
+            el = [a[keep] for a in el]
+            pr = [a[keep] for a in pr]
+            d_cur, err_cur, cur_x, cur_y, best_x, best_y, best_ll, lr, frozen = (
+                a[keep]
+                for a in (d_cur, err_cur, cur_x, cur_y, best_x, best_y, best_ll, lr, frozen)
+            )
+    best_x_full[widx] = best_x
+    best_y_full[widx] = best_y
+    return best_x_full, best_y_full
+
+
 def _mle_batch(groups: list[dict]) -> list[list | None]:
     """Lockstep-vectorized twin of ``_mle_group`` over many requests.
 
     The sequential loop costs ~100 iterations × ~40 tiny-NumPy ops per
     request; across thousands of requests that dwarfs everything else in the
-    ensemble. Here every iteration updates ALL requests at once on padded
-    (R×K) tensors — per-request learning rates, best-so-far states, and
-    convergence freezing reproduce the sequential semantics exactly
-    (element-wise ops ⇒ bit-identical math per request).
+    ensemble. Here the requests become padded (R×K) tensors with n = 3 and
+    the RSSI-band σ, ``mle_ascent`` updates them all at once, and one
+    vectorized finalize turns the best points into results (element-wise ops
+    ⇒ bit-identical math per request).
 
     Each group dict: rssi, freq (MHz), lat, lon, conf, alt (np arrays).
     Returns one result list (or None when <4 APs) per group, same order.
@@ -325,84 +421,9 @@ def _mle_batch(groups: list[dict]) -> list[list | None]:
 
     wavelength = SPEED_OF_LIGHT / freq_hz
     ref_rssi = -20.0 * np.log10(4.0 * math.pi / wavelength)
-    kgrad = 10.0 * 3.0 / math.log(10.0)
-
-    # Working-set ascent with compaction + gradient reuse. Two facts keep
-    # this bit-identical per request to the plain lockstep loop (and hence
-    # to the sequential _mle_group):
-    #  - every op is element-wise per row, so dropping CONVERGED rows from
-    #    the tensors never changes the remaining rows' values;
-    #  - the gradient at an unchanged `cur` equals the previous iteration's
-    #    gradient inputs, so (d, err) from the last evaluation can be reused
-    #    instead of recomputed (same floats either way).
-    # Without compaction the loop runs all 100 iterations at full width for
-    # the slowest straggler; typical batches converge in ~20-40, so this is
-    # a 2-4x cut in tensor work.
-    sig2 = sigma**2
-    two_sig2 = 2.0 * sigma**2
-
-    best_x_full, best_y_full = px.copy(), py.copy()
-    widx = np.arange(R)
-    ax_w, ay_w, rssi_w, ref_w = ax, ay, rssi, ref_rssi
-    sig2_w, two_sig2_w, conf_w = sig2, two_sig2, conf
-    cur_x, cur_y = px.copy(), py.copy()
-    best_x, best_y = px.copy(), py.copy()
-
-    def eval_point(x, y):
-        d = np.maximum(np.hypot(ax_w - x[:, None], ay_w - y[:, None]), 1.0)
-        err = rssi_w - (ref_w - 30.0 * np.log10(d))
-        ll = np.sum(-(err**2) / two_sig2_w * conf_w, axis=1)
-        return d, err, ll
-
-    d_cur, err_cur, best_ll = eval_point(cur_x, cur_y)
-    lr = np.ones(R)
-    frozen = np.zeros(R, dtype=bool)  # converged rows awaiting compaction
-
-    for _ in range(100):  # MAX_OPTIMIZATION_ITERATIONS
-        kk = err_cur / sig2_w * conf_w * kgrad / (d_cur**2)
-        gx = np.sum(kk * (ax_w - cur_x[:, None]), axis=1)
-        gy = np.sum(kk * (ay_w - cur_y[:, None]), axis=1)
-        gn = np.hypot(gx, gy)
-        dead = ~frozen & (gn < 1e-12)  # flat point: freeze at current best
-        safe_gn = np.where(gn > 0, gn, 1.0)
-        step_x = cur_x + lr * gx / safe_gn
-        step_y = cur_y + lr * gy / safe_gn
-        d_s, err_s, ll = eval_point(step_x, step_y)
-        improved = ~frozen & ~dead & (ll > best_ll)
-        best_ll = np.where(improved, ll, best_ll)
-        best_x = np.where(improved, step_x, best_x)
-        best_y = np.where(improved, step_y, best_y)
-        cur_x = np.where(improved, step_x, cur_x)
-        cur_y = np.where(improved, step_y, cur_y)
-        imp2 = improved[:, None]
-        d_cur = np.where(imp2, d_s, d_cur)
-        err_cur = np.where(imp2, err_s, err_cur)
-        lr = np.where(frozen | dead, lr, np.where(improved, lr * 1.2, lr * 0.5))
-        frozen |= dead | (lr < 0.1)  # CONVERGENCE_THRESHOLD_METERS
-        n_frozen = int(frozen.sum())
-        if n_frozen == len(widx):
-            break
-        # compact once a meaningful slice converged; tiny tails ride along
-        # (frozen rows are excluded from every update above, so carrying
-        # them a few extra iterations is wasted flops, never wrong values)
-        if n_frozen * 8 >= len(widx):
-            done = frozen
-            best_x_full[widx[done]] = best_x[done]
-            best_y_full[widx[done]] = best_y[done]
-            keep = ~done
-            widx = widx[keep]
-            ax_w, ay_w = ax_w[keep], ay_w[keep]
-            rssi_w, ref_w = rssi_w[keep], ref_w[keep]
-            sig2_w, two_sig2_w, conf_w = sig2_w[keep], two_sig2_w[keep], conf_w[keep]
-            d_cur, err_cur = d_cur[keep], err_cur[keep]
-            cur_x, cur_y = cur_x[keep], cur_y[keep]
-            best_x, best_y, best_ll = best_x[keep], best_y[keep], best_ll[keep]
-            lr = lr[keep]
-            frozen = frozen[keep]
-    if len(widx):
-        best_x_full[widx] = best_x
-        best_y_full[widx] = best_y
-    best_x, best_y = best_x_full, best_y_full
+    best_x, best_y = mle_ascent(
+        ax, ay, rssi, ref_rssi, np.full((R, K), 3.0), sigma**2, conf, px, py
+    )
 
     # vectorized finalize: closed-form 2x2 GDOP (trace((HᵀH)⁻¹) = (a+c)/det)
     # over masked unit vectors — same math as _gdop without per-request

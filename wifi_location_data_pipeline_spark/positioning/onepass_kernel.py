@@ -41,6 +41,7 @@ from __future__ import annotations
 import numpy as np
 
 from wifi_location_data_pipeline_spark import config as C
+from wifi_location_data_pipeline_spark.functions.geo import METERS_PER_DEG
 from wifi_location_data_pipeline_spark.positioning.selection import (
     ALGORITHMS,
     BASE_WEIGHTS,
@@ -316,8 +317,8 @@ def compute_onepass(
         cov_lo = msum(dlat * dlon, ded) / n_aps
 
         # ---- unit-vector Gram matrix at the weighted estimate → GDOP ----
-        gx = (lon - est_lon[:, None]) * 111000.0 * np.cos(np.radians(est_lat))[:, None]
-        gy = (lat - est_lat[:, None]) * 111000.0
+        gx = (lon - est_lon[:, None]) * METERS_PER_DEG * np.cos(np.radians(est_lat))[:, None]
+        gy = (lat - est_lat[:, None]) * METERS_PER_DEG
         r = np.maximum(np.sqrt(gx * gx + gy * gy), 1e-9)
         ux, uy = gx / r, gy / r
         ga = msum(ux * ux, ded)

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-METERS_PER_DEG = 111_000.0
+from wifi_location_data_pipeline_spark.functions.geo import METERS_PER_DEG
 
 STATE_SCHEMA = T.StructType(
     [
