@@ -55,6 +55,13 @@ def req(rid, scans):
             "calculationDetail": True, "wifiScanResults": scans}
 
 
+def kernel_gate_pass(rdf):
+    """Request ids that pass the kernel's physics gate and yield rows."""
+    from wifi_location_data_pipeline_spark.positioning.onepass_kernel import gate_and_explode
+
+    return set(gate_and_explode(rdf.toArrow())["request_id"])
+
+
 def golden_ap_rows():
     return [
         {"mac_addr": m, "version": "1", "latitude": la, "longitude": lo, "altitude": al,
@@ -348,14 +355,12 @@ def test_numeric_batched_matches_sequential():
 
 
 def test_physics_gate_array_matches_rowwise(spark):
-    """The nested-array physics gate (onepass) must agree with the row-wise
-    groupBy gate on randomized scan sets dense in the boundary cases
-    (-100/-30 exact bounds, the >-50 strong gate, 45 dB spread edge)."""
+    """The kernel's nested-array physics gate (gate_and_explode) must agree
+    with the row-wise groupBy gate on randomized scan sets dense in the
+    boundary cases (-100/-30 exact bounds, the >-50 strong gate, 45 dB
+    spread edge)."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from wifi_location_data_pipeline_spark.positioning.onepass import physics_valid_expr
     from wifi_location_data_pipeline_spark.positioning.prepare import (
         explode_requests,
         physics_gate,
@@ -381,10 +386,7 @@ def test_physics_gate_array_matches_rowwise(spark):
                      "calculationDetail": False, "wifiScanResults": scans})
     rdf = spark.createDataFrame(reqs, POSITIONING_REQUEST_SCHEMA)
 
-    array_pass = {
-        r["requestId"]
-        for r in rdf.filter(physics_valid_expr(F.col("wifiScanResults"))).collect()
-    }
+    array_pass = kernel_gate_pass(rdf)
     rowwise_pass = {
         r["request_id"]
         for r in physics_gate(explode_requests(rdf)).select("request_id").distinct().collect()
@@ -644,14 +646,11 @@ def test_onepass_numeric_tier_off_matches_auto_and_enforces(spark, ap_df):
 
 
 def test_onepass_plan_is_one_job_one_exchange(spark, ap_df):
-    """Pin the kernel-side-pack plan shape: the whole ensemble is ONE job
-    with NO request_id exchange (gate, explode, broadcast AP join and the
-    derived projection are narrow; the kernel packs each request itself),
-    and the middle runs as a single MapInPandas — no interior cache, no
-    staged split, no numeric-count job (the round-2-5 staged-SQL design
-    needed all three)."""
-    import re
-
+    """Pin the plan shape: the whole ensemble is ONE job over the request
+    scan and a single MapInArrow, with no exchange and no join (the kernel
+    gates, explodes, joins the broadcast-variable AP index and packs each
+    request itself) — no interior cache, no staged split, no numeric-count
+    job (the round-2-5 staged-SQL design needed all three)."""
     from wifi_location_data_pipeline_spark.positioning.onepass import (
         position_requests_onepass,
     )
@@ -666,12 +665,8 @@ def test_onepass_plan_is_one_job_one_exchange(spark, ap_df):
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
     out = position_requests_onepass(rdf, ap_df)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # no exchange clustered on request_id (the AP-dim keep-first window
-    # exchanges on mac_addr inside the broadcast subtree — that one is
-    # allowed); exactly one Python stage
-    req_exchanges = re.findall(r"Exchange hashpartitioning\(request_id", plan)
-    assert len(req_exchanges) == 0, plan
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BroadcastHashJoin" not in plan and "Exchange" not in plan, plan
     assert {r["request_id"] for r in out.collect()} == {"c1", "c2"}
 
 
@@ -813,10 +808,11 @@ def test_onepass_matches_multipass_randomized(spark, seed, signals, multipass_an
     ids=["golden", "randomized_broad", "randomized_weak"],
 )
 def test_kernel_pack_across_arrow_batches(spark, ap_df, corpus):
-    """The kernel packs requests itself and carries a request that straddles
-    two Arrow batches into the next one. With 3-row batches nearly every
-    request straddles a boundary; the answers must be identical to a run at
-    the default batch size."""
+    """The kernel packs and solves each Arrow batch on its own; every
+    request is one input row, so none straddles two batches. With 3-request
+    batches the answers must be identical to a run at the default batch
+    size: a request's answer does not depend on which requests share its
+    batch."""
     if corpus == "golden":
         rdf = spark.createDataFrame(golden_requests() + extended_requests(),
                                     POSITIONING_REQUEST_SCHEMA)
@@ -968,17 +964,13 @@ def test_combiner_vectors_from_reference(spark):
 
 
 def test_physics_validator_vectors_from_reference(spark):
-    """SignalPhysicsValidatorTest.java ported vectors against the nested-
-    array gate (physics_valid_expr): single valid signal passes; -29.9 /
+    """SignalPhysicsValidatorTest.java ported vectors against the kernel's
+    nested-array gate (gate_and_explode): single valid signal passes; -29.9 /
     -100.1 out-of-range reject; the exact [-30, -100] boundary pair passes
     (the special case); same-frequency -40/-95 (55 dB spread with max >
     -50) rejects while -60/-75 passes; the SAME spread split across
     2412/5180 passes (per-frequency grouping); -45/-75/-80 on one channel
     passes at exactly 45 dB while -45/-95 (50 dB) rejects."""
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        physics_valid_expr,
-    )
-
     cases = [
         ("single_valid", [(-65.0, 2412)], True),
         ("too_strong", [(-29.9, 2412)], False),
@@ -996,12 +988,51 @@ def test_physics_validator_vectors_from_reference(spark):
         for name, scans, _ in cases
     ]
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    passed = {
-        r["requestId"]
-        for r in rdf.filter(physics_valid_expr(F.col("wifiScanResults"))).collect()
-    }
+    passed = kernel_gate_pass(rdf)
     for name, _, expect in cases:
         assert (name in passed) == expect, (name, expect)
+
+
+def test_kernel_gate_null_semantics(spark):
+    """The kernel's gate keeps the SQL gate's three-valued semantics: a
+    request passes only if its gate is TRUE. A NULL scan array is dropped;
+    an empty array passes but yields no rows; a NULL signalStrength, or a
+    NULL scan, drops its request (the range test is NULL, or FALSE when
+    another scan is out of range); NULL frequency is a group of its own;
+    MACs normalize to lower case with ``:``; n_scanned counts every scan,
+    one with a NULL mac too."""
+    from wifi_location_data_pipeline_spark.positioning.onepass_kernel import gate_and_explode
+
+    def sc(mac, s, f=2437):
+        return {"macAddress": mac, "signalStrength": s, "frequency": f,
+                "ssid": "t", "linkSpeed": None, "channelWidth": None}
+
+    requests = [
+        req("null_array", None),
+        req("empty_array", []),
+        req("null_rssi", [sc("aa:00:00:00:00:01", -60.0), sc("aa:00:00:00:00:02", None)]),
+        req("null_rssi_and_out_of_range", [sc("aa:00:00:00:00:03", None),
+                                           sc("aa:00:00:00:00:04", -20.0)]),
+        req("null_scan", [sc("aa:00:00:00:00:05", -60.0), None]),
+        # -40 and -95 would fail as one group; a NULL frequency splits them
+        req("null_freq_group", [sc("aa:00:00:00:00:06", -40.0),
+                                sc("aa:00:00:00:00:07", -95.0, None)]),
+        req("null_freq_group_spread", [sc("aa:00:00:00:00:08", -40.0, None),
+                                       sc("aa:00:00:00:00:09", -95.0, None)]),
+        req("macs", [sc("AA-BB-CC-00-00-0A", -60.0), sc("Aa:Bb:cC:00:00:0b", -61.0),
+                     sc(None, -62.0)]),
+    ]
+    rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
+    rows = gate_and_explode(rdf.toArrow())
+    assert list(rows.columns) == [
+        "request_id", "n_scanned", "mac_addr", "signal_strength", "frequency"]
+    assert sorted(set(rows["request_id"])) == ["macs", "null_freq_group"]
+    macs = rows[rows["request_id"] == "macs"]
+    assert macs["mac_addr"].tolist() == ["aa:bb:cc:00:00:0a", "aa:bb:cc:00:00:0b", None]
+    assert macs["n_scanned"].tolist() == [3, 3, 3]
+    grp = rows[rows["request_id"] == "null_freq_group"]
+    assert grp["signal_strength"].tolist() == [-40.0, -95.0]
+    assert grp["frequency"].isna().tolist() == [False, True]
 
 
 def test_wcl_vectors_from_reference(spark):

@@ -4,6 +4,7 @@ availableNow/processAllAvailable (SURVEY §2.8; memory-sink smoke pattern)."""
 import base64
 import gzip
 import os
+import re
 import shutil
 
 import pytest
@@ -249,12 +250,26 @@ def _positioning_fixture(spark, tmpzone):
     return zone, out, ckpt, aps, write_requests
 
 
+def test_checkpoint_logs_use_filesystem_manager(spark, tmp_path):
+    """build_session routes streaming checkpoint logs (offsets, commits)
+    through Spark's FileSystem-based checkpoint manager, not the default
+    FileContext one: the manager Spark builds for a checkpoint path is
+    FileSystemBasedCheckpointFileManager."""
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing"
+    manager = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    assert manager.getClass().getName() == f"{pkg}.FileSystemBasedCheckpointFileManager"
+
+
 def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):
-    """The stream applies only the physics gate and explode to its
-    streaming frame and answers each micro-batch in the driver, so a
-    non-empty micro-batch runs exactly ONE Spark job (the toArrow collect)
-    and its plan holds no Python node. Counted under the stream's runId
-    job group."""
+    """The streaming frame is the bare request scan and each micro-batch is
+    answered in the driver (gate, explode, AP join and solve in the one
+    kernel), so a non-empty micro-batch runs exactly ONE Spark job (the
+    toArrow collect) and its plan holds no Python node, no Generate and no
+    Filter. Counted under the stream's runId job group."""
     from wifi_location_data_pipeline_spark.streaming.positioning import (
         start_positioning_stream,
     )
@@ -276,6 +291,8 @@ def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):
     assert len(jobs) == len(batches), sorted(jobs)
     assert "FileScan json" in plan, plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
+    nodes = set(re.findall(r"^[ :+\-*()\d]*([A-Z]\w*)", plan, re.M))
+    assert "FileScan" in nodes and not {"Generate", "Filter"} & nodes, plan
     rows = spark.read.parquet(out).collect()
     assert sorted(r["request_id"] for r in rows) == sorted(
         f"r{k}{c}" for k in range(3) for c in "ab")

@@ -166,16 +166,12 @@ def test_one_generator_matches_tier_union(docs_df):
         union_tiers,
         with_derived_columns,
     )
-    from wifi_location_data_pipeline_spark.operators.hotspot import (
-        apply_oui_filter,
-        hotspot_oui_df,
-    )
+    from wifi_location_data_pipeline_spark.operators.hotspot import apply_oui_filter
     from wifi_location_data_pipeline_spark.operators.validation import apply_stage1_filters
 
     union = union_tiers(flatten_connected_events(docs_df), flatten_scan_results(docs_df))
     reference = apply_oui_filter(
         apply_stage1_filters(with_derived_columns(union), now_ms=F.lit(NOW_MS)),
-        hotspot_oui_df(docs_df.sparkSession),
     )
     one_pass = transform_documents(docs_df, now_ms=F.lit(NOW_MS), dedup=False)
     assert one_pass.columns == reference.columns
@@ -184,12 +180,35 @@ def test_one_generator_matches_tier_union(docs_df):
     assert one_pass.count() > 0
 
 
+def test_oui_filter_actions_are_null_safe(spark):
+    """EXCLUDE drops blacklisted OUIs (any case) and keeps a NULL bssid, as
+    the left-anti join did; FLAG marks blacklisted rows and gives ``false``,
+    not NULL, for a NULL bssid; LOG_ONLY passes every row through."""
+    from wifi_location_data_pipeline_spark import config as C
+    from wifi_location_data_pipeline_spark.operators.hotspot import apply_oui_filter
+
+    hot = C.HOTSPOT_OUI_BLACKLIST[0].lower()
+    df = spark.createDataFrame(
+        [("hot", f"{hot}:11:22:33"), ("cold", "aa:bb:cc:11:22:33"), ("none", None)],
+        "id string, bssid string",
+    )
+    excluded = apply_oui_filter(df, action=C.HOTSPOT_ACTION_EXCLUDE)
+    assert sorted(r["id"] for r in excluded.collect()) == ["cold", "none"]
+    flagged = apply_oui_filter(df, action=C.HOTSPOT_ACTION_FLAG)
+    assert {r["id"]: r["is_mobile_hotspot_oui"] for r in flagged.collect()} == {
+        "hot": True, "cold": False, "none": False,
+    }
+    assert apply_oui_filter(df, action=C.HOTSPOT_ACTION_LOG_ONLY).count() == 3
+
+
 def test_ingest_plan_decodes_each_line_once(spark, tmp_path, measurements):
     """The executed ingest plan scans the raw zone once and has ONE Python
     node: the gzip UDF is nondeterministic, so Catalyst neither copies it
     into the pushed ``_json IS NOT NULL`` filter nor re-runs it, and both
     tiers come from one generator (the two-explode union planned 2 text
-    scans and 4 ArrowEvalPython nodes)."""
+    scans and 4 ArrowEvalPython nodes). The OUI blacklist is a literal IN
+    list, so the plan also holds no broadcast dimension built from a driver
+    list (no BroadcastExchange, no Scan ExistingRDD)."""
     import base64
     import gzip
 
@@ -204,6 +223,7 @@ def test_ingest_plan_decodes_each_line_once(spark, tmp_path, measurements):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan text") == 1, plan
     assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, plan
+    assert "BroadcastExchange" not in plan and "Scan ExistingRDD" not in plan, plan
     assert out.count() == measurements.count()
 
 

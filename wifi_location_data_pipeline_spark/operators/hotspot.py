@@ -9,14 +9,14 @@ blacklist application.yml:137-147.
 Behavioral tier (batch): FRAMEWORK doc :55-69 — per-BSSID spatial spread,
 SSID-name blacklist, delete-all-rows semantics (SCHEMA.md:139-143).
 
-Spark-first shape: the blacklist is a tiny broadcast dimension; EXCLUDE is a
-broadcast left-anti join, FLAG a broadcast left join → boolean. At 100 TB the
-blacklist join adds no shuffle.
+Spark-first shape: the blacklist is a literal ``IN`` list on the OUI, a
+narrow filter (EXCLUDE) or projection (FLAG): no join, no shuffle and no
+driver-built dimension to scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
@@ -24,27 +24,20 @@ from wifi_location_data_pipeline_spark.functions.geo import haversine_m
 from wifi_location_data_pipeline_spark.functions.identifiers import oui
 
 
-def hotspot_oui_df(spark: SparkSession, ouis: tuple[str, ...] = C.HOTSPOT_OUI_BLACKLIST) -> DataFrame:
-    return spark.createDataFrame([(o.upper(),) for o in ouis], "hotspot_oui string")
-
-
 def apply_oui_filter(
     measurements: DataFrame,
-    blacklist: DataFrame,
+    ouis: tuple[str, ...] = C.HOTSPOT_OUI_BLACKLIST,
     action: str = C.HOTSPOT_ACTION_EXCLUDE,
 ) -> DataFrame:
-    """EXCLUDE → anti-join; FLAG → boolean column; LOG_ONLY → passthrough."""
-    m = measurements.withColumn("_oui", oui(F.col("bssid")))
-    on = m["_oui"] == blacklist["hotspot_oui"]
+    """EXCLUDE → drop blacklisted rows; FLAG → boolean column; LOG_ONLY →
+    passthrough. Null-safe: a NULL OUI is never blacklisted, so EXCLUDE
+    keeps its row and FLAG gives ``false``."""
+    hit = F.coalesce(oui(F.col("bssid")).isin(*(o.upper() for o in ouis)), F.lit(False))
     if action == C.HOTSPOT_ACTION_EXCLUDE:
-        return m.join(F.broadcast(blacklist), on, "left_anti").drop("_oui")
+        return measurements.filter(~hit)
     if action == C.HOTSPOT_ACTION_FLAG:
-        return (
-            m.join(F.broadcast(blacklist), on, "left")
-            .withColumn("is_mobile_hotspot_oui", F.col("hotspot_oui").isNotNull())
-            .drop("hotspot_oui", "_oui")
-        )
-    return m.drop("_oui")
+        return measurements.withColumn("is_mobile_hotspot_oui", hit)
+    return measurements
 
 
 def behavioral_hotspot_bssids(

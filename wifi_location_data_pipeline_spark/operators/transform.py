@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from wifi_location_data_pipeline_spark import config as C
 from wifi_location_data_pipeline_spark.operators.dedup import dedup_measurements
 from wifi_location_data_pipeline_spark.operators.flatten import flatten_tiers, with_derived_columns
-from wifi_location_data_pipeline_spark.operators.hotspot import apply_oui_filter, hotspot_oui_df
+from wifi_location_data_pipeline_spark.operators.hotspot import apply_oui_filter
 from wifi_location_data_pipeline_spark.operators.validation import apply_stage1_filters
 from wifi_location_data_pipeline_spark.schemas import WIFI_MEASUREMENTS_SCHEMA
 
@@ -33,12 +33,9 @@ def transform_documents(
     dedup: bool = True,
 ) -> DataFrame:
     """Typed scan documents → wifi_measurements rows (validated, deduped)."""
-    spark = docs.sparkSession
     derived = with_derived_columns(flatten_tiers(docs), batch_id=batch_id)
     validated = apply_stage1_filters(derived, now_ms=now_ms, cfg=cfg)
-    filtered = apply_oui_filter(
-        validated, hotspot_oui_df(spark, cfg.hotspot_ouis), cfg.hotspot_action
-    )
+    filtered = apply_oui_filter(validated, cfg.hotspot_ouis, cfg.hotspot_action)
     return dedup_measurements(filtered) if dedup else filtered
 
 

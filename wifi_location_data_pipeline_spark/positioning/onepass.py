@@ -8,19 +8,17 @@ dominated by stage scheduling, codegen, and Python-worker spin-up; at 100 TB
 it is a dozen passes over the fact table.
 
 Every phase keys on request_id and every request holds ≤20 observations, so
-the Spark-first shape is: physics gate on the nested scan array → explode →
-broadcast AP join → one vectorized Arrow kernel (positioning/onepass_kernel)
-that derives the per-element values (path-loss distance, inverse-distance
-weight, confidence weight, WCL weight), packs each request itself and
-computes context, selection, the closed-form algorithms, the
-trilateration/MLE numeric tier, and the robust combiner in a single
-mapInPandas pass. Every operator before the kernel is narrow, so the rows of
-a request stay contiguous in the partition of their input row and the plan
-has no shuffle: the kernel groups rows by request_id, sorts each request by
-its pack key, and carries a request that straddles two Arrow batches into
-the next one. The positioning stream (streaming/positioning.py) shares the
-gate and explode (``gated_observations``) and runs the same kernel in the
-driver.
+the Spark-first shape is the request scan → one vectorized Arrow kernel
+(positioning/onepass_kernel, a mapInArrow body) that takes each request as
+one nested row: it applies the physics gate to the scan array, explodes the
+passing requests, joins the AP index (collected once, shipped as a
+broadcast variable), derives the per-element values (path-loss distance,
+inverse-distance weight, confidence weight, WCL weight), packs each request
+and computes context, selection, the closed-form algorithms, the
+trilateration/MLE numeric tier, and the robust combiner. The plan holds no
+join and no shuffle, and no request straddles two Arrow batches. The
+positioning stream (streaming/positioning.py) runs the same kernel in the
+driver over each micro-batch of raw requests.
 
 History: rounds 2–5 expressed the packed middle as generated SQL over lambda
 higher-order array functions. Lambda HOFs run in Spark's INTERPRETED
@@ -36,57 +34,22 @@ baseline (test_onepass_matches_multipass).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from wifi_location_data_pipeline_spark import config as C
 from wifi_location_data_pipeline_spark.functions.identifiers import normalize_bssid
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
     CONTEXT_FIELDS,
-    KERNEL_INPUT,
     _APC,
     _GQ,
     _SD,
     _SQ,
     make_onepass_kernel,
 )
-from wifi_location_data_pipeline_spark.positioning.prepare import (
-    explode_requests,
-    known_ap_lookup,
-)
-
-
-# ---------------------------------------------------------------------------
-# physics gate on the nested scan array (SignalPhysicsValidator.java:31-107)
-# ---------------------------------------------------------------------------
-
-
-def physics_valid_expr(scans: Column) -> Column:
-    """TRUE iff the request's scan set passes the physics checks.
-
-    Same semantics as prepare.physics_gate, evaluated on the nested array so
-    no pre-join shuffle is needed: any RSSI outside [-100,-30] fails; within a
-    frequency group, max > -50 dBm with spread > 45 dB fails (the exact
-    [-30,-100] boundary pair passes).
-    """
-    s = lambda x: x.getField("signalStrength")  # noqa: E731
-    rssi_ok = ~F.exists(
-        scans, lambda x: (s(x) > C.PHYSICS_RSSI_MAX) | (s(x) < C.PHYSICS_RSSI_MIN)
-    )
-    freqs = F.array_distinct(F.transform(scans, lambda x: x.getField("frequency")))
-
-    def freq_bad(f: Column) -> Column:
-        grp = F.filter(scans, lambda x: x.getField("frequency").eqNullSafe(f))
-        mx = F.array_max(F.transform(grp, s))
-        mn = F.array_min(F.transform(grp, s))
-        return (
-            (mx > C.PHYSICS_STRONG_SIGNAL_GATE)
-            & ((mx - mn) > C.PHYSICS_MAX_SPREAD_DB)
-            & ~((mx == C.PHYSICS_RSSI_MAX) & (mn == C.PHYSICS_RSSI_MIN))
-        )
-
-    return rssi_ok & ~F.exists(freqs, freq_bad)
+from wifi_location_data_pipeline_spark.positioning.prepare import known_ap_lookup
 
 
 _CAL_INFO_T = T.ArrayType(
@@ -192,15 +155,12 @@ def selection_info_by_context(spark: SparkSession) -> dict[tuple, list[dict]]:
     return info
 
 
-def gated_observations(requests: DataFrame) -> DataFrame:
-    """Nested requests → the kernel's observation columns before the AP
-    join (request_id, n_scanned, mac_addr, signal_strength, frequency): the
-    physics gate on the nested scan array, then the explode. Stateless, so
-    the positioning stream applies it to its streaming frame."""
-    gated = requests.filter(physics_valid_expr(F.col("wifiScanResults")))
-    return explode_requests(gated).select(
-        "request_id", "n_scanned", "mac_addr", "signal_strength", "frequency"
-    )
+def ap_index(access_points: DataFrame) -> pd.DataFrame:
+    """``known_ap_lookup(access_points)`` collected into a pandas frame: the
+    AP index the kernel joins on mac_addr. A NULL mac never matches an inner
+    join, so its rows are left out."""
+    lookup = known_ap_lookup(access_points).filter(F.col("mac_addr").isNotNull())
+    return lookup.toArrow().to_pandas()
 
 
 def position_requests_onepass(
@@ -211,13 +171,16 @@ def position_requests_onepass(
 ) -> DataFrame:
     """Nested requests + AP dimension → combined positions, one job.
 
-    Plan: physics gate (nested-array filter) → explode → broadcast AP join
-    (``known_ap_lookup``) → vectorized Arrow kernel that derives the element
-    values, packs each request and runs
-    context/selection/algorithms/numeric/combine (onepass_kernel.py). No
-    shuffle: the kernel runs in the partitions of ``requests``, so its
-    parallelism is the input's (a caller holding a few large splits can
-    repartition ``requests`` first).
+    Plan: request scan → one mapInArrow kernel (onepass_kernel.py) that gates
+    and explodes each request's scan array, joins the AP index, derives the
+    element values, packs each request and runs
+    context/selection/algorithms/numeric/combine. The AP index
+    (``ap_index``) is collected once here, the bytes a broadcast join would
+    pull through the driver, and ships as a broadcast variable that each
+    Python worker loads once. No join and no shuffle in the plan: the kernel
+    runs in the partitions of ``requests``, so its parallelism is the
+    input's (a caller holding a few large splits can repartition
+    ``requests`` first).
 
     ``with_reasons=True`` adds the reference's ``selectionInfo`` diagnostics
     (CalculationInfo.java:9-65; AlgorithmSelector.selectAlgorithmsWithReasons,
@@ -233,13 +196,14 @@ def position_requests_onepass(
     """
     if numeric_tier not in ("auto", "off"):
         raise ValueError(f"numeric_tier must be 'auto' or 'off', got {numeric_tier!r}")
-    obs = gated_observations(requests).join(
-        F.broadcast(known_ap_lookup(access_points)), "mac_addr", "inner"
+    spark = requests.sparkSession
+    info = selection_info_by_context(spark) if with_reasons else None
+    schema = answer_schema(with_reasons)
+    kernel = make_onepass_kernel(
+        spark.sparkContext.broadcast(ap_index(access_points)), info, numeric_tier,
+        to_arrow_schema(schema),
     )
-    info = selection_info_by_context(requests.sparkSession) if with_reasons else None
-    return obs.select(*KERNEL_INPUT).mapInPandas(
-        make_onepass_kernel(info, numeric_tier), answer_schema(with_reasons)
-    )
+    return requests.select("requestId", "wifiScanResults").mapInArrow(kernel, schema)
 
 
 def position_observations_onepass(
@@ -265,7 +229,7 @@ def position_observations_onepass(
     value-identical — pinned by
     tests/test_positioning.py::test_flat_onepass_matches_nested.
     """
-    # normalize like explode_requests does on the nested path — without
+    # normalize like the kernel does on the nested path — without
     # this, an uppercase/dash-format mac that DOES exist in the dimension
     # silently drops at the semi join instead of resolving
     resolved = observations.withColumn(

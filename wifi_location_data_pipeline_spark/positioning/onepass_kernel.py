@@ -9,18 +9,19 @@ single-node oracle at sf1 purely on that interpreter overhead, plus a
 multi-second Catalyst analysis of the generated SQL per invocation (paid per
 micro-batch on the serving path).
 
-This kernel takes the observation rows of whole requests (one row per
-resolved scan, as the explode and AP join leave them: every row of a request
-sits in the partition of its input row), derives the per-element path-loss
-and weight values (``element_values``), groups the rows by request_id
-itself, sorts each request by ``PACK_FIELDS`` and pads the requests to
+This kernel takes nested requests, one Arrow row per request, in both of
+its placements. It applies the physics gate to each scan array and
+explodes the passing requests (``gate_and_explode``, Arrow/NumPy),
+inner-joins the rows with the AP index in pandas, derives the per-element
+path-loss and weight values (``element_values``), groups the rows by
+request_id, sorts each request by ``PACK_FIELDS`` and pads the requests to
 (rows, K) matrices, K = the 20-scan request cap. It then computes context
 classification, algorithm selection, the four closed-form algorithms, the
 trilateration/MLE numeric tier, and the robust combiner in one pass of
-batched NumPy. The one kernel has two placements: the batch plan runs it as
-a ``mapInPandas`` body in the executors (scan → explode → broadcast join →
-this kernel, no shuffle, one job end to end), and the positioning stream
-runs it in the driver over each collected micro-batch. Scale shape:
+batched NumPy. The batch plan runs it as a ``mapInArrow`` body in the
+executors (request scan → this kernel, no join, no shuffle, one job end to
+end, the AP index a broadcast variable); the positioning stream runs it in
+the driver over each collected micro-batch of raw requests. Scale shape:
 per-request work is O(K²) bounded by the 20-scan request cap, and
 partitions are independent.
 
@@ -76,9 +77,10 @@ _DIST_W = np.array([DISTRIBUTION_MULT[k] for k in _SD])
 # Kernel input columns after (request_id, n_scanned), in pack-sort order:
 # mac first, so the first row of each mac run is the minimum struct for that
 # mac (keep-first dedup, the rule array_sort(collect_list(struct)) defined);
-# then the original observation and AP fields. ap_vendor feeds the derived
-# element values but is no sort key: one mac carries one AP record, so rows
-# that tie on mac_addr tie on the vendor and on every value derived from it.
+# then the observation fields ``gate_and_explode`` emits and the AP fields
+# the mac_addr join adds. ap_vendor feeds the derived element values but is
+# no sort key: one mac carries one AP record, so rows that tie on mac_addr
+# tie on the vendor and on every value derived from it.
 PACK_FIELDS = (
     "mac_addr",
     "signal_strength",
@@ -89,7 +91,8 @@ PACK_FIELDS = (
     "ap_haccuracy",
     "ap_confidence",
 )
-# the kernel's input columns, whichever placement feeds it
+# the columns ``pack_requests`` reads: the gated observation rows joined
+# with the AP index
 KERNEL_INPUT = ("request_id", "n_scanned", *PACK_FIELDS, "ap_vendor")
 # kernel-side name of each value field
 _SHORT = dict(zip(PACK_FIELDS[1:], ("s", "freq", "lat", "lon", "alt", "hacc", "conf")))
@@ -146,6 +149,71 @@ def element_values(s, freq, conf, vendor) -> dict[str, np.ndarray]:
     return {"d": d, "iw": 1.0 / np.maximum(1.0, d), "cw": cw, "w": w}
 
 
+def gate_and_explode(requests):
+    """Nested requests → the observation rows of the requests that pass the
+    physics gate (SignalPhysicsValidator.java:31-107).
+
+    ``requests``: an Arrow record batch (or table) with ``requestId`` and
+    ``wifiScanResults``. Returns a pandas frame (request_id, n_scanned,
+    mac_addr, signal_strength, frequency), one row per scan in request
+    order: ``n_scanned`` is the array length and ``mac_addr`` is normalized
+    like ``normalize_bssid`` (lower case, ``-`` → ``:``).
+
+    The gate is the reference's checks under SQL three-valued logic, where
+    a request passes only if its gate is TRUE (NULL drops it, as FALSE
+    does): any RSSI outside [-100, -30] fails; a NULL RSSI makes that test
+    NULL unless another scan is out of range; within a frequency group (the
+    distinct frequencies, NULL a group of its own), max > -50 dBm with
+    spread > 45 dB fails, the exact [-30, -100] boundary pair excepted, and
+    a group of NULL RSSIs makes it NULL. A request therefore passes iff its
+    array is not NULL, every RSSI is non-NULL and in range, and no group
+    fails the spread test. An empty array passes and yields no rows.
+    ``prepare.physics_gate`` is the row-wise reference.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    scans = requests.column("wifiScanResults")
+    if isinstance(scans, pa.ChunkedArray):
+        scans = scans.combine_chunks()
+    n_scanned = pc.list_value_length(scans)  # NULL for a NULL array
+    flat = pc.list_flatten(scans)
+    parent = pc.list_parent_indices(scans).to_numpy()
+    rssi = pc.struct_field(flat, "signalStrength")
+    freq = pc.struct_field(flat, "frequency")
+
+    s = rssi.to_numpy(zero_copy_only=False)  # NULL -> NaN
+    with np.errstate(invalid="ignore"):
+        bad = ~((s >= C.PHYSICS_RSSI_MIN) & (s <= C.PHYSICS_RSSI_MAX))  # NULL or NaN too
+    fail = np.bincount(parent, weights=bad, minlength=len(scans)) > 0
+    if len(parent):
+        # frequency groups; NULL (an int32 column) maps to a key of its own
+        f = pc.fill_null(pc.cast(freq, pa.int64()), -(1 << 40)).to_numpy()
+        order = np.lexsort((f, parent))
+        p, f = parent[order], f[order]
+        starts = np.flatnonzero(np.r_[True, (p[1:] != p[:-1]) | (f[1:] != f[:-1])])
+        mx = np.fmax.reduceat(s[order], starts)
+        mn = np.fmin.reduceat(s[order], starts)
+        spread_bad = (
+            (mx > C.PHYSICS_STRONG_SIGNAL_GATE)
+            & (mx - mn > C.PHYSICS_MAX_SPREAD_DB)
+            & ~((mx == C.PHYSICS_RSSI_MAX) & (mn == C.PHYSICS_RSSI_MIN))
+        )
+        fail |= np.bincount(p[starts], weights=spread_bad, minlength=len(scans)) > 0
+    passed = pc.is_valid(n_scanned).to_numpy(zero_copy_only=False) & ~fail
+
+    rows = np.flatnonzero(passed[parent])
+    req = parent[rows]
+    mac = pc.struct_field(flat, "macAddress").take(rows)
+    return pa.table({
+        "request_id": requests.column("requestId").take(req),
+        "n_scanned": n_scanned.take(req),
+        "mac_addr": pc.replace_substring(pc.utf8_lower(mac), "-", ":"),
+        "signal_strength": rssi.take(rows),
+        "frequency": freq.take(rows),
+    }).to_pandas()
+
+
 def pack_requests(pdf):
     """Observation rows (``KERNEL_INPUT``) of whole requests → padded
     per-request matrices.
@@ -154,8 +222,8 @@ def pack_requests(pdf):
     each request by ``PACK_FIELDS`` ascending, nulls first inside each
     field: the order array_sort gives an array of those structs. Arrow hands
     a null double over as NaN, so NaN sorts as null here; the only field a
-    real NaN could reach is signal_strength, and the physics gate drops such
-    requests before the kernel.
+    real NaN could reach is signal_strength, and ``gate_and_explode`` drops
+    such requests.
 
     Returns (rids, n_scanned, lens, mats, ded): ``mats`` maps each short
     field name, and each ``element_values`` name, to an (n, K) matrix,
@@ -688,56 +756,34 @@ def build_output(rids, res, selection_info: dict | None):
     return out
 
 
-def make_onepass_kernel(selection_info: dict | None, numeric_tier: str):
-    """The positioning kernel: a generator over pandas frames of observation
-    rows (``KERNEL_INPUT``) in which each request's rows are contiguous,
-    yielding answer frames. The batch plan runs it as a mapInPandas body in
-    the executors; the positioning stream runs it in the driver.
+def make_onepass_kernel(ap_index, selection_info: dict | None, numeric_tier: str, schema):
+    """The positioning kernel: a generator over Arrow record batches (or
+    tables) of nested requests (``requestId``, ``wifiScanResults``), yielding
+    one answer record batch of the Arrow ``schema`` per input batch that has
+    answers.
+    The batch plan runs it as a mapInArrow body in the executors; the
+    positioning stream runs it in the driver.
 
-    A request can straddle two Arrow batches, so the rows of each batch's
-    last request are held back and prepended to the next batch; the final
-    carry is solved after the last batch. ``selection_info``: see
-    ``build_output``.
+    Each batch is gated and exploded (``gate_and_explode``), inner-joined
+    with ``ap_index`` on mac_addr, packed and solved. Every request is one
+    input row, so no request straddles two batches. ``ap_index``: the
+    ``known_ap_lookup`` rows as a pandas frame with no NULL mac, or a
+    broadcast variable holding it (loaded once per Python worker).
+    ``selection_info``: see ``build_output``.
     """
-    import pandas as pd
-
-    def solve(pdf):
-        rids, n_scanned, lens, mats, ded = pack_requests(pdf)
-        res = compute_onepass(n_scanned, lens, mats, ded, numeric_tier=numeric_tier)
-        return build_output(rids, res, selection_info)
+    import pyarrow as pa
+    from pyspark import Broadcast
 
     def run(batches):
-        any_out = False
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
+        aps = ap_index.value if isinstance(ap_index, Broadcast) else ap_index
+        for batch in batches:
+            rows = gate_and_explode(batch).merge(aps, on="mac_addr", how="inner")
+            if not len(rows):
                 continue
-            rid_code = pd.factorize(pdf["request_id"], use_na_sentinel=False)[0]
-            tail = rid_code == rid_code[-1]
-            carry = pdf[tail]
-            if not tail.all():
-                any_out = True
-                yield solve(pdf[~tail])
-        if carry is not None:
-            any_out = True
-            yield solve(carry)
-        if not any_out:
-            cols_out = {
-                "request_id": pd.Series(dtype=object),
-                "latitude": pd.Series(dtype=float),
-                "longitude": pd.Series(dtype=float),
-                "altitude": pd.Series(dtype=float),
-                "accuracy": pd.Series(dtype=float),
-                "confidence": pd.Series(dtype=float),
-                "methods_used": pd.Series(dtype=object),
-                "is_collinear": pd.Series(dtype=bool),
-                "calculation_info": pd.Series(dtype=object),
-            }
-            if selection_info is not None:
-                cols_out["selection_context"] = pd.Series(dtype=object)
-                cols_out["selection_info"] = pd.Series(dtype=object)
-            yield pd.DataFrame(cols_out)
+            rids, n_scanned, lens, mats, ded = pack_requests(rows)
+            res = compute_onepass(n_scanned, lens, mats, ded, numeric_tier=numeric_tier)
+            yield pa.RecordBatch.from_pandas(
+                build_output(rids, res, selection_info), schema=schema, preserve_index=False
+            )
 
     return run

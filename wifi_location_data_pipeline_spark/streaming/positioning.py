@@ -7,28 +7,28 @@ Spark-first equivalent of "requests arrive continuously, answers leave
 continuously" is Structured Streaming over a request zone:
 
     readStream.json(request_zone, POSITIONING_REQUEST_SCHEMA)
-      → physics gate → explode          (applied ONCE, to the streaming frame)
-      → foreachBatch: toArrow → join with the driver-held AP index
-        → the one-pass kernel → pyarrow write of batch_id=N
+      .select(requestId, wifiScanResults)   (the bare request scan)
+      → foreachBatch: toArrow → the one-pass kernel (physics gate, explode,
+        join with the driver-held AP index, solve) → pyarrow write of
+        batch_id=N
 
-The streaming frame holds only the stateless gate and explode of the batch
-plan (``onepass.gated_observations``): no join, no Python and no coalesce,
-so each non-empty micro-batch is ONE Spark job, the ``toArrow`` collect. The
-rest runs in the driver, where a micro-batch of a few requests costs the
-kernel's ~20 ms instead of a Python-worker hop (about 200 ms of fixed time
-per Python task on a 4-core host, whatever its input) plus a stream-static
-broadcast join that re-collected and re-broadcast the AP lookup on every
-micro-batch. The kernel is the batch plan's (``make_onepass_kernel``): one
-kernel, placed in the executors for batch and in the driver for the stream,
-so the two placements give equal answers.
+The streaming frame is the request scan alone: no filter, no explode, no
+join, no Python and no coalesce, so each non-empty micro-batch is ONE Spark
+job, the ``toArrow`` collect, and Catalyst has nothing to re-plan per
+micro-batch. The rest runs in the driver, where a micro-batch of a few
+requests costs the kernel's ~20 ms instead of a Python-worker hop (about
+200 ms of fixed time per Python task on a 4-core host, whatever its input).
+The kernel is the batch plan's (``make_onepass_kernel``), fed the same
+nested request rows: one kernel, placed in the executors for batch and in
+the driver for the stream, so the two placements give equal answers.
 
-The AP index is ``known_ap_lookup(access_points)`` (status filter,
-keep-first by version, rename — the analog of the service's DynamoDB lookup
-path with its long-lived client), collected into the driver once at stream
-start: the snapshot a cache at stream start would hold. Driver memory is
-bounded by that lookup, the same bytes the per-batch broadcast pulled
-through the driver, plus one micro-batch of observation rows; bound the
-latter with ``max_files_per_trigger``.
+The AP index is ``onepass.ap_index(access_points)`` (``known_ap_lookup``:
+status filter, keep-first by version, rename — the analog of the service's
+DynamoDB lookup path with its long-lived client), collected into the driver
+once at stream start: the snapshot a cache at stream start would hold.
+Driver memory is bounded by that index plus one micro-batch of requests;
+bound the latter with ``max_files_per_trigger``. The checkpoint logs go
+through the FileSystem-based checkpoint manager ``build_session`` selects.
 
 The sink writes each batch to its own ``batch_id=N`` directory: it clears
 the directory, writes ``part-00000.parquet``, and writes ``_SUCCESS`` last.
@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
@@ -52,15 +51,11 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 
 from wifi_location_data_pipeline_spark.positioning.onepass import (
+    ap_index,
     answer_schema,
-    gated_observations,
     selection_info_by_context,
 )
-from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
-    KERNEL_INPUT,
-    make_onepass_kernel,
-)
-from wifi_location_data_pipeline_spark.positioning.prepare import known_ap_lookup
+from wifi_location_data_pipeline_spark.positioning.onepass_kernel import make_onepass_kernel
 from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
 
 
@@ -86,22 +81,22 @@ def start_positioning_stream(
         # bound the arrival batch (the analog of the reference's Kafka
         # max-poll / SQS batch limits), and with it the driver's share
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    observations = gated_observations(reader.json(request_zone))
+    requests = reader.json(request_zone).select("requestId", "wifiScanResults")
 
-    ap_index = known_ap_lookup(access_points).toArrow().to_pandas()
-    kernel = make_onepass_kernel(
-        selection_info_by_context(spark) if with_reasons else None, "auto"
-    )
     schema = to_arrow_schema(answer_schema(with_reasons))
+    kernel = make_onepass_kernel(
+        ap_index(access_points),
+        selection_info_by_context(spark) if with_reasons else None,
+        "auto",
+        schema,
+    )
     try:
         fs, root = pafs.FileSystem.from_uri(out_path)
     except pa.ArrowInvalid:  # a relative local path, as Spark's writer takes
         fs, root = pafs.LocalFileSystem(), os.path.abspath(out_path)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.toArrow().to_pandas().merge(ap_index, on="mac_addr", how="inner")
-        answers = pd.concat(list(kernel([rows[list(KERNEL_INPUT)]])), ignore_index=True)
-        table = pa.Table.from_pandas(answers, schema=schema, preserve_index=False)
+        table = pa.Table.from_batches(kernel([batch_df.toArrow()]), schema=schema)
         batch_dir = f"{root}/batch_id={batch_id}"
         fs.create_dir(batch_dir)
         fs.delete_dir_contents(batch_dir)  # a replay replaces the first attempt
@@ -110,7 +105,7 @@ def start_positioning_stream(
             pass
 
     writer = (
-        observations.writeStream.foreachBatch(_commit)
+        requests.writeStream.foreachBatch(_commit)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
