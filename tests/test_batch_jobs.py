@@ -338,6 +338,39 @@ def test_kalman_update_fusion_and_relocation(spark):
     assert out["ap3"]["latitude"] == 42.0
 
 
+def test_kalman_update_matches_streaming_fuse(spark):
+    """The batch ``kalman_update`` and the stream's ``_fuse`` run one Kalman
+    step: the same (state, estimate) pairs give equal fused state and equal
+    relocation flags at the equator, at 40.74° and at 60°. Pair 1 moves
+    6.3e-4° of longitude: 70 m at the equator, 35 m at 60°, against a 42 m
+    relocation threshold, so it resets only where the longitude scale is
+    cos(latitude)'s."""
+    from wifi_location_data_pipeline_spark.streaming.state import _fuse
+
+    offsets = ((1e-4, 1e-4), (0.0, 6.3e-4), (3e-4, 3e-4))
+    pairs = [
+        (f"{lat}-{k}", lat, -74.0, 100.0, lat + dlat, -74.0 + dlon, 10.0)
+        for lat in (0.0, 40.74, 60.0)
+        for k, (dlat, dlon) in enumerate(offsets)
+    ]
+    prior = spark.createDataFrame(
+        [p[:4] for p in pairs], "bssid string, latitude double, longitude double, p_var_m2 double"
+    )
+    new = spark.createDataFrame(
+        [(p[0], *p[4:]) for p in pairs],
+        "bssid string, latitude double, longitude double, horizontal_accuracy double",
+    )
+    out = {r["bssid"]: r for r in kalman_update(prior, new).collect()}
+    for bssid, lat, lon, p_var, z_lat, z_lon, acc in pairs:
+        f_lat, f_lon, f_var, moved = _fuse((lat, lon, p_var, 1), z_lat, z_lon, acc**2)
+        r = out[bssid]
+        assert r["relocated"] == moved, bssid
+        assert r["latitude"] == pytest.approx(f_lat, rel=1e-12, abs=0.0), bssid
+        assert r["longitude"] == pytest.approx(f_lon, rel=1e-12, abs=0.0), bssid
+        assert r["p_var_m2"] == pytest.approx(f_var, rel=1e-12, abs=0.0), bssid
+    assert out["0.0-1"]["relocated"] and not out["60.0-1"]["relocated"]
+
+
 def test_dml_emulation(spark):
     target = spark.createDataFrame(
         [("k1", 1, "a"), ("k2", 2, "b"), ("k3", 3, "c")], "k string, v int, s string"

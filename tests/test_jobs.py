@@ -1,8 +1,9 @@
 """End-to-end job chain through the CLI surface (jobs.py):
 
-transform → quality → localize → position, each invoked exactly as a user
-would (`python -m wifi_location_data_pipeline_spark.jobs <job> ...`), sharing
-one SparkSession via build_session's getOrCreate."""
+transform → quality → localize → localize --prior-state → position, each
+invoked exactly as a user would
+(`python -m wifi_location_data_pipeline_spark.jobs <job> ...`), sharing one
+SparkSession via build_session's getOrCreate."""
 
 import base64
 import gzip
@@ -81,6 +82,18 @@ def test_job_chain(spark, zone):
     info = {e["algorithm"]: e for e in pr[0]["selection_info"]}
     assert pr[0]["selection_context"]["ap_count_class"] == "SINGLE_AP"
     assert info["proximity"]["selected"] and info["proximity"]["reasons"]
+
+    # a second localize fuses the batch with the first run's AP table, and
+    # writes a table the position job reads
+    aps2 = str(zone / "aps2")
+    jobs_main(["localize", "--table", clean, "--ap-table", aps2, "--prior-state", aps])
+    fused = {r["mac_addr"]: r for r in spark.read.parquet(aps2).collect()}
+    assert set(located) <= set(fused)
+    assert all(r["status"] == "active" and r["horizontal_accuracy"] > 0 for r in fused.values())
+    out2 = str(zone / "positions2")
+    jobs_main(["position", "--requests", req_path, "--ap-table", aps2, "--out", out2])
+    pos2 = spark.read.parquet(out2).collect()
+    assert len(pos2) == 1 and pos2[0]["request_id"] == "job-req-1"
 
 
 def test_dedup_clusters_loop_matches_union_find(spark, monkeypatch):

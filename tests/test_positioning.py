@@ -610,39 +610,31 @@ def test_log_distance_vendor_exponent_pulls_toward_lower_n(spark):
     assert abs(out["r2"]["latitude"] - mid) < 1e-9
 
 
-def test_onepass_numeric_tier_off_matches_auto_and_enforces(spark, ap_df):
-    """numeric_tier='off' (the serving-slice fast path): identical results
-    to the auto path on a ≤2-AP request set, and a hard EXECUTION error —
-    not a silent drop — if selection routes any request to the numeric
-    tier."""
-    from pyspark.sql.utils import AnalysisException  # noqa: F401
-
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_requests_onepass,
-    )
-
+def test_onepass_numeric_methods_only_past_two_aps(spark, ap_df):
+    """Selection gives trilateration and MLE base weight 0 at SINGLE_AP /
+    TWO_APS: a ≤2-AP request never runs the numeric tier, neither in
+    ``methods_used`` nor in ``calculation_info``, while a 5-AP request
+    reaches it. The ``ensemble_closed_form`` oracle companion relies on
+    this to stay closed-form."""
     macs = [a[0] for a in APS[:5]]
     freqs = [a[6] for a in APS[:5]]
-    small = [
+    requests = [
         req("o1", [scan(macs[0], -55.0, freqs[0])]),
         req("o2", [scan(macs[0], -60.0, freqs[0]), scan(macs[1], -66.0, freqs[1])]),
+        req("o3", [scan(m, -60.0 - i, f) for i, (m, f) in enumerate(zip(macs, freqs))]),
     ]
-    rdf = spark.createDataFrame(small, POSITIONING_REQUEST_SCHEMA)
-    auto = {r["request_id"]: r for r in
-            position_requests_onepass(rdf, ap_df).collect()}
-    off = {r["request_id"]: r for r in
-           position_requests_onepass(rdf, ap_df, numeric_tier="off").collect()}
-    assert set(auto) == set(off) == {"o1", "o2"}
-    for k in auto:
-        for f in ("latitude", "longitude", "accuracy", "confidence"):
-            assert auto[k][f] == pytest.approx(off[k][f], abs=1e-12)
-        assert auto[k]["methods_used"] == off[k]["methods_used"]
+    rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
+    out = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
+    assert set(out) == {"o1", "o2", "o3"}
+    numeric = {"trilateration", "maximum_likelihood"}
 
-    big = [req("o3", [scan(m, -60.0 - i, f) for i, (m, f) in
-                      enumerate(zip(macs, freqs))])]
-    bdf = spark.createDataFrame(big, POSITIONING_REQUEST_SCHEMA)
-    with pytest.raises(Exception, match="numeric_tier='off'"):
-        position_requests_onepass(bdf, ap_df, numeric_tier="off").collect()
+    def used(r):
+        return set(r["methods_used"]) | {e["algorithm"] for e in r["calculation_info"]}
+
+    assert not used(out["o1"]) & numeric
+    assert not used(out["o2"]) & numeric
+    assert set(out["o3"]["methods_used"]) & numeric
+    assert {e["algorithm"] for e in out["o3"]["calculation_info"]} & numeric
 
 
 def test_onepass_plan_is_one_job_one_exchange(spark, ap_df):
@@ -1083,50 +1075,6 @@ def test_wcl_vectors_from_reference(spark):
     assert 1.0 <= u["latitude"] <= 3.0 and u["latitude"] > 1.5
 
     assert "all_unknown" not in out  # no matching APs -> no row
-
-
-def test_flat_onepass_matches_nested(spark, ap_df):
-    """position_observations_onepass (flat entry, packed-array gate) must
-    agree with position_requests_onepass (nested entry, pre-join gate) on
-    every fixture request whose macs all resolve — the contract the oracle
-    companions rely on."""
-    from pyspark.sql import functions as F
-
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_observations_onepass,
-        position_requests_onepass,
-    )
-
-    macs = [a[0] for a in APS[:5]]
-    freqs = [a[6] for a in APS[:5]]
-    requests = [
-        req("p1", [scan(macs[0], -55.0, freqs[0])]),
-        req("p2", [scan(macs[0], -60.0, freqs[0]), scan(macs[1], -65.0, freqs[1])]),
-        req("p3", [scan(m, -60.0 - 4 * i, f) for i, (m, f) in enumerate(zip(macs[:3], freqs[:3]))]),
-        req("p5", [scan(m, -58.0 - 3 * i, f) for i, (m, f) in enumerate(zip(macs, freqs))]),
-        req("pw", [scan(m, -97.0) for m, *_ in APS[:4]]),
-        # a physics-invalid request: the gate must drop it on BOTH paths
-        req("px", [scan(macs[0], -25.0, freqs[0]), scan(macs[1], -60.0, freqs[1])]),
-    ]
-    rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    flat_obs = rdf.select(
-        F.col("requestId").alias("request_id"),
-        F.explode("wifiScanResults").alias("s"),
-    ).select(
-        "request_id",
-        F.col("s.macAddress").alias("mac_addr"),
-        F.col("s.signalStrength").alias("signal_strength"),
-        F.col("s.frequency").alias("frequency"),
-    )
-    nested = {r["request_id"]: r for r in position_requests_onepass(rdf, ap_df).collect()}
-    flat = {r["request_id"]: r for r in position_observations_onepass(flat_obs, ap_df).collect()}
-    assert set(nested) == set(flat) and "px" not in nested and nested
-    for rid, a in nested.items():
-        b = flat[rid]
-        assert sorted(a["methods_used"]) == sorted(b["methods_used"]), rid
-        for c in ("latitude", "longitude", "altitude", "accuracy", "confidence"):
-            assert abs(a[c] - b[c]) < 1e-12, (rid, c, a[c], b[c])
-        assert a["is_collinear"] == b["is_collinear"], rid
 
 
 def _numeric_group(aps, scans):

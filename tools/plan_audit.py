@@ -85,7 +85,7 @@ CLAIMS: dict[str, str] = {
     "ann_lsh_bucketed": "bucket equi-join replaces the all-pairs cross product",
     "multimodal_frame_sample": "payload column pruned before the frame explode",
     "positioning_ensemble": (
-        "ONE request_id shuffle nests resolved scans; the kernel packs each request"
+        "ONE request_id shuffle nests the scans; the kernel packs each request"
     ),
     "spatial_blocked_pairs": "3×3 cell-neighborhood equi-join candidates; no n² theta join",
     "range_bucket_join": "bucket equi-join candidates; BNLJ only the 2-row offsets fan-out",

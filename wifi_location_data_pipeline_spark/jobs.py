@@ -12,6 +12,9 @@ launch with spark-submit / python -m. One logical job per reference service
         --table /lake/wifi_measurements --out /lake/wifi_measurements_clean
     python -m wifi_location_data_pipeline_spark.jobs localize \
         --table /lake/wifi_measurements_clean --ap-table /lake/wifi_access_points
+    python -m wifi_location_data_pipeline_spark.jobs localize \
+        --table /lake/wifi_measurements_clean --ap-table /lake/wifi_access_points_v2 \
+        --prior-state /lake/wifi_access_points
     python -m wifi_location_data_pipeline_spark.jobs position \
         --requests /in/requests.json --ap-table /lake/wifi_access_points \
         --out /out/positions
@@ -86,7 +89,8 @@ def job_quality(args: argparse.Namespace) -> None:
 
 
 def _conform_ap_dimension(estimates):
-    """AP location estimates → the wifi_access_points dimension layout
+    """AP location estimates, or the Kalman-fused AP state with its
+    altitude and confidence → the wifi_access_points dimension layout
     (WifiAccessPoint.java:21-52): geohash index column included so the
     positioning service's GSI-equivalent predicates work."""
     from pyspark.sql import functions as F
@@ -111,6 +115,8 @@ def _conform_ap_dimension(estimates):
 
 
 def job_localize(args: argparse.Namespace) -> None:
+    from pyspark.sql import functions as F
+
     from wifi_location_data_pipeline_spark.operators.localization import (
         kalman_update,
         localize_all,
@@ -118,16 +124,42 @@ def job_localize(args: argparse.Namespace) -> None:
 
     spark = _session("localize")
     m = spark.read.parquet(args.table)
-    estimates = localize_all(m)
-    if args.prior_state:
-        prior = spark.read.parquet(args.prior_state)
+    if not args.prior_state:
+        _conform_ap_dimension(localize_all(m)).write.mode("overwrite").parquet(args.ap_table)
+        print(f"wrote {args.ap_table}")
+        return
+    # the prior AP table as Kalman state: variance = horizontal accuracy²,
+    # the inverse of the sqrt this job writes
+    prior_aps = spark.read.parquet(args.prior_state).withColumnRenamed("mac_addr", "bssid")
+    prior = prior_aps.select(
+        "bssid", "latitude", "longitude", F.pow("horizontal_accuracy", 2).alias("p_var_m2")
+    )
+    # the estimates feed the Kalman step and the attribute join: run the
+    # numeric tier once
+    estimates = localize_all(m, prior_state=prior).persist()
+    try:
         fused = kalman_update(
-            prior,
-            estimates.select("bssid", "latitude", "longitude", "horizontal_accuracy"),
+            prior, estimates.select("bssid", "latitude", "longitude", "horizontal_accuracy")
         )
-        fused.write.mode("overwrite").parquet(args.ap_table)
-    else:
-        _conform_ap_dimension(estimates).write.mode("overwrite").parquet(args.ap_table)
+        z_attrs = estimates.select(
+            "bssid", F.col("altitude").alias("z_alt"), F.col("confidence").alias("z_conf")
+        )
+        # altitude and confidence: this batch's estimate, else the prior record's
+        state = (
+            fused.join(z_attrs, "bssid", "left")
+            .join(prior_aps.select("bssid", "altitude", "confidence"), "bssid", "left")
+            .select(
+                "bssid",
+                "latitude",
+                "longitude",
+                F.coalesce("z_alt", "altitude").alias("altitude"),
+                F.sqrt("p_var_m2").alias("horizontal_accuracy"),
+                F.coalesce("z_conf", "confidence").alias("confidence"),
+            )
+        )
+        _conform_ap_dimension(state).write.mode("overwrite").parquet(args.ap_table)
+    finally:
+        estimates.unpersist()
     print(f"wrote {args.ap_table}")
 
 
@@ -210,7 +242,13 @@ def main(argv: list[str] | None = None) -> None:
     l = sub.add_parser("localize", help="maturity-tiered AP localization + Kalman merge")
     l.add_argument("--table", required=True)
     l.add_argument("--ap-table", required=True)
-    l.add_argument("--prior-state", default=None)
+    l.add_argument(
+        "--prior-state",
+        default=None,
+        help="the wifi_access_points table an earlier localize wrote (a path other than"
+        " --ap-table): BAYESIAN-tier APs run MAP against it, and every estimate is"
+        " Kalman-fused with it, horizontal_accuracy² as the prior variance",
+    )
     l.set_defaults(fn=job_localize)
 
     dd = sub.add_parser("dedup", help="corpus dedup: pairs or clusters over documents")

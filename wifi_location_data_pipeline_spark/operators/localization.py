@@ -82,7 +82,11 @@ def wcl_localize(measurements: DataFrame) -> DataFrame:
     # accuracy from the cloud's spatial spread; confidence grows with N
     spread_m = F.sqrt(
         F.pow(F.coalesce(F.col("_slat"), F.lit(0.0)) * METERS_PER_DEG, 2)
-        + F.pow(F.coalesce(F.col("_slon"), F.lit(0.0)) * METERS_PER_DEG * 0.766, 2)
+        + F.pow(
+            F.coalesce(F.col("_slon"), F.lit(0.0)) * METERS_PER_DEG
+            * F.cos(F.radians("latitude")),
+            2,
+        )
     )
     return agg.select(
         "bssid",
@@ -472,7 +476,11 @@ def kalman_update(prior_state: DataFrame, new_estimates: DataFrame) -> DataFrame
 
     innovation_m = F.sqrt(
         F.pow((F.col("z_lat") - F.col("latitude")) * METERS_PER_DEG, 2)
-        + F.pow((F.col("z_lon") - F.col("longitude")) * METERS_PER_DEG * 0.766, 2)
+        + F.pow(
+            (F.col("z_lon") - F.col("longitude")) * METERS_PER_DEG
+            * F.cos(F.radians("latitude")),
+            2,
+        )
     )
     relocated = innovation_m > 3.0 * F.sqrt(F.col("p_var_m2") + F.col("r_var"))
     gain = F.col("p_var_m2") / (F.col("p_var_m2") + F.col("r_var"))

@@ -18,7 +18,7 @@ These companions put the closed-form parts under a value-level oracle:
 - ``ensemble_closed_form`` — positioning requests restricted to ≤2 distinct
   APs, where trilateration/MLE carry base weight 0 (selection framework
   "Base Weights by AP Count"), so the REAL ``position_requests_onepass``
-  engine path — physics gate, broadcast AP join, context classes, selection
+  engine path — physics gate, AP index join, context classes, selection
   matrix, proximity/WCL/log-distance/RSSI-ratio, robust combiner — is fully
   closed-form and the oracle replicates it row-wise end-to-end.
 
@@ -352,55 +352,92 @@ def ecf_aps_sql(d: str) -> str:
 """
 
 
+def _in_layout(df, schema):
+    """``df`` projected onto ``schema``: its columns in order, cast to their
+    types, NULL where ``df`` has no such column."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        *[
+            (F.col(f.name) if f.name in df.columns else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in schema
+        ]
+    )
+
+
+def nested_requests(obs):
+    """Registry observation rows (request_id, mac_addr, signal_strength,
+    frequency) → positioning requests in the ``POSITIONING_REQUEST_SCHEMA``
+    layout, the one input ``position_requests_onepass`` takes: one row per
+    request_id, its scans collected into ``wifiScanResults``."""
+    from pyspark.sql import functions as F
+
+    from wifi_location_data_pipeline_spark.schemas import (
+        POSITIONING_REQUEST_SCHEMA,
+        WIFI_SCAN_RESULT_SCHEMA,
+    )
+
+    # positional cast: the three observation fields, then ssid, linkSpeed
+    # and channelWidth unset
+    scan = F.struct(
+        "mac_addr", "signal_strength", "frequency", F.lit(None), F.lit(None), F.lit(None)
+    ).cast(WIFI_SCAN_RESULT_SCHEMA)
+    # the kernel runs in the nest's partitions: half the cores' worth of
+    # them, since each kernel task carries a fixed Python cost (at sf0.1 on
+    # 4 cores, 2 partitions answer in half the time of the default 8)
+    n_parts = max(2, obs.sparkSession.sparkContext.defaultParallelism // 2)
+    requests = (
+        obs.repartition(n_parts, "request_id")
+        .groupBy(F.col("request_id").alias("requestId"))
+        .agg(F.collect_list(scan).alias("wifiScanResults"))
+    )
+    return _in_layout(requests, POSITIONING_REQUEST_SCHEMA)
+
+
+def ap_dimension(apdim):
+    """``ecf_aps_sql`` rows → active APs in the ``WIFI_ACCESS_POINTS_SCHEMA``
+    layout."""
+    from pyspark.sql import functions as F
+
+    from wifi_location_data_pipeline_spark.schemas import WIFI_ACCESS_POINTS_SCHEMA
+
+    aps = apdim.select(
+        F.col("mac").alias("mac_addr"),
+        F.col("lat").alias("latitude"),
+        F.col("lon").alias("longitude"),
+        F.col("alt").alias("altitude"),
+        F.col("hacc").alias("horizontal_accuracy"),
+        F.col("conf").alias("confidence"),
+        "frequency",
+        "vendor",
+        F.lit("active").alias("status"),
+    )
+    return _in_layout(aps, WIFI_ACCESS_POINTS_SCHEMA)
+
+
 def ensemble_closed_fn(spark, sf_dir):
     """REAL one-pass ensemble (positioning.onepass.position_requests_onepass):
-    physics gate → broadcast AP join → kernel-side pack → context classes →
+    physics gate → AP index join → kernel-side pack → context classes →
     selection matrix → proximity/WCL/log-distance/RSSI-ratio → robust
     combiner (PositioningServiceImpl.java:168-190; SELECTION.md; SURVEY
     §2.7/§3.2), on requests restricted to ≤2 APs so the path is fully
-    closed-form and DuckDB-checkable."""
+    closed-form and DuckDB-checkable: trilateration and MLE carry base
+    weight 0 at SINGLE_AP / TWO_APS, and a numeric method in an answer
+    would fail the value compare."""
     from pyspark.sql import functions as F
 
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_observations_onepass,
-    )
+    from wifi_location_data_pipeline_spark.positioning.onepass import position_requests_onepass
 
     obs = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({ecf_obs_sql(SPARK)}) o"))
     apdim = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({ecf_aps_sql(SPARK)}) a"))
-
-    # flat-observation entry: the fixture is already one row per scan, and
-    # every mac resolves (ap_ids 0..49 cover the dimension), so
-    # position_observations_onepass nests the resolved scans and runs the
-    # nested plan (value-identical here; equivalence pinned by
-    # test_flat_onepass_matches_nested)
-    flat_obs = obs.join(
-        F.broadcast(apdim.select("ap_id", "mac", "frequency")), "ap_id"
-    ).select(
+    # each scan reports its AP's frequency
+    scans = obs.join(F.broadcast(apdim.select("ap_id", "mac", "frequency")), "ap_id").select(
         F.col("user_id").cast("string").alias("request_id"),
         F.col("mac").alias("mac_addr"),
         F.col("rssi").alias("signal_strength"),
         "frequency",
     )
-    aps = apdim.select(
-        F.col("mac").alias("mac_addr"),
-        F.lit(None).cast("string").alias("version"),
-        F.col("lat").alias("latitude"),
-        F.col("lon").alias("longitude"),
-        F.col("alt").alias("altitude"),
-        F.col("hacc").alias("horizontal_accuracy"),
-        F.lit(5.0).alias("vertical_accuracy"),
-        F.col("conf").alias("confidence"),
-        F.concat(F.lit("ap-"), F.col("ap_id").cast("string")).alias("ssid"),
-        F.col("frequency"),
-        F.col("vendor"),
-        F.lit("active").alias("status"),
-        F.lit(None).cast("string").alias("geohash"),
-    )
-    # the ≤2-AP slice can never select trilateration/MLE (base weight 0 at
-    # ONE_AP/TWO_APS — SELECTION.md hard constraint), so the numeric tier's
-    # branch machinery (interior cache + materialization + count job) is
-    # skipped; the 'off' contract is assert-enforced per row in onepass
-    out = position_observations_onepass(flat_obs, aps, numeric_tier="off")
+    out = position_requests_onepass(nested_requests(scans), ap_dimension(apdim))
     return out.select(
         "request_id",
         F.expr(_r("latitude", 6)).alias("latitude"),
@@ -410,6 +447,43 @@ def ensemble_closed_fn(spark, sf_dir):
         F.expr(_r("confidence", 4)).alias("confidence"),
         F.array_join("methods_used", ",").alias("methods_used"),
         "is_collinear",
+    )
+
+
+def positioning_ensemble_fn(spark, sf_dir):
+    """Full 6-algorithm ensemble over synthetic requests derived from events.
+
+    Each user_id becomes one positioning request of 9..20 scans, so every
+    selection tier occurs, the 4+-AP numeric tier included; the scanned APs
+    are the ``ecf_aps_sql`` dimension. Runs the one-pass kernel end to end:
+    physics gate → AP index join → context classification → selection
+    matrix → closed-form algorithms and trilateration/MLE → robust combiner
+    (SURVEY.md §2.7/§3.2). Iterative numerics are not SQL-expressible →
+    rows-only driver check."""
+    from pyspark.sql import functions as F
+
+    from wifi_location_data_pipeline_spark.positioning.onepass import position_requests_onepass
+
+    e = _obs_seed()
+    # rssi range [-84, -45]: spread <= 39 stays under the 45 dB physics gate
+    # (max rssi > -50 arms the check), every request passes
+    obs = spark.sql(_fold(spark, sf_dir, f"""
+        SELECT CAST(user_id AS STRING) AS request_id,
+          CAST((user_id * 13 + {e}) % 50 AS BIGINT) AS ap_id,
+          CAST(-45.0 - ({e} % 40) AS DOUBLE) AS signal_strength,
+          2437 AS frequency
+        FROM ({users_cte(SPARK, "9 + user_id % 12")}) base
+        """))
+    apdim = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({ecf_aps_sql(SPARK)}) a"))
+    scans = obs.join(F.broadcast(apdim.select("ap_id", F.col("mac").alias("mac_addr"))), "ap_id")
+    out = position_requests_onepass(nested_requests(scans), ap_dimension(apdim))
+    return out.select(
+        "request_id",
+        F.round("latitude", 6).alias("latitude"),
+        F.round("longitude", 6).alias("longitude"),
+        F.round("accuracy", 2).alias("accuracy"),
+        F.round("confidence", 4).alias("confidence"),
+        F.array_join("methods_used", ",").alias("methods_used"),
     )
 
 
@@ -616,9 +690,17 @@ posx AS MATERIALIZED (
 from wifi_location_data_pipeline_spark.plans.queries import register  # noqa: E402
 
 register(
+    "positioning_ensemble",
+    "Full positioning ensemble through the one-pass kernel: physics gate, "
+    "AP index join, context classification, selection matrix, 6 algorithms "
+    "(closed-form and trilateration/MLE), robust combiner (SURVEY §2.7, §3.2).",
+    spark_fn=positioning_ensemble_fn,
+)
+
+register(
     "ensemble_closed_form",
     "Flagship one-pass positioning ensemble on ≤2-AP requests (closed-form "
-    "selection only): physics gate, broadcast AP join, kernel-side pack, "
+    "selection only): physics gate, AP index join, kernel-side pack, "
     "context classification, selection matrix, "
     "proximity/WCL/log-distance/RSSI-ratio, robust combiner — the REAL "
     "position_requests_onepass path under a value-level DuckDB oracle "

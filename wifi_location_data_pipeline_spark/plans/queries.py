@@ -1284,7 +1284,7 @@ register(
     "route to WCL (20<=N<50) / MLE (50<=N<100) / BAYESIAN (N>=100), below-"
     "bootstrap APs excluded; the tier-1 WCL estimate is computed in-line "
     "(per-AP caps derived from ap_id so every tier occurs; "
-    "operators/localization.py holds the applyInPandas MLE tier).",
+    "operators/localization.py holds the mapInPandas MLE tier).",
     sql=lambda d: f"""
 WITH m AS ({measurements_cte(d)}),
 capped AS (
@@ -3516,91 +3516,6 @@ register(
 )
 
 
-# ---------------------------------------------------------------------------
-# §2.7 full positioning ensemble (numeric tier included) — rows-only check
-# ---------------------------------------------------------------------------
-
-
-def _positioning_ensemble_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full 6-algorithm ensemble over synthetic requests derived from events.
-
-    Each user_id becomes one positioning request of <=20 scans; the scanned
-    AP set is the synthetic 50-AP dimension (aps_cte positions). Exercises
-    explode -> physics gate -> broadcast AP join -> context classification ->
-    selection matrix -> closed-form + applyInPandas numeric algorithms ->
-    robust combine (SURVEY.md §2.7/§3.2). Iterative numerics are not
-    SQL-expressible -> rows-only driver check.
-    """
-    from pyspark.sql import functions as F
-
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_observations_onepass,
-    )
-
-    def mac_of(col):
-        h = F.md5(col.cast("string"))
-        return F.lower(
-            F.concat_ws(
-                ":",
-                F.substring(h, 1, 2), F.substring(h, 3, 2), F.substring(h, 5, 2),
-                F.substring(h, 7, 2), F.substring(h, 9, 2), F.substring(h, 11, 2),
-            )
-        )
-
-    # request population from the same window-free users_cte frame as the
-    # oracle companions (9..20 scans/user so every selection tier incl. the
-    # 4+-AP numeric path occurs), fed FLAT to position_observations_onepass:
-    # the round-1..6 form paid a 1M-row events window (first-20 per user)
-    # PLUS a collect_list nest that position_requests immediately
-    # re-exploded — neither touches the ensemble under test
-    e = _obs_seed()
-    obs = spark.sql(
-        f"""
-        SELECT CAST(user_id AS STRING) AS request_id,
-          CAST((user_id * 13 + {e}) % 50 AS BIGINT) AS ap_id,
-          CAST(-45.0 - ({e} % 40) AS DOUBLE) AS signal_strength
-        FROM ({users_cte(SPARK, "9 + user_id % 12")}) base
-        """
-        # rssi range [-84, -45]: spread <= 39 stays under the 45 dB physics
-        # gate (max rssi > -50 arms the check), every request passes
-    ).select(
-        "request_id",
-        mac_of(F.col("ap_id")).alias("mac_addr"),
-        "signal_strength",
-        F.lit(2437).cast("int").alias("frequency"),
-    )
-
-    ap_ids = spark.range(0, 50).select(F.col("id").alias("ap_id"))
-    aps = ap_ids.select(
-        mac_of(F.col("ap_id")).alias("mac_addr"),
-        F.lit(None).cast("string").alias("version"),
-        (40.0 + F.col("ap_id") * 0.01).alias("latitude"),
-        (-74.0 + (F.col("ap_id") * 7 % 50) * 0.01).alias("longitude"),
-        F.lit(10.0).alias("altitude"),
-        F.lit(10.0).alias("horizontal_accuracy"),
-        F.lit(5.0).alias("vertical_accuracy"),
-        F.lit(0.8).alias("confidence"),
-        F.concat(F.lit("ap-"), F.col("ap_id").cast("string")).alias("ssid"),
-        F.lit(2437).cast("int").alias("frequency"),
-        F.element_at(
-            F.array(F.lit("cisco"), F.lit("aruba"), F.lit("ubiquiti"), F.lit("generic")),
-            (F.col("ap_id") % 4 + 1).cast("int"),
-        ).alias("vendor"),
-        F.lit("active").alias("status"),
-        F.lit(None).cast("string").alias("geohash"),
-    )
-
-    out = position_observations_onepass(obs, aps, numeric_tier="auto")
-    return out.select(
-        "request_id",
-        F.round("latitude", 6).alias("latitude"),
-        F.round("longitude", 6).alias("longitude"),
-        F.round("accuracy", 2).alias("accuracy"),
-        F.round("confidence", 4).alias("confidence"),
-        F.array_join("methods_used", ",").alias("methods_used"),
-    )
-
-
 def _derived_measurements_df(spark: SparkSession, sf_dir: str, cap_by_ap: bool = False) -> DataFrame:
     """DataFrame twin of ``measurements_cte`` with measurement-table column
     names (bssid string key, epoch-millis timestamp), for the Python-tier
@@ -3798,7 +3713,7 @@ SELECT doc_id, sha256(text) AS roundtrip_sha FROM documents
 
 def _batch_localization_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maturity-tiered batch localization end-to-end (SURVEY §2.9/§3.3):
-    tier routing (WCL / applyInPandas MLE / Bayesian-with-prior for N>=100,
+    tier routing (WCL / mapInPandas MLE / Bayesian-with-prior for N>=100,
     prior = WCL state of each AP's older half) over every sufficient BSSID
     in one job. Iterative gradient ascent -> not SQL-expressible ->
     rows-only check.
@@ -3880,9 +3795,10 @@ def _batch_localization_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "batch_localization_tiered",
     "Batch AP localization with maturity-tier routing: WCL tier as pure SQL "
-    "aggregate, MLE tier as applyInPandas gradient ascent with tier-specific "
-    "path-loss/sigma per row class, BAYESIAN tier (N>=100) as MAP estimation "
-    "against the AP's prior state, per-AP skew cap "
+    "aggregate, MLE tier as lockstep-batched gradient ascent in one "
+    "mapInPandas pass with tier-specific path-loss/sigma per row class, "
+    "BAYESIAN tier (N>=100) as MAP estimation against the AP's prior state "
+    "in the same pass, per-AP skew cap "
     "(FRAMEWORK:121-169; operators/localization.py; implements the stubbed "
     "wifi-data-pipeline-computation algorithm layer).",
     spark_fn=_batch_localization_fn,
@@ -3969,15 +3885,6 @@ register(
     "applyInPandas, per-AP row cap against skew; refinement tier after the "
     "global MAD pass (FRAMEWORK:113-115; operators/relocation.py).",
     spark_fn=_lof_fn,
-)
-
-
-register(
-    "positioning_ensemble",
-    "Full positioning ensemble: physics gate, broadcast AP join, context "
-    "classification, selection matrix, 6 algorithms (closed-form SQL + "
-    "applyInPandas trilateration/MLE), robust combiner (SURVEY §2.7, §3.2).",
-    spark_fn=_positioning_ensemble_fn,
 )
 
 

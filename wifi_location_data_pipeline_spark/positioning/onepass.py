@@ -20,6 +20,12 @@ join and no shuffle, and no request straddles two Arrow batches. The
 positioning stream (streaming/positioning.py) runs the same kernel in the
 driver over each micro-batch of raw requests.
 
+``position_requests_onepass`` is the one batch entry, and it takes the
+reference's one request shape: a request row holding its
+``wifiScanResults`` array (PositioningServiceImpl.calculatePosition). A
+caller holding one row per observation nests them first, as the registry's
+oracle companions do (plans/positioning_companions.nested_requests).
+
 History: rounds 2–5 expressed the packed middle as generated SQL over lambda
 higher-order array functions. Lambda HOFs run in Spark's INTERPRETED
 projection path (they disqualify whole-stage codegen), which the round-5
@@ -34,13 +40,12 @@ baseline (test_onepass_matches_multipass).
 
 from __future__ import annotations
 
-import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from wifi_location_data_pipeline_spark.functions.identifiers import normalize_bssid
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
     CONTEXT_FIELDS,
     _APC,
@@ -155,19 +160,20 @@ def selection_info_by_context(spark: SparkSession) -> dict[tuple, list[dict]]:
     return info
 
 
-def ap_index(access_points: DataFrame) -> pd.DataFrame:
-    """``known_ap_lookup(access_points)`` collected into a pandas frame: the
-    AP index the kernel joins on mac_addr. A NULL mac never matches an inner
-    join, so its rows are left out."""
+def ap_index(access_points: DataFrame) -> Broadcast:
+    """``known_ap_lookup(access_points)`` collected into a pandas frame and
+    held as a broadcast variable: the AP index the kernel joins on mac_addr,
+    in the one form both placements read (an executor's Python worker loads
+    it once; the driver-side stream reads it once). A NULL mac never matches
+    an inner join, so its rows are left out."""
     lookup = known_ap_lookup(access_points).filter(F.col("mac_addr").isNotNull())
-    return lookup.toArrow().to_pandas()
+    return access_points.sparkSession.sparkContext.broadcast(lookup.toArrow().to_pandas())
 
 
 def position_requests_onepass(
     requests: DataFrame,
     access_points: DataFrame,
     with_reasons: bool = False,
-    numeric_tier: str = "auto",
 ) -> DataFrame:
     """Nested requests + AP dimension → combined positions, one job.
 
@@ -176,8 +182,7 @@ def position_requests_onepass(
     element values, packs each request and runs
     context/selection/algorithms/numeric/combine. The AP index
     (``ap_index``) is collected once here, the bytes a broadcast join would
-    pull through the driver, and ships as a broadcast variable that each
-    Python worker loads once. No join and no shuffle in the plan: the kernel
+    pull through the driver, and ships as a broadcast variable. No join and no shuffle in the plan: the kernel
     runs in the partitions of ``requests``, so its parallelism is the
     input's (a caller holding a few large splits can repartition
     ``requests`` first).
@@ -189,68 +194,10 @@ def position_requests_onepass(
     structs, which the kernel looks up by the request's context classes in
     the 480-entry ``selection_info_by_context`` table, so the reason
     bookkeeping costs no join and no per-request string assembly.
-
-    ``numeric_tier``: the trilateration/MLE tier runs INSIDE the kernel.
-    "auto" runs it wherever selection routes a request; "off" makes the
-    kernel raise at execution if selection routes any request to it.
     """
-    if numeric_tier not in ("auto", "off"):
-        raise ValueError(f"numeric_tier must be 'auto' or 'off', got {numeric_tier!r}")
     spark = requests.sparkSession
     info = selection_info_by_context(spark) if with_reasons else None
     schema = answer_schema(with_reasons)
-    kernel = make_onepass_kernel(
-        spark.sparkContext.broadcast(ap_index(access_points)), info, numeric_tier,
-        to_arrow_schema(schema),
-    )
+    kernel = make_onepass_kernel(ap_index(access_points), info, to_arrow_schema(schema))
     return requests.select("requestId", "wifiScanResults").mapInArrow(kernel, schema)
 
-
-def position_observations_onepass(
-    observations: DataFrame,
-    access_points: DataFrame,
-    with_reasons: bool = False,
-    numeric_tier: str = "auto",
-) -> DataFrame:
-    """Flat-observation entry of ``position_requests_onepass``.
-
-    For callers whose scans are already one row per observation
-    (``request_id, mac_addr, signal_strength, frequency``) — e.g. the
-    oracle-gate companions that derive observations relationally. The
-    observations whose AP resolves are nested into request structs (the one
-    request_id shuffle) and positioned by the nested entry.
-
-    Semantics note vs the nested API: the physics gate and ``n_scanned``
-    here see only observations whose AP RESOLVES (the nest runs after a
-    semi join with the AP lookup), while the nested path gates pre-join on
-    every scanned mac. Callers whose observations may carry unknown MACs and
-    need them gated/counted must use the nested API; when every mac
-    resolves (all gate-companion fixtures), the two paths are
-    value-identical — pinned by
-    tests/test_positioning.py::test_flat_onepass_matches_nested.
-    """
-    # normalize like the kernel does on the nested path — without
-    # this, an uppercase/dash-format mac that DOES exist in the dimension
-    # silently drops at the semi join instead of resolving
-    resolved = observations.withColumn(
-        "mac_addr", normalize_bssid(F.col("mac_addr"))
-    ).join(F.broadcast(known_ap_lookup(access_points)), "mac_addr", "left_semi")
-    scan = F.struct(
-        F.col("mac_addr").alias("macAddress"),
-        F.col("signal_strength").alias("signalStrength"),
-        F.col("frequency"),
-        F.lit(None).cast("string").alias("ssid"),
-        F.lit(None).cast("int").alias("linkSpeed"),
-        F.lit(None).cast("int").alias("channelWidth"),
-    )
-    # an explicit partition count keeps the kernel at cluster width: AQE
-    # would coalesce the tiny nested exchange to one partition and
-    # single-thread the NumPy
-    n_parts = max(2, observations.sparkSession.sparkContext.defaultParallelism // 2)
-    requests = (
-        resolved.repartition(n_parts, "request_id")
-        .groupBy("request_id")
-        .agg(F.collect_list(scan).alias("wifiScanResults"))
-        .withColumnRenamed("request_id", "requestId")
-    )
-    return position_requests_onepass(requests, access_points, with_reasons, numeric_tier)

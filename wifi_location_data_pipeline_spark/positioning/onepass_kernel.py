@@ -91,9 +91,6 @@ PACK_FIELDS = (
     "ap_haccuracy",
     "ap_confidence",
 )
-# the columns ``pack_requests`` reads: the gated observation rows joined
-# with the AP index
-KERNEL_INPUT = ("request_id", "n_scanned", *PACK_FIELDS, "ap_vendor")
 # kernel-side name of each value field
 _SHORT = dict(zip(PACK_FIELDS[1:], ("s", "freq", "lat", "lon", "alt", "hacc", "conf")))
 
@@ -215,8 +212,10 @@ def gate_and_explode(requests):
 
 
 def pack_requests(pdf):
-    """Observation rows (``KERNEL_INPUT``) of whole requests → padded
-    per-request matrices.
+    """Observation rows of whole requests → padded per-request matrices.
+
+    ``pdf``: the ``gate_and_explode`` rows joined with the AP index, with
+    columns request_id, n_scanned, the ``PACK_FIELDS`` and ap_vendor.
 
     Groups rows by request_id (requests in first-appearance order) and sorts
     each request by ``PACK_FIELDS`` ascending, nulls first inside each
@@ -277,7 +276,6 @@ def compute_onepass(
     lens: np.ndarray,
     mats: dict[str, np.ndarray],
     ded: np.ndarray,
-    numeric_tier: str = "auto",
 ):
     """One batch of packed requests (``pack_requests``) → per-request
     result dict arrays.
@@ -502,11 +500,6 @@ def compute_onepass(
         rr_valid = (nd >= 2.0) & (n_pairs > 0) & (spw > 0.0)
 
     has_numeric = sel[:, _TRI] | sel[:, _MLE]
-    if numeric_tier == "off" and has_numeric.any():
-        raise ValueError(
-            "position_requests_onepass(numeric_tier='off'): selection"
-            " routed a request to trilateration/MLE"
-        )
 
     # ---- numeric tier: trilateration + lockstep-batched MLE over the
     # dedup'd observations of only the routed requests (numeric.py) ----
@@ -756,7 +749,7 @@ def build_output(rids, res, selection_info: dict | None):
     return out
 
 
-def make_onepass_kernel(ap_index, selection_info: dict | None, numeric_tier: str, schema):
+def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
     """The positioning kernel: a generator over Arrow record batches (or
     tables) of nested requests (``requestId``, ``wifiScanResults``), yielding
     one answer record batch of the Arrow ``schema`` per input batch that has
@@ -765,23 +758,21 @@ def make_onepass_kernel(ap_index, selection_info: dict | None, numeric_tier: str
     positioning stream runs it in the driver.
 
     Each batch is gated and exploded (``gate_and_explode``), inner-joined
-    with ``ap_index`` on mac_addr, packed and solved. Every request is one
+    with the AP index on mac_addr, packed and solved. Every request is one
     input row, so no request straddles two batches. ``ap_index``: the
-    ``known_ap_lookup`` rows as a pandas frame with no NULL mac, or a
-    broadcast variable holding it (loaded once per Python worker).
+    broadcast variable ``onepass.ap_index`` returns, read on first use.
     ``selection_info``: see ``build_output``.
     """
     import pyarrow as pa
-    from pyspark import Broadcast
 
     def run(batches):
-        aps = ap_index.value if isinstance(ap_index, Broadcast) else ap_index
+        aps = ap_index.value
         for batch in batches:
             rows = gate_and_explode(batch).merge(aps, on="mac_addr", how="inner")
             if not len(rows):
                 continue
             rids, n_scanned, lens, mats, ded = pack_requests(rows)
-            res = compute_onepass(n_scanned, lens, mats, ded, numeric_tier=numeric_tier)
+            res = compute_onepass(n_scanned, lens, mats, ded)
             yield pa.RecordBatch.from_pandas(
                 build_output(rids, res, selection_info), schema=schema, preserve_index=False
             )

@@ -19,7 +19,9 @@ from wifi_location_data_pipeline_spark.functions.identifiers import normalize_bs
 def explode_requests(requests: DataFrame) -> DataFrame:
     """Nested positioning requests → one row per scan observation.
 
-    Input schema: POSITIONING_REQUEST_SCHEMA; output: POSITIONING_OBSERVATION_SCHEMA.
+    Input schema: POSITIONING_REQUEST_SCHEMA; output columns: request_id,
+    n_scanned, mac_addr (normalized), signal_strength, frequency, ssid,
+    link_speed, channel_width.
     """
     s = F.col("s")
     return requests.select(

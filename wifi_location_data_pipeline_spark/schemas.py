@@ -186,7 +186,7 @@ WIFI_ACCESS_POINTS_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# F4: positioning requests (exploded to one row per scan observation)
+# F4: positioning requests (one row per request, its scans nested)
 # ---------------------------------------------------------------------------
 
 WIFI_SCAN_RESULT_SCHEMA = T.StructType(
@@ -207,19 +207,6 @@ POSITIONING_REQUEST_SCHEMA = T.StructType(
         T.StructField("application", T.StringType()),
         T.StructField("calculationDetail", T.BooleanType()),
         T.StructField("wifiScanResults", T.ArrayType(WIFI_SCAN_RESULT_SCHEMA)),
-    ]
-)
-
-# Flat per-observation shape used inside the positioning pipeline
-POSITIONING_OBSERVATION_SCHEMA = T.StructType(
-    [
-        T.StructField("request_id", T.StringType(), nullable=False),
-        T.StructField("mac_addr", T.StringType()),
-        T.StructField("signal_strength", T.DoubleType()),
-        T.StructField("frequency", T.IntegerType()),
-        T.StructField("ssid", T.StringType()),
-        T.StructField("link_speed", T.IntegerType()),
-        T.StructField("channel_width", T.IntegerType()),
     ]
 )
 

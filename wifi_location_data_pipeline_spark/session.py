@@ -66,17 +66,20 @@ def build_session(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # collect_list/collect_set aggregates (the packed positioning plan,
-        # session packing) run as ObjectHashAggregate; the default 128-entry
-        # in-memory map spills to sort-based aggregation as soon as a
-        # partition holds >128 groups, adding a sort per partition. Typed
+        # collect_list/collect_set aggregates run as ObjectHashAggregate;
+        # the default 128-entry in-memory map spills to sort-based
+        # aggregation as soon as a partition holds >128 groups, adding a
+        # sort per partition. The product user is localization's numeric
+        # tier (_localize_numeric packs each AP's rows with collect_list, one
+        # group per AP, so a partition past 128 APs would spill); typed
         # object maps of a few thousand packed rows fit comfortably in
         # executor memory at any sane partition sizing.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
         # error-context capture walks the Python stack AND makes an extra
-        # py4j call per DataFrame operation; the array-native positioning
-        # plan issues ~25k ops, where this wrapper alone cost ~40% of the
-        # driver-side plan build
+        # py4j call per DataFrame operation. It was set for a generated
+        # positioning plan of ~25k ops (the wrapper cost ~40% of its
+        # driver-side build); that plan is gone, and no current plan builds
+        # enough operations for the wrapper to show
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # single-node: every task is process-local, so the delay-scheduling
         # wait is pure added latency per scheduling round. Cluster

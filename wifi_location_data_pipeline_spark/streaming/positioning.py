@@ -25,7 +25,8 @@ the driver for the stream, so the two placements give equal answers.
 The AP index is ``onepass.ap_index(access_points)`` (``known_ap_lookup``:
 status filter, keep-first by version, rename — the analog of the service's
 DynamoDB lookup path with its long-lived client), collected into the driver
-once at stream start: the snapshot a cache at stream start would hold.
+once at stream start: the snapshot a cache at stream start would hold. It is
+the batch plan's broadcast variable, which the driver-side kernel reads once.
 Driver memory is bounded by that index plus one micro-batch of requests;
 bound the latter with ``max_files_per_trigger``. The checkpoint logs go
 through the FileSystem-based checkpoint manager ``build_session`` selects.
@@ -87,7 +88,6 @@ def start_positioning_stream(
     kernel = make_onepass_kernel(
         ap_index(access_points),
         selection_info_by_context(spark) if with_reasons else None,
-        "auto",
         schema,
     )
     try:
