@@ -86,3 +86,63 @@ def test_keyed_memos_do_not_accumulate_persisted_relations(spark, sf_dir):
         _collocations_fn(spark, sf_dir).count()
     # one persisted counts relation each: cms, bpe wf, collocations g
     assert jsc.getPersistentRDDs().size() - before <= 3
+
+
+@pytest.fixture(scope="module")
+def dir_corpus(spark, tmp_path_factory):
+    """The small corpus rewritten as Spark-written directory tables: each
+    ``<name>.parquet`` a directory of part files plus ``_SUCCESS``."""
+    from wifi_location_data_pipeline_spark.sources.tables import TESTDATA_TABLES
+
+    d = tmp_path_factory.mktemp("sf_dirs")
+    for name in TESTDATA_TABLES:
+        spark.read.parquet(os.path.join(SMALL, f"{name}.parquet")).repartition(
+            2
+        ).write.parquet(str(d / f"{name}.parquet"))
+    return str(d)
+
+
+def test_directory_tables_probe_and_answer_like_files(spark, dir_corpus, monkeypatch):
+    """A directory table is measured by its part files, not by the
+    directory's own inode size, and the size-keyed queries answer the same
+    on both layouts."""
+    from wifi_location_data_pipeline_spark.plans import llm_queries as L
+    from wifi_location_data_pipeline_spark.plans.queries import QUERIES
+    from wifi_location_data_pipeline_spark.sources.tables import (
+        FACT_TABLES,
+        table_parts,
+        table_probe,
+    )
+
+    for name in FACT_TABLES:
+        parts = table_parts(os.path.join(dir_corpus, f"{name}.parquet"))
+        assert len(parts) >= 2
+        assert all(not os.path.basename(p).startswith("_") for p in parts)
+        assert os.path.exists(os.path.join(dir_corpus, f"{name}.parquet", "_SUCCESS"))
+        f, d = table_probe(SMALL, name), table_probe(dir_corpus, name)
+        assert d.rows == f.rows
+        assert d.bytes != 4096
+        # each part repeats the schema, footer and dictionaries; the codec
+        # and encodings may differ from the file's writer
+        assert 0.5 * f.bytes < d.bytes < 2 * f.bytes + 16384 * len(parts)
+
+    def rows(name, sf):
+        return sorted(map(tuple, QUERIES[name].spark(spark, sf).collect()))
+
+    for name in (
+        "bm25_topk",
+        "ngram_collocations",
+        "dedup_strategy_agreement",
+        "dedup_embedding_cosine",
+    ):
+        assert rows(name, dir_corpus) == rows(name, SMALL), name
+
+    # a bound between the directory inode size and the table's real bytes:
+    # collocations must take the bounded (vocabulary-independent) collect
+    monkeypatch.setattr(L, "_COLL_BOUNDED_MIN_BYTES", 8192)
+    assert table_probe(dir_corpus, "documents").bytes >= 8192
+    tap: list = []
+    monkeypatch.setattr(L, "_PLAN_TAP", tap)
+    L._collocations_fn(spark, dir_corpus).collect()
+    assert any("bounded tagged-union" in label for label, _ in tap)
+    assert not any("small-corpus" in label for label, _ in tap)

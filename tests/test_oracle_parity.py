@@ -102,29 +102,6 @@ def test_gate_query_reaches_product_code(name):
     assert _product_refs(fn), f"{name} reaches no product module"
 
 
-def test_bm25_twin_matches_declared_sql(spark, sf_dir, monkeypatch):
-    """The tokenize-once spark twin must reproduce the declared SQL exactly.
-
-    The twin only engages above _BM25_TWIN_MIN_BYTES of documents (below it
-    the saved tokenize is smaller than its extra job round), so the test
-    corpus would exercise only the SQL fallback — force the twin on and
-    compare both paths row-for-row, bm25 scores included (the twin folds the
-    driver-collected corpus stats back as integer literals; the identical
-    IEEE op sequence must survive that folding)."""
-    from wifi_location_data_pipeline_spark.plans import llm_queries as L
-    from wifi_location_data_pipeline_spark.plans.dialect import DOCS_SPREAD_TOKEN
-    from wifi_location_data_pipeline_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    monkeypatch.setattr(L, "_BM25_TWIN_MIN_BYTES", 0)
-    twin = L._bm25_spark_fn(spark, sf_dir).collect()
-    sql_text = L._bm25_sql("spark").replace(
-        DOCS_SPREAD_TOKEN, L.spread_documents_src(spark, sf_dir)
-    )
-    declared = spark.sql(sql_text).collect()
-    assert [tuple(r) for r in twin] == [tuple(r) for r in declared]
-
-
 def test_collocations_bounded_matches_small(spark, sf_dir, monkeypatch):
     """ngram_collocations' at-scale bounded-collect branch must reproduce
     the small-corpus one-job branch exactly.
@@ -146,28 +123,61 @@ def test_collocations_bounded_matches_small(spark, sf_dir, monkeypatch):
     assert len(small) > 0  # the corpus must actually exercise the fold
 
 
-def test_strategy_agreement_fused_matches_two_pipeline(spark, sf_dir, monkeypatch):
-    """dedup_strategy_agreement's at-scale fused verify (union candidates
-    with provenance flags, verify the exact-Jaccard predicate once) must
-    reproduce the two-pipeline full-outer form exactly: a pair verified
-    >= 0.8 was found by a strategy iff it was that strategy's candidate,
-    so every count and recall must match bit-for-bit."""
+def test_ngram_verify_array_matches_join_count(spark, sf_dir, monkeypatch):
+    """ngram_jaccard verifies its candidates by array intersection up to
+    NGRAM_ARRAY_VERIFY_MAX_PAIRS candidates and by join-count above it.
+    Patch the cutoff to either side of the fixture's own candidate count so
+    each branch runs, and require the same verified pairs."""
     from wifi_location_data_pipeline_spark.plans import llm_queries as L
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
-    # the fused branch also needs the array-verify regime: assert the fixture
-    # is in it, so forcing the size crossover really runs both branches
-    _, _, n_cand = L._ngram_jaccard_parts(
-        spark, sf_dir, L.minhash_signature_table(spark, sf_dir)
-    )
-    assert n_cand <= L.NGRAM_ARRAY_VERIFY_MAX_PAIRS
-    monkeypatch.setattr(L, "_AGREE_FUSED_MIN_BYTES", 1 << 60)  # force two-pipeline
-    two = L._strategy_agreement_spark_fn(spark, sf_dir).collect()
-    monkeypatch.setattr(L, "_AGREE_FUSED_MIN_BYTES", 0)  # force fused
-    fused = L._strategy_agreement_spark_fn(spark, sf_dir).collect()
-    assert [tuple(r) for r in fused] == [tuple(r) for r in two]
-    assert two[0].n_union > 0  # the corpus must actually exercise both paths
+    arrs = L.minhash_signature_table(spark, sf_dir)
+    parts = L._ngram_jaccard_parts(spark, sf_dir, arrs)
+    n_cand = parts[2]
+    assert n_cand > 0
+
+    def pairs(cutoff):
+        monkeypatch.setattr(L, "NGRAM_ARRAY_VERIFY_MAX_PAIRS", cutoff)
+        return sorted(
+            tuple(r)
+            for r in L._ngram_jaccard_spark_fn(spark, sf_dir, arrs, parts).collect()
+        )
+
+    array_form = pairs(n_cand)  # n_cand <= cutoff: array-intersect verify
+    join_form = pairs(n_cand - 1)  # n_cand > cutoff: join-count verify
+    assert array_form == join_form
+    assert array_form  # the fixture must hold verified near-dup pairs
+
+
+def test_plan_tap_falls_back_to_explain_then_raises(spark, monkeypatch):
+    """The plan tap records the public explain when the private
+    explainString call fails, and raises when both fail: a capture never
+    records a placeholder for a plan it does not have."""
+    from wifi_location_data_pipeline_spark.plans import llm_queries as L
+
+    class _Utils:
+        @staticmethod
+        def explainString(*_):
+            raise RuntimeError("explainString unavailable")
+
+    class _Jvm:
+        PythonSQLUtils = _Utils
+
+    class _Sc:
+        _jvm = _Jvm()
+
+    tap: list = []
+    monkeypatch.setattr(L, "_PLAN_TAP", tap)
+    df = spark.range(3)
+    # the public explain goes through the same private call: both fail
+    monkeypatch.setattr(df, "_sc", _Sc())
+    with pytest.raises(RuntimeError, match="explainString unavailable"):
+        L._tap_plan("both fail", df)
+    assert tap == []
+    monkeypatch.setattr(df, "explain", lambda mode: print(f"public {mode} plan"))
+    L._tap_plan("fallback", df)
+    assert tap == [("fallback", "public formatted plan\n")]
 
 
 @pytest.mark.parametrize("name", TAIL_WITH_ORACLE)

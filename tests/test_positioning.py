@@ -8,6 +8,7 @@ numeric ranges + methods-used sets, like the reference's check_range.
 """
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,6 +81,31 @@ def run(spark, ap_df, requests):
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
     out = position_requests_onepass(rdf, ap_df)
     return {r["request_id"]: r for r in out.collect()}
+
+
+def test_ap_index_one_broadcast_per_content(spark, tmp_path):
+    """Repeated positioning calls on one AP table reuse one AP-index
+    broadcast (each broadcast pickles a file into the driver's temp dir and
+    nothing releases it). A table rewritten at the same path is new content:
+    it gets a new index, and the answers follow it."""
+    mac = APS[0][0]
+    # content no other test broadcasts, so the first call adds one index
+    rows = [dict(r, confidence=0.71) for r in golden_ap_rows()]
+    path = str(tmp_path / "aps")
+    spark.createDataFrame(rows, WIFI_ACCESS_POINTS_SCHEMA).write.parquet(path)
+    rdf = spark.createDataFrame([req("r", [scan(mac, -55.0)])], POSITIONING_REQUEST_SCHEMA)
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    for _ in range(5):
+        first = position_requests_onepass(rdf, spark.read.parquet(path)).collect()
+    assert len(set(os.listdir(temp_dir)) - before) == 1
+
+    moved = [dict(r, latitude=r["latitude"] + 0.01) if r["mac_addr"] == mac else r for r in rows]
+    spark.createDataFrame(moved, WIFI_ACCESS_POINTS_SCHEMA).write.mode("overwrite").parquet(path)
+    second = position_requests_onepass(rdf, spark.read.parquet(path)).collect()
+    assert len(set(os.listdir(temp_dir)) - before) == 2
+    assert second[0]["latitude"] == pytest.approx(first[0]["latitude"] + 0.01, abs=1e-9)
+    assert second[0]["longitude"] == first[0]["longitude"]
 
 
 def golden_requests():

@@ -95,9 +95,9 @@ CLAIMS: dict[str, str] = {
     "lof_closed_form": "pair relation pre-capped at 40/AP — every shuffle moves O(40·#APs) narrow rows",
     "dbscan_closed_form": "per-AP bounded applyInPandas tasks; no global pair relation",
     "bm25_topk": (
-        "array-native tf counts scan-side; ONE one-row stats aggregate "
-        "broadcast back; TakeOrdered cutoff — no token explode, no "
-        "posting-list shuffle, no global sort"
+        "array-native tf counts scan-side, persisted once; ONE one-row "
+        "stats collect folded back as literals; TakeOrdered cutoff — no "
+        "token explode, no posting-list shuffle, no global sort"
     ),
     "multimodal_wav_stats": "narrow mapInPandas decode; no shuffle at all",
     "multimodal_png_stats": "narrow mapInPandas decode; no shuffle at all",
@@ -172,11 +172,6 @@ ALLOWED_BNLJ: dict[str, str] = {
         "two ONE-ROW scalar broadcasts (corpus token total, OOV floor "
         "log-prob) attached via crossJoin — the SQL scalar-subquery "
         "pattern; the vocab join itself is a broadcast hash equi-join"
-    ),
-    "bm25_topk": (
-        "ONE-ROW corpus-statistics broadcast (N, avgdl, per-term df) "
-        "attached via CROSS JOIN — the SQL scalar-subquery pattern; "
-        "scoring stays scan-side and the cutoff is a TakeOrdered"
     ),
     "quantile_histogram": (
         "11-row literal decile relation broadcast; the join key is a "

@@ -62,7 +62,6 @@ DEDUP_WINDOW_SECONDS = 5
 # ---------------------------------------------------------------------------
 
 VALID_AP_STATUSES = ("active", "warning", "verified", "test", "imported")
-ALL_AP_STATUSES = VALID_AP_STATUSES + ("error", "expired", "wifi-hotspot")
 
 # ---------------------------------------------------------------------------
 # Signal physics validation (wifi-positioning-service/.../service/SignalPhysicsValidator.java:31-45)
@@ -87,12 +86,13 @@ WCL_CONF_COVERAGE_COEF = 0.7
 WCL_DEFAULT_AP_ACCURACY_M = 15.0
 
 # RSSI ratio (RSSIRatioAlgorithm.java:37-39,73,97,211)
-RSSI_RATIO_BASE_CONFIDENCE = 0.75
 RSSI_RATIO_EXPONENT_DIVISOR = 20.0
 
 # Log-distance path loss (LogDistancePathLossAlgorithm.java:160-268,836-963)
+# per normalized vendor (lower(trim(vendor))); the oracle CASE in
+# plans/positioning_companions.py states the same table as SQL text
 VENDOR_PATH_LOSS_EXPONENTS = {
-    "cisco": 3.0, "aruba": 2.8, "meraki": 2.9, "ubiquiti": 2.7,
+    "cisco": 3.0, "aruba": 2.8, "meraki": 3.0, "ubiquiti": 2.7,
     "ruckus": 2.9, "hpe-aruba": 2.8,
 }
 DEFAULT_PATH_LOSS_EXPONENT = 3.0         # ITU-R default (:181)
@@ -117,10 +117,8 @@ TRILAT_PATH_LOSS_FREE_SPACE = 2.5        # :120-127
 TRILAT_PATH_LOSS_INDOOR = 3.0
 
 # Maximum likelihood (MaximumLikelihoodAlgorithm.java:72-154)
-MLE_MIN_APS = 4
 MLE_MAX_ITERATIONS = 100                 # :78
 MLE_CONVERGENCE_M = 0.1                  # :96
-MLE_INITIAL_LEARNING_RATE = 1.0          # halved on non-improvement
 
 # GDOP (util/GDOPCalculator.java:38,45,237-281)
 GDOP_EXCELLENT = 2.0

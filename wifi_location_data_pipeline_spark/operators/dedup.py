@@ -3,15 +3,13 @@
 The reference dedups on the deterministic ``event_id`` within a 5-second
 window (application.yml:171; event_id = sha256(ts:bssid),
 WifiDataTransformationService.java:789-791). Batch shape: keep-first per
-event_id; streaming shape: dropDuplicatesWithinWatermark.
+event_id; the ingest stream (streaming/ingest.py) dedups inline with
+dropDuplicatesWithinWatermark.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from wifi_location_data_pipeline_spark import config as C
 
 
 def dedup_measurements(measurements: DataFrame) -> DataFrame:
@@ -21,15 +19,3 @@ def dedup_measurements(measurements: DataFrame) -> DataFrame:
     dedup — the minimal-shuffle plan for exact dedup at scale.
     """
     return measurements.dropDuplicates(["event_id", "connection_status"])
-
-
-def dedup_measurements_stream(measurements: DataFrame, event_time_col: str = "event_time") -> DataFrame:
-    """Streaming dedup within the reference's 5 s window.
-
-    Requires an event-time timestamp column; state for ids older than the
-    watermark is dropped, bounding state size on an unbounded stream.
-    """
-    return (
-        measurements.withWatermark(event_time_col, f"{C.DEDUP_WINDOW_SECONDS} seconds")
-        .dropDuplicatesWithinWatermark(["event_id", "connection_status"])
-    )

@@ -22,8 +22,8 @@ DUCK = "duck"
 # opt in via docs_table(d): the DuckDB oracle text keeps the plain table name
 # (oracle text must stay byte-stable), while the Spark text gets the view
 # whose round-robin exchange spreads the single-row-group test-corpus scan
-# across the cores. On a real lakehouse layout the view IS the plain table
-# (spread_documents_src adds no shuffle when the scan is already parallel).
+# across the cores. When the scan is already parallel (a multi-row-group
+# file, or a directory table of several parts) the view IS the plain table.
 DOCS_SPREAD_TOKEN = "__DOCS_SPREAD__"
 
 

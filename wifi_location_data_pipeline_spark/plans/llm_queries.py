@@ -21,8 +21,9 @@ Scale notes (the 100 TB design intent, validated at sf0.1 by bench.py):
 from __future__ import annotations
 
 import hashlib
+import io
 import os
-from contextlib import contextmanager
+from contextlib import contextmanager, redirect_stdout
 
 from wifi_location_data_pipeline_spark import corpus_memo
 from wifi_location_data_pipeline_spark.plans.dialect import (
@@ -39,6 +40,7 @@ from wifi_location_data_pipeline_spark.plans.dialect import (
     xor_int,
 )
 from wifi_location_data_pipeline_spark.plans.queries import register
+from wifi_location_data_pipeline_spark.sources.tables import load_table, table_probe
 
 # ---------------------------------------------------------------------------
 # Shared CTE fragments
@@ -52,11 +54,11 @@ def spread_documents_src(spark, sf_dir, full_fanout: bool = False) -> str:
     is ONE task — and the shingle builders stack CPU-heavy work (split +
     n-gram HOF lambdas + an md5 per shingle) directly on that task. When
     the scan has fewer partitions than the data's CPU work deserves
-    (~64 KB of text per task), register a repartitioned view so the
-    projection parallelizes; when the scan is already parallel (any real
-    lakehouse layout — 128 MB row groups), return the plain table and add
-    no shuffle. The shuffle moves only the raw text once and is reused by
-    every stage built on top.
+    (``_SPREAD_TEXT_PER_TASK`` of text per task), register a repartitioned
+    view so the projection parallelizes; when the scan is already parallel
+    (a multi-row-group file, or a directory table whose part files give it
+    the splits), return the plain table and add no shuffle. The shuffle
+    moves only the raw text once and is reused by every stage built on top.
 
     ``full_fanout`` declares the consumer's CPU weight: the md5/shingle
     Arrow kernels (seconds of Python CPU per corpus pass) amortize the
@@ -76,21 +78,13 @@ def spread_documents_src(spark, sf_dir, full_fanout: bool = False) -> str:
     register_views(spark, sf_dir)
 
     def build():
-        try:
-            # single FILE (the test corpus): size known, scan is 1 task/row-group.
-            # A directory layout (any real lakehouse) raises -> plain table, no
-            # shuffle: its scan is already as parallel as the storage allows.
-            # Floor at ~16 KB text/task: every consumer is now an Arrow kernel
-            # (hashlib md5 over shingles/windows — CPU-bound Python), so spread
-            # to the full core count as soon as the corpus can feed it; the old
-            # 64 KB floor was tuned for the retired JVM HOF builders and left
-            # sf0.1 on 10 of 32 cores.
-            sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-            target = min(
-                spark.sparkContext.defaultParallelism, sz // _SPREAD_TEXT_PER_TASK + 1
-            )
-        except OSError:
-            target = 1
+        # every consumer is an Arrow kernel (hashlib md5 over
+        # shingles/windows — CPU-bound Python), so spread to the full core
+        # count as soon as the corpus bytes can feed it
+        sz = table_probe(sf_dir, "documents").bytes
+        target = min(
+            spark.sparkContext.defaultParallelism, sz // _SPREAD_TEXT_PER_TASK + 1
+        )
         if target > 1:
             # repartition ONLY when the scan itself is under-split for this
             # consumer class (see docstring). When openCost-driven splitting
@@ -155,14 +149,20 @@ _PLAN_TAP: list | None = None
 
 
 def _tap_plan(label: str, df) -> None:
+    """Record ``df``'s formatted plan. The private ``explainString`` call
+    falls back to capturing ``df.explain("formatted")``; a failure of both
+    raises, so a capture never records a plan it does not have."""
     if _PLAN_TAP is None:
         return
     try:
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-    except Exception:
-        txt = "(explain failed)"
+    except Exception:  # noqa: BLE001 — private API; the public path follows
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        txt = buf.getvalue()
     _PLAN_TAP.append((label, txt))
 
 
@@ -1241,20 +1241,11 @@ EMB_LSH_K_MAX = 24  # caps k at 2^23 vectors; also the reserved planes/table
 
 
 def _embeddings_rows(spark, sf_dir) -> int:
-    """Vector count for LSH k-sizing — from parquet FOOTER metadata when the
-    corpus is a single file (no Spark job, ~1 ms), falling back to a count
-    job for directory layouts. Sizing a hash family does not need a
-    cluster pass."""
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(
-            os.path.join(sf_dir, "embeddings.parquet")
-        ).metadata.num_rows
-    except Exception:  # noqa: BLE001 — directory layout / remote store
-        from wifi_location_data_pipeline_spark.sources.tables import load_table
-
-        return load_table(spark, sf_dir, "embeddings").count()
+    """Vector count for LSH k-sizing, from the parquet footers (no Spark
+    job, a file or a directory alike); a count job only when a footer
+    cannot be read. Sizing a hash family does not need a cluster pass."""
+    rows = table_probe(sf_dir, "embeddings").rows
+    return rows if rows is not None else load_table(spark, sf_dir, "embeddings").count()
 
 
 def emb_lsh_k(n_vectors: int) -> int:
@@ -2063,9 +2054,8 @@ _MEDIA_ROWS_PER_TASK = {"jpeg": 384, "png": 768, "wav": 1280, "mp4": 2048}
 def _media_docs(spark, sf_dir, pred: str, fmt: str = "wav", sel: float = 1 / 3):
     """(doc_id, n_chars) input frame for the media round-trip kernels
     (wav/png/jpeg/mp4 stats), right-sized to the PYTHON work per format
-    (_MEDIA_ROWS_PER_TASK); a directory corpus (real lakehouse) keeps the
-    storage parallelism — the same sizing policy as ann_ivf_probe's probe
-    stage and _documents_spread. sel=1/3: each format slice is exactly a
+    (_MEDIA_ROWS_PER_TASK) from the table's footer rows, whether the table
+    is one file or a directory (see _spread_for_python). sel=1/3: each format slice is exactly a
     third of the corpus by the doc_id modulus, and sizing the fan-out on
     the unfiltered footer count (the r11 form) requested 3x the tasks the
     kernel work justifies."""
@@ -2091,38 +2081,31 @@ def _spread_for_python(spark, sf_dir, df, rows_per_task: int, sel: float = 1.0):
     fan-out must be requested explicitly — a round-robin exchange of the
     kernel's own input columns costs ~nothing next to the decode it
     parallelizes. coalesce() handles the opposite direction (a directory
-    corpus whose storage parallelism exceeds the work). rows_per_task
-    targets ~0.1-0.25 s of kernel time per task: above the per-task
-    Arrow+scheduling floor, below serializing on one core. ``sel`` is the
+    table whose part files split the scan finer than the work needs).
+    rows_per_task targets ~0.1-0.25 s of kernel time per task: above the
+    per-task Arrow+scheduling floor, below serializing on one core. ``sel`` is the
     fraction of footer rows that survive the caller's pre-filter (the
     media kernels keep exactly one doc_id modulus class), so the fan-out
     follows the rows the kernel will actually see."""
-    if not os.path.isfile(os.path.join(sf_dir, "documents.parquet")):
+    n_rows = table_probe(sf_dir, "documents").rows
+    if n_rows is None:
         return df
-    try:
-        import pyarrow.parquet as pq
-
-        n_rows = pq.ParquetFile(
-            os.path.join(sf_dir, "documents.parquet")
-        ).metadata.num_rows
-        nparts = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                int(n_rows * sel) // rows_per_task + 1,
-            ),
-        )
-        scan_parts = df.rdd.getNumPartitions()
-        if scan_parts * 2 <= nparts:
-            # an exchange only pays for itself when the scan is MATERIALLY
-            # under-split (a 1-2 split single-file corpus): shuffling to
-            # gain <2x parallelism costs more in shuffle write/fetch +
-            # an extra stage than the extra cores return
-            df = df.repartition(nparts)
-        elif scan_parts > nparts:
-            df = df.coalesce(nparts)
-    except Exception:
-        pass
+    nparts = max(
+        1,
+        min(
+            spark.sparkContext.defaultParallelism,
+            int(n_rows * sel) // rows_per_task + 1,
+        ),
+    )
+    scan_parts = df.rdd.getNumPartitions()
+    if scan_parts * 2 <= nparts:
+        # an exchange only pays for itself when the scan is MATERIALLY
+        # under-split (a 1-2 split single-file corpus): shuffling to
+        # gain <2x parallelism costs more in shuffle write/fetch +
+        # an extra stage than the extra cores return
+        df = df.repartition(nparts)
+    elif scan_parts > nparts:
+        df = df.coalesce(nparts)
     return df
 
 
@@ -2647,22 +2630,18 @@ def _ann_ivf_spark_fn(spark, sf_dir):
     # right-size the python stage to the PROBED bytes (single-file test
     # corpora split into ~21 scan tasks of a few hundred KB each; at 6k
     # probed rows the per-task Arrow+worker floor is 2/3 of the stage —
-    # 0.33 s -> 0.23 s at sf1 when merged to ~2 MB/task). Directory
-    # layouts (any real lakehouse) skip this and keep the storage
-    # parallelism — same policy as _documents_spread's sizing.
-    try:
-        fsz = os.path.getsize(os.path.join(sf_dir, "embeddings.parquet"))
-        frac = len({int(x) for x in q_lab}) / max(1, len(labels))
-        nparts = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                int(fsz * frac) // (2 << 20) + 1,
-            ),
-        )
-        probed = probed.coalesce(nparts)
-    except OSError:
-        pass
+    # 0.33 s -> 0.23 s at sf1 when merged to ~2 MB/task). A directory
+    # table is merged the same way: coalesce only lowers its split count.
+    fsz = table_probe(sf_dir, "embeddings").bytes
+    frac = len({int(x) for x in q_lab}) / max(1, len(labels))
+    nparts = max(
+        1,
+        min(
+            spark.sparkContext.defaultParallelism,
+            int(fsz * frac) // (2 << 20) + 1,
+        ),
+    )
+    probed = probed.coalesce(nparts)
     scored = probed.mapInPandas(
         score, "query_id long, neighbor_id long, probed_list int, cos_sim double"
     )
@@ -4408,32 +4387,27 @@ _BM25_TERMS = ("spark", "join", "window", "vector")
 _BM25_K1, _BM25_B, _BM25_TOPK = 1.2, 0.75, 20
 
 
-def _bm25_sql(d: str) -> str:
-    """BM25 top-k retrieval (Robertson & Zaragoza 2009, the Lucene
+def _bm25_duck_sql(d: str) -> str | None:
+    """The DuckDB oracle of bm25_topk (the Spark side is _bm25_spark_fn):
+    BM25 top-k retrieval (Robertson & Zaragoza 2009, the Lucene
     practical-scoring variant: idf = ln(1 + (N - df + 0.5)/(df + 0.5)))
     for a fixed conjunctive query over the documents corpus — the
     relevance-ranking primitive a training-data pipeline uses for
     quality-by-retrieval and targeted corpus slicing.
 
-    Plan shape: per-doc term frequencies are array-native HOF counts over
-    ONE tokenization (no token explode, no posting-list shuffle); the
-    corpus statistics (N, avgdl, one df per term) fold into a SINGLE
-    one-row aggregate that broadcast-joins back over the scan; the top-k
-    is a TakeOrdered(k), never a full sort. At 100 TB the only shuffle is
-    the one-row stats aggregate — the scan-side scoring is embarrassingly
-    parallel. Determinism: scores round on the 1e-6 grid AFTER a cutoff
-    ordered by (raw score, doc_id); ln/div are single IEEE ops over
+    Per-doc term frequencies are array-native HOF counts over ONE
+    tokenization; the corpus statistics (N, avgdl, one df per term) fold
+    into a SINGLE one-row aggregate joined back over the scan.
+    Determinism: scores round on the 1e-6 grid AFTER a cutoff ordered by
+    (raw score, doc_id); ln/div are single IEEE ops over
     integer-exact tf/df/dl inputs, the same discipline as
     mixture_sampling_plan's pow() weights."""
-    k1, b, k = _BM25_K1, _BM25_B, _BM25_TOPK
     if d == "spark":
-        tf = "CAST(size(filter(w, x -> x = '{t}')) AS BIGINT)"
-        ln = "ln"
-    else:
-        tf = "CAST(len(list_filter(w, x -> x = '{t}')) AS BIGINT)"
-        ln = "ln"
+        return None
+    k1, b, k = _BM25_K1, _BM25_B, _BM25_TOPK
     tfs = ",\n    ".join(
-        tf.format(t=t) + f" AS tf_{t}" for t in _BM25_TERMS
+        f"CAST(len(list_filter(w, x -> x = '{t}')) AS BIGINT) AS tf_{t}"
+        for t in _BM25_TERMS
     )
     dfs = ",\n    ".join(
         f"CAST(SUM(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_{t}"
@@ -4442,7 +4416,7 @@ def _bm25_sql(d: str) -> str:
     # per-term BM25 contribution; norm is let-bound by the surrounding
     # projection so it evaluates once per doc in both engines
     contrib = " + ".join(
-        f"{ln}(CAST(1 AS DOUBLE) + (CAST(n_docs - df_{t} AS DOUBLE) + 0.5)"
+        f"ln(CAST(1 AS DOUBLE) + (CAST(n_docs - df_{t} AS DOUBLE) + 0.5)"
         f" / (CAST(df_{t} AS DOUBLE) + 0.5))"
         f" * (CAST(tf_{t} AS DOUBLE) * CAST({k1 + 1.0!r} AS DOUBLE))"
         f" / (CAST(tf_{t} AS DOUBLE) + CAST({k1!r} AS DOUBLE) * norm)"
@@ -4452,7 +4426,7 @@ def _bm25_sql(d: str) -> str:
     return f"""
 WITH tf AS (
   SELECT doc_id,
-    CAST({'size(w)' if d == 'spark' else 'len(w)'} AS BIGINT) AS dl,
+    CAST(len(w) AS BIGINT) AS dl,
     {tfs}
   FROM (SELECT doc_id, {_ws_tokens(d, 'text')} AS w FROM {docs_table(d)}
         WHERE text IS NOT NULL) t
@@ -4481,13 +4455,13 @@ LIMIT {k}
 
 
 def _bm25_spark_fn(spark, sf_dir):
-    """Spark twin of _bm25_sql that tokenizes the corpus ONCE.
+    """Spark form of the declared BM25 (``_bm25_duck_sql``, the oracle)
+    that tokenizes the corpus ONCE.
 
-    The SQL form's ``tf`` CTE is consumed twice (the stats aggregate and
-    the scored scan); Spark re-inlines WITH references, so the declared
-    text pays the split + per-term filter pass over every document TWICE
-    — measured 1.02 s vs DuckDB's 0.15 s (which shares CTE results) at
-    the 10x replica, ~0.45 s of it the second tokenize. Here the narrow
+    The declared text's ``tf`` CTE is consumed twice (the stats aggregate
+    and the scored scan); Spark re-inlines WITH references, so that text
+    pays the split + per-term filter pass over every document TWICE, while
+    DuckDB shares CTE results. Here the narrow
     tf relation (doc_id, dl, one BIGINT per query term — no text) is
     computed once and persisted as a corpus memo, the
     one-row corpus stats COLLECT (bounded by construction: 2 + |terms|
@@ -4496,24 +4470,12 @@ def _bm25_spark_fn(spark, sf_dir):
     1e-6 grid rounds identically and the oracle match is exact. At 100 TB
     the persisted tf is the posting-statistics relation a retrieval
     pipeline materializes anyway (tens of bytes/doc), and the only
-    exchange is the TakeOrdered(k) cutoff."""
+    exchange is the TakeOrdered(k) cutoff. The declared text run on Spark
+    lost at every measured corpus, its extra job round included (noop
+    write, 5 alternating pairs, 4-core host: sf0.1 1.02 s vs 0.77 s, the
+    10x replica 2.25 vs 1.36 s, a 60x replica 7.34 vs 4.22 s), so it is
+    not a Spark branch."""
     from pyspark.sql import functions as F2
-    from wifi_location_data_pipeline_spark.plans.dialect import DOCS_SPREAD_TOKEN
-
-    try:
-        docs_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        docs_sz = 1 << 30  # directory layout: always big enough for the twin
-    if docs_sz < _BM25_TWIN_MIN_BYTES:
-        # tiny corpus: the twin's extra scheduled round (stats collect job +
-        # scoring job) costs more than the second tokenize it saves — run
-        # the declared single-job text as-is (measured at sf0.1: 0.48 s SQL
-        # vs 0.64 s twin; the crossover rides the same text-volume axis as
-        # the corpus config)
-        text = _bm25_sql("spark").replace(
-            DOCS_SPREAD_TOKEN, spread_documents_src(spark, sf_dir)
-        )
-        return spark.sql(text)
 
     k1, b, k = _BM25_K1, _BM25_B, _BM25_TOPK
 
@@ -4578,11 +4540,6 @@ def _bm25_spark_fn(spark, sf_dir):
     )
 
 
-# tokenize-once twin crossover: below this documents.parquet size the saved
-# second tokenize is smaller than one scheduled job round (see _bm25_spark_fn)
-_BM25_TWIN_MIN_BYTES = 2 << 20
-
-
 register(
     "bm25_topk",
     "BM25 top-k retrieval for a fixed term set over the documents corpus "
@@ -4590,7 +4547,7 @@ register(
     "token explode), ONE one-row corpus-stats aggregate broadcast back "
     "over the scan, TakeOrdered cutoff — the relevance-ranking primitive "
     "for quality-by-retrieval corpus slicing.",
-    sql=_bm25_sql,
+    sql=_bm25_duck_sql,
     spark_fn=_bm25_spark_fn,
 )
 
@@ -5084,22 +5041,18 @@ FROM top
 
 @contextmanager
 def _vocab_sized_reducers(spark, sf_dir):
-    """Run the body at 1 reducer per 4 MB of ``documents.parquet`` (floor
-    1), restoring the session's shuffle partitions afterwards; yields the
-    file size, or None when it cannot be read (the session policy stays).
+    """Run the body at 1 reducer per 4 MB of documents (floor 1),
+    restoring the session's shuffle partitions afterwards; yields the
+    documents bytes.
 
     For the queries whose every post-scan relation is vocabulary-sized
     (collocations, CMS, BPE training): the session's static sizing targets
     the corpus, so their downstream stages would be mostly empty task
     launches, while map-side partial aggregation keeps the scan stage
     parallel at any reducer count."""
-    try:
-        doc_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        doc_sz = None
+    doc_sz = table_probe(sf_dir, "documents").bytes
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if doc_sz is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(1, doc_sz >> 22)))
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(1, doc_sz >> 22)))
     try:
         yield doc_sz
     finally:
@@ -5201,7 +5154,7 @@ SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM (
         # branch is value-pinned to the one-job branch by
         # tests/test_oracle_parity.py::test_collocations_bounded_matches_small
         # and oracle-gated on the at-scale corpus (where it is the live path).
-        bounded = doc_sz is None or doc_sz >= _COLL_BOUNDED_MIN_BYTES
+        bounded = doc_sz >= _COLL_BOUNDED_MIN_BYTES
         if bounded:
             t20 = pairs.orderBy(F2.desc("c"), "w1", "w2").limit(20)
             _tap_plan("ngram_collocations: top-20 TakeOrdered collect", t20)
@@ -5297,15 +5250,7 @@ FROM (VALUES {vals}) AS t(w1, w2, c, c1, c2)
     )
 
 
-# documents-file size above which dedup_strategy_agreement fuses its two
-# strategy verifications into ONE pass (union candidates with provenance
-# flags, verify once): below it the extra union-dedup shuffle round costs
-# more than the saved (broadcast-probe) verify; above it the verify pass
-# over the signature relation is the dominant cost and halving it wins
-# (guide §2.1 — the at-scale shape, validated on the >=256 MB corpus).
-_AGREE_FUSED_MIN_BYTES = 32 << 20
-
-# documents-file size above which ngram_collocations switches its driver
+# documents bytes (table_probe) above which ngram_collocations switches its driver
 # collects to the vocabulary-independent bounded form (top-20 TakeOrdered +
 # ≤41-row-per-branch grouped stats). Below it the vocabulary is trivially
 # driver-sized and the one-job collect saves a scheduled round + branch
@@ -5493,72 +5438,27 @@ def _strategy_agreement_spark_fn(spark, sf_dir):
     # otherwise kernel-build and persist its own copy of the same relation)
     arrs = minhash_signature_table(spark, sf_dir)
     six = lambda c: (F2.floor(c * 1e6 + F2.lit(0.5)) / F2.lit(1e6)).cast("double")
+    # the two pipelines share the signature table and the candidate
+    # machinery (``parts``); their verified pairs meet in one full-outer
+    # join. A fused form (union both candidate sets with provenance flags,
+    # verify once) tied with this one where it could run — the 10x replica,
+    # noop write, 5 alternating pairs, 4-core host: 6.78 s vs 7.21 s, each
+    # median inside the other's quartiles — and needs the array-verify
+    # regime, which neither sf0.1 (1.27 M candidates) nor a 60x replica
+    # (343 k) is in, so it was deleted
     parts = _ngram_jaccard_parts(spark, sf_dir, arrs)
-    _, rare_pairs, n_cand = parts
-    try:
-        doc_sz = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        doc_sz = None  # directory corpus: size unknown -> scale-safe fused
-    fused = doc_sz is None or doc_sz >= _AGREE_FUSED_MIN_BYTES
-    if fused and n_cand <= NGRAM_ARRAY_VERIFY_MAX_PAIRS:
-        # Both strategies verify the SAME exact-Jaccard predicate against
-        # the SAME signature table, so in the array-verify regime the two
-        # candidate sets union (provenance flags kept through a groupBy
-        # dedup) and verify ONCE (r12, VERDICT r11 #8): one pair of
-        # arrs-joins instead of two, one dedup shuffle instead of two
-        # distincts + a full-outer join. A pair verified >= 0.8 was found
-        # by a strategy iff it was that strategy's candidate, so the flag
-        # sums equal the old full-join counts exactly.
-        cands = (
-            _minhash_candidates(arrs)
-            .select("doc_a", "doc_b", F2.lit(1).alias("l"), F2.lit(0).alias("k"))
-            .unionAll(
-                rare_pairs.select(
-                    "doc_a", "doc_b", F2.lit(0).alias("l"), F2.lit(1).alias("k")
-                )
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F2.max("l").alias("in_lsh"), F2.max("k").alias("in_blk"))
+    lsh = _minhash_spark_fn(spark, sf_dir, arrs=arrs).select("doc_a", "doc_b")
+    blocked = _ngram_jaccard_spark_fn(spark, sf_dir, arrs=arrs, parts=parts).select(
+        "doc_a", "doc_b"
+    )
+    verified = (
+        lsh.withColumn("in_lsh", F2.lit(1))
+        .join(blocked.withColumn("in_blk", F2.lit(1)), ["doc_a", "doc_b"], "full")
+        .select(
+            F2.coalesce("in_lsh", F2.lit(0)).alias("in_lsh"),
+            F2.coalesce("in_blk", F2.lit(0)).alias("in_blk"),
         )
-        a = arrs.select(
-            F2.col("doc_id").alias("doc_a"),
-            F2.col("bases").alias("ba"),
-            F2.col("n_sh").alias("na"),
-        )
-        b = arrs.select(
-            F2.col("doc_id").alias("doc_b"),
-            F2.col("bases").alias("bb"),
-            F2.col("n_sh").alias("nb"),
-        )
-        j = a.join(cands, "doc_a").join(b, "doc_b")
-        n_common = F2.size(F2.array_intersect("ba", "bb")).cast("double")
-        jac = n_common / (F2.col("na") + F2.col("nb") - n_common)
-        verified = j.filter(jac >= 0.8).select("in_lsh", "in_blk")
-    else:
-        # join-count regime (high candidate volume; the per-pipeline
-        # verifications are structurally different) OR a small corpus
-        # (below _AGREE_FUSED_MIN_BYTES the fused union-groupBy costs one
-        # extra shuffle round the tiny verifies never pay back — measured
-        # 2.14 s two-pipeline vs 2.36 s fused at the 10x replica, while
-        # both verify joins broadcast their pair sets there): keep the
-        # two-pipeline full-outer form; the candidate machinery is still
-        # shared via ``parts``
-        lsh = _minhash_spark_fn(spark, sf_dir, arrs=arrs).select("doc_a", "doc_b")
-        blocked = _ngram_jaccard_spark_fn(
-            spark, sf_dir, arrs=arrs, parts=parts
-        ).select("doc_a", "doc_b")
-        verified = (
-            lsh.withColumn("in_lsh", F2.lit(1))
-            .join(
-                blocked.withColumn("in_blk", F2.lit(1)),
-                ["doc_a", "doc_b"],
-                "full",
-            )
-            .select(
-                F2.coalesce("in_lsh", F2.lit(0)).alias("in_lsh"),
-                F2.coalesce("in_blk", F2.lit(0)).alias("in_blk"),
-            )
-        )
+    )
     return verified.agg(
         F2.sum("in_lsh").cast("long").alias("n_lsh"),
         F2.sum("in_blk").cast("long").alias("n_blocked"),

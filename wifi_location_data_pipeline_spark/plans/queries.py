@@ -43,6 +43,7 @@ from wifi_location_data_pipeline_spark.positioning.selection import (
     GEOMETRY_MULT,
     SIGNAL_MULT,
 )
+from wifi_location_data_pipeline_spark.sources.tables import table_probe
 
 # ---------------------------------------------------------------------------
 # Shared derivation: a deterministic wifi-measurement analog from `events`.
@@ -263,30 +264,23 @@ _EVENTS_MAXUID_SQL = "(SELECT MAX(user_id) FROM events)"
 
 def _events_footer_minmax(sf_dir: str, column: str) -> tuple | None:
     """(min, max) of one ``events`` column from the parquet footer stats of
-    every row group, or None when the table or any row group's stats are
-    missing."""
-    try:
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir, "events.parquet")
-        paths = (
-            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
-        mn = mx = None
-        for p in paths:
-            md = pq.ParquetFile(p).metadata
-            names = [md.schema.column(i).name for i in range(len(md.schema))]
-            idx = names.index(column)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-    except Exception:
+    every row group of every part, or None when the table, a footer or any
+    row group's stats are missing."""
+    probe = table_probe(sf_dir, "events")
+    if probe is None or probe.footers is None:
         return None
+    mn = mx = None
+    for md in probe.footers:
+        names = [md.schema.column(i).name for i in range(len(md.schema))]
+        if column not in names:
+            return None
+        idx = names.index(column)
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None or not st.has_min_max:
+                return None
+            mn = st.min if mn is None else min(mn, st.min)
+            mx = st.max if mx is None else max(mx, st.max)
     return None if mn is None else (mn, mx)
 
 
@@ -1360,16 +1354,20 @@ est AS (
   -- both halves in ONE conditional aggregation (same rewrite as
   -- relocation_time_split): the per-(ap,half) groupBy + old/new self-join
   -- cost a second shuffle to pair rows this single pass pairs for free
+  -- longitude degrees scale to meters by cos(the half's mean latitude),
+  -- like operators/localization.py kalman_update
   SELECT ap_id,
     AVG(CASE WHEN half = 'old' THEN latitude END) AS prior_lat,
     AVG(CASE WHEN half = 'old' THEN longitude END) AS prior_lon,
     AVG(CASE WHEN half = 'new' THEN latitude END) AS z_lat,
     AVG(CASE WHEN half = 'new' THEN longitude END) AS z_lon,
     (pow(COALESCE(STDDEV_SAMP(CASE WHEN half = 'old' THEN latitude END), 0.0) * 111000.0, 2)
-     + pow(COALESCE(STDDEV_SAMP(CASE WHEN half = 'old' THEN longitude END), 0.0) * 111000.0 * 0.766, 2))
+     + pow(COALESCE(STDDEV_SAMP(CASE WHEN half = 'old' THEN longitude END), 0.0) * 111000.0
+         * cos(radians(AVG(CASE WHEN half = 'old' THEN latitude END))), 2))
       / GREATEST(CAST(COUNT(CASE WHEN half = 'old' THEN 1 END) AS DOUBLE), 1.0) AS p_var,
     (pow(COALESCE(STDDEV_SAMP(CASE WHEN half = 'new' THEN latitude END), 0.0) * 111000.0, 2)
-     + pow(COALESCE(STDDEV_SAMP(CASE WHEN half = 'new' THEN longitude END), 0.0) * 111000.0 * 0.766, 2))
+     + pow(COALESCE(STDDEV_SAMP(CASE WHEN half = 'new' THEN longitude END), 0.0) * 111000.0
+         * cos(radians(AVG(CASE WHEN half = 'new' THEN latitude END))), 2))
       / GREATEST(CAST(COUNT(CASE WHEN half = 'new' THEN 1 END) AS DOUBLE), 1.0) AS r_var,
     CAST(COUNT(CASE WHEN half = 'old' THEN 1 END) AS BIGINT) AS n_old,
     CAST(COUNT(CASE WHEN half = 'new' THEN 1 END) AS BIGINT) AS n_new
@@ -3642,8 +3640,8 @@ def _codec_roundtrip_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from wifi_location_data_pipeline_spark.sources.tables import load_table
 
-    # the corpus is one parquet file = few input splits; spread the per-row
-    # Python gzip work across the worker pool. Partition count follows the
+    # a single-file corpus has few input splits; spread the per-row Python
+    # gzip work across the worker pool. Partition count follows the
     # PYTHON CPU work (gzip level-9 compress + decompress ≈ 0.15-0.2 ms per
     # document), not the scan bytes: the r10 bytes-based sizing (32 MB of
     # text per task) left the whole corpus on 1-2 cores at every benched
@@ -3652,13 +3650,8 @@ def _codec_roundtrip_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow floor, and the same formula keeps every core saturated with
     # full batches at 100 TB (cores-capped). The repartition exchange ships
     # only (doc_id, text) — the bytes the kernel needs anyway.
-    try:
-        import pyarrow.parquet as _pq
-
-        n_rows = _pq.ParquetFile(
-            os.path.join(sf_dir, "documents.parquet")
-        ).metadata.num_rows
-    except Exception:
+    n_rows = table_probe(sf_dir, "documents").rows
+    if n_rows is None:  # unreadable footer: fan out to the cores
         n_rows = 1 << 20
     n_parts = min(spark.sparkContext.defaultParallelism, n_rows // 1024 + 1)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3748,13 +3741,8 @@ def _batch_localization_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # right place at both benched scales and keeps partitions beyond the
     # worker pool from mattering (cores-capped); at-scale sessions never
     # shrink below their configured parallelism — max() only raises it.
-    try:
-        import pyarrow.parquet as _pq
-
-        _n_rows = _pq.ParquetFile(
-            os.path.join(sf_dir, "events.parquet")
-        ).metadata.num_rows
-    except Exception:
+    _n_rows = table_probe(sf_dir, "events").rows
+    if _n_rows is None:  # unreadable footer: fan out to the cores
         _n_rows = 1 << 30
     n_parts = max(
         int(spark.conf.get("spark.sql.shuffle.partitions"))

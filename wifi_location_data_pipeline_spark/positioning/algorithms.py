@@ -19,16 +19,6 @@ from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import config as C
 
-OUT_COLS = (
-    "request_id",
-    "algorithm",
-    "latitude",
-    "longitude",
-    "altitude",
-    "accuracy",
-    "confidence",
-)
-
 
 def closed_form_positions(obs: DataFrame) -> DataFrame:
     """Proximity + weighted-centroid + log-distance in ONE hash aggregate.
@@ -47,15 +37,10 @@ def closed_form_positions(obs: DataFrame) -> DataFrame:
     norm = F.greatest(F.lit(0.0), F.least(F.lit(1.0), (s - (-30.0)) / (-100.0 - (-30.0))))
     wcl_w = F.pow(F.lit(10.0), norm)
     # log-distance (LogDistancePathLossAlgorithm.java:155-1086)
-    vendor_n = (
-        F.when(F.lower(F.trim(F.col("ap_vendor"))) == "cisco", 3.0)
-        .when(F.lower(F.trim(F.col("ap_vendor"))) == "aruba", 2.8)
-        .when(F.lower(F.trim(F.col("ap_vendor"))) == "meraki", 3.0)
-        .when(F.lower(F.trim(F.col("ap_vendor"))) == "ubiquiti", 2.7)
-        .when(F.lower(F.trim(F.col("ap_vendor"))) == "ruckus", 2.9)
-        .when(F.lower(F.trim(F.col("ap_vendor"))) == "hpe-aruba", 2.8)
-        .otherwise(C.DEFAULT_PATH_LOSS_EXPONENT)
-    )
+    vendor = F.lower(F.trim(F.col("ap_vendor")))
+    vendor_n = F.lit(C.DEFAULT_PATH_LOSS_EXPONENT)
+    for name, exponent in C.VENDOR_PATH_LOSS_EXPONENTS.items():
+        vendor_n = F.when(vendor == name, exponent).otherwise(vendor_n)
     n_adj = (
         F.when(s >= -50.0, vendor_n - F.least(F.lit(1.0), (s + 50.0) / 5.0))
         .when(s <= -80.0, vendor_n + F.least(F.lit(1.5), (-80.0 - s) / 5.0))

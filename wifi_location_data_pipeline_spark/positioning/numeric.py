@@ -59,7 +59,7 @@ def _distance_from_rssi(rssi: np.ndarray, freq_mhz: np.ndarray) -> np.ndarray:
     freq_hz = np.where(freq_mhz > 0, freq_mhz, 2437) * 1e6
     wavelength = SPEED_OF_LIGHT / freq_hz
     ref_rssi = -20.0 * np.log10(4.0 * math.pi / wavelength)
-    n = np.where(rssi >= -65.0, 2.5, 3.0)
+    n = np.where(rssi >= -65.0, C.TRILAT_PATH_LOSS_FREE_SPACE, C.TRILAT_PATH_LOSS_INDOOR)
     dist = np.power(10.0, (ref_rssi - rssi) / (10.0 * n))
     return np.clip(dist, 1.0, 100.0)
 
@@ -116,8 +116,37 @@ def _weighted_centroid(lat, lon, rssi):
     return float(np.sum(lat * w) / np.sum(w)), float(np.sum(lon * w) / np.sum(w))
 
 
+def _trilat_quality(avg_s: float, avg_d: float, gf: float, n_aps: int):
+    """(accuracy, confidence) of a trilateration fix from its mean RSSI,
+    mean distance, GDOP factor and AP count."""
+    # accuracy (:1034-1070)
+    if avg_s >= -65.0:
+        accuracy = 3.0 * (1.0 + (gf - 1.0) * 0.5)
+        accuracy = max(1.0, min(5.0, accuracy))
+    else:
+        accuracy = min(avg_d * 0.3, 50.0) * gf
+        accuracy = max(1.0, min(50.0, accuracy))
+
+    # confidence (:1104-1180)
+    lo, hi = C.TRILAT_CONF_MIN, C.TRILAT_CONF_MAX
+    if avg_s >= -65.0:
+        signal_factor = min(1.0, max(0.0, (avg_s - (-80.0)) / ((-65.0) - (-80.0))))
+    else:
+        signal_factor = min(1.0, max(0.0, (avg_s - (-100.0)) / ((-80.0) - (-100.0))))
+    ap_factor = min(1.0, max(0.0, (n_aps - C.TRILAT_MIN_APS) / 5.0))
+    base_conf = lo + (hi - lo) * (
+        C.TRILAT_CONF_SIGNAL_COEF * signal_factor + C.TRILAT_CONF_APCOUNT_COEF * ap_factor
+    )
+    conf = base_conf * (1.0 - 0.30 * (1.0 - 1.0 / max(1.0, gf)))
+    if avg_s >= -65.0:
+        conf = max(0.8, min(hi, conf))
+    elif avg_s < -80.0:
+        conf = min(0.58, conf)
+    return accuracy, max(lo, min(hi, conf))
+
+
 def _trilaterate_group(pdf: pd.DataFrame) -> list | None:
-    if len(pdf) < 3:
+    if len(pdf) < C.TRILAT_MIN_APS:
         return None
     rssi = pdf["signal_strength"].to_numpy(dtype=float)
     freq = pdf["frequency"].fillna(2437).to_numpy(dtype=float)
@@ -156,27 +185,7 @@ def _trilaterate_group(pdf: pd.DataFrame) -> list | None:
     out_lat = min(90.0, max(-90.0, out_lat))
     out_lon = min(180.0, max(-180.0, out_lon))
 
-    # accuracy (:1034-1070)
-    if avg_s >= -65.0:
-        accuracy = 3.0 * (1.0 + (gf - 1.0) * 0.5)
-        accuracy = max(1.0, min(5.0, accuracy))
-    else:
-        accuracy = min(avg_d * 0.3, 50.0) * gf
-        accuracy = max(1.0, min(50.0, accuracy))
-
-    # confidence (:1104-1180)
-    if avg_s >= -65.0:
-        signal_factor = min(1.0, max(0.0, (avg_s - (-80.0)) / ((-65.0) - (-80.0))))
-    else:
-        signal_factor = min(1.0, max(0.0, (avg_s - (-100.0)) / ((-80.0) - (-100.0))))
-    ap_factor = min(1.0, max(0.0, (len(pdf) - 3) / 5.0))
-    base_conf = 0.55 + (0.85 - 0.55) * (0.7 * signal_factor + 0.3 * ap_factor)
-    conf = base_conf * (1.0 - 0.30 * (1.0 - 1.0 / max(1.0, gf)))
-    if avg_s >= -65.0:
-        conf = max(0.8, min(0.85, conf))
-    elif avg_s < -80.0:
-        conf = min(0.58, conf)
-    conf = max(0.55, min(0.85, conf))
+    accuracy, conf = _trilat_quality(avg_s, avg_d, gf, len(pdf))
 
     alts = pdf["ap_alt"].dropna()
     altitude = float(alts.mean()) if len(alts) else 0.0
@@ -480,7 +489,7 @@ def _trilat_arrays(g: dict) -> list | None:
     request — the dominant term when thousands of requests route to
     trilateration in one kernel batch)."""
     rssi = g["rssi"]
-    if len(rssi) < 3:
+    if len(rssi) < C.TRILAT_MIN_APS:
         return None
     freq = np.where(np.isnan(g["freq"]), 2437.0, g["freq"])
     lat, lon = g["lat"], g["lon"]
@@ -517,27 +526,7 @@ def _trilat_arrays(g: dict) -> list | None:
     out_lat = min(90.0, max(-90.0, out_lat))
     out_lon = min(180.0, max(-180.0, out_lon))
 
-    # accuracy (:1034-1070)
-    if avg_s >= -65.0:
-        accuracy = 3.0 * (1.0 + (gf - 1.0) * 0.5)
-        accuracy = max(1.0, min(5.0, accuracy))
-    else:
-        accuracy = min(avg_d * 0.3, 50.0) * gf
-        accuracy = max(1.0, min(50.0, accuracy))
-
-    # confidence (:1104-1180)
-    if avg_s >= -65.0:
-        signal_factor = min(1.0, max(0.0, (avg_s - (-80.0)) / ((-65.0) - (-80.0))))
-    else:
-        signal_factor = min(1.0, max(0.0, (avg_s - (-100.0)) / ((-80.0) - (-100.0))))
-    ap_factor = min(1.0, max(0.0, (len(rssi) - 3) / 5.0))
-    base_conf = 0.55 + (0.85 - 0.55) * (0.7 * signal_factor + 0.3 * ap_factor)
-    conf = base_conf * (1.0 - 0.30 * (1.0 - 1.0 / max(1.0, gf)))
-    if avg_s >= -65.0:
-        conf = max(0.8, min(0.85, conf))
-    elif avg_s < -80.0:
-        conf = min(0.58, conf)
-    conf = max(0.55, min(0.85, conf))
+    accuracy, conf = _trilat_quality(avg_s, avg_d, gf, len(rssi))
 
     alts = g["alt"][~np.isnan(g["alt"])]
     altitude = float(alts.mean()) if len(alts) else 0.0

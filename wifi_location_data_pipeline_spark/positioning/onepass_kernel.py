@@ -94,12 +94,6 @@ PACK_FIELDS = (
 # kernel-side name of each value field
 _SHORT = dict(zip(PACK_FIELDS[1:], ("s", "freq", "lat", "lon", "alt", "hacc", "conf")))
 
-# path-loss exponent per normalized vendor (LogDistancePathLossAlgorithm)
-_VENDOR_N = {
-    "cisco": 3.0, "aruba": 2.8, "meraki": 3.0, "ubiquiti": 2.7, "ruckus": 2.9,
-    "hpe-aruba": 2.8,
-}
-
 
 def element_values(s, freq, conf, vendor) -> dict[str, np.ndarray]:
     """Per-element derived values of flat observation rows: path-loss
@@ -115,8 +109,9 @@ def element_values(s, freq, conf, vendor) -> dict[str, np.ndarray]:
     import pandas as pd
 
     codes, names = pd.factorize(vendor)  # null vendor -> code -1
+    n_of = C.VENDOR_PATH_LOSS_EXPONENTS
     vendor_n = np.array(
-        [_VENDOR_N.get(v.strip(" ").lower(), C.DEFAULT_PATH_LOSS_EXPONENT) for v in names]
+        [n_of.get(v.strip(" ").lower(), C.DEFAULT_PATH_LOSS_EXPONENT) for v in names]
         + [C.DEFAULT_PATH_LOSS_EXPONENT]
     )[codes]
     with np.errstate(all="ignore"):

@@ -209,17 +209,3 @@ POSITIONING_REQUEST_SCHEMA = T.StructType(
         T.StructField("wifiScanResults", T.ArrayType(WIFI_SCAN_RESULT_SCHEMA)),
     ]
 )
-
-# Per-algorithm position estimate (input to the combiner)
-ALGORITHM_POSITION_SCHEMA = T.StructType(
-    [
-        T.StructField("request_id", T.StringType(), nullable=False),
-        T.StructField("algorithm", T.StringType(), nullable=False),
-        T.StructField("weight", T.DoubleType()),
-        T.StructField("latitude", T.DoubleType()),
-        T.StructField("longitude", T.DoubleType()),
-        T.StructField("altitude", T.DoubleType()),
-        T.StructField("accuracy", T.DoubleType()),
-        T.StructField("confidence", T.DoubleType()),
-    ]
-)

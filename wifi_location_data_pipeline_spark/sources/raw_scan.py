@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wifi_location_data_pipeline_spark.schemas import RAW_SCAN_DOCUMENT_SCHEMA
 from wifi_location_data_pipeline_spark.sources.codec import decode_scan_lines
 
 
@@ -28,9 +27,3 @@ def read_raw_scan_documents_stream(spark: SparkSession, path: str) -> DataFrame:
     equivalent of the SQS S3-event loop.
     """
     return decode_scan_lines(spark.readStream.text(path))
-
-
-def read_raw_scan_json(spark: SparkSession, path: str) -> DataFrame:
-    """Plain (uncompressed) NDJSON variant, PERMISSIVE with declared schema —
-    matches the reference's Jackson ignore-unknown parse semantics."""
-    return spark.read.schema(RAW_SCAN_DOCUMENT_SCHEMA).json(path)

@@ -1,14 +1,21 @@
 """Parquet table access for the driver's synthetic corpus and engine tables.
 
-The test corpus (TESTDATA.md) is one parquet file per table under
-``/root/testdata/sf*/``. At production scale these would be partitioned
-lakehouse tables; the loader keeps the interface identical.
+The test corpus (TESTDATA.md) is one parquet file per table. A
+production corpus keeps each table as a directory of part files (a
+lakehouse table such as the reference's ``wifi_measurements``);
+``<name>.parquet`` may be either, and the loader reads both the same way.
+``table_probe`` is the one place that measures a table: every size-keyed
+choice (scan splits, shuffle partitions, fan-out, crossovers) reads its
+bytes and rows, so a choice follows a table's size, never its layout.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 TESTDATA_TABLES = (
@@ -24,7 +31,56 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# the tables a corpus scales on (the replicated axes of make_scale_corpus);
+# the TPC-H side tables are the same size at every scale factor
+FACT_TABLES = ("events", "documents", "embeddings")
+
+
+def table_parts(path: str) -> list[str]:
+    """The data files of the parquet table at ``path``: the file itself, or
+    every file under the directory that Spark's reader reads. Names starting
+    with ``_`` or ``.`` (``_SUCCESS``, checksum files) are not parts."""
+    if os.path.isfile(path):
+        return [path]
+    parts = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        parts += [
+            os.path.join(root, f) for f in sorted(files) if not f.startswith(("_", "."))
+        ]
+    return parts
+
+
+@dataclass(frozen=True)
+class TableProbe:
+    """A table's size: ``bytes`` from its part files' stat, and the parquet
+    footer of each part, or None when any footer cannot be read."""
+
+    bytes: int
+    footers: tuple | None
+
+    @property
+    def rows(self) -> int | None:
+        return None if self.footers is None else sum(m.num_rows for m in self.footers)
+
+    @property
+    def row_groups(self) -> int | None:
+        return (
+            None if self.footers is None else sum(m.num_row_groups for m in self.footers)
+        )
+
+
+def table_probe(sf_dir: str, name: str) -> TableProbe | None:
+    """Probe corpus table ``name`` (a file or a directory), None if absent."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if not os.path.exists(path):
+        return None
+    parts = table_parts(path)
+    size = sum(os.path.getsize(p) for p in parts)
+    try:
+        return TableProbe(size, tuple(pq.read_metadata(p) for p in parts))
+    except (OSError, pa.ArrowException):
+        return TableProbe(size, None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,7 +108,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-# largest fact-table parquet size above which the corpus is "at scale":
+# largest fact-table bytes (table_probe) above which the corpus is "at scale":
 # per-stage CPU then outweighs per-task scheduling and AQE's runtime
 # re-planning starts earning its job rounds. The r10 threshold (4 MB) put
 # the 10x replica corpus (~25 MB facts) into AQE mode, where EVERY exchange
@@ -70,28 +126,15 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 _SCALE_MODE_MIN_BYTES = 256 << 20
 
 
-def _row_group_open_cost(sf_dir: str) -> int:
+def _row_group_open_cost(fact: TableProbe) -> int:
     """Average row-group byte size of the largest fact table, clamped to
     [256 KB, 4 MB] — the openCost that makes Spark's maxSplitBytes land on
     row-group boundaries (splits track row groups, per the optimization
     guide's file-layout rule). Falls back to the 4 MB coarse default when
-    the footer can't be read."""
-    try:
-        import pyarrow.parquet as pq
-
-        path = max(
-            (
-                os.path.join(sf_dir, f"{t}.parquet")
-                for t in ("events", "documents", "embeddings")
-                if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-            ),
-            key=os.path.getsize,
-        )
-        meta = pq.ParquetFile(path).metadata
-        avg_rg = os.path.getsize(path) // max(1, meta.num_row_groups)
-        return max(256 << 10, min(4 << 20, avg_rg))
-    except Exception:
+    the footers can't be read."""
+    if not fact.row_groups:
         return 4 << 20
+    return max(256 << 10, min(4 << 20, fact.bytes // fact.row_groups))
 
 
 def configure_for_corpus(spark: SparkSession, sf_dir: str) -> None:
@@ -108,18 +151,13 @@ def configure_for_corpus(spark: SparkSession, sf_dir: str) -> None:
     override both after its session is built — this helper tunes the
     single-node CPU-heavy profile the engine is benched on.
     """
-    # judge scale by the FACT tables the workload actually scales on
-    # (events/documents/embeddings — the replicated axes of
-    # make_scale_corpus); the static TPC-H side tables are the same size
-    # at every scale factor and would misclassify sf0.1 as at-scale
-    try:
-        largest = max(
-            os.path.getsize(os.path.join(sf_dir, f"{t}.parquet"))
-            for t in ("events", "documents", "embeddings")
-            if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-        )
-    except ValueError:
+    # judge scale by the FACT tables the workload actually scales on; the
+    # static TPC-H side tables would misclassify sf0.1 as at-scale
+    probes = [p for p in (table_probe(sf_dir, t) for t in FACT_TABLES) if p]
+    fact = max(probes, key=lambda p: p.bytes, default=None)
+    if fact is None:
         return
+    largest = fact.bytes
     # remember the session's build-time parallelism so the at-scale branch
     # can restore it after a small-corpus run in the same session (bench
     # runs sf0.1 then the sf1 replica). build_session pins this attribute
@@ -153,7 +191,7 @@ def configure_for_corpus(spark: SparkSession, sf_dir: str) -> None:
         # fixed 4 MB openCost that floored those scans at 2-6 splits).
         # Clamped to [256 KB, 4 MB]: the r10/r11 endpoints.
         spark.conf.set(
-            "spark.sql.files.openCostInBytes", str(_row_group_open_cost(sf_dir))
+            "spark.sql.files.openCostInBytes", str(_row_group_open_cost(fact))
         )
         # Below the scale threshold the AQE machinery is pure overhead:
         # each exchange materializes as its OWN scheduled job (a 2-shuffle
