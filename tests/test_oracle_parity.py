@@ -150,10 +150,10 @@ def test_ngram_verify_array_matches_join_count(spark, sf_dir, monkeypatch):
     assert array_form  # the fixture must hold verified near-dup pairs
 
 
-def test_plan_tap_falls_back_to_explain_then_raises(spark, monkeypatch):
-    """The plan tap records the public explain when the private
-    explainString call fails, and raises when both fail: a capture never
-    records a placeholder for a plan it does not have."""
+def test_plan_tap_records_explain_or_raises(spark, monkeypatch):
+    """The plan tap records the formatted explain, and raises when the
+    explain fails: a capture never records a placeholder for a plan it does
+    not have."""
     from wifi_location_data_pipeline_spark.plans import llm_queries as L
 
     class _Utils:
@@ -170,14 +170,14 @@ def test_plan_tap_falls_back_to_explain_then_raises(spark, monkeypatch):
     tap: list = []
     monkeypatch.setattr(L, "_PLAN_TAP", tap)
     df = spark.range(3)
-    # the public explain goes through the same private call: both fail
+    L._tap_plan("range", df)
+    assert [label for label, _ in tap] == ["range"]
+    assert "Range" in tap[0][1]
+    # the explain goes through the private explainString call
     monkeypatch.setattr(df, "_sc", _Sc())
     with pytest.raises(RuntimeError, match="explainString unavailable"):
-        L._tap_plan("both fail", df)
-    assert tap == []
-    monkeypatch.setattr(df, "explain", lambda mode: print(f"public {mode} plan"))
-    L._tap_plan("fallback", df)
-    assert tap == [("fallback", "public formatted plan\n")]
+        L._tap_plan("fails", df)
+    assert len(tap) == 1
 
 
 @pytest.mark.parametrize("name", TAIL_WITH_ORACLE)

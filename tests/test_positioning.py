@@ -85,27 +85,41 @@ def run(spark, ap_df, requests):
 
 def test_ap_index_one_broadcast_per_content(spark, tmp_path):
     """Repeated positioning calls on one AP table reuse one AP-index
-    broadcast (each broadcast pickles a file into the driver's temp dir and
-    nothing releases it). A table rewritten at the same path is new content:
-    it gets a new index, and the answers follow it."""
+    broadcast (each broadcast pickles a file into the driver's temp dir). A
+    table rewritten at the same path is new content: it gets a new index,
+    which replaces the held one, so the temp dir and the held set stay at
+    one index however often the table changes, and the answers follow the
+    table."""
+    from wifi_location_data_pipeline_spark.positioning import onepass
+
     mac = APS[0][0]
-    # content no other test broadcasts, so the first call adds one index
     rows = [dict(r, confidence=0.71) for r in golden_ap_rows()]
     path = str(tmp_path / "aps")
     spark.createDataFrame(rows, WIFI_ACCESS_POINTS_SCHEMA).write.parquet(path)
     rdf = spark.createDataFrame([req("r", [scan(mac, -55.0)])], POSITIONING_REQUEST_SCHEMA)
     temp_dir = spark.sparkContext._temp_dir
+    app = spark.sparkContext.applicationId
     before = set(os.listdir(temp_dir))
     for _ in range(5):
         first = position_requests_onepass(rdf, spark.read.parquet(path)).collect()
     assert len(set(os.listdir(temp_dir)) - before) == 1
+    held = onepass._AP_INDEX[app][1]
 
-    moved = [dict(r, latitude=r["latitude"] + 0.01) if r["mac_addr"] == mac else r for r in rows]
-    spark.createDataFrame(moved, WIFI_ACCESS_POINTS_SCHEMA).write.mode("overwrite").parquet(path)
-    second = position_requests_onepass(rdf, spark.read.parquet(path)).collect()
-    assert len(set(os.listdir(temp_dir)) - before) == 2
-    assert second[0]["latitude"] == pytest.approx(first[0]["latitude"] + 0.01, abs=1e-9)
-    assert second[0]["longitude"] == first[0]["longitude"]
+    for k in range(1, 5):
+        moved = [
+            dict(r, latitude=r["latitude"] + 0.01 * k) if r["mac_addr"] == mac else r
+            for r in rows
+        ]
+        spark.createDataFrame(moved, WIFI_ACCESS_POINTS_SCHEMA).write.mode(
+            "overwrite").parquet(path)
+        answer = position_requests_onepass(rdf, spark.read.parquet(path)).collect()
+        assert answer[0]["latitude"] == pytest.approx(
+            first[0]["latitude"] + 0.01 * k, abs=1e-9)
+        assert answer[0]["longitude"] == first[0]["longitude"]
+        assert onepass._AP_INDEX[app][1] is not held
+        held = onepass._AP_INDEX[app][1]
+        new = set(os.listdir(temp_dir)) - before
+        assert new == {os.path.basename(held._path)}
 
 
 def golden_requests():

@@ -250,6 +250,38 @@ def _positioning_fixture(spark, tmpzone):
     return zone, out, ckpt, aps, write_requests
 
 
+def test_stream_keeps_its_ap_index_across_batch_calls(spark, tmpzone):
+    """A running stream holds its own AP-index frame, no broadcast: batch
+    positioning calls over changed AP content, which replace the context's
+    AP-index broadcast, leave the stream answering from the index it
+    started with."""
+    from wifi_location_data_pipeline_spark.positioning.onepass import (
+        position_requests_onepass,
+    )
+    from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+    try:
+        requests = spark.read.schema(POSITIONING_REQUEST_SCHEMA).json(zone)
+        for k in (1, 2):  # before the stream's first batch reads its index
+            moved = aps.withColumn("latitude", F.col("latitude") + 0.01 * k)
+            position_requests_onepass(requests, moved).collect()
+        write_requests("req0.json", ["r0"])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    [streamed] = spark.read.parquet(out).collect()
+    requests = spark.read.schema(POSITIONING_REQUEST_SCHEMA).json(zone)
+    [batch] = position_requests_onepass(requests, aps).collect()
+    assert streamed["request_id"] == batch["request_id"] == "r0"
+    assert (streamed["latitude"], streamed["longitude"]) == (
+        batch["latitude"], batch["longitude"])
+
+
 def test_checkpoint_logs_use_filesystem_manager(spark, tmp_path):
     """build_session routes streaming checkpoint logs (offsets, commits)
     through Spark's FileSystem-based checkpoint manager, not the default

@@ -11,6 +11,8 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
 
@@ -76,18 +78,10 @@ def main() -> None:
         except Exception as e:  # streaming/demo entries that need staging
             print(f"SKIP {name}: {e}")
             continue
-        try:
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception:
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            txt = buf.getvalue()
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        txt = buf.getvalue()
         for label, plan_txt in tap:
             txt += f"\n\n=== internal job: {label} ===\n{plan_txt}"
         out = os.path.join(args.outdir, f"{name}_{args.tag}.txt")

@@ -149,21 +149,15 @@ _PLAN_TAP: list | None = None
 
 
 def _tap_plan(label: str, df) -> None:
-    """Record ``df``'s formatted plan. The private ``explainString`` call
-    falls back to capturing ``df.explain("formatted")``; a failure of both
-    raises, so a capture never records a plan it does not have."""
+    """Record ``df``'s formatted plan, captured from the public
+    ``df.explain("formatted")``; a failing explain raises, so a capture
+    never records a plan it does not have."""
     if _PLAN_TAP is None:
         return
-    try:
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-    except Exception:  # noqa: BLE001 — private API; the public path follows
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        txt = buf.getvalue()
-    _PLAN_TAP.append((label, txt))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    _PLAN_TAP.append((label, buf.getvalue()))
 
 
 def shingles_cte(d: str, n: int = 3, src: str = "documents") -> str:

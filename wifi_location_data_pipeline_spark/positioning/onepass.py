@@ -163,29 +163,46 @@ def selection_info_by_context(spark: SparkSession) -> dict[tuple, list[dict]]:
     return info
 
 
-def ap_index(access_points: DataFrame) -> Broadcast:
-    """``known_ap_lookup(access_points)`` collected into a pandas frame and
-    held as a broadcast variable: the AP index the kernel joins on mac_addr,
-    in the one form both placements read (an executor's Python worker loads
-    it once; the driver-side stream reads it once). A NULL mac never matches
-    an inner join, so its rows are left out.
-
-    Each broadcast pickles one file into the driver's temp dir and nothing
-    releases it, so the SparkContext holds one broadcast per index content
-    and a repeated call reuses it. The key is the collected content, never
-    the AP frame's path or plan: an AP table rewritten in place (``jobs
-    localize``, perfbench) reads the same path and gets a new index."""
+def ap_frame(access_points: DataFrame) -> pd.DataFrame:
+    """``known_ap_lookup(access_points)`` collected into a pandas frame: the
+    AP index the kernel joins on mac_addr. A NULL mac never matches an
+    inner join, so its rows are left out. The positioning stream, which
+    runs the kernel in the driver, reads this frame as it is."""
     lookup = known_ap_lookup(access_points).filter(F.col("mac_addr").isNotNull())
-    pdf = lookup.toArrow().to_pandas()
+    return lookup.toArrow().to_pandas()
+
+
+# application id -> (content digest, broadcast): the one AP-index broadcast
+# each SparkContext holds
+_AP_INDEX: dict[str, tuple[str, Broadcast]] = {}
+
+
+def ap_index(access_points: DataFrame) -> Broadcast:
+    """``ap_frame(access_points)`` held as a broadcast variable, which an
+    executor's Python worker loads once: the AP index of the batch plan.
+
+    Each broadcast pickles one file into the driver's temp dir, so a
+    SparkContext holds one AP-index broadcast: a call with the content it
+    holds reuses it, and a call with new content destroys it (its JVM blocks
+    and its file) and broadcasts the new one. The key is the collected
+    content, never the AP frame's path or plan: an AP table rewritten in
+    place (``jobs localize``, perfbench) reads the same path and gets a new
+    index. So run a positions frame before building one over a changed AP
+    table; one built over the superseded index fails when run."""
+    pdf = ap_frame(access_points)
     digest = hashlib.sha256(
         repr(list(pdf.dtypes.items())).encode()
         + pd.util.hash_pandas_object(pdf, index=False).to_numpy().tobytes()
     ).hexdigest()
     sc = access_points.sparkSession.sparkContext
-    indexes = sc.__dict__.setdefault("_graft_ap_indexes", {})
-    if digest not in indexes:
-        indexes[digest] = sc.broadcast(pdf)
-    return indexes[digest]
+    held = _AP_INDEX.get(sc.applicationId)
+    if held is not None:
+        if held[0] == digest:
+            return held[1]
+        held[1].destroy()
+    bc = sc.broadcast(pdf)
+    _AP_INDEX[sc.applicationId] = (digest, bc)
+    return bc
 
 
 def position_requests_onepass(
@@ -200,7 +217,8 @@ def position_requests_onepass(
     element values, packs each request and runs
     context/selection/algorithms/numeric/combine. The AP index
     (``ap_index``) is collected once here, the bytes a broadcast join would
-    pull through the driver, and ships as a broadcast variable. No join and no shuffle in the plan: the kernel
+    pull through the driver, and ships as a broadcast variable. No join and
+    no shuffle in the plan: the kernel
     runs in the partitions of ``requests``, so its parallelism is the
     input's (a caller holding a few large splits can repartition
     ``requests`` first).

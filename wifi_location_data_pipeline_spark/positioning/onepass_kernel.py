@@ -754,14 +754,16 @@ def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
 
     Each batch is gated and exploded (``gate_and_explode``), inner-joined
     with the AP index on mac_addr, packed and solved. Every request is one
-    input row, so no request straddles two batches. ``ap_index``: the
-    broadcast variable ``onepass.ap_index`` returns, read on first use.
-    ``selection_info``: see ``build_output``.
+    input row, so no request straddles two batches. ``ap_index``: the frame
+    ``onepass.ap_frame`` returns (the driver placement), or the broadcast
+    variable ``onepass.ap_index`` returns, read on first use (the executor
+    placement). ``selection_info``: see ``build_output``.
     """
     import pyarrow as pa
+    from pyspark import Broadcast
 
     def run(batches):
-        aps = ap_index.value
+        aps = ap_index.value if isinstance(ap_index, Broadcast) else ap_index
         for batch in batches:
             rows = gate_and_explode(batch).merge(aps, on="mac_addr", how="inner")
             if not len(rows):

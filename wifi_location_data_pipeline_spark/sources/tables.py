@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -54,10 +55,19 @@ def table_parts(path: str) -> list[str]:
 @dataclass(frozen=True)
 class TableProbe:
     """A table's size: ``bytes`` from its part files' stat, and the parquet
-    footer of each part, or None when any footer cannot be read."""
+    footer of each part, or None when any footer cannot be read. The
+    footers are read on first use, so a caller of ``bytes`` alone costs one
+    listing and one stat per part."""
 
+    parts: tuple[str, ...]
     bytes: int
-    footers: tuple | None
+
+    @cached_property
+    def footers(self) -> tuple | None:
+        try:
+            return tuple(pq.read_metadata(p) for p in self.parts)
+        except (OSError, pa.ArrowException):
+            return None
 
     @property
     def rows(self) -> int | None:
@@ -75,12 +85,8 @@ def table_probe(sf_dir: str, name: str) -> TableProbe | None:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if not os.path.exists(path):
         return None
-    parts = table_parts(path)
-    size = sum(os.path.getsize(p) for p in parts)
-    try:
-        return TableProbe(size, tuple(pq.read_metadata(p) for p in parts))
-    except (OSError, pa.ArrowException):
-        return TableProbe(size, None)
+    parts = tuple(table_parts(path))
+    return TableProbe(parts, sum(os.path.getsize(p) for p in parts))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -22,11 +22,12 @@ The kernel is the batch plan's (``make_onepass_kernel``), fed the same
 nested request rows: one kernel, placed in the executors for batch and in
 the driver for the stream, so the two placements give equal answers.
 
-The AP index is ``onepass.ap_index(access_points)`` (``known_ap_lookup``:
+The AP index is ``onepass.ap_frame(access_points)`` (``known_ap_lookup``:
 status filter, keep-first by version, rename — the analog of the service's
 DynamoDB lookup path with its long-lived client), collected into the driver
-once at stream start: the snapshot a cache at stream start would hold. It is
-the batch plan's broadcast variable, which the driver-side kernel reads once.
+once at stream start: the snapshot a cache at stream start would hold. The
+driver-side kernel reads the frame itself, so a stream holds no broadcast
+and a later batch call over a changed AP table cannot release its index.
 Driver memory is bounded by that index plus one micro-batch of requests;
 bound the latter with ``max_files_per_trigger``. The checkpoint logs go
 through the FileSystem-based checkpoint manager ``build_session`` selects.
@@ -52,8 +53,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 
 from wifi_location_data_pipeline_spark.positioning.onepass import (
-    ap_index,
     answer_schema,
+    ap_frame,
     selection_info_by_context,
 )
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import make_onepass_kernel
@@ -86,7 +87,7 @@ def start_positioning_stream(
 
     schema = to_arrow_schema(answer_schema(with_reasons))
     kernel = make_onepass_kernel(
-        ap_index(access_points),
+        ap_frame(access_points),
         selection_info_by_context(spark) if with_reasons else None,
         schema,
     )
