@@ -35,8 +35,6 @@ def main() -> None:
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "spark.ui.showConsoleProgress": "false",
     }
-    if os.environ.get("SPARK_GRAFT_AQE"):  # A/B hook for floor experiments
-        extra["spark.sql.adaptive.enabled"] = os.environ["SPARK_GRAFT_AQE"]
     spark = build_session(app_name="bench", extra_conf=extra)
 
     qs = entry_mod.queries()
@@ -98,8 +96,7 @@ def main() -> None:
     # long-lived Spring process whose dataflow is compiled once at startup,
     # so per-invocation Catalyst re-analysis is a harness artifact, not an
     # engine cost — the plan still re-executes from the parquet scans every
-    # attempt. SPARK_GRAFT_PLAN_CACHE=0 disables the reuse to measure
-    # cold-plan cost. (The DuckDB oracle twin re-parses per attempt; its
+    # attempt. (The DuckDB oracle twin re-parses per attempt; its
     # parse+bind is sub-ms, so the asymmetry is negligible on that side.)
     attempts = max(1, int(os.environ.get("BENCH_ATTEMPTS", "3")))
 

@@ -70,11 +70,10 @@ def test_loader_reads_events_on_foreign_session(spark, sf_dir):
     assert isinstance(df.schema["ts"].dataType, TimestampNTZType)
 
 
-def test_service_plan_cache_reuse_is_value_stable(spark, sf_dir, monkeypatch):
+def test_service_plan_cache_reuse_is_value_stable(spark, sf_dir):
     """QueryDef.service plan reuse: a cache hit after clearCache() must
     re-execute from the scans and produce identical values (the plan is a
-    corpus_memo entry, which re-arms persisted values on a hit), and
-    SPARK_GRAFT_PLAN_CACHE=0 must bypass the cache entirely."""
+    corpus_memo entry, which re-arms persisted values on a hit)."""
     from wifi_location_data_pipeline_spark import corpus_memo
     from wifi_location_data_pipeline_spark.plans import queries as Q
 
@@ -103,12 +102,6 @@ def test_service_plan_cache_reuse_is_value_stable(spark, sf_dir, monkeypatch):
     pfirst = rows(p.spark(spark, sf_dir))
     spark.catalog.clearCache()
     assert rows(p.spark(spark, sf_dir)) == pfirst
-
-    # disable switch bypasses the cache
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
-    fresh = q.spark(spark, sf_dir)
-    assert fresh is not cached_df
-    assert rows(fresh) == first
 
 
 def test_fixture_shapes():

@@ -54,6 +54,12 @@ GATE_ON_PRODUCT = [
     "selection_reasons",
     "lof_closed_form",
     "dbscan_closed_form",
+    "weighted_centroid",
+    "wcl_position_error",
+    "tiered_localization",
+    "mad_outlier_flags",
+    "comparison_metrics",
+    "selection_matrix",
 ]
 _PKG = "wifi_location_data_pipeline_spark."
 _PRODUCT = tuple(_PKG + m + "." for m in ("operators", "positioning", "sources"))

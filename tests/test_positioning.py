@@ -499,6 +499,44 @@ def test_with_reasons_matches_standalone_selector(spark, ap_df):
         assert calc & (info_sel or calc), rid
 
 
+def test_kernel_select_phase_matches_selector_on_every_context(spark):
+    """The kernel's selection phase (``select_phase``) against the
+    production selector in positioning/selection.py (``select_algorithms``)
+    on all 480 SelectionContexts: the same selected set per context and
+    bit-equal weights. The reason-annotated twin behind
+    ``selection_info_by_context`` is not the reference here: it mirrors the
+    Java reason bookkeeping (no rank-1 fallback, no 0.5 floor on the
+    very-weak proximity weight), which the product selection does not."""
+    import itertools
+
+    import numpy as np
+
+    from wifi_location_data_pipeline_spark.positioning import onepass_kernel as K
+    from wifi_location_data_pipeline_spark.positioning.selection import (
+        ALGORITHMS,
+        select_algorithms,
+    )
+
+    labels = (K._APC, K._SQ, K._GQ, K._SD, (False, True))
+    codes = np.array(list(itertools.product(*(range(len(t)) for t in labels))))
+    assert len(codes) == 480
+    grid = spark.createDataFrame(
+        [(i, *(t[c] for t, c in zip(labels, row))) for i, row in enumerate(codes.tolist())],
+        "request_id bigint, " + ", ".join(
+            f"{k} {'boolean' if k == 'all_very_weak' else 'string'}" for k in K.CONTEXT_FIELDS
+        ),
+    )
+    expect: dict[int, dict[str, float]] = {i: {} for i in range(len(codes))}
+    for r in select_algorithms(grid).collect():
+        expect[r["request_id"]][r["algorithm"]] = r["weight"]
+
+    res = K.select_phase(codes[:, 0], codes[:, 1], codes[:, 2], codes[:, 3], codes[:, 4] == 1)
+    for i in range(len(codes)):
+        got = {ALGORITHMS[a]: float(res["sel_w"][i, a]) for a in np.flatnonzero(res["sel"][i])}
+        assert got.keys() == expect[i].keys(), codes[i]
+        assert all(got[a].hex() == expect[i][a].hex() for a in got), codes[i]
+
+
 # ---------------------------------------------------------------------------
 # Round-4 scenario port: the acceptance-corpus classes that were still
 # missing (run-comprehensive-tests.sh:834-1078): log-distance path-loss

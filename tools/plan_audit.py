@@ -37,15 +37,20 @@ CLAIMS: dict[str, str] = {
     "stage1_validation": "stage-1 predicates pushed into the parquet scan",
     "ap_lookup_join": "AP dimension joined via broadcast, fact side unshuffled",
     "per_group_topn": "per-group top-N as one window over one shuffle",
-    "mad_outlier_flags": "median/MAD via shared shuffle; no cartesian anywhere",
-    "tiered_localization": "tier routing + WCL in shared aggregation passes",
+    "mad_outlier_flags": (
+        "product flag_global_outliers (exact): one bssid exchange carries the "
+        "centroid, both median windows and the per-AP summary; no cartesian"
+    ),
+    "tiered_localization": (
+        "product tier_routing ⋈ wcl_localize over the capped rows: each "
+        "branch rides its own cap-window bssid exchange (the branches prune "
+        "to different columns, so none is reused); the WCL side broadcasts"
+    ),
     "selection_matrix": (
-        "zero-shuffle lambda-scoped single projection over range(); "
-        "decomposition (sf1, idle best-of): 0.12 s range+count floor + "
-        "~0.30 s interpreted-lambda evaluation (~1.2M lambda calls at "
-        "~250 ns) = 0.42 s vs 0.11 s in-process oracle; the residual is "
-        "the interpreted-HOF floor, not a plan defect (r8; closes the "
-        "r6/r7 fuse item)"
+        "declared context CTEs: one user_id exchange (DISTRIBUTE BY) carries "
+        "the per-(user, AP) aggregate, the centroid windows and the gram, the "
+        "AP dimension broadcasts; select_algorithms' two branches reuse both, "
+        "and one request_id exchange ranks the kept rows"
     ),
     "ngram_collocations": (
         "r11: single declarative action (the r10 form paid two "

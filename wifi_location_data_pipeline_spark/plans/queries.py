@@ -20,7 +20,8 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from wifi_location_data_pipeline_spark import corpus_memo
 from wifi_location_data_pipeline_spark.plans.dialect import (
@@ -189,6 +190,51 @@ def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     return HAVERSINE.format(lat1=lat1, lon1=lon1, lat2=lat2, lon2=lon2)
 
 
+def _derived_measurements_df(spark: SparkSession, sf_dir: str, cap_by_ap: bool = False) -> DataFrame:
+    """``measurements_cte`` rows in the ``wifi_measurements`` layout: the one
+    adapter from the registry CTEs to the product operators. bssid is
+    ``ap-<ap_id>`` (``_bssid_ap_id`` parses it back), measurement_timestamp
+    is epoch millis, and user_id rides along as the request key.
+    ``cap_by_ap`` keeps the first 10 + (ap*7 % 120) rows per AP by event_id,
+    so the maturity tiers all occur at every scale factor."""
+    from wifi_location_data_pipeline_spark.sources.tables import register_views
+
+    register_views(spark, sf_dir)
+    m = spark.sql(measurements_cte(SPARK)).select(
+        F.col("ap_id").alias("_ap"),
+        F.concat(F.lit("ap-"), F.col("ap_id").cast("string")).alias("bssid"),
+        "latitude",
+        "longitude",
+        F.lit(None).cast("double").alias("altitude"),
+        "rssi",
+        F.col("accuracy").alias("location_accuracy"),
+        "connection_status",
+        "quality_weight",
+        F.lit(2437).alias("frequency"),
+        # epoch millis, timezone-free (ts is TIMESTAMP_NTZ from the corpus)
+        F.expr("timestampdiff(MILLISECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)").alias(
+            "measurement_timestamp"
+        ),
+        "event_id",
+        "user_id",
+        F.lit(None).cast("boolean").alias("is_global_outlier"),
+        F.col("event_id").cast("string").alias("id"),
+    )
+    if cap_by_ap:
+        w = Window.partitionBy("bssid").orderBy("event_id")
+        m = (
+            m.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= 10 + (F.col("_ap") * 7) % 120)
+            .drop("_rn")
+        )
+    return m.drop("_ap")
+
+
+def _bssid_ap_id() -> Column:
+    """The registry ap_id of an adapter bssid (``ap-<ap_id>``)."""
+    return F.regexp_extract("bssid", r"ap-(\d+)", 1).cast("long")
+
+
 @dataclass
 class QueryDef:
     name: str
@@ -208,14 +254,14 @@ class QueryDef:
     # ``corpus_memo`` under the corpus generation, so an in-place corpus
     # regeneration rebuilds it from a fresh file listing; no builder
     # registers interior re-arm hooks (a builder's own persisted relations
-    # go through ``corpus_memo`` and re-arm there). Disable with
-    # SPARK_GRAFT_PLAN_CACHE=0. Batch/ETL queries (transform, dedup, LLM
-    # ops) deliberately do NOT set this: those are per-job submissions in
-    # the reference too, so their per-invocation planning cost is honest.
+    # go through ``corpus_memo`` and re-arm there). Batch/ETL queries
+    # (transform, dedup, LLM ops) deliberately do NOT set this: those are
+    # per-job submissions in the reference too, so their per-invocation
+    # planning cost is honest.
     service: bool = False
 
     def spark(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        if self.service and os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") != "0":
+        if self.service:
             return corpus_memo.memo(
                 spark, sf_dir, f"plan:{self.name}", lambda: self._build(spark, sf_dir)
             )
@@ -656,11 +702,40 @@ FROM ranked WHERE rn = 1
 # §2.5/§2.7 closed-form positioning math
 # ---------------------------------------------------------------------------
 
+
+def _wcl_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The product WCL tier (``wcl_localize``) over the adapter's rows."""
+    from wifi_location_data_pipeline_spark.operators.localization import wcl_localize
+
+    return wcl_localize(_derived_measurements_df(spark, sf_dir)).withColumn(
+        "ap_id", _bssid_ap_id()
+    )
+
+
+def _weighted_centroid_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _wcl_estimates(spark, sf_dir).select(
+        "ap_id",
+        F.round("latitude", 6).alias("est_lat"),
+        F.round("longitude", 6).alias("est_lon"),
+        F.col("measurement_count").alias("n_obs"),
+    )
+
+
+def _wcl_position_error_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from wifi_location_data_pipeline_spark.functions.geo import haversine_m
+
+    aps = spark.sql(_fold_events_stats(spark, sf_dir, aps_cte(SPARK)))
+    err = haversine_m(F.col("latitude"), F.col("longitude"), F.col("true_lat"), F.col("true_lon"))
+    return _wcl_estimates(spark, sf_dir).join(aps, "ap_id").select(
+        "ap_id", F.round(err, 2).alias("error_m")
+    )
+
+
 register(
     "weighted_centroid",
     "Weighted centroid localization (WCL): P = Σ(Pᵢwᵢ)/Σwᵢ with "
     "w = quality_weight · 10^(rssi/10) (WeightedCentroidAlgorithm.java:209-420; "
-    "FRAMEWORK:133-139; SURVEY §2.5).",
+    "FRAMEWORK:133-139; SURVEY §2.5). Spark runs the product wcl_localize.",
     sql=lambda d: f"""
 WITH m AS ({measurements_cte(d)}),
 w AS (SELECT ap_id, latitude, longitude, quality_weight * pow(10.0, rssi / 10.0) AS wt FROM m)
@@ -671,12 +746,14 @@ SELECT ap_id,
 FROM w
 GROUP BY ap_id
 """,
+    spark_fn=_weighted_centroid_fn,
 )
 
 register(
     "wcl_position_error",
     "WCL estimate vs true AP position: haversine error in meters "
-    "(ComparisonService.java:289-296 haversine; localization acceptance check).",
+    "(ComparisonService.java:289-296 haversine; localization acceptance "
+    "check). Spark runs the product wcl_localize.",
     sql=lambda d: f"""
 WITH m AS ({measurements_cte(d)}), aps AS ({aps_cte(d)}),
 w AS (SELECT ap_id, latitude, longitude, quality_weight * pow(10.0, rssi / 10.0) AS wt FROM m),
@@ -689,6 +766,7 @@ SELECT est.ap_id,
   ROUND({haversine_sql('est.est_lat', 'est.est_lon', 'aps.true_lat', 'aps.true_lon')}, 2) AS error_m
 FROM est JOIN aps ON est.ap_id = aps.ap_id
 """,
+    spark_fn=_wcl_position_error_fn,
 )
 
 register(
@@ -743,18 +821,38 @@ FROM per_req
 """,
 )
 
+
+def _mad_outlier_flags_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The product MAD detector (exact medians) summarized per AP. The
+    detector keeps each row's distance and the AP's threshold
+    median + k·MAD, so the MAD is (threshold − median) / k."""
+    from wifi_location_data_pipeline_spark import config as C
+    from wifi_location_data_pipeline_spark.operators.outliers import flag_global_outliers
+
+    flagged = flag_global_outliers(_derived_measurements_df(spark, sf_dir), "MAD", exact=True)
+    per_ap = flagged.groupBy("bssid").agg(
+        F.sum(F.col("is_global_outlier").cast("long")).alias("n_outliers"),
+        F.count("*").alias("n_total"),
+        F.percentile("global_outlier_distance", 0.5).alias("med"),
+        F.min("global_outlier_threshold").alias("thr"),
+    )
+    return per_ap.select(
+        _bssid_ap_id().alias("ap_id"),
+        "n_outliers",
+        "n_total",
+        F.round((F.col("thr") - F.col("med")) / C.OUTLIER_MAD_MULTIPLIER, 4).alias("mad_m"),
+        F.round("med", 4).alias("median_dist_m"),
+    )
+
+
 register(
     "mad_outlier_flags",
     "Global spatial outliers: per-AP centroid, per-row haversine distance, "
-    "flag dist > 3×MAD via exact windowed medians — one partition exchange, "
-    "no re-scan per median (FRAMEWORK:111; SCHEMA.md:55-61,111-125; "
-    "SURVEY §2.5/§2.9).",
-    # Single-pass windowed formulation, shared verbatim by both engines:
-    # the centroid AVG and both exact medians run as window aggregates over
-    # the same PARTITION BY ap_id, so Spark plans ONE exchange + one sort
-    # with three window operators pipelined on top (the aggregate-CTE
-    # formulation re-executes the scan+join subtree once per median under
-    # CTE inlining). The final GROUP BY reuses the window partitioning.
+    "flag dist > 3×MAD via exact windowed medians (FRAMEWORK:111; "
+    "SCHEMA.md:55-61,111-125; SURVEY §2.5/§2.9). Spark runs the product "
+    "flag_global_outliers (operators/outliers.py) with exact medians.",
+    # The oracle computes the centroid AVG and both exact medians as window
+    # aggregates over PARTITION BY ap_id, the product detector's shape.
     # Exact-median-over-full-partition is the reference semantics
     # (FRAMEWORK:111); the documented 100 TB relaxation is
     # percentile_approx — see operators/outliers.py.
@@ -785,14 +883,40 @@ SELECT ap_id,
 FROM mad
 GROUP BY ap_id
 """,
+    spark_fn=_mad_outlier_flags_fn,
 )
+
+
+def _comparison_metrics_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The product shadow comparison (``compare_positions``) of each user's
+    mean CONNECTED position against the mean SCAN one; only users answered
+    by both sides (AGREE / DISAGREE) are kept, like the oracle's inner join."""
+    from wifi_location_data_pipeline_spark.operators.comparison import compare_positions
+
+    m = _derived_measurements_df(spark, sf_dir)
+
+    def answers(status: str) -> DataFrame:
+        return m.filter(F.col("connection_status") == status).groupBy("user_id").agg(
+            F.avg("latitude").alias("latitude"),
+            F.avg("longitude").alias("longitude"),
+            F.avg("location_accuracy").alias("accuracy"),
+        )
+
+    cmp = compare_positions(answers("CONNECTED"), answers("SCAN"), key="user_id")
+    return cmp.filter(F.col("agreement").isin("AGREE", "DISAGREE")).select(
+        "user_id",
+        F.round("disagreement_m", 2).alias("disagreement_m"),
+        F.round("expected_uncertainty_m", 4).alias("expected_uncertainty_m"),
+        "agreement",
+    )
 
 
 register(
     "comparison_metrics",
     "Shadow-comparison: haversine distance between two per-request position "
     "answers + expected uncertainty √(a²+b²) + agreement class "
-    "(ComparisonService.java:29,289-296,424-437; SURVEY §2.5).",
+    "(ComparisonService.java:29,289-296,424-437; SURVEY §2.5). Spark runs "
+    "the product compare_positions.",
     sql=lambda d: f"""
 WITH m AS ({measurements_cte(d)}),
 a AS (
@@ -813,6 +937,7 @@ SELECT a.user_id,
        THEN 'AGREE' ELSE 'DISAGREE' END AS agreement
 FROM a JOIN b ON a.user_id = b.user_id
 """,
+    spark_fn=_comparison_metrics_fn,
 )
 
 # The integration service's 9-scenario success/failure decision tree
@@ -1272,13 +1397,32 @@ WHERE n_old >= 5 AND n_new >= 5
 """,
 )
 
+
+def _tiered_localization_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The product tier router joined to the product WCL estimate, over the
+    per-AP capped rows."""
+    from wifi_location_data_pipeline_spark.operators.localization import (
+        tier_routing,
+        wcl_localize,
+    )
+
+    m = _derived_measurements_df(spark, sf_dir, cap_by_ap=True)
+    return tier_routing(m).join(wcl_localize(m), "bssid").select(
+        _bssid_ap_id().alias("ap_id"),
+        "n",
+        "tier",
+        F.round("latitude", 6).alias("est_lat"),
+        F.round("longitude", 6).alias("est_lon"),
+    )
+
+
 register(
     "tiered_localization",
     "Maturity-tiered localization routing (FRAMEWORK:121-169): per-AP counts "
     "route to WCL (20<=N<50) / MLE (50<=N<100) / BAYESIAN (N>=100), below-"
-    "bootstrap APs excluded; the tier-1 WCL estimate is computed in-line "
-    "(per-AP caps derived from ap_id so every tier occurs; "
-    "operators/localization.py holds the mapInPandas MLE tier).",
+    "bootstrap APs excluded; the tier-1 WCL estimate rides along (per-AP "
+    "caps derived from ap_id so every tier occurs). Spark runs the product "
+    "tier_routing and wcl_localize (operators/localization.py).",
     sql=lambda d: f"""
 WITH m AS ({measurements_cte(d)}),
 capped AS (
@@ -1311,6 +1455,7 @@ SELECT ap_id, n,
 FROM agg
 WHERE n >= 20
 """,
+    spark_fn=_tiered_localization_fn,
 )
 
 register(
@@ -2121,6 +2266,24 @@ def _stage_stream_dir(sf_dir: str) -> str:
     return stage
 
 
+def _drain_to_memory(frame: DataFrame, output_mode: str, prefix: str) -> str:
+    """Run a streaming frame to completion (Trigger.AvailableNow) into a
+    memory sink under a fresh ``stream_<prefix>_<uuid>`` name, and return
+    that table name."""
+    import uuid
+
+    name = f"stream_{prefix}_" + uuid.uuid4().hex[:10]
+    (
+        frame.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return name
+
+
 def _streaming_tumbling_spark_fn(spark, sf_dir):
     """A REAL Structured Streaming execution, value-checked (SURVEY §2.8):
     readStream file source over the events corpus -> event-time watermark
@@ -2141,8 +2304,6 @@ def _streaming_tumbling_spark_fn(spark, sf_dir):
     streaming_ingest_microbatch: the ~seconds of trigger/state-store
     fixed cost measures Structured Streaming machinery, not data
     throughput."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2162,15 +2323,7 @@ def _streaming_tumbling_spark_fn(spark, sf_dir):
         .groupBy(F2.window("ets", "1 hour").alias("w"), "event_type")
         .count()
     )
-    name = "stream_tumbling_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(agg, "complete", "tumbling")
     return spark.sql(
         f"SELECT CAST(w.start AS STRING) AS hour_start, event_type,"
         f" CAST(count AS BIGINT) AS n_events FROM {name}"
@@ -2216,8 +2369,6 @@ def _streaming_session_spark_fn(spark, sf_dir):
     integer-exact and immune to fractional-second string rendering.
     Excluded from bench.py's wall-clock suite like the other streaming
     entries (trigger/state-store fixed cost, not data throughput)."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2236,15 +2387,7 @@ def _streaming_session_spark_fn(spark, sf_dir):
         )
         .count()
     )
-    name = "stream_session_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(agg, "append", "session")
     return spark.sql(
         f"SELECT user_id, unix_micros(w.start) AS session_start_us,"
         f" unix_micros(w.end) AS session_end_us,"
@@ -2314,8 +2457,6 @@ def _streaming_dedup_spark_fn(spark, sf_dir):
     leftover duplicate moves the checksum. Excluded from bench.py's
     wall-clock suite like the other streaming entries (trigger/state
     fixed cost, not data throughput)."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2333,15 +2474,7 @@ def _streaming_dedup_spark_fn(spark, sf_dir):
 
     doubled = reader().union(reader())
     deduped = doubled.withWatermark("ets", "1 hour").dropDuplicates(["event_id"])
-    name = "stream_dedup_" + uuid.uuid4().hex[:10]
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(deduped, "append", "dedup")
     return spark.sql(
         f"SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,"
         f" CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct,"
@@ -2380,8 +2513,6 @@ def _streaming_hopping_spark_fn(spark, sf_dir):
     covering windows with a 2-row literal offsets relation (the
     range_bucket_join pattern) — counts and SUM(event_id) identity
     checksums are exact integers."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2403,15 +2534,7 @@ def _streaming_hopping_spark_fn(spark, sf_dir):
             F2.sum("event_id").alias("id_checksum"),
         )
     )
-    name = "stream_hopping_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(agg, "complete", "hopping")
     return spark.sql(
         f"SELECT CAST(w.start AS STRING) AS window_start, event_type,"
         f" CAST(n_events AS BIGINT) AS n_events,"
@@ -2462,8 +2585,6 @@ def _streaming_interval_join_spark_fn(spark, sf_dir):
     driver invocations otherwise accumulate full pair sets in driver
     memory for the app lifetime); the caller gets the bounded per-hour
     aggregate as a local-relation DataFrame."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2492,15 +2613,7 @@ def _streaming_interval_join_spark_fn(spark, sf_dir):
         ),
         "inner",
     )
-    name = "stream_ivj_" + uuid.uuid4().hex[:10]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(joined, "append", "ivj")
     agg = spark.sql(
         f"""
         SELECT CAST(date_trunc('hour', c_ts) AS STRING) AS click_hour,
@@ -2605,8 +2718,6 @@ def _streaming_left_interval_join_spark_fn(spark, sf_dir):
     are not padded in a left join). Sink handling follows the inner
     entry: the data-sized pair stream collects into the bounded
     per-hour aggregate and the memory-sink view is dropped."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2635,15 +2746,7 @@ def _streaming_left_interval_join_spark_fn(spark, sf_dir):
         ),
         "leftOuter",
     )
-    name = "stream_livj_" + uuid.uuid4().hex[:10]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(joined, "append", "livj")
     agg = spark.sql(
         f"""
         SELECT CAST(date_trunc('hour', c_ts) AS STRING) AS click_hour,
@@ -2700,8 +2803,6 @@ def _streaming_enrich_spark_fn(spark, sf_dir):
     Trigger.AvailableNow. The bounded-input result is deterministic, so
     the plain batch join+GROUP BY oracle value-checks the streaming
     enrichment path — counts and revenue-weighted sums are exact."""
-    import uuid
-
     from pyspark.sql import functions as F2
 
     from wifi_location_data_pipeline_spark.sources.tables import load_table
@@ -2726,15 +2827,7 @@ def _streaming_enrich_spark_fn(spark, sf_dir):
             F2.sum(F2.col("event_id")).alias("id_checksum"),
         )
     )
-    name = "stream_enrich_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    name = _drain_to_memory(agg, "complete", "enrich")
     return spark.sql(
         f"SELECT CAST(w.start AS STRING) AS window_start, n_name,"
         f" CAST(n_events AS BIGINT) AS n_events,"
@@ -3078,9 +3171,7 @@ FROM gdop
 # ZERO multiplier joins.
 
 
-def _sel_mult_case(
-    klass_col: str, table: dict[str, tuple[float, ...]], algo_col: str = "algorithm"
-) -> str:
+def _sel_mult_case(klass_col: str, table: dict[str, tuple[float, ...]]) -> str:
     """Nested CASE: multiplier as a function of (context class, algorithm)."""
     outer = []
     for klass, mults in table.items():
@@ -3090,260 +3181,19 @@ def _sel_mult_case(
         inner = " ".join(
             f"WHEN '{a}' THEN CAST({m} AS DOUBLE)" for a, m in zip(ALGORITHMS, mults)
         )
-        outer.append(f"WHEN '{klass}' THEN CASE {algo_col} {inner} END")
+        outer.append(f"WHEN '{klass}' THEN CASE algorithm {inner} END")
     return f"CASE {klass_col} {' '.join(outer)} END"
 
 
-def _sel_algo_lateral(d: str) -> str:
-    """Expand each ctx row into one row per algorithm (literal 6-list, no
-    join): Spark LATERAL VIEW explode, DuckDB unnest-in-FROM."""
-    vals = ", ".join(f"'{a}'" for a in ALGORITHMS)
-    if d == SPARK:
-        return f"FROM ctx c LATERAL VIEW explode(array({vals})) t AS algorithm"
-    return f"FROM ctx c, unnest([{vals}]) AS t(algorithm)"
+# the six algorithm names as a DuckDB list literal body
+_SEL_ALGO_LIST = ", ".join(f"'{a}'" for a in ALGORITHMS)
 
 
-def _selection_matrix_spark_sql(mx: int) -> str:
-    """Zero-shuffle lambda-scoped formulation of selection_matrix for Spark.
-
-    The round-2..7 window form was already one-shuffle (DISTRIBUTE BY +
-    broadcast, windows riding the partitioning), yet measured 8.3x the
-    in-process oracle at sf1 — a structural floor twin (same job skeleton,
-    trivial math) measured 0.41 s, so no window-form tuning could reach the
-    <=3x target. The request population is synthetic arithmetic
-    (users_cte docstring), so the best Spark plan derives each user's
-    observation set, signal stats, GDOP gram, context classes, weight
-    vector, and adaptive top-K inside ONE projection over a parallel
-    range() scan — ZERO exchanges, zero scalar-subquery jobs, one stage.
-
-    Why one giant nested-lambda expression instead of a CTE chain: a first
-    cut chained ten projection levels (obs -> sig -> cent -> units -> gram
-    -> gdop -> ctx -> sel), and the optimizer inlined every multiply-
-    referenced alias through the chain — the 16 KB analyzed plan exploded
-    to a 900 KB optimized plan (fan-outs multiply across levels:
-    ctx references gdop 5x, gdop references the gram 8x, the gram
-    references the unit-vector arrays 3x, ...), 10 s of optimization and
-    ~50 s of interpreted re-evaluation. Lambda variables are runtime
-    bindings the optimizer never substitutes, so every multi-use value
-    here lives in one: a let(bind, v -> body) spelled as
-    aggregate(array(0), bind, (v, i) -> v, v -> body). The optimized plan
-    stays the size of the source text and every quantity is computed once
-    per user at runtime.
-
-    Value parity with the DuckDB oracle (the window form, unchanged):
-    integer RSSI sums are exact in double, unit-vector grams ride the
-    dyadic 2^-20 / 2^-24 grids (see the gdop_geometry plan note), and the
-    AP lat/lon decimals keep the oracle's exact-DECIMAL-then-CAST text, so
-    per-user fold order vs the oracle's group order cannot flip any FLOOR.
-    """
-    lim = min(49, mx)
-    algos = ", ".join(f"'{a}'" for a in ALGORITHMS)
-
-    def let(bind: str, var: str, body: str, i: str) -> str:
-        return f"aggregate(array(0), {bind}, ({var}, {i}) -> {var}, {var} -> {body})"
-
-    def rssi(e: str) -> str:
-        return (
-            f"CASE WHEN user_id % 29 = 0 THEN CAST(-96 - ({e} % 4) AS DOUBLE) "
-            f"ELSE CAST(-30 - (({e} * 3 + user_id * 7) % 65) AS DOUBLE) END"
-        )
-
-    def lat(x: str) -> str:
-        return f"CAST(40.0 + {x} * 0.01 AS DOUBLE)"
-
-    def lon(x: str) -> str:
-        return f"CAST(-74.0 + (({x} * 7) % 50) * 0.01 AS DOUBLE)"
-
-    # centroid scalars hoisted once per user: cc.at / cc.on are the AVG
-    # lat/lon over distinct APs, cc.cl the longitude-scale cosine
-    cent_scalars = (
-        "named_struct('at', c.la / size(acc.aps), 'on', c.lo / size(acc.aps),"
-        " 'cl', cos(radians(c.la / size(acc.aps))))"
-    )
-    # per-AP unit vector: dx/dy bound once per element, the norm once, the
-    # quantized components once — the whole chain is evaluated exactly once
-    # per distinct AP at runtime
-    dxy_bind = (
-        f"named_struct('dx', FLOOR((({lon('x2')} - cc.on) * cc.cl) * 1048576.0 + 0.5)"
-        " / CAST(1048576.0 AS DOUBLE),"
-        f" 'dy', FLOOR(({lat('x2')} - cc.at) * 1048576.0 + 0.5)"
-        " / CAST(1048576.0 AS DOUBLE))"
-    )
-    u_bind = (
-        "named_struct("
-        "'ux', FLOOR((d0.dx / GREATEST(sqrt(d0.dx * d0.dx + d0.dy * d0.dy), 1e-12))"
-        " * 16777216.0 + 0.5) / CAST(16777216.0 AS DOUBLE),"
-        " 'uy', FLOOR((d0.dy / GREATEST(sqrt(d0.dx * d0.dx + d0.dy * d0.dy), 1e-12))"
-        " * 16777216.0 + 0.5) / CAST(16777216.0 AS DOUBLE))"
-    )
-    us_elem = let(dxy_bind, "d0", u_bind, "j0")
-    # us bound once; the three gram sums are then alloc-free double folds
-    gram_bind = let(
-        f"named_struct('a', transform(acc.aps, x2 -> {us_elem}))",
-        "usv",
-        "named_struct("
-        "'xx', aggregate(usv.a, CAST(0 AS DOUBLE), (t0, u1) -> t0 + u1.ux * u1.ux),"
-        " 'xy', aggregate(usv.a, CAST(0 AS DOUBLE), (t1, u2) -> t1 + u2.ux * u2.uy),"
-        " 'yy', aggregate(usv.a, CAST(0 AS DOUBLE), (t2, u3) -> t2 + u3.uy * u3.uy))",
-        "j1",
-    )
-
-    gdop_expr = (
-        "CASE WHEN g.xx * g.yy - g.xy * g.xy < 1e-9 THEN 30.0 "
-        "ELSE LEAST(sqrt((g.xx + g.yy) / (g.xx * g.yy - g.xy * g.xy)), 30.0) END"
-    )
-    sd_expr = (
-        "sqrt(GREATEST(0.0, (acc.q - acc.n * (acc.s / acc.n) * (acc.s / acc.n))"
-        " / GREATEST(acc.n - 1.0, 1.0)))"
-    )
-    classes_bind = """named_struct(
-      'sq', CASE WHEN z1.av > -70.0 THEN 'STRONG_SIGNAL'
-                 WHEN z1.av > -85.0 THEN 'MEDIUM_SIGNAL'
-                 WHEN z1.av > -95.0 THEN 'WEAK_SIGNAL'
-                 ELSE 'VERY_WEAK_SIGNAL' END,
-      'sdist', CASE WHEN z1.sd > 10.0 THEN 'SIGNAL_OUTLIERS'
-                    WHEN z1.sd > 3.0 THEN 'MIXED_SIGNALS'
-                    ELSE 'UNIFORM_SIGNALS' END,
-      'ac', CASE WHEN size(acc.aps) = 1 THEN 'SINGLE_AP'
-                 WHEN size(acc.aps) = 2 THEN 'TWO_APS'
-                 WHEN size(acc.aps) = 3 THEN 'THREE_APS'
-                 ELSE 'FOUR_PLUS_APS' END,
-      'gq', CASE WHEN z1.gd >= 30.0 THEN 'COLLINEAR'
-                 WHEN z1.gd < 2.0 THEN 'EXCELLENT_GDOP'
-                 WHEN z1.gd < 4.0 THEN 'GOOD_GDOP'
-                 WHEN z1.gd < 6.0 THEN 'FAIR_GDOP'
-                 ELSE 'POOR_GDOP' END)"""
-    weight_expr = (
-        f"({_sel_mult_case('z2.ac', BASE_WEIGHTS, 'a')})"
-        f" * ({_sel_mult_case('z2.sq', SIGNAL_MULT, 'a')})"
-        f" * ({_sel_mult_case('z2.gq', GEOMETRY_MULT, 'a')})"
-        f" * ({_sel_mult_case('z2.sdist', DISTRIBUTION_MULT, 'a')})"
-    )
-    sorted_bind = f"""array_sort(
-      filter(
-        transform(array({algos}), a -> named_struct('algorithm', a, 'weight', {weight_expr})),
-        w -> (z2.sq <> 'VERY_WEAK_SIGNAL' AND w.weight > 0.0)
-          OR (z2.sq = 'VERY_WEAK_SIGNAL' AND w.algorithm = 'proximity')),
-      (l, r) -> CASE WHEN l.weight > r.weight THEN -1
-                     WHEN l.weight < r.weight THEN 1
-                     WHEN l.algorithm < r.algorithm THEN -1
-                     WHEN l.algorithm > r.algorithm THEN 1 ELSE 0 END)"""
-    # ranks attach via transform's 0-based index; the adaptive-K cutoff and
-    # the rank-1 fallback filter run inside the same lambda scope
-    final_body = """filter(
-      transform(srt, (w2, i5) -> named_struct(
-        'algorithm', w2.algorithm,
-        'weight', CASE WHEN z2.sq = 'VERY_WEAK_SIGNAL' THEN CAST(0.5 AS DOUBLE)
-                       ELSE w2.weight END,
-        'rank', CAST(i5 + 1 AS BIGINT))),
-      r -> z2.sq = 'VERY_WEAK_SIGNAL'
-        OR (r.weight >= 0.4 AND r.rank <= CASE WHEN srt[0].weight > 0.8
-            THEN CAST(2 AS BIGINT) ELSE CAST(3 AS BIGINT) END)
-        OR r.rank = CAST(1 AS BIGINT))"""
-    empty = (
-        "CAST(array() AS ARRAY<STRUCT<algorithm: STRING, weight: DOUBLE,"
-        " rank: BIGINT>>)"
-    )
-
-    finish = f"""CASE WHEN acc.n = CAST(0 AS BIGINT) THEN {empty} ELSE {
-        let(
-            "aggregate(acc.aps,"
-            " named_struct('la', CAST(0 AS DOUBLE), 'lo', CAST(0 AS DOUBLE)),"
-            f" (c0, x1) -> named_struct('la', c0.la + {lat('x1')},"
-            f" 'lo', c0.lo + {lon('x1')}))",
-            "c",
-            let(
-                cent_scalars,
-                "cc",
-                let(
-                    gram_bind,
-                    "g",
-                    let(
-                        f"named_struct('gd', {gdop_expr}, 'av', acc.s / acc.n, 'sd', {sd_expr})",
-                        "z1",
-                        let(
-                            classes_bind,
-                            "z2",
-                            let(sorted_bind, "srt", final_body, "i4"),
-                            "i3",
-                        ),
-                        "i2",
-                    ),
-                    "i1",
-                ),
-                "ic",
-            ),
-            "i0",
-        )
-    } END"""
-
-    # kept observations bound once as q0.es; stats are then one native
-    # size(), two alloc-free scalar folds over a pre-computed rssi array,
-    # and one native array_distinct — no per-observation struct allocation
-    es_expr = (
-        "filter("
-        "transform(sequence(CAST(1 AS BIGINT), CAST(1 + user_id % 12 AS BIGINT)),"
-        " rn -> (user_id * 2654435761 + rn * 40503) % 100003),"
-        f" e0 -> (user_id * 13 + e0) % 50 <= {lim})"
-    )
-    acc_bind = (
-        "named_struct("
-        "'n', CAST(size(q0.es) AS BIGINT),"
-        " 's', aggregate(q0.rs, CAST(0 AS DOUBLE), (a0, r0) -> a0 + r0),"
-        " 'q', aggregate(q0.rs, CAST(0 AS DOUBLE), (a1, r1) -> a1 + r1 * r1),"
-        " 'aps', array_distinct(transform(q0.es, e1 -> (user_id * 13 + e1) % 50)))"
-    )
-
-    res_expr = let(
-        f"named_struct('es', {es_expr})",
-        "p0",
-        let(
-            f"named_struct('es', p0.es, 'rs', transform(p0.es, e2 -> {rssi('e2')}))",
-            "q0",
-            let(acc_bind, "acc", finish, "ia"),
-            "iq",
-        ),
-        "ip",
-    )
-
-    return f"""
-SELECT user_id, s.algorithm AS algorithm, s.weight AS weight, s.rank AS rank
-FROM (
-  SELECT user_id,
-    {res_expr} AS res
-  FROM (SELECT id AS user_id FROM range(0, {mx + 1}))
-) LATERAL VIEW explode(res) t AS s
-"""
-
-
-def _selection_matrix_spark_fn(spark, sf_dir):
-    from wifi_location_data_pipeline_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    mx = _events_max_user_id(spark, sf_dir)
-    if mx is None:  # stats-less corpus: one bounded 1-row scalar job
-        mx = spark.sql("SELECT MAX(user_id) FROM events").collect()[0][0]
-    return spark.sql(_selection_matrix_spark_sql(int(mx)))
-
-
-register(
-    "selection_matrix",
-    "Algorithm-selection framework as SQL: context classes (AP count, signal "
-    "quality/distribution, GDOP geometry) x static weight matrix folded to "
-    "CASE arithmetic (no multiplier joins) -> "
-    "base*signal*geometry*distribution, threshold 0.4, adaptive top-K "
-    "(top-2 if max>0.8 else top-3), best-algorithm fallback "
-    "(SELECTION.md:13-85; AlgorithmSelector.java:67-120,365-438; "
-    "positioning/selection.py is the DataFrame twin). Plan note: every CTE "
-    "is referenced exactly ONCE — Spark 4.1 re-inlines multiply-referenced "
-    "CTEs, and the round-2 formulation (obs x3, req_aps x2, ctx x2) "
-    "re-scanned events a dozen exchanges deep. Signal stats ride the same "
-    "per-(user,ap) chain as the GDOP gram (centroid via window functions), "
-    "and the very-weak proximity fallback folds into the ranked filter "
-    "instead of a second ctx reference; the whole middle stays partitioned "
-    "by user_id after the one obs window shuffle.",
-    sql=lambda d: f"""
-WITH obs AS ({request_obs_cte(d)}), aps AS ({aps_cte(d)}),
+def _selection_ctx_sql(d: str) -> str:
+    """selection_matrix's CTE chain up to ``ctx``: one row per user with its
+    four context classes (AP count, signal quality, GDOP geometry, signal
+    distribution). Both engines run it; the oracle continues it in SQL."""
+    return f"""obs AS ({request_obs_cte(d)}), aps AS ({aps_cte(d)}),
 perap AS (
   SELECT /*+ BROADCAST(a) */ o.user_id, o.ap_id, a.true_lat AS lat, a.true_lon AS lon,
     CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -3408,7 +3258,44 @@ ctx AS (
          WHEN gdop < 6.0 THEN 'FAIR_GDOP'
          ELSE 'POOR_GDOP' END AS geometric_quality
   FROM gdop
-),
+)"""
+
+
+def _selection_matrix_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The product selection phase (``select_algorithms``) over the shared
+    ``ctx`` rows. No registry request is all-very-weak apart from its
+    signal class: avg ≤ max, so max < −95 dBm implies VERY_WEAK_SIGNAL.
+    The kept rows are a prefix of each user's ranked list, so ranking them
+    again by (weight desc, algorithm) gives the oracle's rank."""
+    from wifi_location_data_pipeline_spark.positioning.selection import select_algorithms
+
+    text = f"WITH {_selection_ctx_sql(SPARK)} SELECT * FROM ctx"
+    ctx = spark.sql(_fold_events_stats(spark, sf_dir, text))
+    sel = select_algorithms(
+        ctx.withColumnRenamed("user_id", "request_id").withColumn("all_very_weak", F.lit(False))
+    )
+    rank = F.row_number().over(
+        Window.partitionBy("request_id").orderBy(F.col("weight").desc(), "algorithm")
+    )
+    return sel.select(
+        F.col("request_id").alias("user_id"), "algorithm", "weight", rank.cast("long").alias("rank")
+    )
+
+
+register(
+    "selection_matrix",
+    "Algorithm-selection framework: context classes (AP count, signal "
+    "quality/distribution, GDOP geometry) x static weight matrix -> "
+    "base*signal*geometry*distribution, threshold 0.4, adaptive top-K "
+    "(top-2 if max>0.8 else top-3), best-algorithm fallback "
+    "(SELECTION.md:13-85; AlgorithmSelector.java:67-120,365-438). Both "
+    "engines derive the per-user context classes from one CTE chain "
+    "(signal stats ride the per-(user,ap) chain of the GDOP gram); Spark "
+    "then runs the product selection phase "
+    "(positioning/selection.select_algorithms), and the DuckDB oracle "
+    "continues in SQL with the weight matrix folded to CASE arithmetic.",
+    sql=lambda d: f"""
+WITH {_selection_ctx_sql(d)},
 weighted AS (
   SELECT c.user_id, algorithm,
     ({_sel_mult_case('c.ap_count_class', BASE_WEIGHTS)})
@@ -3416,7 +3303,7 @@ weighted AS (
     * ({_sel_mult_case('c.geometric_quality', GEOMETRY_MULT)})
     * ({_sel_mult_case('c.signal_distribution', DISTRIBUTION_MULT)}) AS weight,
     c.signal_quality
-  {_sel_algo_lateral(d)}
+  FROM ctx c, unnest([{_SEL_ALGO_LIST}]) AS t(algorithm)
 ),
 ranked AS (
   SELECT user_id, algorithm, weight,
@@ -3435,7 +3322,7 @@ WHERE very_weak
    OR (weight >= 0.4 AND rn <= CASE WHEN max_w > 0.8 THEN 2 ELSE 3 END)
    OR rn = 1
 """,
-    spark_fn=_selection_matrix_spark_fn,
+    spark_fn=_selection_matrix_fn,
 )
 
 register(
@@ -3512,51 +3399,6 @@ register(
     "(WifiAccessPoint.java:73-101); pure column arithmetic, no UDF.",
     sql=_geohash_cells_sql,
 )
-
-
-def _derived_measurements_df(spark: SparkSession, sf_dir: str, cap_by_ap: bool = False) -> DataFrame:
-    """DataFrame twin of ``measurements_cte`` with measurement-table column
-    names (bssid string key, epoch-millis timestamp), for the Python-tier
-    operators. ``cap_by_ap`` keeps 10 + (ap*7 % 120) rows per AP so the
-    maturity tiers all occur regardless of scale factor."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from wifi_location_data_pipeline_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "events")
-    ap = (F.col("user_id") % 50).cast("long")
-    m = e.select(
-        ap.alias("_ap"),
-        F.concat(F.lit("ap-"), ap.cast("string")).alias("bssid"),
-        (40.0 + ap * 0.01 + ((F.col("event_id") % 21) - 10) * 0.0001).alias("latitude"),
-        (
-            -74.0
-            + ((F.col("user_id") * 7) % 50) * 0.01
-            + ((F.floor(F.col("event_id") / 21) % 21) - 10) * 0.0001
-        ).alias("longitude"),
-        F.lit(None).cast("double").alias("altitude"),
-        (-30 - (F.col("event_id") % 60)).cast("double").alias("rssi"),
-        (5.0 + F.col("value") * 5.0).alias("location_accuracy"),
-        F.when(F.col("event_type") == "click", "CONNECTED").otherwise("SCAN").alias("connection_status"),
-        F.when(F.col("event_type") == "click", 2.0).otherwise(1.0).alias("quality_weight"),
-        F.lit(2437).cast("int").alias("frequency"),
-        # epoch millis, timezone-free (ts is TIMESTAMP_NTZ from the corpus)
-        F.expr("timestampdiff(MILLISECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)").alias(
-            "measurement_timestamp"
-        ),
-        F.col("event_id"),
-        F.lit(None).cast("boolean").alias("is_global_outlier"),
-        F.col("event_id").cast("string").alias("id"),
-    )
-    if cap_by_ap:
-        w = Window.partitionBy("bssid").orderBy("event_id")
-        m = (
-            m.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= 10 + (F.col("_ap") * 7) % 120)
-            .drop("_rn")
-        )
-    return m.drop("_ap")
 
 
 def _streaming_ingest_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3811,7 +3653,7 @@ def _relocation_dbscan_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "latitude",
         F2.col("latitude")
         + F2.when(
-            (F2.regexp_extract("bssid", r"ap-(\d+)", 1).cast("long") % 10 == 0)
+            (_bssid_ap_id() % 10 == 0)
             & (F2.col("measurement_timestamp") > F2.col("mid")),
             0.01,
         ).otherwise(0.0),

@@ -266,6 +266,48 @@ def _row_median(sorted_vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return np.where(counts % 2 == 1, odd, even)
 
 
+def select_phase(apc_code, sq_code, gq_code, sd_code, all_very_weak) -> dict[str, np.ndarray]:
+    """The selection phase over per-request context class codes (indexes
+    into ``_APC``, ``_SQ``, ``_GQ``, ``_SD``) and the all-very-weak flags.
+
+    Returns ``sel`` / ``sel_w``, the (n, n_alg) selected mask and weights in
+    ``ALGORITHMS`` order, with what ``build_output`` reads to list the
+    selection in rank order: ``order``, ``kept_ranked``, ``very_weak`` and
+    ``prox_override_w``.
+    """
+    # ---- selection matrix: base × signal × geometry × distribution ----
+    aw = (_BASE_W[apc_code] * _SIG_W[sq_code]
+          * _GEO_W[gq_code] * _DIST_W[sd_code])  # (n, n_alg)
+    pos_w = aw > 0.0
+    # rank eligible algorithms by weight desc, name asc (zero-weight last)
+    sort_key_w = np.where(pos_w, aw, -np.inf)
+    order = np.lexsort((np.broadcast_to(_ALPHA_RANK, aw.shape), -sort_key_w), axis=1)
+    ranked_w = np.take_along_axis(aw, order, axis=1)
+    ranked_ok = np.take_along_axis(pos_w, order, axis=1)
+    topk = np.where(ranked_w[:, 0] > C.SELECTION_STRONG_MAX_WEIGHT,
+                    C.SELECTION_TOP_K_STRONG, C.SELECTION_TOP_K_DEFAULT)
+    pos_rank = np.arange(_N_ALG)
+    kept_ranked = ranked_ok & (
+        ((ranked_w >= C.SELECTION_MIN_WEIGHT) & (pos_rank < topk[:, None]))
+        | (pos_rank == 0)
+    )
+    very_weak = all_very_weak | (sq_code == 3)
+    # selected mask back in ALGORITHMS order
+    sel = np.zeros_like(pos_w)
+    np.put_along_axis(sel, order, kept_ranked, axis=1)
+    prox_override_w = np.maximum(aw[:, _PROX], 0.5)
+    sel_w = np.where(sel, aw, 0.0)
+    if very_weak.any():
+        sel[very_weak] = False
+        sel[very_weak, _PROX] = True
+        sel_w[very_weak] = 0.0
+        sel_w[very_weak, _PROX] = prox_override_w[very_weak]
+    return {
+        "sel": sel, "sel_w": sel_w, "order": order, "kept_ranked": kept_ranked,
+        "very_weak": very_weak, "prox_override_w": prox_override_w,
+    }
+
+
 def compute_onepass(
     n_scanned: np.ndarray,
     lens: np.ndarray,
@@ -428,33 +470,8 @@ def compute_onepass(
             [3, 4, 0, 1, 2], default=3,
         )
 
-        # ---- selection matrix: base × signal × geometry × distribution ----
-        aw = (_BASE_W[apc_code] * _SIG_W[sq_code]
-              * _GEO_W[gq_code] * _DIST_W[sd_code])  # (n, n_alg)
-        pos_w = aw > 0.0
-        # rank eligible algorithms by weight desc, name asc (zero-weight last)
-        sort_key_w = np.where(pos_w, aw, -np.inf)
-        order = np.lexsort((np.broadcast_to(_ALPHA_RANK, aw.shape), -sort_key_w), axis=1)
-        ranked_w = np.take_along_axis(aw, order, axis=1)
-        ranked_ok = np.take_along_axis(pos_w, order, axis=1)
-        topk = np.where(ranked_w[:, 0] > C.SELECTION_STRONG_MAX_WEIGHT,
-                        C.SELECTION_TOP_K_STRONG, C.SELECTION_TOP_K_DEFAULT)
-        pos_rank = np.arange(_N_ALG)
-        kept_ranked = ranked_ok & (
-            ((ranked_w >= C.SELECTION_MIN_WEIGHT) & (pos_rank < topk[:, None]))
-            | (pos_rank == 0)
-        )
-        very_weak = all_very_weak | (sq_code == 3)
-        # selected mask back in ALGORITHMS order
-        sel = np.zeros_like(pos_w)
-        np.put_along_axis(sel, order, kept_ranked, axis=1)
-        prox_override_w = np.maximum(aw[:, _PROX], 0.5)
-        sel_w = np.where(sel, aw, 0.0)
-        if very_weak.any():
-            sel[very_weak] = False
-            sel[very_weak, _PROX] = True
-            sel_w[very_weak] = 0.0
-            sel_w[very_weak, _PROX] = prox_override_w[very_weak]
+        sel_res = select_phase(apc_code, sq_code, gq_code, sd_code, all_very_weak)
+        sel, sel_w = sel_res["sel"], sel_res["sel_w"]
 
         # ---- closed-form positions (_closed_expr) ----
         avg_acc = np.where(hacc_n > 0.0, hacc_sum / hacc_n, np.nan)
@@ -566,9 +583,7 @@ def compute_onepass(
     combined = _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, _ALPHA_RANK[np.maximum(p_alg, 0)])
 
     return {
-        "keep": keep, "sel": sel, "sel_w": sel_w, "order": order,
-        "kept_ranked": kept_ranked, "very_weak": very_weak,
-        "prox_override_w": prox_override_w, "p_alg": p_alg, "present": present,
+        "keep": keep, **sel_res, "p_alg": p_alg, "present": present,
         "apc_code": apc_code, "sq_code": sq_code, "gq_code": gq_code,
         "sd_code": sd_code, "all_very_weak": all_very_weak,
         **combined,
