@@ -108,6 +108,22 @@ def test_gate_query_reaches_product_code(name):
     assert _product_refs(fn), f"{name} reaches no product module"
 
 
+def test_tiered_localization_caps_once(spark, sf_dir):
+    """tier_routing and wcl_localize read one per-AP capped frame: the
+    executed plan scans events once and runs the cap window's bssid
+    exchange once, the second operator branch reusing it (one hash
+    exchange, as the single-aggregate oracle SQL has)."""
+    import re
+
+    df = QUERIES["tiered_localization"].spark(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"^[\s:+\-*()\d]*(\w+)", plan, re.M)
+    assert nodes.count("FileScan") == 1, plan
+    assert len(re.findall(r"^[\s:+\-*()\d]*Exchange hashpartitioning\(bssid", plan, re.M)) == 1, plan
+    assert nodes.count("ReusedExchange") == 1, plan
+
+
 def test_collocations_bounded_matches_small(spark, sf_dir, monkeypatch):
     """ngram_collocations' at-scale bounded-collect branch must reproduce
     the small-corpus one-job branch exactly.

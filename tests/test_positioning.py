@@ -60,7 +60,7 @@ def kernel_gate_pass(rdf):
     """Request ids that pass the kernel's physics gate and yield rows."""
     from wifi_location_data_pipeline_spark.positioning.onepass_kernel import gate_and_explode
 
-    return set(gate_and_explode(rdf.toArrow())["request_id"])
+    return set(gate_and_explode(rdf.toArrow()).column("request_id").to_pylist())
 
 
 def golden_ap_rows():
@@ -1093,7 +1093,7 @@ def test_kernel_gate_null_semantics(spark):
                      sc(None, -62.0)]),
     ]
     rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    rows = gate_and_explode(rdf.toArrow())
+    rows = gate_and_explode(rdf.toArrow()).to_pandas()
     assert list(rows.columns) == [
         "request_id", "n_scanned", "mac_addr", "signal_strength", "frequency"]
     assert sorted(set(rows["request_id"])) == ["macs", "null_freq_group"]

@@ -286,14 +286,133 @@ def test_checkpoint_logs_use_filesystem_manager(spark, tmp_path):
     """build_session routes streaming checkpoint logs (offsets, commits)
     through Spark's FileSystem-based checkpoint manager, not the default
     FileContext one: the manager Spark builds for a checkpoint path is
-    FileSystemBasedCheckpointFileManager."""
+    FileSystemBasedCheckpointFileManager, and the FileSystem under a
+    ``file://`` checkpoint is the session's shim, which sets modes without
+    a forked chmod."""
+    from wifi_location_data_pipeline_spark.session import NIO_FS_CLASS
+
+    jvm = spark._jvm
     pkg = "org.apache.spark.sql.execution.streaming.checkpointing"
-    manager = spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing \
-        .CheckpointFileManager.create(
-            spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
-            spark._jsparkSession.sessionState().newHadoopConf(),
-        )
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")), hconf)
     assert manager.getClass().getName() == f"{pkg}.FileSystemBasedCheckpointFileManager"
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), hconf)
+    assert fs.getClass().getName() == NIO_FS_CLASS
+
+
+def test_positioning_micro_batches_start_no_process(spark, tmpzone):
+    """A serving micro-batch writes six files through Hadoop (the offset,
+    commit and file-source log entries, each with its .crc); JFR sees no
+    child process started over three of them (Hadoop's own local
+    FileSystem forks a chmod for each file it creates)."""
+    from tests.jvm_events import process_starts
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+    try:
+        write_requests("req0.json", ["w0"])  # first batch: stream start-up
+        q.processAllAvailable()
+        # once per JVM, the executor's first metrics poll (a heartbeat, every
+        # 10 s) runs `getconf PAGESIZE`; take that one-off before recording
+        spark._jvm.org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo()
+        with process_starts(spark, os.path.join(tmpzone, "rec.jfr")) as started:
+            for k in range(1, 4):
+                write_requests(f"req{k}.json", [f"r{k}"])
+                q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert len(batches) == 4
+    assert started == []
+    assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == [
+        "r1", "r2", "r3", "w0"]
+
+
+def _archived(ckpt, zone):
+    """Names of the request files the stream archived out of ``zone``."""
+    root = os.path.join(ckpt, "archive") + os.path.abspath(zone)
+    return sorted(os.listdir(root)) if os.path.isdir(root) else []
+
+
+def _log_entries(ckpt, log):
+    """Batch ids of a checkpoint log (its .crc files aside)."""
+    return sorted(n for n in os.listdir(os.path.join(ckpt, log)) if not n.startswith("."))
+
+
+def _wait_for(cond, timeout_s=30.0):
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    while not cond() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return cond()
+
+
+def test_stream_archives_answered_request_files(spark, tmpzone):
+    """The file source archives a batch's request files once the next batch
+    starts after its commit (so the zone it lists holds the unanswered
+    files, at most one batch's answered ones); the archive lives under the
+    checkpoint."""
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+    try:
+        for k in range(3):
+            write_requests(f"req{k}.json", [f"r{k}a", f"r{k}b"])
+            q.processAllAvailable()
+        assert _wait_for(lambda: _archived(ckpt, zone) == ["req0.json", "req1.json"])
+    finally:
+        q.stop()
+    assert sorted(os.listdir(zone)) == ["req2.json"]
+    assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == sorted(
+        f"r{k}{c}" for k in range(3) for c in "ab")
+
+
+def test_stream_replays_an_uncommitted_batch_from_the_zone(spark, tmpzone, monkeypatch):
+    """A batch that fails after its offsets were logged is replayed on
+    restart: its request files are still in the zone (only committed
+    batches' files are archived), and every request is answered exactly
+    once."""
+    import pyarrow.parquet as pq
+
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    write_requests("a.json", ["a1", "a2"])
+    os.utime(os.path.join(zone, "a.json"), (1, 1))  # oldest: batch 0
+    write_requests("b.json", ["b1", "b2"])
+    write_table = pq.write_table
+
+    def fail_batch_1(table, where, **kw):
+        if "batch_id=1" in where:
+            raise RuntimeError("sink down")
+        return write_table(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", fail_batch_1)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
+    with pytest.raises(Exception, match="sink down"):
+        q.awaitTermination(120)
+    assert _log_entries(ckpt, "offsets") == ["0", "1"]
+    assert _log_entries(ckpt, "commits") == ["0"]
+    assert _wait_for(lambda: _archived(ckpt, zone) == ["a.json"])
+    assert sorted(os.listdir(zone)) == ["b.json"]
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _log_entries(ckpt, "commits") == ["0", "1"]
+    answers = sorted(r["request_id"] for r in spark.read.parquet(out).collect())
+    assert answers == ["a1", "a2", "b1", "b2"]
 
 
 def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):

@@ -9,8 +9,9 @@ Method: ``--requests`` perfbench-generated requests (1-20 scans, unknown
 MACs and physics-gate failures included, against a 1 600-AP city) land in
 files of 100 requests. One untimed drain warms the session; each of
 ``--reps`` timed drains then starts a fresh stream (new sink and checkpoint)
-over the same zone and is timed from ``start_positioning_stream`` to
-``awaitTermination``. Every drain must answer the same number of requests.
+over its own copy of the zone (the stream archives the files it answered)
+and is timed from ``start_positioning_stream`` to ``awaitTermination``.
+Every drain must answer the same number of requests.
 Prints ONE JSON line:
 
     {"metric": "positioning_backfill_drain", "n_requests": N, "answered": A,
@@ -68,14 +69,15 @@ def main() -> None:
         aps = spark.read.parquet(os.path.join(work, "access_points")).cache()
         aps.count()
         reqs, _truth = gen.make_requests(city, args.seed, args.requests, "d")
-        zone = os.path.join(work, "zone")
-        os.makedirs(zone)
+        staged = os.path.join(work, "staged")
+        os.makedirs(staged)
         for f in range(0, len(reqs), PER_FILE):
-            gen.write_json_lines(os.path.join(zone, f"req-{f // PER_FILE:05d}.json"),
+            gen.write_json_lines(os.path.join(staged, f"req-{f // PER_FILE:05d}.json"),
                                  reqs[f:f + PER_FILE])
 
         def drain(k: int) -> tuple[float, int]:
             out, ckpt = os.path.join(work, f"out{k}"), os.path.join(work, f"ckpt{k}")
+            zone = shutil.copytree(staged, os.path.join(work, f"zone{k}"))
             t0 = time.perf_counter()
             q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=True)
             q.awaitTermination()

@@ -42,9 +42,10 @@ CLAIMS: dict[str, str] = {
         "centroid, both median windows and the per-AP summary; no cartesian"
     ),
     "tiered_localization": (
-        "product tier_routing ⋈ wcl_localize over the capped rows: each "
-        "branch rides its own cap-window bssid exchange (the branches prune "
-        "to different columns, so none is reused); the WCL side broadcasts"
+        "product tier_routing ⋈ wcl_localize over one capped frame: one "
+        "events scan and one cap-window bssid exchange, which the WCL branch "
+        "reuses (the window orders by every column either branch reads); "
+        "the WCL side broadcasts"
     ),
     "selection_matrix": (
         "declared context CTEs: one user_id exchange (DISTRIBUTE BY) carries "

@@ -190,13 +190,22 @@ def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     return HAVERSINE.format(lat1=lat1, lon1=lon1, lat2=lat2, lon2=lon2)
 
 
-def _derived_measurements_df(spark: SparkSession, sf_dir: str, cap_by_ap: bool = False) -> DataFrame:
+def _derived_measurements_df(
+    spark: SparkSession, sf_dir: str, cap_by_ap: bool = False, cap_reads: tuple[str, ...] = ()
+) -> DataFrame:
     """``measurements_cte`` rows in the ``wifi_measurements`` layout: the one
     adapter from the registry CTEs to the product operators. bssid is
     ``ap-<ap_id>`` (``_bssid_ap_id`` parses it back), measurement_timestamp
     is epoch millis, and user_id rides along as the request key.
     ``cap_by_ap`` keeps the first 10 + (ap*7 % 120) rows per AP by event_id,
-    so the maturity tiers all occur at every scale factor."""
+    so the maturity tiers all occur at every scale factor.
+
+    ``cap_reads``: the columns the consumers of the capped rows read. The
+    cap window orders by them after event_id, which never reorders a row
+    (event_id is the events key), and so reads them all: column pruning
+    then leaves consumers that read different subsets one identical cap
+    subtree, whose exchange and scan Spark reuses instead of running the
+    window once per consumer."""
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
@@ -221,7 +230,7 @@ def _derived_measurements_df(spark: SparkSession, sf_dir: str, cap_by_ap: bool =
         F.col("event_id").cast("string").alias("id"),
     )
     if cap_by_ap:
-        w = Window.partitionBy("bssid").orderBy("event_id")
+        w = Window.partitionBy("bssid").orderBy("event_id", *cap_reads)
         m = (
             m.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= 10 + (F.col("_ap") * 7) % 120)
@@ -1399,14 +1408,16 @@ WHERE n_old >= 5 AND n_new >= 5
 
 
 def _tiered_localization_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The product tier router joined to the product WCL estimate, over the
-    per-AP capped rows."""
+    """The product tier router joined to the product WCL estimate, both fed
+    by one per-AP capped frame: one events scan and one cap-window
+    exchange, which the second operator branch reuses."""
     from wifi_location_data_pipeline_spark.operators.localization import (
         tier_routing,
         wcl_localize,
     )
 
-    m = _derived_measurements_df(spark, sf_dir, cap_by_ap=True)
+    m = _derived_measurements_df(spark, sf_dir, cap_by_ap=True, cap_reads=(
+        "latitude", "longitude", "altitude", "rssi", "quality_weight", "is_global_outlier"))
     return tier_routing(m).join(wcl_localize(m), "bssid").select(
         _bssid_ap_id().alias("ap_id"),
         "n",

@@ -12,13 +12,16 @@ micro-batch on the serving path).
 This kernel takes nested requests, one Arrow row per request, in both of
 its placements. It applies the physics gate to each scan array and
 explodes the passing requests (``gate_and_explode``, Arrow/NumPy),
-inner-joins the rows with the AP index in pandas, derives the per-element
-path-loss and weight values (``element_values``), groups the rows by
-request_id, sorts each request by ``PACK_FIELDS`` and pads the requests to
-(rows, K) matrices, K = the 20-scan request cap. It then computes context
-classification, algorithm selection, the four closed-form algorithms, the
-trilateration/MLE numeric tier, and the robust combiner in one pass of
-batched NumPy. The batch plan runs it as a ``mapInArrow`` body in the
+inner-joins the rows with the AP index by position (``index_aps`` once per
+kernel, then ``join_aps``: a hash lookup of each mac and a ``take`` of the
+AP columns), derives the per-element path-loss and weight values
+(``element_values``), groups the rows by request_id, sorts each request by
+``PACK_FIELDS`` and pads the requests to (rows, K) matrices, K = the
+20-scan request cap. It then computes context classification, algorithm
+selection, the four closed-form algorithms, the trilateration/MLE numeric
+tier, and the robust combiner in one pass of batched NumPy, and builds the
+answer record batch as Arrow arrays (``build_output``). No pandas frame is
+built per call. The batch plan runs it as a ``mapInArrow`` body in the
 executors (request scan → this kernel, no join, no shuffle, one job end to
 end, the AP index a broadcast variable); the positioning stream runs it in
 the driver over each collected micro-batch of raw requests. Scale shape:
@@ -80,7 +83,8 @@ _DIST_W = np.array([DISTRIBUTION_MULT[k] for k in _SD])
 # then the observation fields ``gate_and_explode`` emits and the AP fields
 # the mac_addr join adds. ap_vendor feeds the derived element values but is
 # no sort key: one mac carries one AP record, so rows that tie on mac_addr
-# tie on the vendor and on every value derived from it.
+# tie on the vendor and on every value derived from it. The AP index is
+# sorted by mac, so a row's AP position orders it as its mac_addr does.
 PACK_FIELDS = (
     "mac_addr",
     "signal_strength",
@@ -95,25 +99,17 @@ PACK_FIELDS = (
 _SHORT = dict(zip(PACK_FIELDS[1:], ("s", "freq", "lat", "lon", "alt", "hacc", "conf")))
 
 
-def element_values(s, freq, conf, vendor) -> dict[str, np.ndarray]:
+def element_values(s, freq, conf, vendor_n, vendor_known) -> dict[str, np.ndarray]:
     """Per-element derived values of flat observation rows: path-loss
     distance ``d``, inverse-distance weight ``iw``, confidence weight ``cw``
     and WCL weight ``w`` (LogDistancePathLossAlgorithm /
     WeightedCentroidAlgorithm; the formulas the multipass reference
     evaluates as column expressions in algorithms.closed_form_positions).
 
-    ``s``, ``freq``, ``conf``: float arrays, NaN for null; ``vendor``: the
-    AP vendor strings (a pandas Series, null allowed). A vendor normalizes
-    like Spark's lower(trim(·)), which strips spaces only.
+    ``s``, ``freq``, ``conf``: float arrays, NaN for null; ``vendor_n``,
+    ``vendor_known``: each row's AP vendor path-loss exponent and whether
+    the AP has a vendor (``index_aps``).
     """
-    import pandas as pd
-
-    codes, names = pd.factorize(vendor)  # null vendor -> code -1
-    n_of = C.VENDOR_PATH_LOSS_EXPONENTS
-    vendor_n = np.array(
-        [n_of.get(v.strip(" ").lower(), C.DEFAULT_PATH_LOSS_EXPONENT) for v in names]
-        + [C.DEFAULT_PATH_LOSS_EXPONENT]
-    )[codes]
     with np.errstate(all="ignore"):
         n_adj = np.select(
             [s >= -50.0, s <= -80.0],
@@ -135,7 +131,7 @@ def element_values(s, freq, conf, vendor) -> dict[str, np.ndarray]:
         cw = np.maximum(0.6, np.minimum(
             1.0,
             sig_w * np.maximum(0.7, np.where(np.isnan(conf), 0.85, conf))
-            * np.where(codes >= 0, 1.2, 0.85),
+            * np.where(vendor_known, 1.2, 0.85),
         ))
         w = np.power(10.0, np.maximum(0.0, np.minimum(1.0, (s + 30.0) / (-70.0))))
     return {"d": d, "iw": 1.0 / np.maximum(1.0, d), "cw": cw, "w": w}
@@ -146,7 +142,7 @@ def gate_and_explode(requests):
     physics gate (SignalPhysicsValidator.java:31-107).
 
     ``requests``: an Arrow record batch (or table) with ``requestId`` and
-    ``wifiScanResults``. Returns a pandas frame (request_id, n_scanned,
+    ``wifiScanResults``. Returns an Arrow table (request_id, n_scanned,
     mac_addr, signal_strength, frequency), one row per scan in request
     order: ``n_scanned`` is the array length and ``mac_addr`` is normalized
     like ``normalize_bssid`` (lower case, ``-`` → ``:``).
@@ -203,14 +199,69 @@ def gate_and_explode(requests):
         "mac_addr": pc.replace_substring(pc.utf8_lower(mac), "-", ":"),
         "signal_strength": rssi.take(rows),
         "frequency": freq.take(rows),
-    }).to_pandas()
+    })
 
 
-def pack_requests(pdf):
+def _floats(col) -> np.ndarray:
+    """An Arrow numeric column as float64, NaN for null."""
+    return np.asarray(col.to_numpy(zero_copy_only=False), dtype=float)
+
+
+def index_aps(aps):
+    """The AP index frame (``onepass.ap_frame``: one row per non-null
+    mac_addr) → (macs, cols), built once per kernel: ``macs`` is a pandas
+    Index of the mac addresses in ascending order, and ``cols`` maps each
+    AP field's short name (``_SHORT``) to a float array (NaN for null) in
+    the same order, plus ``vendor_n``, the vendor's path-loss exponent, and
+    ``vendor_known``, whether the AP has a vendor. A vendor normalizes like
+    Spark's lower(trim(·)), which strips spaces only."""
+    import pandas as pd
+
+    aps = aps.sort_values("mac_addr", kind="stable")
+    macs = pd.Index(aps["mac_addr"].to_numpy(dtype=object))
+    cols = {
+        short: aps[c].to_numpy(dtype=float, na_value=np.nan)
+        for c, short in _SHORT.items() if c.startswith("ap_")
+    }
+    codes, names = pd.factorize(aps["ap_vendor"])  # null vendor -> code -1
+    n_of = C.VENDOR_PATH_LOSS_EXPONENTS
+    cols["vendor_n"] = np.array(
+        [n_of.get(v.strip(" ").lower(), C.DEFAULT_PATH_LOSS_EXPONENT) for v in names]
+        + [C.DEFAULT_PATH_LOSS_EXPONENT]
+    )[codes]
+    cols["vendor_known"] = codes >= 0
+    return macs, cols
+
+
+def join_aps(rows, index) -> dict[str, np.ndarray] | None:
+    """Inner join of the ``gate_and_explode`` rows with the AP index
+    (``index_aps``) on mac_addr, in row order: each mac is looked up in the
+    index, rows whose mac is unknown or NULL drop, and the AP columns are
+    taken by position. Returns None when no row joins, else the arrays
+    ``pack_requests`` reads: request_id, n_scanned, ``ap`` (the AP's
+    position, which orders rows as their mac_addr does), s, freq and the
+    ``index_aps`` columns."""
+    macs, cols = index
+    pos = macs.get_indexer(rows.column("mac_addr").to_numpy())
+    hit = np.flatnonzero(pos >= 0)
+    if not len(hit):
+        return None
+    ap = pos[hit]
+    joined = {k: v[ap] for k, v in cols.items()}
+    joined.update(
+        request_id=rows.column("request_id").to_numpy()[hit],
+        n_scanned=rows.column("n_scanned").to_numpy()[hit],
+        ap=ap,
+        s=_floats(rows.column("signal_strength"))[hit],
+        freq=_floats(rows.column("frequency"))[hit],
+    )
+    return joined
+
+
+def pack_requests(rows: dict[str, np.ndarray]):
     """Observation rows of whole requests → padded per-request matrices.
 
-    ``pdf``: the ``gate_and_explode`` rows joined with the AP index, with
-    columns request_id, n_scanned, the ``PACK_FIELDS`` and ap_vendor.
+    ``rows``: the ``join_aps`` arrays.
 
     Groups rows by request_id (requests in first-appearance order) and sorts
     each request by ``PACK_FIELDS`` ascending, nulls first inside each
@@ -228,15 +279,16 @@ def pack_requests(pdf):
     """
     import pandas as pd
 
-    rid_code, rids = pd.factorize(pdf["request_id"], use_na_sentinel=False)
-    mac_code = pd.factorize(pdf["mac_addr"], sort=True, use_na_sentinel=False)[0]
-    vals = {short: pdf[c].to_numpy(dtype=float, na_value=np.nan) for c, short in _SHORT.items()}
+    rid_code, rids = pd.factorize(rows["request_id"], use_na_sentinel=False)
+    mac_code = rows["ap"]
+    vals = {short: rows[short] for short in _SHORT.values()}
     keys = []
     for short in reversed(_SHORT.values()):  # np.lexsort: last key is primary
         known = ~np.isnan(vals[short])
         keys += [np.where(known, vals[short], 0.0), known]
     order = np.lexsort(keys + [mac_code, rid_code])
-    vals.update(element_values(vals["s"], vals["freq"], vals["conf"], pdf["ap_vendor"]))
+    vals.update(element_values(
+        vals["s"], vals["freq"], vals["conf"], rows["vendor_n"], rows["vendor_known"]))
 
     rid_s, mac_s = rid_code[order], mac_code[order]
     lens = np.bincount(rid_code, minlength=len(rids))
@@ -252,7 +304,7 @@ def pack_requests(pdf):
     first[1:] = (rid_s[1:] != rid_s[:-1]) | (mac_s[1:] != mac_s[:-1])
     ded = np.zeros(shape, dtype=bool)
     ded[rid_s, pos] = first
-    n_scanned = np.maximum.reduceat(pdf["n_scanned"].to_numpy()[order], starts)
+    n_scanned = np.maximum.reduceat(rows["n_scanned"][order], starts)
     return rids, n_scanned, lens, mats, ded
 
 
@@ -376,14 +428,18 @@ def compute_onepass(
         best_hacc = hacc[rows, best_idx]
 
         # ---- RSSI-ratio pair sums over FULL-array pairs i<j with distinct
-        # macs (_pairs_expr / _pair_sums), by pair offset to bound memory ----
+        # macs (_pairs_expr / _pair_sums), by pair offset to bound memory.
+        # An offset at or past the longest request pairs no real element:
+        # its masked sums are +0.0, which leaves every accumulator's bits as
+        # they are (an accumulator that starts at +0.0 is never -0.0), so
+        # the loop stops there ----
         spw = np.zeros(n)
         splat = np.zeros(n)
         splon = np.zeros(n)
         saltn = np.zeros(n)
         saltd = np.zeros(n)
         n_pairs = np.zeros(n)
-        for off in range(1, K):
+        for off in range(1, int(lens.max())):
             va = slice(0, K - off)
             vb = slice(off, K)
             ok = M[:, vb] & (grp[:, va] != grp[:, vb])
@@ -708,55 +764,99 @@ CONTEXT_FIELDS = (
 )
 
 
-def build_output(rids, res, selection_info: dict | None):
-    """Kernel result arrays → pandas output frame (the only per-row Python).
+def _lists(counts: np.ndarray, values, list_type):
+    """An Arrow list array of ``list_type``: row i holds the next
+    ``counts[i]`` entries of ``values``."""
+    import pyarrow as pa
 
-    ``selection_info`` maps each SelectionContext tuple (``CONTEXT_FIELDS``
-    order) to its per-algorithm reason list; when given, each answer carries
-    its ``selection_context`` struct and that list as ``selection_info``.
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), values, type=list_type)
+
+
+def selection_info_lookup(selection_info: dict, schema):
+    """``selection_info`` (SelectionContext tuple in ``CONTEXT_FIELDS``
+    order → its per-algorithm reason list) → (slot, infos), built once per
+    kernel: ``infos`` holds the lists as one Arrow array of the schema's
+    ``selection_info`` type, and ``slot[code]`` is the position of a
+    context's list in it (-1, which no ``take`` accepts, for a context the
+    dict lacks), ``code`` being ``_context_code`` of the context's class
+    codes."""
+    import pyarrow as pa
+
+    keys = list(selection_info)
+    slot = np.full(len(_APC) * len(_SQ) * len(_GQ) * len(_SD) * 2, -1)
+    slot[_context_code(
+        *(np.array([tables.index(k[f]) for k in keys], dtype=int)
+          for f, tables in enumerate((_APC, _SQ, _GQ, _SD))),
+        np.array([k[4] for k in keys], dtype=bool),
+    )] = np.arange(len(keys))
+    infos = pa.array([selection_info[k] for k in keys], type=schema.field("selection_info").type)
+    return slot, infos
+
+
+def _context_code(apc, sq, gq, sd, avw) -> np.ndarray:
+    """One integer per SelectionContext (class codes and all-very-weak flag)."""
+    return (((apc * len(_SQ) + sq) * len(_GQ) + gq) * len(_SD) + sd) * 2 + avw.astype(int)
+
+
+def build_output(rids, res, selection_info, schema):
+    """Kernel result arrays → the answer record batch of the Arrow
+    ``schema``, built column by column; a NaN double is NULL, as in a
+    pandas conversion.
+
+    ``selection_info``: None, or the ``selection_info_lookup`` of the
+    reason lists, by which each answer gets its ``selection_context``
+    struct and its context's list as ``selection_info``.
     """
-    import pandas as pd
+    import pyarrow as pa
 
-    keep = res["keep"]
-    idx = np.flatnonzero(keep)
-    sel, sel_w, order, kept_ranked = (
-        res["sel"], res["sel_w"], res["order"], res["kept_ranked"],
+    idx = np.flatnonzero(res["keep"])
+    names = pa.array(ALGORITHMS)
+    arrays = {"request_id": pa.array(np.asarray(rids, dtype=object)[idx], pa.string(), from_pandas=True)}
+    for k in ("latitude", "longitude", "altitude", "accuracy", "confidence"):
+        arrays[k] = pa.array(res[k][idx], pa.float64(), from_pandas=True)
+
+    # methods_used: the distinct algorithms of the present slots, by name
+    used = np.zeros((len(idx), _N_ALG), dtype=bool)
+    r, c = np.nonzero(res["present"][idx])
+    used[r, res["p_alg"][idx][r, c]] = True
+    by_name = np.argsort(np.array(ALGORITHMS))
+    used = used[:, by_name]
+    arrays["methods_used"] = _lists(
+        used.sum(axis=1), names.take(np.broadcast_to(by_name, used.shape)[used]),
+        schema.field("methods_used").type,
     )
-    very_weak, prox_w = res["very_weak"], res["prox_override_w"]
-    p_alg, present = res["p_alg"], res["present"]
+    arrays["is_collinear"] = pa.array(res["is_collinear"][idx].astype(bool))
 
-    cal_info = []
-    methods = []
-    for i in idx:
-        if very_weak[i]:
-            cal_info.append([{"algorithm": "proximity", "weight": float(prox_w[i])}])
-        else:
-            cal_info.append([
-                {"algorithm": ALGORITHMS[a], "weight": float(sel_w[i, a])}
-                for a, k in zip(order[i], kept_ranked[i]) if k
-            ])
-        methods.append(sorted({ALGORITHMS[a] for a in p_alg[i][present[i]]}))
-
-    out = pd.DataFrame({
-        "request_id": np.asarray(rids, dtype=object)[idx],
-        "latitude": res["latitude"][idx],
-        "longitude": res["longitude"][idx],
-        "altitude": res["altitude"][idx],
-        "accuracy": res["accuracy"][idx],
-        "confidence": res["confidence"][idx],
-        "methods_used": methods,
-        "is_collinear": res["is_collinear"][idx].astype(bool),
-        "calculation_info": cal_info,
-    })
+    # calculation_info: the kept algorithms in rank order at their selected
+    # weights; a very weak request lists proximity alone, at its override
+    alg = res["order"][idx]
+    listed = res["kept_ranked"][idx].copy()
+    weight = np.take_along_axis(res["sel_w"][idx], alg, axis=1)
+    vw = res["very_weak"][idx]
+    alg = np.where(vw[:, None] & (np.arange(_N_ALG) == 0), _PROX, alg)
+    listed[vw] = np.arange(_N_ALG) == 0
+    weight[vw, 0] = res["prox_override_w"][idx][vw]
+    cal_type = schema.field("calculation_info").type
+    arrays["calculation_info"] = _lists(
+        listed.sum(axis=1),
+        pa.StructArray.from_arrays(
+            [names.take(alg[listed]), pa.array(weight[listed], pa.float64())],
+            fields=list(cal_type.value_type),
+        ),
+        cal_type,
+    )
     if selection_info is not None:
-        apc, sq, gq, sd, avw = (
-            res["apc_code"], res["sq_code"], res["gq_code"], res["sd_code"],
-            res["all_very_weak"],
+        slot, infos = selection_info
+        codes = [res[k][idx] for k in ("apc_code", "sq_code", "gq_code", "sd_code")]
+        avw = res["all_very_weak"][idx].astype(bool)
+        arrays["selection_context"] = pa.StructArray.from_arrays(
+            [pa.array(t).take(c) for t, c in zip((_APC, _SQ, _GQ, _SD), codes)] + [pa.array(avw)],
+            fields=list(schema.field("selection_context").type),
         )
-        ctx = [(_APC[apc[i]], _SQ[sq[i]], _GQ[gq[i]], _SD[sd[i]], bool(avw[i])) for i in idx]
-        out["selection_context"] = [dict(zip(CONTEXT_FIELDS, c)) for c in ctx]
-        out["selection_info"] = [selection_info[c] for c in ctx]
-    return out
+        arrays["selection_info"] = infos.take(slot[_context_code(*codes, avw)])
+    return pa.RecordBatch.from_arrays([arrays[f.name] for f in schema], schema=schema)
 
 
 def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
@@ -768,25 +868,28 @@ def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
     positioning stream runs it in the driver.
 
     Each batch is gated and exploded (``gate_and_explode``), inner-joined
-    with the AP index on mac_addr, packed and solved. Every request is one
-    input row, so no request straddles two batches. ``ap_index``: the frame
-    ``onepass.ap_frame`` returns (the driver placement), or the broadcast
-    variable ``onepass.ap_index`` returns, read on first use (the executor
-    placement). ``selection_info``: see ``build_output``.
+    with the AP index on mac_addr (``join_aps``), packed and solved. Every
+    request is one input row, so no request straddles two batches.
+    ``ap_index``: the frame ``onepass.ap_frame`` returns (the driver
+    placement), indexed here, or the broadcast variable ``onepass.ap_index``
+    returns, read and indexed on first use (the executor placement).
+    ``selection_info``: None, or the dict ``selection_info_lookup`` takes.
     """
-    import pyarrow as pa
     from pyspark import Broadcast
 
+    index = None if isinstance(ap_index, Broadcast) else index_aps(ap_index)
+    info = None if selection_info is None else selection_info_lookup(selection_info, schema)
+
     def run(batches):
-        aps = ap_index.value if isinstance(ap_index, Broadcast) else ap_index
+        nonlocal index
+        if index is None:
+            index = index_aps(ap_index.value)
         for batch in batches:
-            rows = gate_and_explode(batch).merge(aps, on="mac_addr", how="inner")
-            if not len(rows):
+            rows = join_aps(gate_and_explode(batch), index)
+            if rows is None:
                 continue
             rids, n_scanned, lens, mats, ded = pack_requests(rows)
             res = compute_onepass(n_scanned, lens, mats, ded)
-            yield pa.RecordBatch.from_pandas(
-                build_output(rids, res, selection_info), schema=schema, preserve_index=False
-            )
+            yield build_output(rids, res, info, schema)
 
     return run

@@ -12,6 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+# the file:// FileSystem every session uses (jvm/NioLocalFileSystem.java):
+# Hadoop's LocalFileSystem, its permissions set in the JVM instead of by a
+# forked /bin/chmod per created file and directory. tools/build_nio_fs_jar.py
+# builds the jar from the source.
+NIO_FS_SOURCE = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+NIO_FS_JAR = os.path.join(_JVM_DIR, "nio-local-fs.jar")
+NIO_FS_CLASS = "wifi_location_data_pipeline_spark.jvm.NioLocalFileSystem"
+
 
 def build_session(
     app_name: str = "wifi_location_data_pipeline_spark",
@@ -26,7 +35,18 @@ def build_session(
 
     - ``SPARK_GRAFT_CPUS``  → ``local[N]`` master and shuffle parallelism
     - ``SPARK_GRAFT_DRIVER_MEM`` → driver heap (local mode = the only heap)
+
+    ``file://`` paths go through ``NIO_FS_CLASS``: its jar joins the driver
+    and executor class paths ahead of any ``extraClassPath`` the caller
+    passes. The JVM reads its class path when it starts, so the first
+    session of a process decides it. Raises FileNotFoundError if the jar is
+    missing.
     """
+    if not os.path.isfile(NIO_FS_JAR):
+        raise FileNotFoundError(f"{NIO_FS_JAR} is missing; build it with tools/build_nio_fs_jar.py")
+    conf = dict(extra_conf or {})
+    for k in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+        conf[k] = os.pathsep.join([NIO_FS_JAR] + ([conf[k]] if conf.get(k) else []))
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -86,22 +106,29 @@ def build_session(
         # deployments reading off HDFS-style locality should override via
         # extra_conf.
         .config("spark.locality.wait", "0s")
+        # without libhadoop, Hadoop's local FileSystem forks /bin/chmod for
+        # every file and directory it creates: 6 per serving micro-batch
+        # (offset, commit and file-source log entries, each with its .crc).
+        # The shim sets the same modes in the JVM; on a 4-core host one
+        # create+write+close through py4j, p50 of 30, went from 8.7 to 2.7 ms.
+        .config("spark.hadoop.fs.file.impl", NIO_FS_CLASS)
         # streaming checkpoint logs (offsets, commits) go through Hadoop's
         # FileSystem API instead of FileContext: every micro-batch writes
-        # them, and on the serving path they were a quarter of its cycle.
-        # Both managers commit by write-to-temp + rename, and
+        # them. Both managers commit by write-to-temp + rename, and
         # FileSystem.rename is atomic wherever FileContext's is (local FS,
         # HDFS); Spark runs one writer per checkpoint. CommitLog.add over
         # py4j on a 4-core host, p50 of 50 calls: 32-34 ms through
-        # FileContext, 7-9 ms through this manager. The conf is internal;
-        # Spark reads it when a query starts.
+        # FileContext, 7-9 ms through this manager with Hadoop's forking
+        # chmod; with the shim above the serving stream's walCommit and
+        # commitOffsets read 2-3 and 1-2 ms (traced medians). The conf is
+        # internal; Spark reads it when a query starts.
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

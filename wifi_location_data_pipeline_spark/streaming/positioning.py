@@ -16,11 +16,21 @@ The streaming frame is the request scan alone: no filter, no explode, no
 join, no Python and no coalesce, so each non-empty micro-batch is ONE Spark
 job, the ``toArrow`` collect, and Catalyst has nothing to re-plan per
 micro-batch. The rest runs in the driver, where a micro-batch of a few
-requests costs the kernel's ~20 ms instead of a Python-worker hop (about
+requests costs the kernel's ~10 ms instead of a Python-worker hop (about
 200 ms of fixed time per Python task on a 4-core host, whatever its input).
 The kernel is the batch plan's (``make_onepass_kernel``), fed the same
 nested request rows: one kernel, placed in the executors for batch and in
 the driver for the stream, so the two placements give equal answers.
+
+One micro-batch of 2 requests on a 4-core host (perfbench
+``position_serving``, traced, median per phase over 7 runs) takes ~97 ms
+(92-112 ms per run), under the 125 ms between its request files:
+``latestOffset`` 4 ms (the zone listing), ``getBatch`` 7.5,
+``queryPlanning`` 7, ``addBatch`` 75 (the ``toArrow`` call ~40-55, the
+kernel ~10, the sink ~2, the rest Spark's foreachBatch hand-off to
+Python), ``walCommit`` 2 and ``commitOffsets`` 2. Neither log write starts
+a process: ``build_session``'s ``file://`` FileSystem sets file modes in
+the JVM.
 
 The AP index is ``onepass.ap_frame(access_points)`` (``known_ap_lookup``:
 status filter, keep-first by version, rename — the analog of the service's
@@ -31,6 +41,12 @@ and a later batch call over a changed AP table cannot release its index.
 Driver memory is bounded by that index plus one micro-batch of requests;
 bound the latter with ``max_files_per_trigger``. The checkpoint logs go
 through the FileSystem-based checkpoint manager ``build_session`` selects.
+
+The file source lists the whole zone on every trigger, so answered request
+files leave it: Spark's ``cleanSource=archive`` moves a committed batch's
+files to ``<checkpoint>/archive/<their full path>`` when the next batch
+starts. A batch that failed before its commit is replayed on restart from
+files still in the zone, so every request is answered once.
 
 The sink writes each batch to its own ``batch_id=N`` directory: it clears
 the directory, writes ``part-00000.parquet``, and writes ``_SUCCESS`` last.
@@ -78,7 +94,13 @@ def start_positioning_stream(
     are answered in the next micro-batch, the streaming analog of the
     service's request loop.
     """
-    reader = spark.readStream.schema(POSITIONING_REQUEST_SCHEMA)
+    # answered request files move to <checkpoint>/archive (module docstring):
+    # a zone that kept them would grow the per-trigger listing without bound
+    reader = (
+        spark.readStream.schema(POSITIONING_REQUEST_SCHEMA)
+        .option("cleanSource", "archive")
+        .option("sourceArchiveDir", checkpoint.rstrip("/") + "/archive")
+    )
     if max_files_per_trigger is not None:
         # bound the arrival batch (the analog of the reference's Kafka
         # max-poll / SQS batch limits), and with it the driver's share
