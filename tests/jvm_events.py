@@ -6,21 +6,35 @@ from contextlib import contextmanager
 
 
 @contextmanager
+def jfr_recording(spark, dump_path: str, events: dict[str, float | None]):
+    """Record the ``events`` (JFR event name -> sampling period in ms, or
+    None for an unsampled event, recorded at every duration) in the
+    session's JVM while the block runs; on exit the recording is in
+    ``dump_path`` (read it with ``jfr print`` / ``jfr summary``). Yields the
+    dump's ``java.nio.file.Path``."""
+    jvm = spark._jvm
+    recording = jvm.jdk.jfr.Recording()
+    for name, period_ms in events.items():
+        settings = recording.enable(name).withoutThreshold()
+        if period_ms is not None:
+            settings.withPeriod(jvm.java.time.Duration.ofMillis(int(period_ms)))
+    path = jvm.java.io.File(str(dump_path)).toPath()
+    recording.start()
+    try:
+        yield path
+    finally:
+        recording.stop()
+        recording.dump(path)
+        recording.close()
+
+
+@contextmanager
 def process_starts(spark, dump_path: str):
     """Record ``jdk.ProcessStart`` in the session's JVM while the block runs;
     on exit the yielded list holds the command line of every child process
     the JVM started in the block."""
-    jvm = spark._jvm
-    recording = jvm.jdk.jfr.Recording()
-    recording.enable("jdk.ProcessStart")
-    recording.start()
     commands: list[str] = []
-    try:
+    with jfr_recording(spark, dump_path, {"jdk.ProcessStart": None}) as path:
         yield commands
-    finally:
-        recording.stop()
-        path = jvm.java.io.File(str(dump_path)).toPath()
-        recording.dump(path)
-        recording.close()
-        events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
-        commands.extend(events.get(i).getString("command") for i in range(events.size()))
+    events = spark._jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
+    commands.extend(events.get(i).getString("command") for i in range(events.size()))

@@ -2,10 +2,12 @@
 availableNow/processAllAvailable (SURVEY §2.8; memory-sink smoke pattern)."""
 
 import base64
+import gc
 import gzip
 import os
 import re
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -319,6 +321,13 @@ def test_positioning_micro_batches_start_no_process(spark, tmpzone):
         # once per JVM, the executor's first metrics poll (a heartbeat, every
         # 10 s) runs `getconf PAGESIZE`; take that one-off before recording
         spark._jvm.org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo()
+        # earlier queries leave their cloned sessions behind; when the JVM
+        # collects one, Spark's artifact cleaner (a thread run after the
+        # collection) deletes the session's directory with a forked `rm -rf`:
+        # collect them, and let the cleaner finish, before recording
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(1.0)
         with process_starts(spark, os.path.join(tmpzone, "rec.jfr")) as started:
             for k in range(1, 4):
                 write_requests(f"req{k}.json", [f"r{k}"])
@@ -344,8 +353,6 @@ def _log_entries(ckpt, log):
 
 
 def _wait_for(cond, timeout_s=30.0):
-    import time
-
     deadline = time.monotonic() + timeout_s
     while not cond() and time.monotonic() < deadline:
         time.sleep(0.05)
@@ -415,12 +422,13 @@ def test_stream_replays_an_uncommitted_batch_from_the_zone(spark, tmpzone, monke
     assert answers == ["a1", "a2", "b1", "b2"]
 
 
-def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):
+def test_streaming_positioning_runs_no_spark_job(spark, tmpzone, capsys):
     """The streaming frame is the bare request scan and each micro-batch is
-    answered in the driver (gate, explode, AP join and solve in the one
-    kernel), so a non-empty micro-batch runs exactly ONE Spark job (the
-    toArrow collect) and its plan holds no Python node, no Generate and no
-    Filter. Counted under the stream's runId job group."""
+    answered in the driver (its request files read there, then gate,
+    explode, AP join and solve in the one kernel), so a micro-batch of
+    well-formed files runs NO Spark job and its plan holds no Python node,
+    no Generate and no Filter. Counted under the stream's runId job
+    group."""
     from wifi_location_data_pipeline_spark.streaming.positioning import (
         start_positioning_stream,
     )
@@ -439,7 +447,7 @@ def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):
     finally:
         q.stop()
     assert len(batches) == 3
-    assert len(jobs) == len(batches), sorted(jobs)
+    assert len(jobs) == 0, sorted(jobs)
     assert "FileScan json" in plan, plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
     nodes = set(re.findall(r"^[ :+\-*()\d]*([A-Z]\w*)", plan, re.M))
@@ -448,6 +456,152 @@ def test_streaming_positioning_one_job_per_batch(spark, tmpzone, capsys):
     assert sorted(r["request_id"] for r in rows) == sorted(
         f"r{k}{c}" for k in range(3) for c in "ab")
 
+
+
+def _request_line(rid, scans='[{"macAddress": "aa:bb", "signalStrength": -70.5, "frequency": 2437}]'):
+    return '{"requestId": "%s", "wifiScanResults": %s}' % (rid, scans)
+
+
+# one request file per case: the driver's strict read must equal Spark's
+# reader row for row ("equal") or raise ("raises", the batch then goes
+# through Spark's reader)
+_EDGE_FILES = {
+    "missing_request_id": ('{"wifiScanResults": []}\n', "raises"),
+    "null_request_id": ('{"requestId": null, "wifiScanResults": []}\n', "raises"),
+    "blank_lines": ("\n" + _request_line("a") + "\n\n  \n" + _request_line("b") + "\n\n", "equal"),
+    "crlf": (_request_line("a") + "\r\n" + _request_line("b") + "\r\n", "equal"),
+    "cr_only": (_request_line("a") + "\r" + _request_line("b") + "\r", "equal"),
+    "bom": ("\ufeff" + _request_line("a") + "\n", "equal"),
+    "no_trailing_newline": (_request_line("a"), "equal"),
+    "empty_file": ("", "raises"),
+    "exponent_for_int": (_request_line("a").replace("2437", "2.412e3") + "\n", "raises"),
+    "string_for_double": (_request_line("a").replace("-70.5", '"-70"') + "\n", "raises"),
+    "int_overflow": (_request_line("a").replace("2437", "3000000000") + "\n", "raises"),
+    "number_for_string": ('{"requestId": 123, "wifiScanResults": []}\n', "raises"),
+    "garbage_line": ("!!!garbage\n", "raises"),
+    "good_then_bad": (_request_line("a") + "\n" + '{"requestId": "b", "wifiScanResults": [}\n', "raises"),
+    "unicode_escape": (_request_line("caf\\u00e9") + "\n" + _request_line("caf\u00e9") + "\n", "equal"),
+    "null_array": (_request_line("a", "null") + "\n", "equal"),
+    "empty_array": (_request_line("a", "[]") + "\n", "equal"),
+    "null_element": (_request_line("a", '[null, {"macAddress": "m", "frequency": 5180}]') + "\n", "equal"),
+    "extra_fields": ('{"requestId": "a", "x": {"y": [1, 2]}, "wifiScanResults": '
+                     '[{"macAddress": "m", "rssi": -1}]}\n', "equal"),
+    "single_quotes": ("{'requestId': 'a', 'wifiScanResults': []}\n", "raises"),
+    "top_level_array": ('[{"requestId": "a"}, {"requestId": "b"}]\n', "raises"),
+    "scalar_line": ("42\n", "raises"),
+    "duplicate_key": ('{"requestId": "a", "requestId": "b", "wifiScanResults": []}\n', "raises"),
+    "two_objects_on_a_line": (_request_line("a") + " " + _request_line("b") + "\n", "raises"),
+    "object_across_lines": ('{"requestId": "a", "wifiScanResults": [\n{"macAddress": "m"}]}\n', "raises"),
+    "trailing_garbage": (_request_line("a") + " xyz\n", "raises"),
+    "leading_null": ("null\n" + _request_line("a") + "\n", "raises"),
+    "control_char_in_string": (_request_line("a\tb") + "\n", "raises"),
+    "not_utf8": (_request_line("a\udcffb") + "\n", "raises"),  # the byte 0xff
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_FILES))
+def test_driver_request_read_matches_spark_or_raises(spark, tmp_path, case):
+    """``read_request_files`` is the stream's reader for well-formed request
+    files only: on each edge file it returns exactly the rows Spark's JSON
+    reader returns for it, or it raises (and the stream's micro-batch reads
+    the file through Spark instead)."""
+    import pyarrow as pa
+
+    from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
+    from wifi_location_data_pipeline_spark.streaming.positioning import read_request_files
+
+    text, expect = _EDGE_FILES[case]
+    path = tmp_path / f"{case}.json"
+    path.write_bytes(text.encode("utf-8", "surrogateescape"))
+    want = spark.read.schema(POSITIONING_REQUEST_SCHEMA).json(str(path)) \
+        .select("requestId", "wifiScanResults").toArrow().to_pylist()
+    if expect == "raises":
+        with pytest.raises((pa.ArrowInvalid, UnicodeDecodeError)):
+            read_request_files([path.as_uri()])
+    else:
+        assert read_request_files([path.as_uri()]).to_pylist() == want
+        assert want
+
+
+def test_stream_progress_counts_the_rows_it_read(spark, tmpzone, monkeypatch):
+    """numInputRows stays Spark's progress figure though the driver reads
+    the files: the rows read for a first batch, 0 for an empty file (read
+    by Spark: the strict read rejects it) and the rows of a batch replayed
+    after a failed commit."""
+    import pyarrow.parquet as pq
+
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    for t, (name, rids) in enumerate([("a.json", ["a1", "a2"]), ("b.json", []),
+                                      ("c.json", ["c1", "c2", "c3"])]):
+        write_requests(name, rids)
+        os.utime(os.path.join(zone, name), (t + 1, t + 1))  # batch order a, b, c
+    write_table = pq.write_table
+
+    def fail_batch_2(table, where, **kw):
+        if "batch_id=2" in where:
+            raise RuntimeError("sink down")
+        return write_table(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", fail_batch_2)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
+    with pytest.raises(Exception, match="sink down"):
+        q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [2, 0]
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress] == [3]
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)) == []
+    assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == [
+        "a1", "a2", "c1", "c2", "c3"]
+
+
+def test_stream_reads_a_malformed_file_through_spark(spark, tmpzone):
+    """A request file with a malformed line fails the strict driver read, so
+    its micro-batch (and only it) runs one Spark job, the scan through
+    Spark's PERMISSIVE reader; the stream's answers equal the batch
+    placement's on the same files."""
+    import shutil
+
+    from wifi_location_data_pipeline_spark.positioning.onepass import (
+        position_requests_onepass,
+    )
+    from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    kept = os.path.join(tmpzone, "kept"); os.makedirs(kept)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+    jobs = []
+    try:
+        for k in range(3):
+            name = f"req{k}.json"
+            write_requests(name, [f"r{k}a", f"r{k}b"])
+            if k == 1:  # a malformed line among well-formed ones
+                with open(os.path.join(zone, name), "a") as f:
+                    f.write('{"requestId": "bad", "wifiScanResults": [}\n')
+            shutil.copy(os.path.join(zone, name), kept)
+            q.processAllAvailable()
+            jobs.append(len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))))
+        rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert jobs == [0, 1, 1]
+    assert rows == [2, 3, 2]
+    requests = spark.read.schema(POSITIONING_REQUEST_SCHEMA).json(kept)
+    want = {r["request_id"]: r.asDict(recursive=True)
+            for r in position_requests_onepass(requests, aps).collect()}
+    got = {r["request_id"]: r.asDict(recursive=True)
+           for r in spark.read.parquet(out).drop("batch_id").collect()}
+    assert got == want and len(got) == 6
 
 @pytest.mark.parametrize("with_reasons", [False, True], ids=["plain", "reasons"])
 def test_streaming_positioning_matches_batch_placement(spark, tmpzone, with_reasons):

@@ -8,29 +8,46 @@ continuously" is Structured Streaming over a request zone:
 
     readStream.json(request_zone, POSITIONING_REQUEST_SCHEMA)
       .select(requestId, wifiScanResults)   (the bare request scan)
-      → foreachBatch: toArrow → the one-pass kernel (physics gate, explode,
-        join with the driver-held AP index, solve) → pyarrow write of
-        batch_id=N
+      → foreachBatch: the batch's request files, read in the driver → the
+        one-pass kernel (physics gate, explode, join with the driver-held
+        AP index, solve) → pyarrow write of batch_id=N
 
-The streaming frame is the request scan alone: no filter, no explode, no
-join, no Python and no coalesce, so each non-empty micro-batch is ONE Spark
-job, the ``toArrow`` collect, and Catalyst has nothing to re-plan per
-micro-batch. The rest runs in the driver, where a micro-batch of a few
-requests costs the kernel's ~10 ms instead of a Python-worker hop (about
-200 ms of fixed time per Python task on a 4-core host, whatever its input).
-The kernel is the batch plan's (``make_onepass_kernel``), fed the same
-nested request rows: one kernel, placed in the executors for batch and in
-the driver for the stream, so the two placements give equal answers.
+The streaming frame is the request scan alone (no filter, no explode, no
+join, no Python, no coalesce), and a micro-batch runs no Spark job: Spark
+keeps the offsets, the driver reads the files. Spark's file source lists
+the zone, logs each batch's files, replays them after a failure, applies
+``maxFilesPerTrigger`` and archives them; ``_commit`` takes the batch's
+files from its scan node (the one leaf of the running query's current
+executed plan, found through the ``sql.streaming.queryId`` local property)
+and reads them with pyarrow's JSON reader, one file per thread, up to the
+session's cores. The read is strict: the request schema as explicit Arrow
+types, fields outside it skipped, anything else raising (malformed JSON, a
+value of another type, a missing ``requestId``, a line that is not exactly
+one JSON object, bytes that are not UTF-8, an empty file). A batch
+whose read raises is read by Spark instead, ``toArrow`` on the batch frame
+(one Spark job), so Spark's PERMISSIVE reader gives the meaning of every
+file the strict read rejects; where both read a file, they give the same
+rows. The scan never runs after a strict read, so the driver adds the rows
+it read to the scan's ``numOutputRows`` metric, the figure
+``StreamingQueryProgress.numInputRows`` reports.
+
+The rest runs in the driver too, where a micro-batch of a few requests
+costs the kernel's ~7-10 ms instead of a Python-worker hop (about 200 ms of
+fixed time per Python task on a 4-core host, whatever its input). The
+kernel is the batch plan's (``make_onepass_kernel``), fed the same nested
+request rows: one kernel, placed in the executors for batch and in the
+driver for the stream, so the two placements give equal answers.
 
 One micro-batch of 2 requests on a 4-core host (perfbench
-``position_serving``, traced, median per phase over 7 runs) takes ~97 ms
-(92-112 ms per run), under the 125 ms between its request files:
-``latestOffset`` 4 ms (the zone listing), ``getBatch`` 7.5,
-``queryPlanning`` 7, ``addBatch`` 75 (the ``toArrow`` call ~40-55, the
-kernel ~10, the sink ~2, the rest Spark's foreachBatch hand-off to
-Python), ``walCommit`` 2 and ``commitOffsets`` 2. Neither log write starts
-a process: ``build_session``'s ``file://`` FileSystem sets file modes in
-the JVM.
+``position_serving``, traced, median per phase over 3 runs) takes ~63 ms
+(60-64 ms per run), half the 125 ms between its request files:
+``latestOffset`` 4 ms (the zone listing), ``getBatch`` 8,
+``queryPlanning`` 7, ``addBatch`` 39, ``walCommit`` 3 and
+``commitOffsets`` 2. Of ``addBatch``, the Python callback is ~13 ms (the
+scan lookup ~1, the file read ~2, the kernel ~7, the sink ~1-2); the rest
+is Spark's foreachBatch hand-off (the batch frame's RDD, its Dataset wrap
+and the py4j call). Neither log write starts a process:
+``build_session``'s ``file://`` FileSystem sets file modes in the JVM.
 
 The AP index is ``onepass.ap_frame(access_points)`` (``known_ap_lookup``:
 status filter, keep-first by version, rename — the analog of the service's
@@ -59,9 +76,12 @@ an empty, schema'd part file. The per-request diagnostics
 
 from __future__ import annotations
 
+import codecs
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
+import pyarrow.json as pajson
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +95,56 @@ from wifi_location_data_pipeline_spark.positioning.onepass import (
 )
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import make_onepass_kernel
 from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
+
+# the driver's strict reading of a request file (module docstring): the
+# request schema as Arrow types, no inference, fields outside it skipped
+_STRICT_REQUEST_JSON = pajson.ParseOptions(
+    explicit_schema=to_arrow_schema(POSITIONING_REQUEST_SCHEMA),
+    unexpected_field_behavior="ignore",
+)
+
+
+def read_request_files(uris: list[str], threads: int = 1) -> pa.Table:
+    """The requests (``requestId``, ``wifiScanResults``) of the request
+    files at ``uris`` (Hadoop file URIs), read strictly, one file per
+    thread. Raises ``pyarrow.ArrowInvalid`` or ``UnicodeDecodeError`` on a
+    file whose rows Spark's reader could differ on or would have to repair
+    (malformed JSON, a value of another type, a missing ``requestId``, a
+    line that is not one JSON object, bytes that are not UTF-8, an empty
+    file), and ``OSError`` on a file pyarrow cannot open."""
+    with ThreadPoolExecutor(max(1, min(threads, len(uris)))) as pool:
+        tables = list(pool.map(_read_request_file, uris))
+    return pa.concat_tables(tables).select(["requestId", "wifiScanResults"])
+
+
+def _read_request_file(uri: str) -> pa.Table:
+    fs, path = pafs.FileSystem.from_uri(uri)
+    with fs.open_input_stream(path) as f:
+        data = f.read().removeprefix(codecs.BOM_UTF8)  # Hadoop's line reader drops it
+    data.decode("utf-8")  # pyarrow passes on bytes Spark's parser rejects
+    # Spark parses each line (split at \n, \r\n or \r) as one record, pyarrow
+    # the whole file. They see the same objects when every non-blank line
+    # starts with "{", ends with "}" and pyarrow finds as many objects as
+    # lines: no string spans a line, so no object continues past one. The
+    # check comes first: pyarrow 16 crashes the process on a leading `null`.
+    records = [line for line in (ln.strip(b" \t") for ln in data.splitlines()) if line]
+    if not all(r[:1] == b"{" and r[-1:] == b"}" for r in records):
+        raise pa.ArrowInvalid(f"{uri}: a line that is not one JSON object")
+    table = pajson.read_json(pa.BufferReader(data), parse_options=_STRICT_REQUEST_JSON)
+    if table.num_rows != len(records):
+        raise pa.ArrowInvalid(f"{uri}: {table.num_rows} JSON objects on {len(records)} lines")
+    return table
+
+
+def _batch_scan(spark: SparkSession):
+    """The file scan node of the micro-batch this thread is running: the one
+    leaf of its query's current executed plan."""
+    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    plan = spark.streams.get(query_id)._jsq.streamingQuery().lastExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    if leaves.size() != 1:
+        raise RuntimeError(f"expected one scan in the micro-batch plan:\n{plan.toString()}")
+    return leaves.apply(0)
 
 
 def start_positioning_stream(
@@ -118,8 +188,19 @@ def start_positioning_stream(
     except pa.ArrowInvalid:  # a relative local path, as Spark's writer takes
         fs, root = pafs.LocalFileSystem(), os.path.abspath(out_path)
 
+    threads = spark.sparkContext.defaultParallelism
+
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        table = pa.Table.from_batches(kernel([batch_df.toArrow()]), schema=schema)
+        scan = _batch_scan(spark)
+        uris = list(scan.relation().location().inputFiles())
+        try:
+            batch = read_request_files(uris, threads)
+        except (pa.ArrowInvalid, UnicodeDecodeError, OSError):
+            batch = batch_df.toArrow()  # Spark's PERMISSIVE reader decides
+        else:
+            # the scan never ran: count its rows, as progress reports them
+            scan.metrics().apply("numOutputRows").add(batch.num_rows)
+        table = pa.Table.from_batches(kernel([batch]), schema=schema)
         batch_dir = f"{root}/batch_id={batch_id}"
         fs.create_dir(batch_dir)
         fs.delete_dir_contents(batch_dir)  # a replay replaces the first attempt
