@@ -1,6 +1,7 @@
-"""The session's ``file://`` FileSystem (jvm/NioLocalFileSystem.java): the
-same modes, checksums and Hadoop fallbacks as Hadoop's LocalFileSystem,
-without a forked ``chmod`` per created file."""
+"""The session's jar (jvm/*.java): the ``file://`` FileSystem
+(NioLocalFileSystem.java: the same modes, checksums and Hadoop fallbacks as
+Hadoop's LocalFileSystem, without a forked ``chmod`` per created file) and
+the positioning stream's sink (BatchFileSink.java)."""
 
 from __future__ import annotations
 
@@ -15,7 +16,12 @@ import pytest
 
 from tests.jvm_events import process_starts
 from wifi_location_data_pipeline_spark import session
-from wifi_location_data_pipeline_spark.session import NIO_FS_CLASS, NIO_FS_JAR, NIO_FS_SOURCE
+from wifi_location_data_pipeline_spark.session import (
+    BATCH_FILE_SINK_CLASS,
+    JVM_SOURCES,
+    NIO_FS_CLASS,
+    NIO_FS_JAR,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -152,12 +158,33 @@ def test_build_session_raises_without_the_jar(monkeypatch, tmp_path):
 
 
 def test_jar_manifest_records_the_source_digest():
-    """The committed jar was built from the committed source
-    (tools/build_nio_fs_jar.py writes the digest)."""
-    with open(NIO_FS_SOURCE, "rb") as fh:
-        digest = hashlib.sha256(fh.read()).hexdigest()
+    """The committed jar was built from the committed sources, all of them
+    (tools/build_nio_fs_jar.py writes one manifest section per source)."""
     with zipfile.ZipFile(NIO_FS_JAR) as jar:
         manifest = jar.read("META-INF/MANIFEST.MF").decode()
         names = jar.namelist()
-    assert f"Source-SHA256: {digest}" in manifest.splitlines()
-    assert NIO_FS_CLASS.replace(".", "/") + ".class" in names
+    recorded = {}
+    for section in manifest.split("\n\n")[1:]:
+        attrs = dict(line.split(": ", 1) for line in section.splitlines() if line)
+        if attrs:
+            recorded[attrs["Name"]] = attrs["Source-SHA256"]
+    want = {}
+    for source in JVM_SOURCES:
+        with open(source, "rb") as fh:
+            want[os.path.relpath(source, REPO)] = hashlib.sha256(fh.read()).hexdigest()
+    assert len(want) >= 2
+    assert recorded == want
+    for cls in (NIO_FS_CLASS, BATCH_FILE_SINK_CLASS, BATCH_FILE_SINK_CLASS + "$Callback"):
+        assert cls.replace(".", "/") + ".class" in names
+
+
+def test_session_jvm_loads_the_sink_from_the_jar(spark):
+    """The positioning stream's sink class resolves in the session's JVM,
+    from the committed jar, and is a streaming sink provider Spark's
+    ``format(<class name>)`` can create."""
+    jvm = spark._jvm
+    cls = jvm.java.lang.Class.forName(BATCH_FILE_SINK_CLASS)
+    location = cls.getProtectionDomain().getCodeSource().getLocation().getPath()
+    assert os.path.realpath(location) == os.path.realpath(NIO_FS_JAR)
+    provider = jvm.java.lang.Class.forName("org.apache.spark.sql.sources.StreamSinkProvider")
+    assert provider.isAssignableFrom(cls)

@@ -303,6 +303,29 @@ def test_checkpoint_logs_use_filesystem_manager(spark, tmp_path):
     assert fs.getClass().getName() == NIO_FS_CLASS
 
 
+def _settle_artifact_cleaner(spark, dump_path, timeout_s=60.0):
+    """Return once a full collection in Python and the JVM is followed by
+    0.5 s in which the JVM starts no process. Earlier queries leave their
+    cloned sessions behind; when the JVM collects one, Spark's artifact
+    cleaner (a thread run after the collection) deletes the session's
+    artifact directory with a forked ``rm -rf``, whether it exists or not.
+    A quiet window after a full collection means the cleaner has nothing
+    left to delete. Fails after ``timeout_s``."""
+    from tests.jvm_events import process_starts
+
+    deadline = time.monotonic() + timeout_s
+    seen = []
+    while time.monotonic() < deadline:
+        gc.collect()
+        with process_starts(spark, dump_path) as started:
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+        if not started:
+            return
+        seen += started
+    pytest.fail(f"the JVM kept starting processes after collections: {seen}")
+
+
 def test_positioning_micro_batches_start_no_process(spark, tmpzone):
     """A serving micro-batch writes six files through Hadoop (the offset,
     commit and file-source log entries, each with its .crc); JFR sees no
@@ -321,13 +344,7 @@ def test_positioning_micro_batches_start_no_process(spark, tmpzone):
         # once per JVM, the executor's first metrics poll (a heartbeat, every
         # 10 s) runs `getconf PAGESIZE`; take that one-off before recording
         spark._jvm.org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo()
-        # earlier queries leave their cloned sessions behind; when the JVM
-        # collects one, Spark's artifact cleaner (a thread run after the
-        # collection) deletes the session's directory with a forked `rm -rf`:
-        # collect them, and let the cleaner finish, before recording
-        gc.collect()
-        spark._jvm.System.gc()
-        time.sleep(1.0)
+        _settle_artifact_cleaner(spark, os.path.join(tmpzone, "settle.jfr"))
         with process_starts(spark, os.path.join(tmpzone, "rec.jfr")) as started:
             for k in range(1, 4):
                 write_requests(f"req{k}.json", [f"r{k}"])
@@ -339,6 +356,73 @@ def test_positioning_micro_batches_start_no_process(spark, tmpzone):
     assert started == []
     assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == [
         "r1", "r2", "r3", "w0"]
+
+
+def _sink_callbacks(spark):
+    """How many callbacks the positioning stream's sink registry holds."""
+    from py4j.java_gateway import JavaClass
+
+    from wifi_location_data_pipeline_spark.session import BATCH_FILE_SINK_CLASS
+
+    return JavaClass(BATCH_FILE_SINK_CLASS, spark.sparkContext._gateway._gateway_client).registered()
+
+
+def test_stream_callbacks_leave_the_sink_registry(spark, tmpzone):
+    """The sink's registry holds a stream's callback only while ``start()``
+    runs (the sink takes it when Spark creates the sink): not while the
+    stream runs, not after it stops, and not after a ``start()`` that
+    raised. The replay tests check the same after a failed stream."""
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    zone, out, ckpt, aps, write_requests = _positioning_fixture(spark, tmpzone)
+    q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+    try:
+        assert _sink_callbacks(spark) == 0
+        write_requests("req0.json", ["r0"])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert _sink_callbacks(spark) == 0
+    assert [r["request_id"] for r in spark.read.parquet(out).collect()] == ["r0"]
+
+    blocked = os.path.join(tmpzone, "not_a_dir")
+    open(blocked, "w").close()
+    with pytest.raises(Exception, match="not a directory"):
+        start_positioning_stream(spark, zone, aps, out, os.path.join(blocked, "ckpt"))
+    assert _sink_callbacks(spark) == 0
+
+
+def test_two_streams_in_one_session_answer_their_own_zones(spark, tmpzone):
+    """Two positioning streams running at once in one session each answer
+    only their own zone's requests and count only their own rows, with no
+    Spark job: each sink hands its batches to its own callback."""
+    from wifi_location_data_pipeline_spark.streaming.positioning import (
+        start_positioning_stream,
+    )
+
+    streams = {}
+    for name in ("a", "b"):
+        zone, out, ckpt, aps, write_requests = _positioning_fixture(
+            spark, os.path.join(tmpzone, name))
+        q = start_positioning_stream(spark, zone, aps, out, ckpt, available_now=False)
+        streams[name] = (q, out, write_requests)
+    try:
+        for k in range(4):  # both zones fill while both streams run
+            for name, (_q, _out, write_requests) in streams.items():
+                write_requests(f"req{k}.json", [f"{name}{k}x", f"{name}{k}y"][: 1 + k % 2])
+        for q, _out, _w in streams.values():
+            q.processAllAvailable()
+    finally:
+        for q, _out, _w in streams.values():
+            q.stop()
+    for name, (q, out, _w) in streams.items():
+        want = sorted(f"{name}{k}{c}" for k in range(4) for c in "xy"[: 1 + k % 2])
+        assert sorted(r["request_id"] for r in spark.read.parquet(out).collect()) == want
+        assert sum(p["numInputRows"] for p in q.recentProgress) == len(want)
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)) == []
+    assert _sink_callbacks(spark) == 0
 
 
 def _archived(ckpt, zone):
@@ -408,6 +492,7 @@ def test_stream_replays_an_uncommitted_batch_from_the_zone(spark, tmpzone, monke
     q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
     with pytest.raises(Exception, match="sink down"):
         q.awaitTermination(120)
+    assert _sink_callbacks(spark) == 0
     assert _log_entries(ckpt, "offsets") == ["0", "1"]
     assert _log_entries(ckpt, "commits") == ["0"]
     assert _wait_for(lambda: _archived(ckpt, zone) == ["a.json"])
@@ -550,6 +635,7 @@ def test_stream_progress_counts_the_rows_it_read(spark, tmpzone, monkeypatch):
     q = start_positioning_stream(spark, zone, aps, out, ckpt, max_files_per_trigger=1)
     with pytest.raises(Exception, match="sink down"):
         q.awaitTermination(120)
+    assert _sink_callbacks(spark) == 0
     assert [p["numInputRows"] for p in q.recentProgress] == [2, 0]
 
     monkeypatch.setattr(pq, "write_table", write_table)
@@ -660,7 +746,7 @@ def test_streaming_positioning_matches_batch_placement(spark, tmpzone, with_reas
 
 
 def test_streaming_positioning_replay_replaces_batch_dir(spark, tmpzone, monkeypatch):
-    """foreachBatch is at-least-once: a replayed batch_id=N must REPLACE
+    """The sink is at-least-once: a replayed batch_id=N must REPLACE
     what an earlier attempt left there (no stale part file survives), and
     _SUCCESS is written after the part file it vouches for. The sink path
     is relative, as Spark's own writer accepts."""

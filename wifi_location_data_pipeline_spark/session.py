@@ -8,18 +8,21 @@ results are oracle-comparable, Arrow for the pandas-UDF tier.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import SparkSession
 
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
-# the file:// FileSystem every session uses (jvm/NioLocalFileSystem.java):
-# Hadoop's LocalFileSystem, its permissions set in the JVM instead of by a
-# forked /bin/chmod per created file and directory. tools/build_nio_fs_jar.py
-# builds the jar from the source.
-NIO_FS_SOURCE = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+# the session's Java classes, one jar built from jvm/*.java by
+# tools/build_nio_fs_jar.py: the file:// FileSystem every session uses
+# (Hadoop's LocalFileSystem, its permissions set in the JVM instead of by a
+# forked /bin/chmod per created file and directory) and the positioning
+# stream's sink (streaming/positioning.py)
+JVM_SOURCES = sorted(glob.glob(os.path.join(_JVM_DIR, "*.java")))
 NIO_FS_JAR = os.path.join(_JVM_DIR, "nio-local-fs.jar")
 NIO_FS_CLASS = "wifi_location_data_pipeline_spark.jvm.NioLocalFileSystem"
+BATCH_FILE_SINK_CLASS = "wifi_location_data_pipeline_spark.jvm.BatchFileSink"
 
 
 def build_session(

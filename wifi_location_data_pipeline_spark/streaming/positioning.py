@@ -8,46 +8,63 @@ continuously" is Structured Streaming over a request zone:
 
     readStream.json(request_zone, POSITIONING_REQUEST_SCHEMA)
       .select(requestId, wifiScanResults)   (the bare request scan)
-      → foreachBatch: the batch's request files, read in the driver → the
-        one-pass kernel (physics gate, explode, join with the driver-held
-        AP index, solve) → pyarrow write of batch_id=N
+      → BatchFileSink (jvm/BatchFileSink.java): the batch's request file
+        URIs → py4j callback → the files, read in the driver → the one-pass
+        kernel (physics gate, explode, join with the driver-held AP index,
+        solve) → pyarrow write of batch_id=N
 
 The streaming frame is the request scan alone (no filter, no explode, no
 join, no Python, no coalesce), and a micro-batch runs no Spark job: Spark
 keeps the offsets, the driver reads the files. Spark's file source lists
 the zone, logs each batch's files, replays them after a failure, applies
-``maxFilesPerTrigger`` and archives them; ``_commit`` takes the batch's
-files from its scan node (the one leaf of the running query's current
-executed plan, found through the ``sql.streaming.queryId`` local property)
-and reads them with pyarrow's JSON reader, one file per thread, up to the
-session's cores. The read is strict: the request schema as explicit Arrow
-types, fields outside it skipped, anything else raising (malformed JSON, a
-value of another type, a missing ``requestId``, a line that is not exactly
-one JSON object, bytes that are not UTF-8, an empty file). A batch
-whose read raises is read by Spark instead, ``toArrow`` on the batch frame
-(one Spark job), so Spark's PERMISSIVE reader gives the meaning of every
-file the strict read rejects; where both read a file, they give the same
-rows. The scan never runs after a strict read, so the driver adds the rows
-it read to the scan's ``numOutputRows`` metric, the figure
-``StreamingQueryProgress.numInputRows`` reports.
+``maxFilesPerTrigger`` and archives them. The sink is a small Java
+``StreamSinkProvider`` in the session's jar: its ``addBatch`` takes the
+batch's files from the scan node (the one leaf of the batch's executed
+plan, ``relation().location().inputFiles()``), never builds the batch's
+RDD, and calls ``_commit`` in Python with the batch id, the files and the
+batch frame. ``_commit`` reads the files with pyarrow's JSON reader, one
+file per thread, up to the session's cores. The read is strict: the
+request schema as explicit Arrow types, fields outside it skipped,
+anything else raising (malformed JSON, a value of another type, a missing
+``requestId``, a line that is not exactly one JSON object, bytes that are
+not UTF-8, an empty file). A batch whose read raises is read by Spark
+instead, ``toArrow`` on the batch frame (one Spark job), so Spark's
+PERMISSIVE reader gives the meaning of every file the strict read
+rejects; where both read a file, they give the same rows. The scan never
+runs after a strict read, so ``_commit`` returns the rows it read and the
+sink adds them to the scan's ``numOutputRows`` metric, the figure
+``StreamingQueryProgress.numInputRows`` reports; after Spark's read it
+returns -1 and the scan has counted its own rows.
+
+The sink's ``createSink`` gets string options only, so the callback goes
+through a static registry in the JVM under a ``callback`` option: it is
+registered before ``start()`` and released when ``start()`` returns or
+raises. Spark creates the sink inside ``start()``, and the sink holds the
+callback for the life of its query, so a running, stopped or failed
+stream leaves no registry entry, and streams running at once each call
+their own callback.
 
 The rest runs in the driver too, where a micro-batch of a few requests
-costs the kernel's ~7-10 ms instead of a Python-worker hop (about 200 ms of
+costs the kernel's ~5-10 ms instead of a Python-worker hop (about 200 ms of
 fixed time per Python task on a 4-core host, whatever its input). The
 kernel is the batch plan's (``make_onepass_kernel``), fed the same nested
 request rows: one kernel, placed in the executors for batch and in the
 driver for the stream, so the two placements give equal answers.
 
 One micro-batch of 2 requests on a 4-core host (perfbench
-``position_serving``, traced, median per phase over 3 runs) takes ~63 ms
-(60-64 ms per run), half the 125 ms between its request files:
-``latestOffset`` 4 ms (the zone listing), ``getBatch`` 8,
-``queryPlanning`` 7, ``addBatch`` 39, ``walCommit`` 3 and
-``commitOffsets`` 2. Of ``addBatch``, the Python callback is ~13 ms (the
-scan lookup ~1, the file read ~2, the kernel ~7, the sink ~1-2); the rest
-is Spark's foreachBatch hand-off (the batch frame's RDD, its Dataset wrap
-and the py4j call). Neither log write starts a process:
-``build_session``'s ``file://`` FileSystem sets file modes in the JVM.
+``position_serving``, traced, median per phase) takes ~40 ms, a third of
+the 125 ms between its request files: ``latestOffset`` 4 ms (the zone
+listing), ``getBatch`` 6, ``queryPlanning`` 6, ``addBatch`` 18-19,
+``walCommit`` 3 and ``commitOffsets`` 2. Of ``addBatch``, the Python
+callback is ~9 ms (the file read ~2, the kernel and the parquet write the
+rest); the rest is Spark's SQL execution around the sink and the py4j
+call. The sink is here rather than PySpark's per-batch function hand-off
+because that hand-off costs ~20 ms more per batch: Spark builds the batch
+frame's RDD (the JSON reader and a broadcast configuration) and wraps it
+in a Dataset, and PySpark wraps each call's session in a new
+``SparkSession``, though nothing here reads that RDD. Neither log write
+starts a process: ``build_session``'s ``file://`` FileSystem sets file
+modes in the JVM.
 
 The AP index is ``onepass.ap_frame(access_points)`` (``known_ap_lookup``:
 status filter, keep-first by version, rename — the analog of the service's
@@ -65,13 +82,15 @@ files to ``<checkpoint>/archive/<their full path>`` when the next batch
 starts. A batch that failed before its commit is replayed on restart from
 files still in the zone, so every request is answered once.
 
-The sink writes each batch to its own ``batch_id=N`` directory: it clears
-the directory, writes ``part-00000.parquet``, and writes ``_SUCCESS`` last.
-foreachBatch is at-least-once, and a replayed batch replaces the first
-attempt's files, so the sink is effectively exactly-once; ``_SUCCESS`` means
-the batch's answers are complete. An empty request file commits a batch with
-an empty, schema'd part file. The per-request diagnostics
-(``with_reasons``) ride along identically to the batch path.
+``_commit`` writes each batch to its own ``batch_id=N`` directory: it
+clears the directory, writes ``part-00000.parquet``, and writes
+``_SUCCESS`` last. A V1 sink's ``addBatch`` is at-least-once (a batch that
+failed before its commit is replayed under the same id), and a replayed
+batch replaces the first attempt's files, so the sink is effectively
+exactly-once; ``_SUCCESS`` means the batch's answers are complete. An
+empty request file commits a batch with an empty, schema'd part file. The
+per-request diagnostics (``with_reasons``) ride along identically to the
+batch path.
 """
 
 from __future__ import annotations
@@ -84,6 +103,8 @@ import pyarrow as pa
 import pyarrow.json as pajson
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
+from py4j.java_gateway import JavaClass
+from pyspark.java_gateway import ensure_callback_server_started
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
@@ -95,6 +116,7 @@ from wifi_location_data_pipeline_spark.positioning.onepass import (
 )
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import make_onepass_kernel
 from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
+from wifi_location_data_pipeline_spark.session import BATCH_FILE_SINK_CLASS
 
 # the driver's strict reading of a request file (module docstring): the
 # request schema as Arrow types, no inference, fields outside it skipped
@@ -136,15 +158,19 @@ def _read_request_file(uri: str) -> pa.Table:
     return table
 
 
-def _batch_scan(spark: SparkSession):
-    """The file scan node of the micro-batch this thread is running: the one
-    leaf of its query's current executed plan."""
-    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-    plan = spark.streams.get(query_id)._jsq.streamingQuery().lastExecution().executedPlan()
-    leaves = plan.collectLeaves()
-    if leaves.size() != 1:
-        raise RuntimeError(f"expected one scan in the micro-batch plan:\n{plan.toString()}")
-    return leaves.apply(0)
+class _BatchCallback:
+    """The Python side of the sink's ``BatchFileSink.Callback`` interface:
+    the JVM calls ``call`` over py4j, on a callback-server thread, once per
+    micro-batch, with the batch's request file URIs and the batch frame."""
+
+    def __init__(self, commit):
+        self._commit = commit
+
+    def call(self, batch_id: int, files, jdf) -> int:
+        return self._commit(batch_id, list(files), jdf)
+
+    class Java:
+        implements = [BATCH_FILE_SINK_CLASS + "$Callback"]
 
 
 def start_positioning_stream(
@@ -190,16 +216,15 @@ def start_positioning_stream(
 
     threads = spark.sparkContext.defaultParallelism
 
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        scan = _batch_scan(spark)
-        uris = list(scan.relation().location().inputFiles())
+    def _commit(batch_id: int, uris: list[str], jdf) -> int:
+        """Answer one micro-batch; the rows read from its files, or -1 when
+        the batch frame was run (its scan then counted its own rows)."""
         try:
             batch = read_request_files(uris, threads)
+            rows = batch.num_rows  # the sink adds them to the scan's numOutputRows
         except (pa.ArrowInvalid, UnicodeDecodeError, OSError):
-            batch = batch_df.toArrow()  # Spark's PERMISSIVE reader decides
-        else:
-            # the scan never ran: count its rows, as progress reports them
-            scan.metrics().apply("numOutputRows").add(batch.num_rows)
+            batch = DataFrame(jdf, spark).toArrow()  # Spark's PERMISSIVE reader decides
+            rows = -1
         table = pa.Table.from_batches(kernel([batch]), schema=schema)
         batch_dir = f"{root}/batch_id={batch_id}"
         fs.create_dir(batch_dir)
@@ -207,11 +232,22 @@ def start_positioning_stream(
         pq.write_table(table, f"{batch_dir}/part-00000.parquet", filesystem=fs)
         with fs.open_output_stream(f"{batch_dir}/_SUCCESS"):
             pass
+        return rows
 
+    # createSink, which runs inside start(), takes the callback from the
+    # sink's registry; the sink holds it from then on
+    gateway = spark.sparkContext._gateway
+    ensure_callback_server_started(gateway)
+    sink = JavaClass(BATCH_FILE_SINK_CLASS, gateway._gateway_client)
+    callback_id = sink.register(_BatchCallback(_commit))
     writer = (
-        requests.writeStream.foreachBatch(_commit)
+        requests.writeStream.format(BATCH_FILE_SINK_CLASS)
+        .option("callback", callback_id)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    try:
+        return writer.start()
+    finally:
+        sink.release(callback_id)
