@@ -82,6 +82,10 @@ def test_job_chain(spark, zone):
     info = {e["algorithm"]: e for e in pr[0]["selection_info"]}
     assert pr[0]["selection_context"]["ap_count_class"] == "SINGLE_AP"
     assert info["proximity"]["selected"] and info["proximity"]["reasons"]
+    # the reasons explain the answer's own selection: selection_info selects
+    # exactly calculation_info's algorithms, at the same weights
+    assert {a: e["weight"] for a, e in info.items() if e["selected"]} == {
+        e["algorithm"]: e["weight"] for e in pr[0]["calculation_info"]}
 
     # a second localize fuses the batch with the first run's AP table, and
     # writes a table the position job reads

@@ -435,78 +435,119 @@ def test_physics_gate_array_matches_rowwise(spark):
     assert 0 < len(array_pass) < 60  # both branches of the gate exercised
 
 
-def test_with_reasons_matches_standalone_selector(spark, ap_df):
-    """The ensemble's selection_info (with_reasons=True) must carry the
-    SAME verbatim reason strings as the standalone
-    select_algorithms_with_reasons twin for the same SelectionContext
-    (AlgorithmSelector.selectAlgorithmsWithReasons, java:308-330) — the
-    broadcast-dimension shortcut may not drift from the row-wise source."""
-    from wifi_location_data_pipeline_spark.positioning.onepass import (
-        position_requests_onepass,
-    )
-    from wifi_location_data_pipeline_spark.positioning.selection import (
-        select_algorithms_with_reasons,
-    )
+def test_selection_table_is_select_phase_on_every_context():
+    """The one selection table against ``select_phase`` run on each of the
+    480 SelectionContexts alone: the row at the context's code holds the
+    same selected set and bit-equal weights, its ``calculation_info`` lists
+    that set in rank order (weight desc, name asc), and its
+    ``selection_info`` selects the same set at the same weights."""
+    import itertools
 
-    macs = [a[0] for a in APS[:5]]
-    freqs = [a[6] for a in APS[:5]]
-    requests = [
-        req("r_single", [scan("00:aa:00:00:00:01", -55.0)]),
-        req("r_two", [scan(macs[0], -60.0, freqs[0]), scan(macs[1], -65.0, freqs[1])]),
-        req("r_four", [scan(macs[0], -62.0, freqs[0]), scan(macs[1], -66.0, freqs[1]),
-                       scan(macs[2], -70.0, freqs[2]), scan(macs[3], -72.0, freqs[3])]),
-        req("r_weak", [scan(m, -97.0) for m, *_ in APS[:4]]),
-        req("r_coll", [
-            scan("00:bb:00:00:00:01", -60.0),
-            scan("00:bb:00:00:00:02", -58.0),
-            scan("00:bb:00:00:00:03", -62.0),
-        ]),
+    import numpy as np
+
+    from wifi_location_data_pipeline_spark.positioning import onepass_kernel as K
+    from wifi_location_data_pipeline_spark.positioning.selection import ALGORITHMS
+
+    table = K.selection_table()
+    calc, info = table.calculation_info.to_pylist(), table.selection_info.to_pylist()
+    context = table.selection_context.to_pylist()
+    labels = (K._APC, K._SQ, K._GQ, K._SD, (False, True))
+    combos = list(itertools.product(*(range(len(t)) for t in labels)))
+    assert len(combos) == len(calc) == len(info) == 480
+    fallback, floored = [], 0
+    for combo in combos:
+        apc, sq, gq, sd, avw = (np.array([c]) for c in combo)
+        code = int(K._context_code(apc, sq, gq, sd, avw == 1)[0])
+        assert context[code] == dict(zip(K.CONTEXT_FIELDS, (t[c] for t, c in zip(labels, combo))))
+        one = K.select_phase(apc, sq, gq, sd, avw == 1)
+        assert (table.sel[code] == one["sel"][0]).all(), combo
+        expect = {ALGORITHMS[a]: float(one["sel_w"][0, a]).hex() for a in np.flatnonzero(one["sel"][0])}
+        assert [float(w).hex() for w in table.sel_w[code]] == [
+            float(w).hex() for w in one["sel_w"][0]], combo
+        ranked = sorted(expect.items(), key=lambda kv: (-float.fromhex(kv[1]), kv[0]))
+        assert [(e["algorithm"], e["weight"].hex()) for e in calc[code]] == ranked, combo
+        assert {e["algorithm"]: e["weight"].hex() for e in info[code] if e["selected"]} == expect
+        assert [e["algorithm"] for e in info[code]] == sorted(ALGORITHMS)
+        selected = [e for e in info[code] if e["selected"]]
+        if any("SELECTED (best algorithm, below threshold 0.40)" in r
+               for e in selected for r in e["reasons"]):
+            fallback.append(tuple(t[c] for t, c in zip(labels, combo)))
+        floored += any(", floored from" in r for e in selected for r in e["reasons"])
+    # the rank-1 fallback answers the single weak AP under mixed or outlying
+    # signals (proximity under 0.4, log-distance lower), and only it; the
+    # 0.5 floor lifts 265 of the 300 very weak contexts' proximity weight
+    assert sorted(fallback) == sorted(
+        ("SINGLE_AP", "WEAK_SIGNAL", gq, sd, False)
+        for gq in K._GQ for sd in ("MIXED_SIGNALS", "SIGNAL_OUTLIERS")
+    )
+    assert floored == 265
+
+
+def test_selection_reasons_print_java_two_decimals():
+    """Every number in a reason prints as Java's %.2f of the double: the
+    shortest repr rounded half up. 0.3 × 0.5 × 1.0 × 0.7 is the double
+    0.105 (just under it in binary), which Java prints 0.11; so is
+    trilateration's 1.0 × 0.3 × 0.3 × 0.5 = 0.045 → 0.05."""
+    import numpy as np
+
+    from wifi_location_data_pipeline_spark.positioning import onepass_kernel as K
+
+    def reasons(apc, sq, gq, sd, avw, algorithm):
+        code = K._context_code(*(np.array([t.index(v)]) for t, v in zip(
+            (K._APC, K._SQ, K._GQ, K._SD), (apc, sq, gq, sd))), np.array([avw]))[0]
+        info = K.selection_table().selection_info[int(code)].as_py()
+        return next(e["reasons"] for e in info if e["algorithm"] == algorithm)
+
+    assert reasons("THREE_APS", "VERY_WEAK_SIGNAL", "EXCELLENT_GDOP", "MIXED_SIGNALS",
+                   False, "proximity") == [
+        "Only viable algorithm for extremely weak signals",
+        "SELECTED. Weight Calculation: Weight=0.50, floored from 0.11: base(0.30)"
+        " × signal(0.50) × geometric(1.00) × distribution(0.70)",
     ]
-    rdf = spark.createDataFrame(requests, POSITIONING_REQUEST_SCHEMA)
-    out = position_requests_onepass(rdf, ap_df, with_reasons=True)
-    rows = {r["request_id"]: r for r in out.collect()}
-    assert set(rows) == {"r_single", "r_two", "r_four", "r_weak", "r_coll"}
+    assert reasons("THREE_APS", "WEAK_SIGNAL", "POOR_GDOP", "SIGNAL_OUTLIERS",
+                   False, "trilateration") == [
+        "Valid for three APs",
+        "DISQUALIFIED  (below threshold 0.40) . Weight Calculation: Weight=0.05:"
+        " base(1.00) × signal(0.30) × geometric(0.30) × distribution(0.50)",
+    ]
 
-    # rebuild each request's context as a one-row DF and ask the row-wise
-    # selector for its reasons; compare verbatim
-    for rid, r in rows.items():
-        ctx = r["selection_context"].asDict()
-        assert r["selection_info"] is not None, rid
-        grid = spark.createDataFrame(
-            [(0, ctx["ap_count_class"], ctx["signal_quality"],
-              ctx["geometric_quality"], ctx["signal_distribution"],
-              ctx["all_very_weak"])],
-            "request_id bigint, ap_count_class string, signal_quality string, "
-            "geometric_quality string, signal_distribution string, all_very_weak boolean",
-        )
-        expect = {
-            e["algorithm"]: (e["selected"], e["weight"], list(e["reasons"]))
-            for e in select_algorithms_with_reasons(grid).collect()
-        }
-        got = {
-            e["algorithm"]: (e["selected"], e["weight"], list(e["reasons"]))
-            for e in r["selection_info"]
-        }
-        assert got == expect, rid
 
-    # the selected set in selection_info agrees with the combiner's
-    # calculation_info algorithms (the production selection keeps a
-    # below-threshold rank-1 fallback; reasons mirror the reference's
-    # stricter bookkeeping, so calculation_info ⊆ selected ∪ fallback)
-    for rid, r in rows.items():
-        info_sel = {e["algorithm"] for e in r["selection_info"] if e["selected"]}
-        calc = {e["algorithm"] for e in r["calculation_info"]}
-        assert calc & (info_sel or calc), rid
+def test_with_reasons_answers_explain_their_selection(spark, ap_df):
+    """Every answer of ``position_requests_onepass(with_reasons=True)`` over
+    the golden and extended fixtures explains the selection it used: its
+    ``selection_info`` is its context's row of the selection table and
+    selects exactly its ``calculation_info``, at the same weights; the
+    other columns equal the plain run's."""
+    import numpy as np
+
+    from wifi_location_data_pipeline_spark.positioning import onepass_kernel as K
+
+    rdf = spark.createDataFrame(golden_requests() + extended_requests(),
+                                POSITIONING_REQUEST_SCHEMA)
+    rows = position_requests_onepass(rdf, ap_df, with_reasons=True).collect()
+    plain = {r["request_id"]: r.asDict(recursive=True)
+             for r in position_requests_onepass(rdf, ap_df).collect()}
+    assert len(rows) >= 9 and len(rows) == len(plain)
+    table = K.selection_table().selection_info
+    for r in rows:
+        assert {e["algorithm"]: e["weight"].hex() for e in r["selection_info"] if e["selected"]} \
+            == {e["algorithm"]: e["weight"].hex() for e in r["calculation_info"]}, r["request_id"]
+        ctx = r["selection_context"]
+        code = K._context_code(*(np.array([t.index(ctx[f])]) for t, f in zip(
+            (K._APC, K._SQ, K._GQ, K._SD), K.CONTEXT_FIELDS)), np.array([ctx["all_very_weak"]]))[0]
+        assert [e.asDict(recursive=True) for e in r["selection_info"]] == table[int(code)].as_py()
+        answer = r.asDict(recursive=True)
+        del answer["selection_context"], answer["selection_info"]
+        assert answer == plain[r["request_id"]]
 
 
 def test_kernel_select_phase_matches_selector_on_every_context(spark):
-    """The kernel's selection phase (``select_phase``) against the
-    production selector in positioning/selection.py (``select_algorithms``)
-    on all 480 SelectionContexts: the same selected set per context and
-    bit-equal weights. The reason-annotated twin behind
-    ``selection_info_by_context`` is not the reference here: it mirrors the
-    Java reason bookkeeping (no rank-1 fallback, no 0.5 floor on the
-    very-weak proximity weight), which the product selection does not."""
+    """The kernel's selection phase (``select_phase``, from which
+    ``selection_table`` builds the one table every answer and its reasons
+    read) against the row-wise multipass reference in
+    positioning/selection.py (``select_algorithms``) on all 480
+    SelectionContexts: the same selected set per context and bit-equal
+    weights."""
     import itertools
 
     import numpy as np

@@ -204,6 +204,11 @@ def test_streaming_positioning_answers_requests(spark, tmpzone):
     assert set(first) == {"s1", "s2"}
     assert first["s1"]["selection_context"]["ap_count_class"] == "SINGLE_AP"
     assert any(e["selected"] for e in first["s1"]["selection_info"])
+    # each answer's reasons explain its own selection: selection_info selects
+    # exactly calculation_info's algorithms, at the same weights
+    for r in first.values():
+        assert {e["algorithm"]: e["weight"] for e in r["selection_info"] if e["selected"]} == {
+            e["algorithm"]: e["weight"] for e in r["calculation_info"]}
 
     # a new request file is answered incrementally, exactly once
     with open(os.path.join(zone, "batch2.json"), "w") as f:

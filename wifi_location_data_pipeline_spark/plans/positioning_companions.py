@@ -752,28 +752,46 @@ def selreason_ctx_sql(d: str) -> str:
 
 
 def selection_reasons_fn(spark, sf_dir):
-    """REAL reason-annotated selection (selection.select_algorithms_with_reasons)
-    over the full combinatorial context grid; reasons joined to one string
-    for the value compare (AlgorithmSelector.java:308-330; SURVEY §2.7
-    'Algorithm selection framework' — the reference's
-    selectAlgorithmsWithReasons diagnostics, previously unimplemented)."""
-    from pyspark.sql import functions as F
-
-    from wifi_location_data_pipeline_spark.positioning.selection import (
-        select_algorithms_with_reasons,
-    )
+    """The product's selection table (``onepass_kernel.selection_table``,
+    the rows each positioning answer's selection and ``selection_info`` are
+    read from) over the full combinatorial context grid: one row per
+    (context, algorithm), reasons joined to one string for the value
+    compare (AlgorithmSelector.java:308-330; SURVEY §2.7)."""
     from wifi_location_data_pipeline_spark.sources.tables import register_views
 
     register_views(spark, sf_dir)
     ctx = spark.sql(_fold(spark, sf_dir, f"SELECT * FROM ({selreason_ctx_sql(SPARK)}) c"))
-    out = select_algorithms_with_reasons(ctx)
-    return out.select(
-        "request_id",
-        "algorithm",
-        "selected",
-        F.col("weight").cast("double").alias("weight"),
-        F.array_join("reasons", " | ").alias("reasons"),
+    return ctx.mapInArrow(
+        _context_reasons,
+        "request_id bigint, algorithm string, selected boolean, weight double, reasons string",
     )
+
+
+def _context_reasons(batches):
+    """mapInArrow body: each context row → its ``selection_info`` entries
+    in the selection table."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
+        CONTEXT_FIELDS,
+        _context_code,
+        selection_table,
+    )
+
+    info = selection_table().selection_info
+    for b in batches:
+        codes = [pc.index_in(b.column(f), value_set=pa.array(t)).to_numpy()
+                 for f, t in zip(CONTEXT_FIELDS, (_APC, _SQ, _GQ, _SD))]
+        avw = b.column("all_very_weak").to_numpy(zero_copy_only=False)
+        lists = info.take(_context_code(*codes, avw))
+        e = lists.flatten()
+        yield pa.RecordBatch.from_arrays(
+            [pc.take(b.column("request_id"), pc.list_parent_indices(lists)),
+             e.field("algorithm"), e.field("selected"), e.field("weight"),
+             pc.binary_join(e.field("reasons"), " | ")],
+            names=["request_id", "algorithm", "selected", "weight", "reasons"],
+        )
 
 
 def _factor_case(col: str, table: dict, algo_idx: int) -> str:
@@ -799,11 +817,14 @@ def _j2f(expr: str) -> str:
 
 
 def selection_reasons_oracle() -> str:
-    """Row-wise DuckDB oracle replicating the three selection phases and the
-    verbatim reason strings of AlgorithmSelector.java:35-48,273-294,343-490.
-    Weight products multiply in the same left-assoc order as the Spark
-    Column tree, so the doubles are bit-identical, and ``_j2f`` reproduces
-    Java's %.2f digits exactly."""
+    """Row-wise DuckDB oracle of the selection table's rules
+    (``onepass_kernel.selection_table``): the three selection phases with
+    the reason strings of AlgorithmSelector.java:35-48,273-294,343-490, the
+    rank-1 fallback, the 0.5 floor on a very weak context's proximity
+    weight, and no POOR_GDOP disqualification (SURVEY §2.7 lists collinear
+    → −trilateration only). Weight products multiply in the same left-assoc
+    order as the kernel's NumPy product, so the doubles are bit-identical,
+    and ``_j2f`` reproduces Java's %.2f digits exactly."""
     algos = ", ".join(
         f"('{a}', {i})" for i, a in enumerate(ALGORITHMS)
     )
@@ -825,13 +846,16 @@ def selection_reasons_oracle() -> str:
     ) + " END"
     wprod = f"((({base}) * ({sig})) * ({geo})) * ({dist})"
     wcalc_expr = (
-        "'Weight=' || " + _j2f(wprod)
+        "'Weight=' || " + _j2f("weight")
+        + " || CASE WHEN weight > w THEN ', floored from ' || " + _j2f("w")
+        + " ELSE '' END"
         + " || ': base(' || " + _j2f(base)
         + " || ') × signal(' || " + _j2f(sig)
         + " || ') × geometric(' || " + _j2f(geo)
         + " || ') × distribution(' || " + _j2f(dist)
         + " || ')'"
     )
+    thr = _j2f("CAST(0.4 AS DOUBLE)")
     return f"""
 WITH ctx AS MATERIALIZED ({selreason_ctx_sql(DUCK)}),
 crossed AS (
@@ -859,14 +883,11 @@ p1 AS (
         CASE WHEN algorithm = 'maximum_likelihood' THEN 'DISQUALIFIED (requires at least 4 APS)'
              ELSE 'Valid for three APs' END
       ELSE 'Valid for 4+ APs' END AS r_apc,
-    geometric_quality IN ('COLLINEAR', 'POOR_GDOP') AS geo_bad,
-    CASE WHEN NOT vweak AND geometric_quality IN ('COLLINEAR', 'POOR_GDOP')
-              AND algorithm = 'trilateration' AND apc_elig
-         THEN CASE WHEN geometric_quality = 'COLLINEAR'
-                   THEN 'DISQUALIFIED (collinear APs)'
-                   ELSE 'DISQUALIFIED (poor geometry)' END END AS r_geo,
+    geometric_quality = 'COLLINEAR' AND algorithm = 'trilateration' AS geo_bad,
+    CASE WHEN NOT vweak AND geo_bad AND apc_elig
+         THEN 'DISQUALIFIED (collinear APs)' END AS r_geo,
     CASE WHEN vweak THEN algorithm = 'proximity'
-         ELSE apc_elig AND NOT (geo_bad AND algorithm = 'trilateration') END AS eligible,
+         ELSE apc_elig AND NOT geo_bad END AS eligible,
     CASE WHEN vweak THEN
       CASE WHEN algorithm = 'proximity'
            THEN 'Only viable algorithm for extremely weak signals'
@@ -875,64 +896,58 @@ p1 AS (
   FROM crossed
 ),
 p2 AS (
-  SELECT *,
-    CASE WHEN eligible THEN {wprod} END AS weight,
-    CASE WHEN eligible THEN {wcalc_expr} END AS wcalc
-  FROM p1
+  SELECT *, CASE WHEN eligible THEN {wprod} END AS w FROM p1
 ),
 p3 AS (
   SELECT *,
-    SUM(CASE WHEN eligible THEN 1 ELSE 0 END) OVER (PARTITION BY request_id) AS n_elig,
-    CASE WHEN SUM(CASE WHEN eligible THEN 1 ELSE 0 END) OVER (PARTITION BY request_id) = 1
-         THEN weight ELSE CAST(0.4 AS DOUBLE) END AS thr
+    CASE WHEN eligible AND vweak THEN GREATEST(w, CAST(0.5 AS DOUBLE)) ELSE w END AS weight
   FROM p2
 ),
 p4 AS (
   SELECT *,
-    eligible AND weight >= thr AS above
+    {wcalc_expr} AS wcalc,
+    eligible AND weight >= CAST(0.4 AS DOUBLE) AS above,
+    ROW_NUMBER() OVER (PARTITION BY request_id
+      ORDER BY weight DESC NULLS LAST, algorithm) AS rn,
+    MAX(weight) OVER (PARTITION BY request_id) AS max_w
   FROM p3
 ),
 p5 AS (
   SELECT *,
-    ROW_NUMBER() OVER (PARTITION BY request_id
-      ORDER BY (CASE WHEN above THEN weight END) DESC NULLS LAST, algorithm) AS rn,
-    MAX(CASE WHEN above THEN weight END) OVER (PARTITION BY request_id) AS max_w,
-    SUM(CASE WHEN above THEN 1 ELSE 0 END) OVER (PARTITION BY request_id) AS n_surv
+    (above AND rn <= CASE WHEN max_w > CAST(0.8 AS DOUBLE) THEN 2 ELSE 3 END)
+      OR (eligible AND rn = 1) AS sel
   FROM p4
 ),
 p6 AS (
   SELECT *,
-    CASE WHEN max_w > CAST(0.8 AS DOUBLE) THEN 2
-         WHEN n_surv > 3 THEN 3 ELSE n_surv END AS keep_n
-  FROM p5
-),
-p7 AS (
-  SELECT *,
-    above AND rn <= keep_n AS sel,
     CASE
+      WHEN sel AND above THEN 'SELECTED. Weight Calculation: ' || wcalc
+      WHEN sel THEN
+        'SELECTED (best algorithm, below threshold ' || {thr} || '). Weight Calculation: ' || wcalc
       WHEN eligible AND NOT above THEN
-        'DISQUALIFIED  (below threshold ' || {_j2f('thr')} || ') . Weight Calculation: ' || wcalc
-      WHEN above AND NOT (above AND rn <= keep_n) THEN
+        'DISQUALIFIED  (below threshold ' || {thr} || ') . Weight Calculation: ' || wcalc
+      WHEN eligible THEN
         CASE WHEN max_w > CAST(0.8 AS DOUBLE)
-             THEN printf('DISQUALIFIED (not in top 2 High Confidence). Weight Calculation: %s', wcalc)
-             ELSE printf('DISQUALIFIED (not in top 3 below High Confidence). Weight Calculation: %s', wcalc) END
-      WHEN above AND rn <= keep_n THEN
-        printf('SELECTED. Weight Calculation: %s', wcalc)
+             THEN 'DISQUALIFIED (not in top 2 High Confidence). Weight Calculation: ' || wcalc
+             ELSE 'DISQUALIFIED (not in top 3 below High Confidence). Weight Calculation: ' || wcalc END
     END AS r3
-  FROM p6
+  FROM p5
 )
 SELECT request_id, algorithm, sel AS selected, weight,
   concat_ws(' | ', r1, r_geo, r3) AS reasons
-FROM p7
+FROM p6
 """
 
 
 register(
     "selection_reasons",
-    "Reason-annotated algorithm selection (selectAlgorithmsWithReasons): "
-    "hard constraints, weight formula strings, threshold/top-N discard "
-    "reasons, SELECTED annotations — the reference's diagnostic strings "
-    "verbatim over all 480 factor combinations "
+    "Reason-annotated algorithm selection (selectAlgorithmsWithReasons) "
+    "over all 480 factor combinations: Spark reads the product's one "
+    "selection table (onepass_kernel.selection_table), whose rows also "
+    "give each positioning answer its algorithms. Hard constraints, weight "
+    "formula strings, threshold/top-N discard reasons and SELECTED "
+    "annotations in the reference's strings, under SURVEY §2.7's rules plus "
+    "the engine's rank-1 fallback and very-weak 0.5 floor "
     "(AlgorithmSelector.java:35-48,273-294,308-330,343-490).",
     sql=lambda d: selection_reasons_oracle(),
     spark_fn=selection_reasons_fn,

@@ -20,6 +20,13 @@ join and no shuffle, and no request straddles two Arrow batches. The
 positioning stream (streaming/positioning.py) runs the same kernel in the
 driver over each micro-batch of raw requests.
 
+The selection is one table: ``onepass_kernel.selection_table`` runs the
+selection phase once per process over the 480 SelectionContexts and holds
+each context's selected algorithms and weights, its ``calculation_info``
+and its ``selection_info`` reasons. The kernel looks each request's context
+up in it, so the reasons an answer carries (``with_reasons``) explain the
+selection the answer used.
+
 ``position_requests_onepass`` is the one batch entry, and it takes the
 reference's one request shape: a request row holding its
 ``wifiScanResults`` array (PositioningServiceImpl.calculatePosition). A
@@ -44,17 +51,13 @@ import hashlib
 
 import pandas as pd
 from pyspark import Broadcast
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import (
     CONTEXT_FIELDS,
-    _APC,
-    _GQ,
-    _SD,
-    _SQ,
     make_onepass_kernel,
 )
 from wifi_location_data_pipeline_spark.positioning.prepare import known_ap_lookup
@@ -109,58 +112,6 @@ def answer_schema(with_reasons: bool) -> T.StructType:
     """Schema of the positioning answers, with or without the
     selection_context / selection_info diagnostics."""
     return T.StructType(_OUT_FIELDS + (_REASON_FIELDS if with_reasons else []))
-
-
-# applicationId → the selection-info dimension, collected to the driver. The
-# dim is STATIC (pure product of the context enums — no data dependency), so
-# it is computed and collected once per session and handed to the kernel,
-# which attaches each answer's entry itself.
-_SEL_INFO: dict[str, dict[tuple, list[dict]]] = {}
-
-
-def selection_info_by_context(spark: SparkSession) -> dict[tuple, list[dict]]:
-    """Every possible SelectionContext (``CONTEXT_FIELDS`` tuple) → its
-    per-algorithm (algorithm, selected, weight, reasons[]) list sorted by
-    algorithm, computed ONCE per session by the oracle-checked
-    ``select_algorithms_with_reasons`` twin (positioning/selection.py;
-    AlgorithmSelector.java:308-330). 480 entries, scale-free: the context
-    space is the product of the four class enums × the very-weak flag,
-    independent of data volume."""
-    import itertools
-
-    from wifi_location_data_pipeline_spark.positioning.selection import (
-        select_algorithms_with_reasons,
-    )
-
-    key = spark.sparkContext.applicationId
-    hit = _SEL_INFO.get(key)
-    if hit is not None:
-        return hit
-
-    combos = list(itertools.product(_APC, _SQ, _GQ, _SD, (False, True)))
-    grid = spark.createDataFrame(
-        [(i, *c) for i, c in enumerate(combos)],
-        "request_id bigint, ap_count_class string, signal_quality string, "
-        "geometric_quality string, signal_distribution string, all_very_weak boolean",
-    )
-    reasons = select_algorithms_with_reasons(grid)
-    dim = (
-        reasons.join(grid, "request_id")
-        .groupBy(*CONTEXT_FIELDS)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("algorithm", "selected", "weight", "reasons")
-                )
-            ).alias("selection_info")
-        )
-    )
-    info = {
-        tuple(r[k] for k in CONTEXT_FIELDS): [e.asDict(recursive=True) for e in r["selection_info"]]
-        for r in dim.collect()
-    }
-    _SEL_INFO[key] = info
-    return info
 
 
 def ap_frame(access_points: DataFrame) -> pd.DataFrame:
@@ -227,13 +178,12 @@ def position_requests_onepass(
     (CalculationInfo.java:9-65; AlgorithmSelector.selectAlgorithmsWithReasons,
     AlgorithmSelector.java:308-330): a ``selection_context`` struct and a
     ``selection_info`` column of per-algorithm (selected, weight, reasons[])
-    structs, which the kernel looks up by the request's context classes in
-    the 480-entry ``selection_info_by_context`` table, so the reason
-    bookkeeping costs no join and no per-request string assembly.
+    structs. Both come from the row of ``onepass_kernel.selection_table``
+    that also gives the answer its selected algorithms and
+    ``calculation_info``, so an answer's reasons explain the selection it
+    used, at no join and no per-request string assembly.
     """
-    spark = requests.sparkSession
-    info = selection_info_by_context(spark) if with_reasons else None
     schema = answer_schema(with_reasons)
-    kernel = make_onepass_kernel(ap_index(access_points), info, to_arrow_schema(schema))
+    kernel = make_onepass_kernel(ap_index(access_points), with_reasons, to_arrow_schema(schema))
     return requests.select("requestId", "wifiScanResults").mapInArrow(kernel, schema)
 

@@ -17,14 +17,17 @@ kernel, then ``join_aps``: a hash lookup of each mac and a ``take`` of the
 AP columns), derives the per-element path-loss and weight values
 (``element_values``), groups the rows by request_id, sorts each request by
 ``PACK_FIELDS`` and pads the requests to (rows, K) matrices, K = the
-20-scan request cap. It then computes context classification, algorithm
-selection, the four closed-form algorithms, the trilateration/MLE numeric
-tier, and the robust combiner in one pass of batched NumPy, and builds the
-answer record batch as Arrow arrays (``build_output``). No pandas frame is
-built per call. The batch plan runs it as a ``mapInArrow`` body in the
-executors (request scan → this kernel, no join, no shuffle, one job end to
-end, the AP index a broadcast variable); the positioning stream runs it in
-the driver over each collected micro-batch of raw requests. Scale shape:
+20-scan request cap. It then classifies each request's context, reads its
+selection from the one selection table (``selection_table``: the 480
+contexts' selected algorithms, weights and reasons, built once per
+process), computes the four closed-form algorithms, the trilateration/MLE
+numeric tier and the robust combiner in one pass of batched NumPy, and
+builds the answer record batch as Arrow arrays (``build_output``). No
+pandas frame is built per call. The batch plan runs it as a ``mapInArrow``
+body in the executors (request scan → this kernel, no join, no shuffle,
+one job end to end, the AP index a broadcast variable); the positioning
+stream runs it in the driver over each collected micro-batch of raw
+requests. Scale shape:
 per-request work is O(K²) bounded by the 20-scan request cap, and
 partitions are independent.
 
@@ -42,6 +45,11 @@ the 1e-6 output rounding of every oracle-checked consumer.
 
 from __future__ import annotations
 
+import functools
+import itertools
+from decimal import ROUND_HALF_UP, Decimal
+from typing import TYPE_CHECKING, NamedTuple
+
 import numpy as np
 
 from wifi_location_data_pipeline_spark import config as C
@@ -53,6 +61,9 @@ from wifi_location_data_pipeline_spark.positioning.selection import (
     GEOMETRY_MULT,
     SIGNAL_MULT,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # class label tables (index = code used in the vectorized middle)
 _APC = ("SINGLE_AP", "TWO_APS", "THREE_APS", "FOUR_PLUS_APS")
@@ -319,13 +330,16 @@ def _row_median(sorted_vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
 
 
 def select_phase(apc_code, sq_code, gq_code, sd_code, all_very_weak) -> dict[str, np.ndarray]:
-    """The selection phase over per-request context class codes (indexes
-    into ``_APC``, ``_SQ``, ``_GQ``, ``_SD``) and the all-very-weak flags.
+    """The selection phase over context class codes (indexes into ``_APC``,
+    ``_SQ``, ``_GQ``, ``_SD``) and the all-very-weak flags; run once, over
+    the context grid, by ``selection_table``.
 
-    Returns ``sel`` / ``sel_w``, the (n, n_alg) selected mask and weights in
-    ``ALGORITHMS`` order, with what ``build_output`` reads to list the
-    selection in rank order: ``order``, ``kept_ranked``, ``very_weak`` and
-    ``prox_override_w``.
+    Returns (n, n_alg) arrays in ``ALGORITHMS`` order: ``weight``, the
+    product of the four factor tables; ``eligible``, what the hard
+    constraints leave (a positive weight, or proximity alone for a very
+    weak context); ``sel`` / ``sel_w``, the selected mask and weights; and
+    ``order``, each row's algorithms by rank (weight desc, name asc, zero
+    weights last). Also ``very_weak``, (n,).
     """
     # ---- selection matrix: base × signal × geometry × distribution ----
     aw = (_BASE_W[apc_code] * _SIG_W[sq_code]
@@ -347,17 +361,176 @@ def select_phase(apc_code, sq_code, gq_code, sd_code, all_very_weak) -> dict[str
     # selected mask back in ALGORITHMS order
     sel = np.zeros_like(pos_w)
     np.put_along_axis(sel, order, kept_ranked, axis=1)
-    prox_override_w = np.maximum(aw[:, _PROX], 0.5)
     sel_w = np.where(sel, aw, 0.0)
+    eligible = pos_w.copy()
     if very_weak.any():
-        sel[very_weak] = False
-        sel[very_weak, _PROX] = True
-        sel_w[very_weak] = 0.0
-        sel_w[very_weak, _PROX] = prox_override_w[very_weak]
+        prox_only = pos_rank == _PROX
+        eligible[very_weak] = prox_only
+        sel[very_weak] = prox_only
+        sel_w[very_weak] = np.where(prox_only, np.maximum(aw[very_weak, _PROX], 0.5)[:, None], 0.0)
     return {
-        "sel": sel, "sel_w": sel_w, "order": order, "kept_ranked": kept_ranked,
-        "very_weak": very_weak, "prox_override_w": prox_override_w,
+        "weight": aw, "eligible": eligible, "sel": sel, "sel_w": sel_w,
+        "order": order, "very_weak": very_weak,
     }
+
+
+# field names of the selection_context struct, in label-table order
+CONTEXT_FIELDS = (
+    "ap_count_class",
+    "signal_quality",
+    "geometric_quality",
+    "signal_distribution",
+    "all_very_weak",
+)
+
+
+def _context_code(apc, sq, gq, sd, avw) -> np.ndarray:
+    """One integer per SelectionContext (class codes and all-very-weak
+    flag): its row in ``selection_table``."""
+    return (((apc * len(_SQ) + sq) * len(_GQ) + gq) * len(_SD) + sd) * 2 + avw.astype(int)
+
+
+@functools.cache
+def _java_2f(x: float) -> str:
+    """``%.2f`` as Java's Formatter prints a double: its shortest repr
+    rounded half up, so 0.105 prints 0.11 (Python's ``'%.2f'`` rounds the
+    binary value below it, 0.10)."""
+    return str(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP))
+
+
+# the reference's AP-count verdict per class, in ALGORITHMS order
+# (AlgorithmSelector.java:35-48, 84-161)
+_R_APC = {
+    "SINGLE_AP": ("Valid for single AP",) + ("DISQUALIFIED (insufficient APs)",) * 4
+    + ("Valid for single AP with path loss model",),
+    "TWO_APS": ("Valid for two APs",) * 3 + (
+        "DISQUALIFIED (requires at least 3 APs)",
+        "DISQUALIFIED (requires at least 4 APS)",
+        "Valid for two APs",
+    ),
+    "THREE_APS": ("Valid for three APs",) * 4
+    + ("DISQUALIFIED (requires at least 4 APS)", "Valid for three APs"),
+    "FOUR_PLUS_APS": ("Valid for 4+ APs",) * _N_ALG,
+}
+
+
+class SelectionTable(NamedTuple):
+    """Every SelectionContext's selection, row = ``_context_code``."""
+
+    sel: np.ndarray  # (480, n_alg) selected mask, ALGORITHMS order
+    sel_w: np.ndarray  # (480, n_alg) selected weights, 0.0 elsewhere
+    calculation_info: pa.ListArray  # per context: (algorithm, weight), rank order
+    selection_context: pa.StructArray  # per context: its classes, CONTEXT_FIELDS
+    selection_info: pa.ListArray  # per context: every algorithm by name
+
+
+@functools.cache
+def selection_table() -> SelectionTable:
+    """The one selection: ``select_phase`` run once over the 480
+    SelectionContexts, each context's answer (``sel``, ``sel_w``,
+    ``calculation_info``) and its explanation (``selection_context``,
+    ``selection_info``) side by side, built once per process.
+
+    ``selection_info`` lists every algorithm by name with its ``selected``
+    flag, its ``weight`` (NULL when the hard constraints remove it; the
+    selected weight when selected; else the factor product) and its
+    reasons, in the reference's strings (AlgorithmSelector.java:35-48,
+    308-330, 477, 490, 566) under SURVEY §2.7's rules:
+
+    1. hard constraints. A very weak context (all RSSI < −95 dBm, or the
+       very-weak signal class) lists proximity with "Only viable algorithm
+       for extremely weak signals" and every other algorithm with
+       "DISQUALIFIED (signal too weak)". Otherwise each algorithm gets its
+       AP-count verdict ("Valid for two APs", "DISQUALIFIED (requires at
+       least 3 APs)", ...), and trilateration at COLLINEAR adds
+       "DISQUALIFIED (collinear APs)". POOR_GDOP removes nothing: its
+       factors weigh trilateration down instead.
+    2. weights. Each eligible algorithm's weight calculation reads
+       "Weight=w: base(b) × signal(s) × geometric(g) × distribution(d)",
+       every number Java's ``%.2f`` (``_java_2f``).
+    3. threshold 0.40, then top-2 when the best weight is over 0.8, else
+       top-3. A selected algorithm reads "SELECTED. Weight Calculation:
+       ..."; one under the threshold "DISQUALIFIED  (below threshold 0.40)
+       . Weight Calculation: ..." (java:477, spacing verbatim); one over it
+       but outside the top-K "DISQUALIFIED (not in top 2 High Confidence).
+       Weight Calculation: ..." or "DISQUALIFIED (not in top 3 below High
+       Confidence). Weight Calculation: ...".
+
+    Two strings state rules of this engine that the §2.7 row does not
+    settle, so the answer's behaviour stands and the reasons say it:
+
+    - "SELECTED (best algorithm, below threshold 0.40). Weight Calculation:
+      ...": when every weight is under the threshold, the best-ranked
+      algorithm is kept, so every context is answered. It also covers a
+      lone eligible algorithm, which the reference passes at its own weight
+      (java:438-442): the same set.
+    - "Weight=0.50, floored from p: base(b) × ...": a very weak context's
+      proximity weight is max(p, 0.50), p the factor product; the string
+      shows the floor when it lifts the weight.
+    """
+    import pyarrow as pa
+
+    grid = np.array(list(itertools.product(
+        range(len(_APC)), range(len(_SQ)), range(len(_GQ)), range(len(_SD)), (0, 1))))
+    apc, sq, gq, sd, avw = grid.T
+    res = select_phase(apc, sq, gq, sd, avw == 1)
+    sel, sel_w, aw, eligible = res["sel"], res["sel_w"], res["weight"], res["eligible"]
+    factors = np.stack([_BASE_W[apc], _SIG_W[sq], _GEO_W[gq], _DIST_W[sd]], axis=-1)
+    strong = aw.max(axis=1) > C.SELECTION_STRONG_MAX_WEIGHT
+    below = f"DISQUALIFIED  (below threshold {_java_2f(C.SELECTION_MIN_WEIGHT)}) . "
+    fallback = f"SELECTED (best algorithm, below threshold {_java_2f(C.SELECTION_MIN_WEIGHT)}). "
+    by_name = np.argsort(np.array(ALGORITHMS))
+    calc, info = [], []
+    for i in range(len(grid)):
+        calc.append([{"algorithm": ALGORITHMS[a], "weight": float(sel_w[i, a])}
+                     for a in res["order"][i] if sel[i, a]])
+        entries = []
+        for a in by_name:
+            if res["very_weak"][i]:
+                reasons = ["Only viable algorithm for extremely weak signals" if a == _PROX
+                           else "DISQUALIFIED (signal too weak)"]
+            else:
+                reasons = [_R_APC[_APC[apc[i]]][a]]
+                if a == _TRI and _GQ[gq[i]] == "COLLINEAR" and _BASE_W[apc[i], a] > 0.0:
+                    reasons.append("DISQUALIFIED (collinear APs)")
+            weight = None
+            if eligible[i, a]:
+                p = float(aw[i, a])
+                weight = float(sel_w[i, a]) if sel[i, a] else p
+                b, s, g, d = (_java_2f(float(f)) for f in factors[i, a])
+                floored = f", floored from {_java_2f(p)}" if weight > p else ""
+                calc_s = (f"Weight Calculation: Weight={_java_2f(weight)}{floored}: base({b})"
+                          f" × signal({s}) × geometric({g}) × distribution({d})")
+                if sel[i, a]:
+                    verdict = "SELECTED. " if weight >= C.SELECTION_MIN_WEIGHT else fallback
+                elif p < C.SELECTION_MIN_WEIGHT:
+                    verdict = below
+                elif strong[i]:
+                    verdict = "DISQUALIFIED (not in top 2 High Confidence). "
+                else:
+                    verdict = "DISQUALIFIED (not in top 3 below High Confidence). "
+                reasons.append(verdict + calc_s)
+            entries.append({"algorithm": ALGORITHMS[a], "selected": bool(sel[i, a]),
+                            "weight": weight, "reasons": reasons})
+        info.append(entries)
+
+    def spark_list(t):  # the list type Spark's Arrow conversion writes
+        return pa.list_(pa.field("element", t))
+
+    calc_t = spark_list(pa.struct([("algorithm", pa.string()), ("weight", pa.float64())]))
+    info_t = spark_list(pa.struct([
+        ("algorithm", pa.string()), ("selected", pa.bool_()),
+        ("weight", pa.float64()), ("reasons", spark_list(pa.string())),
+    ]))
+    sel.setflags(write=False)  # every caller shares the cached arrays
+    sel_w.setflags(write=False)
+    context = pa.StructArray.from_arrays(
+        [pa.array(t).take(c) for t, c in zip((_APC, _SQ, _GQ, _SD), (apc, sq, gq, sd))]
+        + [pa.array(avw == 1)],
+        names=list(CONTEXT_FIELDS),
+    )
+    return SelectionTable(
+        sel, sel_w, pa.array(calc, calc_t), context, pa.array(info, info_t))
 
 
 def compute_onepass(
@@ -526,8 +699,9 @@ def compute_onepass(
             [3, 4, 0, 1, 2], default=3,
         )
 
-        sel_res = select_phase(apc_code, sq_code, gq_code, sd_code, all_very_weak)
-        sel, sel_w = sel_res["sel"], sel_res["sel_w"]
+        context_code = _context_code(apc_code, sq_code, gq_code, sd_code, all_very_weak)
+        table = selection_table()
+        sel, sel_w = table.sel[context_code], table.sel_w[context_code]
 
         # ---- closed-form positions (_closed_expr) ----
         avg_acc = np.where(hacc_n > 0.0, hacc_sum / hacc_n, np.nan)
@@ -639,9 +813,7 @@ def compute_onepass(
     combined = _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, _ALPHA_RANK[np.maximum(p_alg, 0)])
 
     return {
-        "keep": keep, **sel_res, "p_alg": p_alg, "present": present,
-        "apc_code": apc_code, "sq_code": sq_code, "gq_code": gq_code,
-        "sd_code": sd_code, "all_very_weak": all_very_weak,
+        "keep": keep, "context_code": context_code, "p_alg": p_alg, "present": present,
         **combined,
     }
 
@@ -754,16 +926,6 @@ def _combine(p_w, p_lat, p_lon, p_alt, p_acc, p_conf, present, cnt, alpha_rank):
     }
 
 
-# field names of the selection_context struct, in label-table order
-CONTEXT_FIELDS = (
-    "ap_count_class",
-    "signal_quality",
-    "geometric_quality",
-    "signal_distribution",
-    "all_very_weak",
-)
-
-
 def _lists(counts: np.ndarray, values, list_type):
     """An Arrow list array of ``list_type``: row i holds the next
     ``counts[i]`` entries of ``values``."""
@@ -774,40 +936,12 @@ def _lists(counts: np.ndarray, values, list_type):
     return pa.ListArray.from_arrays(pa.array(offsets), values, type=list_type)
 
 
-def selection_info_lookup(selection_info: dict, schema):
-    """``selection_info`` (SelectionContext tuple in ``CONTEXT_FIELDS``
-    order → its per-algorithm reason list) → (slot, infos), built once per
-    kernel: ``infos`` holds the lists as one Arrow array of the schema's
-    ``selection_info`` type, and ``slot[code]`` is the position of a
-    context's list in it (-1, which no ``take`` accepts, for a context the
-    dict lacks), ``code`` being ``_context_code`` of the context's class
-    codes."""
-    import pyarrow as pa
-
-    keys = list(selection_info)
-    slot = np.full(len(_APC) * len(_SQ) * len(_GQ) * len(_SD) * 2, -1)
-    slot[_context_code(
-        *(np.array([tables.index(k[f]) for k in keys], dtype=int)
-          for f, tables in enumerate((_APC, _SQ, _GQ, _SD))),
-        np.array([k[4] for k in keys], dtype=bool),
-    )] = np.arange(len(keys))
-    infos = pa.array([selection_info[k] for k in keys], type=schema.field("selection_info").type)
-    return slot, infos
-
-
-def _context_code(apc, sq, gq, sd, avw) -> np.ndarray:
-    """One integer per SelectionContext (class codes and all-very-weak flag)."""
-    return (((apc * len(_SQ) + sq) * len(_GQ) + gq) * len(_SD) + sd) * 2 + avw.astype(int)
-
-
-def build_output(rids, res, selection_info, schema):
+def build_output(rids, res, with_reasons: bool, schema):
     """Kernel result arrays → the answer record batch of the Arrow
     ``schema``, built column by column; a NaN double is NULL, as in a
-    pandas conversion.
-
-    ``selection_info``: None, or the ``selection_info_lookup`` of the
-    reason lists, by which each answer gets its ``selection_context``
-    struct and its context's list as ``selection_info``.
+    pandas conversion. ``calculation_info`` and, ``with_reasons``,
+    ``selection_context`` and ``selection_info`` are the request's context's
+    rows of ``selection_table``.
     """
     import pyarrow as pa
 
@@ -829,37 +963,16 @@ def build_output(rids, res, selection_info, schema):
     )
     arrays["is_collinear"] = pa.array(res["is_collinear"][idx].astype(bool))
 
-    # calculation_info: the kept algorithms in rank order at their selected
-    # weights; a very weak request lists proximity alone, at its override
-    alg = res["order"][idx]
-    listed = res["kept_ranked"][idx].copy()
-    weight = np.take_along_axis(res["sel_w"][idx], alg, axis=1)
-    vw = res["very_weak"][idx]
-    alg = np.where(vw[:, None] & (np.arange(_N_ALG) == 0), _PROX, alg)
-    listed[vw] = np.arange(_N_ALG) == 0
-    weight[vw, 0] = res["prox_override_w"][idx][vw]
-    cal_type = schema.field("calculation_info").type
-    arrays["calculation_info"] = _lists(
-        listed.sum(axis=1),
-        pa.StructArray.from_arrays(
-            [names.take(alg[listed]), pa.array(weight[listed], pa.float64())],
-            fields=list(cal_type.value_type),
-        ),
-        cal_type,
-    )
-    if selection_info is not None:
-        slot, infos = selection_info
-        codes = [res[k][idx] for k in ("apc_code", "sq_code", "gq_code", "sd_code")]
-        avw = res["all_very_weak"][idx].astype(bool)
-        arrays["selection_context"] = pa.StructArray.from_arrays(
-            [pa.array(t).take(c) for t, c in zip((_APC, _SQ, _GQ, _SD), codes)] + [pa.array(avw)],
-            fields=list(schema.field("selection_context").type),
-        )
-        arrays["selection_info"] = infos.take(slot[_context_code(*codes, avw)])
+    table = selection_table()
+    code = res["context_code"][idx]
+    arrays["calculation_info"] = table.calculation_info.take(code)
+    if with_reasons:
+        arrays["selection_context"] = table.selection_context.take(code)
+        arrays["selection_info"] = table.selection_info.take(code)
     return pa.RecordBatch.from_arrays([arrays[f.name] for f in schema], schema=schema)
 
 
-def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
+def make_onepass_kernel(ap_index, with_reasons: bool, schema):
     """The positioning kernel: a generator over Arrow record batches (or
     tables) of nested requests (``requestId``, ``wifiScanResults``), yielding
     one answer record batch of the Arrow ``schema`` per input batch that has
@@ -873,12 +986,12 @@ def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
     ``ap_index``: the frame ``onepass.ap_frame`` returns (the driver
     placement), indexed here, or the broadcast variable ``onepass.ap_index``
     returns, read and indexed on first use (the executor placement).
-    ``selection_info``: None, or the dict ``selection_info_lookup`` takes.
+    ``with_reasons``: whether ``schema`` carries the ``selection_context``
+    and ``selection_info`` diagnostics.
     """
     from pyspark import Broadcast
 
     index = None if isinstance(ap_index, Broadcast) else index_aps(ap_index)
-    info = None if selection_info is None else selection_info_lookup(selection_info, schema)
 
     def run(batches):
         nonlocal index
@@ -890,6 +1003,6 @@ def make_onepass_kernel(ap_index, selection_info: dict | None, schema):
                 continue
             rids, n_scanned, lens, mats, ded = pack_requests(rows)
             res = compute_onepass(n_scanned, lens, mats, ded)
-            yield build_output(rids, res, info, schema)
+            yield build_output(rids, res, with_reasons, schema)
 
     return run

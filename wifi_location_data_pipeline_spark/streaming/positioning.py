@@ -89,8 +89,10 @@ failed before its commit is replayed under the same id), and a replayed
 batch replaces the first attempt's files, so the sink is effectively
 exactly-once; ``_SUCCESS`` means the batch's answers are complete. An
 empty request file commits a batch with an empty, schema'd part file. The
-per-request diagnostics (``with_reasons``) ride along identically to the
-batch path.
+per-request diagnostics (``with_reasons``) come, as in the batch path, from
+the kernel's one selection table (``onepass_kernel.selection_table``): each
+answer's ``selection_info`` explains the selection its ``calculation_info``
+lists.
 """
 
 from __future__ import annotations
@@ -109,11 +111,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 
-from wifi_location_data_pipeline_spark.positioning.onepass import (
-    answer_schema,
-    ap_frame,
-    selection_info_by_context,
-)
+from wifi_location_data_pipeline_spark.positioning.onepass import answer_schema, ap_frame
 from wifi_location_data_pipeline_spark.positioning.onepass_kernel import make_onepass_kernel
 from wifi_location_data_pipeline_spark.schemas import POSITIONING_REQUEST_SCHEMA
 from wifi_location_data_pipeline_spark.session import BATCH_FILE_SINK_CLASS
@@ -204,11 +202,7 @@ def start_positioning_stream(
     requests = reader.json(request_zone).select("requestId", "wifiScanResults")
 
     schema = to_arrow_schema(answer_schema(with_reasons))
-    kernel = make_onepass_kernel(
-        ap_frame(access_points),
-        selection_info_by_context(spark) if with_reasons else None,
-        schema,
-    )
+    kernel = make_onepass_kernel(ap_frame(access_points), with_reasons, schema)
     try:
         fs, root = pafs.FileSystem.from_uri(out_path)
     except pa.ArrowInvalid:  # a relative local path, as Spark's writer takes
