@@ -29,12 +29,18 @@ def jfr_recording(spark, dump_path: str, events: dict[str, float | None]):
 
 
 @contextmanager
-def process_starts(spark, dump_path: str):
+def process_starts(spark, dump_path: str, threads: tuple[str, ...] | None = None):
     """Record ``jdk.ProcessStart`` in the session's JVM while the block runs;
     on exit the yielded list holds the command line of every child process
-    the JVM started in the block."""
+    the JVM started in the block, or, given ``threads``, only of those
+    started by a thread whose name contains one of them (each event
+    records the thread that started the process)."""
     commands: list[str] = []
     with jfr_recording(spark, dump_path, {"jdk.ProcessStart": None}) as path:
         yield commands
     events = spark._jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
-    commands.extend(events.get(i).getString("command") for i in range(events.size()))
+    for event in (events.get(i) for i in range(events.size())):
+        thread = event.getThread()
+        name = thread.getJavaName() if thread is not None else None
+        if threads is None or name is not None and any(t in name for t in threads):
+            commands.append(event.getString("command"))

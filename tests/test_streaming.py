@@ -2,7 +2,6 @@
 availableNow/processAllAvailable (SURVEY §2.8; memory-sink smoke pattern)."""
 
 import base64
-import gc
 import gzip
 import os
 import re
@@ -308,34 +307,14 @@ def test_checkpoint_logs_use_filesystem_manager(spark, tmp_path):
     assert fs.getClass().getName() == NIO_FS_CLASS
 
 
-def _settle_artifact_cleaner(spark, dump_path, timeout_s=60.0):
-    """Return once a full collection in Python and the JVM is followed by
-    0.5 s in which the JVM starts no process. Earlier queries leave their
-    cloned sessions behind; when the JVM collects one, Spark's artifact
-    cleaner (a thread run after the collection) deletes the session's
-    artifact directory with a forked ``rm -rf``, whether it exists or not.
-    A quiet window after a full collection means the cleaner has nothing
-    left to delete. Fails after ``timeout_s``."""
-    from tests.jvm_events import process_starts
-
-    deadline = time.monotonic() + timeout_s
-    seen = []
-    while time.monotonic() < deadline:
-        gc.collect()
-        with process_starts(spark, dump_path) as started:
-            spark._jvm.System.gc()
-            time.sleep(0.5)
-        if not started:
-            return
-        seen += started
-    pytest.fail(f"the JVM kept starting processes after collections: {seen}")
-
-
 def test_positioning_micro_batches_start_no_process(spark, tmpzone):
     """A serving micro-batch writes six files through Hadoop (the offset,
     commit and file-source log entries, each with its .crc); JFR sees no
-    child process started over three of them (Hadoop's own local
-    FileSystem forks a chmod for each file it creates)."""
+    child process started by the stream's threads over three of them
+    (Hadoop's own local FileSystem forks a chmod for each file it creates).
+    The recording also holds what other threads of the JVM start, such as
+    the ``rm -rf`` of Spark's artifact cleaner once an earlier test's stopped
+    query's session is collected; that is not the stream's."""
     from tests.jvm_events import process_starts
     from wifi_location_data_pipeline_spark.streaming.positioning import (
         start_positioning_stream,
@@ -346,11 +325,10 @@ def test_positioning_micro_batches_start_no_process(spark, tmpzone):
     try:
         write_requests("req0.json", ["w0"])  # first batch: stream start-up
         q.processAllAvailable()
-        # once per JVM, the executor's first metrics poll (a heartbeat, every
-        # 10 s) runs `getconf PAGESIZE`; take that one-off before recording
-        spark._jvm.org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo()
-        _settle_artifact_cleaner(spark, os.path.join(tmpzone, "settle.jfr"))
-        with process_starts(spark, os.path.join(tmpzone, "rec.jfr")) as started:
+        # the stream's execution thread, named with its run id, and its file
+        # source's cleaner, which moves answered files to the archive
+        stream_threads = (f"runId = {q.runId}", "file-source-cleaner")
+        with process_starts(spark, os.path.join(tmpzone, "rec.jfr"), stream_threads) as started:
             for k in range(1, 4):
                 write_requests(f"req{k}.json", [f"r{k}"])
                 q.processAllAvailable()
